@@ -207,44 +207,65 @@ object DeltaLog {
   private val localLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Run `build` exactly once per `base` across threads AND processes:
-    * double-checked `_GRAFT_DONE` marker under an intra-process monitor
-    * plus an exclusive FileLock on `base/.lock`. A builder that died
-    * mid-build left no marker but did leave its streaming checkpoint, so
-    * the next lock holder RESUMES the build (idempotent by construction)
-    * rather than starting a duplicate concurrent one — the failure mode
-    * this lock exists to prevent (two streaming queries sharing one
-    * checkpoint dir corrupt it).
-    */
-  private[graft] def buildOnce(base: String)(build: () => Unit): Unit = {
-    // the done marker and the .lock channel below are java.nio LOCAL
-    // paths while callers' build() writes go through Spark/Hadoop: on a
-    // non-local base (hdfs://, s3a://) the marker check would misfire
-    // and silently rebuild (for pinned-dimension callers that REVERTS
-    // the frozen-verdict contract). Fail loud instead of diverging.
+  // the done marker and the .lock channel are java.nio LOCAL paths while
+  // callers' writes go through Spark/Hadoop: on a non-local base (hdfs://,
+  // s3a://) the marker check would misfire and silently rebuild (for
+  // pinned-dimension callers that REVERTS the frozen-verdict contract).
+  // Fail loud instead of diverging.
+  private def requireLocal(base: String): Unit = {
     val scheme = scala.util.Try(new java.net.URI(base).getScheme).getOrElse(null)
     require(scheme == null || scheme == "file",
       s"buildOnce: base '$base' is not a local path — the once-only " +
         "marker and file lock are local-filesystem primitives; use a " +
         "local work root (or port the marker to the Hadoop FileSystem)")
-    val done = Paths.get(s"$base/_GRAFT_DONE")
-    if (Files.exists(done)) { touch(done); return }
+  }
+
+  /** Hold the per-`base` build lock while `body` runs: the intra-process
+    * monitor, then an exclusive FileLock on `base/.lock` (blocks until
+    * another process releases it). [[buildOnce]] runs under it; drives
+    * that re-run incrementally on every call (their checkpoints are the
+    * memo) take it directly, so two invocations never share a streaming
+    * checkpoint mid-flight — in one JVM or across several. Not
+    * reentrant for the same base on one thread (FileLock is per JVM).
+    */
+  private[graft] def withBuildLock[T](base: String)(body: => T): T = {
+    requireLocal(base)
     val monitor = localLocks.computeIfAbsent(base, _ => new Object)
     monitor.synchronized {
-      if (Files.exists(done)) return
       Files.createDirectories(Paths.get(base))
       val ch = java.nio.channels.FileChannel.open(Paths.get(s"$base/.lock"),
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.WRITE)
       try {
-        val lock = ch.lock() // blocks until the other process finishes
-        try if (!Files.exists(done)) { // re-check: the other process built it
-          build()
-          try Files.createFile(done)
-          catch { case _: java.nio.file.FileAlreadyExistsException => () }
-        } else touch(done)
-        finally lock.release()
+        val lock = ch.lock()
+        try body finally lock.release()
       } finally ch.close()
+    }
+  }
+
+  /** Run `build` exactly once per `base` across threads AND processes:
+    * a double-checked done marker (`base/<marker>`, written only after
+    * `build` returns) around [[withBuildLock]]. A builder that died
+    * mid-build left no marker but did leave its streaming checkpoint, so
+    * the next lock holder RESUMES the build (idempotent by construction)
+    * rather than starting a duplicate concurrent one — the failure mode
+    * this lock exists to prevent (two streaming queries sharing one
+    * checkpoint dir corrupt it). A `build` that throws leaves no marker,
+    * so the next call retries. Lifecycle drives pass their own marker
+    * name (`_Q<N>_DRIVE_DONE`) so stores built before this protocol
+    * existed stay recognized.
+    */
+  private[graft] def buildOnce(base: String, marker: String = "_GRAFT_DONE")(
+      build: () => Unit): Unit = {
+    requireLocal(base)
+    val done = Paths.get(s"$base/$marker")
+    if (Files.exists(done)) { touch(done); return }
+    withBuildLock(base) {
+      if (!Files.exists(done)) { // re-check: another holder built it
+        build()
+        try Files.createFile(done)
+        catch { case _: java.nio.file.FileAlreadyExistsException => () }
+      } else touch(done)
     }
   }
 

@@ -795,17 +795,7 @@ object CorpusOps {
     // re-solved from boundary + member seeds), so the output matches to
     // the bit. A type mix falls through to the distributed path, whose
     // BFS widens ids itself; 100-TB graphs are untouched.
-    val idTypes = Seq(newE.schema("u").dataType, newE.schema("v").dataType,
-      dists.schema("id").dataType, seeds.schema("id").dataType)
-    // the local tier collects newE AND the stored distance relation AND
-    // the delta dsts — the edge probe alone does not bound the other
-    // two (a delta that deletes most of a huge graph passes the edge
-    // probe yet `dists` is node-sized for the PRE-churn graph), so each
-    // collected relation gets its own limit-bounded probe
-    if (edgeCap > 0 && idTypes.distinct.size == 1 &&
-        newE.limit(edgeCap + 1).count() <= edgeCap &&
-        dists.limit(edgeCap + 1).count() <= edgeCap &&
-        edgeDeltas.limit(edgeCap + 1).count() <= edgeCap)
+    if (fitsLocalBfsTier(newE, dists, edgeDeltas, seeds, edgeCap))
       return incrementalBfsLocal(newE, dists, edgeDeltas, seeds, maxIter)
     val deltaDst = edgeDeltas.select(col("v").as("id")).distinct()
     val affected = bfsDistances(newE, deltaDst, maxIter, cap, edgeCap)
@@ -892,6 +882,23 @@ object CorpusOps {
       }
       unaffected.unionByName(best)
     }
+  }
+
+  /** The gate of [[incrementalBfs]]'s driver-graph tier. The local tier
+    * collects newE, the stored distance relation, the delta dsts AND the
+    * seeds — the edge probe alone bounds none of the others (a delta
+    * that deletes most of a huge graph passes the edge probe yet `dists`
+    * is node-sized for the PRE-churn graph; a seed set can be any size),
+    * so each collected relation gets its own limit-bounded probe. A type
+    * mix also falls through: the distributed BFS widens ids itself.
+    */
+  private[graft] def fitsLocalBfsTier(newE: DataFrame, dists: DataFrame,
+      edgeDeltas: DataFrame, seeds: DataFrame, edgeCap: Int): Boolean = {
+    val idTypes = Seq(newE.schema("u").dataType, newE.schema("v").dataType,
+      dists.schema("id").dataType, seeds.schema("id").dataType)
+    edgeCap > 0 && idTypes.distinct.size == 1 &&
+      Seq(newE, dists, edgeDeltas, seeds)
+        .forall(_.limit(edgeCap + 1).count() <= edgeCap)
   }
 
   /** The driver-graph tier of [[incrementalBfs]]: the identical

@@ -26,6 +26,26 @@ package graft.queries
   */
 object DriveCost {
 
+  /** Run a memoized lifecycle drive ONCE per store `base`, across
+    * threads and JVMs ([[graft.cdc.DeltaLog.buildOnce]] under the
+    * drive's own done marker: `_<NAME>_DRIVE_DONE`, or
+    * `_<NAME>_LIFECYCLE_DONE` for the rebuild lifecycles), and record
+    * its wall clock on success. A drive that throws leaves neither the
+    * marker nor the sidecar, and the next call re-drives — the drives
+    * are re-entrant by construction (checkpoints, DELETE+INSERT metrics,
+    * replay-started markers), so the retry converges.
+    */
+  def once(base: String, name: String, dataDir: String,
+      lifecycle: Boolean = false)(drive: => Unit): Unit = {
+    val marker =
+      s"_${name.toUpperCase}_${if (lifecycle) "LIFECYCLE" else "DRIVE"}_DONE"
+    graft.cdc.DeltaLog.buildOnce(base, marker) { () =>
+      val t0 = System.nanoTime()
+      drive
+      record(base, name, t0, dataDir)
+    }
+  }
+
   /** Record the drive's one-time cost beside its memoized store.
     * Failures log and continue: cost accounting must not fail the
     * drive whose store already built.

@@ -973,8 +973,6 @@ object MandateQueries {
       .select(col("q_vec_id"), col("exact_top5"), col("recall_ok"))
   }
 
-  private val q143Lock = new Object
-
   /** Q143: the ES-MIRROR ANN SERVING PIPELINE under the oracle gate —
     * [[graft.streaming.AnnServingPipeline]] driven end to end (staged
     * embeddings CDC feed → checkpointed delta log → stateless ±IVF
@@ -1011,9 +1009,7 @@ object MandateQueries {
     import graft.streaming.{AnnServingPipeline, EsTarget}
     val cents = ivfCentroidsFor(spark, dir)
     val feed = ChangeFeed.stagedEmbeddingsJsonl(spark, dir)
-    val fp = graft.sources.Staging.fingerprint(Seq(s"$dir/embeddings.parquet"))
-    val base = DeltaLog.logBase(spark,
-      s"esann_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", fp)
+    val base = PipelineQueries.driveBase(spark, "esann", dir, "embeddings")
     val store = s"$base/store"
     val url = s"jdbc:derby:$base/derby;create=true"
     val pipeline = AnnServingPipeline(
@@ -1021,19 +1017,10 @@ object MandateQueries {
       idField = "vec_id", vectorField = "embedding", cents = cents,
       jdbcUrl = url, postingsTable = "postings_q143",
       esMirror = Some(EsTarget("http://graft-local/vecs_q143", "graft", "graft")))
-    q143Lock.synchronized {
+    DeltaLog.withBuildLock(base) {
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(store))
-      val c = java.sql.DriverManager.getConnection(url)
-      try {
-        val st = c.createStatement()
-        try st.execute(
-          """CREATE TABLE postings_q143 ("vec_id" BIGINT NOT NULL PRIMARY
-            | KEY, "cell" INTEGER, "emb_json" VARCHAR(32000))"""
-            .stripMargin.replace("\n", ""))
-        catch { // X0Y32: table already exists (idempotent re-drive)
-          case e: java.sql.SQLException if e.getSQLState == "X0Y32" => ()
-        }
-      } finally c.close()
+      graft.sinks.JdbcSink.createTableIfAbsent(url,
+        PipelineQueries.vecPostingsDdl("postings_q143"))
       pipeline.runOnce(spark, feed, s"$base/work",
         esTransport = new graft.sinks.EsSink.FileDocStore(store))
     }

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.ops._
+import graft.sinks.JdbcSink
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -1201,10 +1202,46 @@ object PipelineQueries {
       CorpusOps.mergeComponents(labels0, inserted), post, retracted)
   }
 
-  /** Serializes q133's pipeline drive: two concurrent invocations in
-    * one JVM must not share streaming checkpoints mid-flight.
+  /** Keyed store DDL shared by the drives: the dedup-cluster serving
+    * table, the (vec_id, cell, emb_json) ANN postings, and the
+    * orders⋈customer enriched view. The view's c_nationkey is INTEGER,
+    * matching the row schema's type exactly: Derby's MERGE INSERT stores
+    * the staged value without normalizing its width, so an INT staged
+    * into a BIGINT column corrupts the page (XSDA7 EOF on the next
+    * scan's SQLLongint read).
     */
-  private val q133Lock = new Object
+  private def clustersDdl(table: String): String =
+    s"""CREATE TABLE $table ("doc_id" BIGINT NOT NULL PRIMARY KEY,
+       | "cluster_id" BIGINT, "is_canonical" INTEGER)"""
+      .stripMargin.replace("\n", "")
+  private[queries] def vecPostingsDdl(table: String): String =
+    s"""CREATE TABLE $table ("vec_id" BIGINT NOT NULL PRIMARY KEY,
+       | "cell" INTEGER, "emb_json" VARCHAR(32000))"""
+      .stripMargin.replace("\n", "")
+  private def enrichedDdl(table: String): String =
+    s"""CREATE TABLE $table ("o_orderkey" BIGINT NOT NULL PRIMARY KEY,
+       | "o_custkey" BIGINT, "o_orderstatus" VARCHAR(8),
+       | "o_totalprice" DOUBLE, "o_orderpriority" VARCHAR(32),
+       | "c_custkey" BIGINT, "c_name" VARCHAR(64), "c_nationkey" INTEGER,
+       | "c_acctbal" DOUBLE, "c_mktsegment" VARCHAR(32))"""
+      .stripMargin.replace("\n", "")
+
+  /** A drive's store base in the delta-log warehouse:
+    * `<prefix>_<sanitized data dir>/<fingerprint of the source tables>`
+    * ([[graft.cdc.DeltaLog.logBase]]) — a regenerated source gets a
+    * fresh base, and the warehouse GC retires the superseded one.
+    */
+  private[queries] def driveBase(spark: SparkSession, prefix: String,
+      dir: String, tables: String*): String =
+    graft.cdc.DeltaLog.logBase(spark,
+      s"${prefix}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}",
+      graft.sources.Staging.fingerprint(tables.map(t => s"$dir/$t.parquet")))
+
+  /** The staged JSON wire as raw (value, offset) rows — the batch input
+    * of the lww drives' `applyBatch`.
+    */
+  private def rawWire(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema("value STRING, offset BIGINT").json(path)
 
   /** Q133: the FULL STREAMING DEDUP-CLUSTER PIPELINE at bench scale,
     * under the oracle gate — where q131 composes the operators in
@@ -1232,28 +1269,15 @@ object PipelineQueries {
     import graft.cdc.{ChangeFeed, DeltaLog}
     import graft.streaming.{DedupClusterPipeline, JdbcTarget}
     val feed = ChangeFeed.stagedDocsJsonl(spark, dir)
-    val fp = graft.sources.Staging.fingerprint(Seq(s"$dir/documents.parquet"))
-    val base = DeltaLog.logBase(spark,
-      s"dedupserve_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", fp)
+    val base = driveBase(spark, "dedupserve", dir, "documents")
     val url = s"jdbc:derby:$base/derby;create=true"
     val pipeline = DedupClusterPipeline(
       name = "q133", databases = Set("shop"), table = "documents",
       idField = "doc_id", textField = "text",
       target = JdbcTarget(url, "clusters_q133"),
       verifyThreshold = Some(0.6), compactEvery = 0)
-    q133Lock.synchronized {
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(base))
-      val c = java.sql.DriverManager.getConnection(url)
-      try {
-        val st = c.createStatement()
-        try st.execute(
-          """CREATE TABLE clusters_q133 ("doc_id" BIGINT NOT NULL PRIMARY
-            | KEY, "cluster_id" BIGINT, "is_canonical" INTEGER)"""
-            .stripMargin.replace("\n", ""))
-        catch { // X0Y32: table already exists (idempotent re-drive)
-          case e: java.sql.SQLException if e.getSQLState == "X0Y32" => ()
-        }
-      } finally c.close()
+    DeltaLog.withBuildLock(base) {
+      JdbcSink.createTableIfAbsent(url, clustersDdl("clusters_q133"))
       pipeline.runOnce(spark, feed, s"$base/work")
     }
     pipeline.servedClusters(spark)
@@ -1409,8 +1433,6 @@ object PipelineQueries {
       1000L)
   }
 
-  private val q135Lock = new Object
-
   /** Q135: the STREAMING search-serving pipeline at bench scale under
     * the oracle gate — q134's maintained inverted index as a LIVE
     * topology ([[graft.streaming.SearchServingPipeline]]): staged
@@ -1447,31 +1469,15 @@ object PipelineQueries {
     import graft.cdc.DeltaLog
     import graft.streaming.SearchServingPipeline
     val feed = ChangeFeed.stagedDocsJsonl(spark, dir)
-    val fp = graft.sources.Staging.fingerprint(Seq(s"$dir/documents.parquet"))
-    val base = DeltaLog.logBase(spark,
-      s"searchserve_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", fp)
+    val base = driveBase(spark, "searchserve", dir, "documents")
     val url = s"jdbc:derby:$base/derby;create=true"
     val pipeline = SearchServingPipeline(
       name = "q135", databases = Set("shop"), table = "documents",
       idField = "doc_id", textField = "text",
       jdbcUrl = url, postingsTable = "postings_q135",
       lensTable = "doclens_q135")
-    q135Lock.synchronized {
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(base))
-      val c = java.sql.DriverManager.getConnection(url)
-      try {
-        val st = c.createStatement()
-        def mk(ddl: String): Unit =
-          try { st.execute(ddl); () }
-          catch { // X0Y32: table already exists (idempotent re-drive)
-            case e: java.sql.SQLException if e.getSQLState == "X0Y32" => ()
-          }
-        mk("""CREATE TABLE postings_q135 ("token" VARCHAR(256) NOT NULL,
-             | "doc_id" BIGINT NOT NULL, "tf" BIGINT,
-             | PRIMARY KEY ("token", "doc_id"))""".stripMargin.replace("\n", ""))
-        mk("""CREATE TABLE doclens_q135 ("doc_id" BIGINT NOT NULL PRIMARY
-             | KEY, "len" BIGINT)""".stripMargin.replace("\n", ""))
-      } finally c.close()
+    DeltaLog.withBuildLock(base) {
+      pipeline.ensureStoreTables()
       pipeline.runOnce(spark, feed, s"$base/work")
     }
     pipeline.servedBm25(spark, Seq("vector", "stream", "join"))
@@ -1636,8 +1642,6 @@ object PipelineQueries {
     spark.read.schema(docSchema).json(lines)
   }
 
-  private val q140Lock = new Object
-
   /** Q140: the ES-TARGET VIEW PIPELINE under the oracle gate — the last
     * serving surface that was spec-only: the full streaming topology
     * (staged orders+customer feed → checkpointed side logs → symmetric
@@ -1665,10 +1669,7 @@ object PipelineQueries {
     import graft.cdc.{ChangeFeed, DeltaLog}
     import graft.streaming.{EsTarget, ViewPipeline}
     val feed = ChangeFeed.stagedJsonl(spark, dir)
-    val fp = graft.sources.Staging.fingerprint(
-      Seq(s"$dir/orders.parquet", s"$dir/customer.parquet"))
-    val base = DeltaLog.logBase(spark,
-      s"esview_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", fp)
+    val base = driveBase(spark, "esview", dir, "orders", "customer")
     val store = s"$base/store"
     val pipeline = ViewPipeline(
       name = "q140", databases = Set("shop"),
@@ -1680,7 +1681,7 @@ object PipelineQueries {
       // url/credentials are conf payload the file transport never
       // dials — no socket is ever opened on this path
       target = EsTarget("http://graft-local/enriched_q140", "graft", "graft"))
-    q140Lock.synchronized {
+    DeltaLog.withBuildLock(base) {
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(store))
       pipeline.runOnce(spark, feed, s"$base/work",
         esTransport = new graft.sinks.EsSink.FileDocStore(store))
@@ -1692,10 +1693,6 @@ object PipelineQueries {
         col("o_totalprice").as("total"),
         col("c_custkey"), col("c_name"), col("c_mktsegment"))
   }
-
-  private val q141Lock = new Object
-  private val q141Driven = java.util.concurrent.ConcurrentHashMap
-    .newKeySet[String]()
 
   /** Q141: the PER-PIPELINE METRICS TABLE itself under the oracle gate —
     * the operational analog of the reference's per-event logging (S6,
@@ -1737,74 +1734,50 @@ object PipelineQueries {
       |  CAST(sum(CASE WHEN o_orderkey % 5 = 0 THEN 1 ELSE 0 END) AS BIGINT),
       |  CAST(0 AS BIGINT), CAST(0 AS BIGINT)
       |FROM orders""".stripMargin) { (spark, dir) =>
-    import graft.cdc.{ChangeFeed, DeltaLog, Subscription}
+    import graft.cdc.{ChangeFeed, Subscription}
     import graft.sinks.EsSink
     import graft.streaming.{CdcPipeline, PipelineMetrics}
     val feedDir = ChangeFeed.stagedJsonl(spark, dir)
-    val fp = graft.sources.Staging.fingerprint(
-      Seq(s"$dir/orders.parquet", s"$dir/customer.parquet"))
-    val base = DeltaLog.logBase(spark,
-      s"metrics_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", fp)
+    val base = driveBase(spark, "metrics", dir, "orders", "customer")
     val url = s"jdbc:derby:$base/derby;create=true"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q141")
     val blackhole = new EsSink.Transport {
       def send(req: EsSink.Request): Int = 200
     }
-    q141Lock.synchronized {
-      val driveT0 = System.nanoTime()
-      // memoize only on SUCCESS (q167's rule): the DELETE+INSERT
-      // metrics contract makes a re-drive converge to the same rows.
-      // On-disk DONE marker (q178's rule, generalized r16): a
-      // successfully driven store never re-drives in a NEW JVM —
-      // before this gate every bench leg and Verify run re-paid
-      // the full lifecycle drive per process (and re-recorded its
-      // sidecar under that run's load, making the drive-cost gate
-      // compare noise). A crash mid-drive leaves no marker and the
-      // retry converges (the drives are re-entrant by construction
-      // — they re-ran green on completed state every leg until now).
-      val doneMark = java.nio.file.Paths.get(s"$base/_Q141_DRIVE_DONE")
-      if (!q141Driven.contains(base)
-          && !java.nio.file.Files.exists(doneMark)) {
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(base))
-        PipelineMetrics.ensureTable(target)
-        val raw = spark.read.schema(org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("value",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("offset",
-            org.apache.spark.sql.types.LongType)))).json(feedDir)
-        val orders = CdcPipeline(name = "orders_lww",
-          subscription = Subscription(Set("shop"), Set("orders")),
-          rowSchema = ChangeFeed.ordersRowSchema, idKey = "o_orderkey",
-          metrics = Some(target))
-        val ordersCfg = EsSink.Config("http://graft-local/lww_orders_q141",
-          "graft", "graft", "o_orderkey")
-        // one parse of the feed, three band filters — the filters
-        // partition exactly the post-filter slots (0,1,2,3)
-        val events = orders.changeRows(raw).localCheckpoint(true)
-        val slot = pmod(col("offset"), lit(10))
-        orders.applyBatch(events.filter(slot === 0), ordersCfg, blackhole, 0L)
-        orders.applyBatch(events.filter(slot.isin(1, 2)), ordersCfg,
-          blackhole, 1L)
-        orders.applyBatch(events.filter(slot === 3), ordersCfg, blackhole, 2L)
-        val customer = CdcPipeline(name = "customer_lww",
-          subscription = Subscription(Set("shop"), Set("customer")),
-          rowSchema = ChangeFeed.customerRowSchema, idKey = "c_custkey",
-          metrics = Some(target))
-        val customerCfg = EsSink.Config("http://graft-local/lww_customer_q141",
-          "graft", "graft", "c_custkey")
-        customer.applyBatch(customer.changeRows(raw), customerCfg,
-          blackhole, 0L)
-        java.nio.file.Files.createFile(doneMark)
-        DriveCost.record(base, "q141", driveT0, dir)
-        q141Driven.add(base); ()
-      }
+    // once per store across JVMs: before the on-disk marker every
+    // bench leg and Verify run re-paid the full drive per process (and
+    // re-recorded its sidecar under that run's load). The DELETE+INSERT
+    // metrics contract makes a crash-retry converge to the same rows.
+    DriveCost.once(base, "q141", dir) {
+      PipelineMetrics.ensureTable(target)
+      val raw = rawWire(spark, feedDir)
+      val orders = CdcPipeline(name = "orders_lww",
+        subscription = Subscription(Set("shop"), Set("orders")),
+        rowSchema = ChangeFeed.ordersRowSchema, idKey = "o_orderkey",
+        metrics = Some(target))
+      val ordersCfg = EsSink.Config("http://graft-local/lww_orders_q141",
+        "graft", "graft", "o_orderkey")
+      // one parse of the feed, three band filters — the filters
+      // partition exactly the post-filter slots (0,1,2,3)
+      val events = orders.changeRows(raw).localCheckpoint(true)
+      val slot = pmod(col("offset"), lit(10))
+      orders.applyBatch(events.filter(slot === 0), ordersCfg, blackhole, 0L)
+      orders.applyBatch(events.filter(slot.isin(1, 2)), ordersCfg,
+        blackhole, 1L)
+      orders.applyBatch(events.filter(slot === 3), ordersCfg, blackhole, 2L)
+      val customer = CdcPipeline(name = "customer_lww",
+        subscription = Subscription(Set("shop"), Set("customer")),
+        rowSchema = ChangeFeed.customerRowSchema, idKey = "c_custkey",
+        metrics = Some(target))
+      val customerCfg = EsSink.Config("http://graft-local/lww_customer_q141",
+        "graft", "graft", "c_custkey")
+      customer.applyBatch(customer.changeRows(raw), customerCfg,
+        blackhole, 0L)
     }
     PipelineMetrics.rows(spark, target)
       .select(col("pipeline"), col("kind"), col("batch_id"),
         col("rows_in"), col("dead_letters"), col("state_rows"))
   }
-
-  private val q142Lock = new Object
 
   /** Q142: the ES-TARGET DEDUP-CLUSTER PIPELINE under the oracle gate —
     * q133's full streaming composition (staged documents feed →
@@ -1828,9 +1801,7 @@ object PipelineQueries {
     import graft.cdc.{ChangeFeed, DeltaLog}
     import graft.streaming.{DedupClusterPipeline, EsTarget}
     val feed = ChangeFeed.stagedDocsJsonl(spark, dir)
-    val fp = graft.sources.Staging.fingerprint(Seq(s"$dir/documents.parquet"))
-    val base = DeltaLog.logBase(spark,
-      s"esdedup_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", fp)
+    val base = driveBase(spark, "esdedup", dir, "documents")
     val store = s"$base/store"
     val pipeline = DedupClusterPipeline(
       name = "q142", databases = Set("shop"), table = "documents",
@@ -1839,7 +1810,7 @@ object PipelineQueries {
       // dials — no socket is ever opened on this path
       target = EsTarget("http://graft-local/clusters_q142", "graft", "graft"),
       verifyThreshold = Some(0.6), compactEvery = 0)
-    q142Lock.synchronized {
+    DeltaLog.withBuildLock(base) {
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(store))
       pipeline.runOnce(spark, feed, s"$base/work",
         esTransport = new graft.sinks.EsSink.FileDocStore(store))
@@ -2220,10 +2191,6 @@ object PipelineQueries {
         Tables.documents(spark, dir), "doc_id")))
   }
 
-  private val q151Lock = new Object
-  private val q151Driven = java.util.concurrent.ConcurrentHashMap
-    .newKeySet[String]()
-
   /** Q151: STREAMING EXPECTATION VERDICTS under the oracle gate —
     * q141's certification pattern applied to the declared-expectations
     * feature itself: a real [[graft.streaming.CdcPipeline]] with three
@@ -2267,55 +2234,37 @@ object PipelineQueries {
       |       CAST(0 AS BIGINT), CAST(0 AS BIGINT)
       |UNION ALL SELECT 'orders_exp', CAST(2 AS BIGINT), 'price_cap',
       |       CAST(0 AS BIGINT), CAST(0 AS BIGINT))""".stripMargin) { (spark, dir) =>
-    import graft.cdc.{ChangeFeed, DeltaLog, Subscription}
+    import graft.cdc.{ChangeFeed, Subscription}
     import graft.ops.Profile
     import graft.sinks.EsSink
     import graft.streaming.{CdcPipeline, PipelineMetrics}
     val feedDir = ChangeFeed.stagedJsonl(spark, dir)
-    val fp = graft.sources.Staging.fingerprint(
-      Seq(s"$dir/orders.parquet", s"$dir/customer.parquet"))
-    val base = DeltaLog.logBase(spark,
-      s"expect_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", fp)
+    val base = driveBase(spark, "expect", dir, "orders", "customer")
     val url = s"jdbc:derby:$base/derby;create=true"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q151")
     val blackhole = new EsSink.Transport {
       def send(req: EsSink.Request): Int = 200
     }
-    q151Lock.synchronized {
-      val driveT0 = System.nanoTime()
-      // memoize only on SUCCESS (q141's rule — verdict rows replay
-      // DELETE+INSERT, so a re-drive converges; read, don't re-drive)
-      // on-disk DONE marker — q141's cross-JVM memoization rule
-      val doneMark = java.nio.file.Paths.get(s"$base/_Q151_DRIVE_DONE")
-      if (!q151Driven.contains(base)
-          && !java.nio.file.Files.exists(doneMark)) {
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(base))
-        PipelineMetrics.ensureTable(target)
-        PipelineMetrics.ensureExpectTable(target)
-        val raw = spark.read.schema(org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("value",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("offset",
-            org.apache.spark.sql.types.LongType)))).json(feedDir)
-        val orders = CdcPipeline(name = "orders_exp",
-          subscription = Subscription(Set("shop"), Set("orders")),
-          rowSchema = ChangeFeed.ordersRowSchema, idKey = "o_orderkey",
-          metrics = Some(target),
-          expectations = Seq(
-            Profile.NotNull("key_set", "o_orderkey"),
-            Profile.Unique("key_unique", "o_orderkey"),
-            Profile.InRange("price_cap", "o_totalprice", 0.0, 300000.0)))
-        val cfg = EsSink.Config("http://graft-local/lww_orders_q151",
-          "graft", "graft", "o_orderkey")
-        val events = orders.changeRows(raw).localCheckpoint(true)
-        val slot = pmod(col("offset"), lit(10))
-        orders.applyBatch(events.filter(slot === 0), cfg, blackhole, 0L)
-        orders.applyBatch(events.filter(slot.isin(1, 2)), cfg, blackhole, 1L)
-        orders.applyBatch(events.filter(slot === 3), cfg, blackhole, 2L)
-        java.nio.file.Files.createFile(doneMark)
-        DriveCost.record(base, "q151", driveT0, dir)
-        q151Driven.add(base); ()
-      }
+    // verdict rows replay DELETE+INSERT, so a crash-retry converges
+    DriveCost.once(base, "q151", dir) {
+      PipelineMetrics.ensureTable(target)
+      PipelineMetrics.ensureExpectTable(target)
+      val raw = rawWire(spark, feedDir)
+      val orders = CdcPipeline(name = "orders_exp",
+        subscription = Subscription(Set("shop"), Set("orders")),
+        rowSchema = ChangeFeed.ordersRowSchema, idKey = "o_orderkey",
+        metrics = Some(target),
+        expectations = Seq(
+          Profile.NotNull("key_set", "o_orderkey"),
+          Profile.Unique("key_unique", "o_orderkey"),
+          Profile.InRange("price_cap", "o_totalprice", 0.0, 300000.0)))
+      val cfg = EsSink.Config("http://graft-local/lww_orders_q151",
+        "graft", "graft", "o_orderkey")
+      val events = orders.changeRows(raw).localCheckpoint(true)
+      val slot = pmod(col("offset"), lit(10))
+      orders.applyBatch(events.filter(slot === 0), cfg, blackhole, 0L)
+      orders.applyBatch(events.filter(slot.isin(1, 2)), cfg, blackhole, 1L)
+      orders.applyBatch(events.filter(slot === 3), cfg, blackhole, 2L)
     }
     PipelineMetrics.expectRows(spark, target)
       .select(col("pipeline"), col("batch_id"), col("rule"),
@@ -2432,65 +2381,43 @@ object PipelineQueries {
     CorpusOps.scrubFrequentTokens(cur, "doc_id", "text", termDf, nDocs)
   }
 
-  private val q154Lock = new Object
-  // one drive per (JVM, warehouse base): applyBatch is not checkpointed,
-  // so the memo keeps q154/q155 from re-sending the store twice per run
-  private val q154Driven = java.util.concurrent.ConcurrentHashMap
-    .newKeySet[String]()
-
   /** Shared drive for q154/q155: a real [[graft.streaming.CdcPipeline]]
     * with a conf-style DROP-action expectation
     * (`in_range(o_totalprice, 0, 300000) → drop`) drains the staged
     * orders feed in ONE deterministic batch into an
     * [[graft.sinks.EsSink.FileDocStore]] — violating winners
     * dead-letter under `<dead>/_expect` instead of reaching the store.
+    * Driven once per warehouse base: applyBatch is not checkpointed, so
+    * the memo keeps q154/q155 from re-sending the store on every call.
     * Returns (storeDir, deadLetterDir, metricsTarget).
     */
   private def enforcedDrive(spark: SparkSession,
       dir: String): (String, String, graft.streaming.PipelineMetrics.Target) = {
-    import graft.cdc.{ChangeFeed, DeltaLog, Subscription}
+    import graft.cdc.{ChangeFeed, Subscription}
     import graft.ops.Profile
     import graft.sinks.EsSink
     import graft.streaming.{CdcPipeline, PipelineMetrics}
     val feedDir = ChangeFeed.stagedJsonl(spark, dir)
-    val fp = graft.sources.Staging.fingerprint(
-      Seq(s"$dir/orders.parquet", s"$dir/customer.parquet"))
-    val base = DeltaLog.logBase(spark,
-      s"enforce_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", fp)
+    val base = driveBase(spark, "enforce", dir, "orders", "customer")
     val store = s"$base/store"
     val dead = s"$base/dead"
     val url = s"jdbc:derby:$base/derby;create=true"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q154")
-    q154Lock.synchronized {
-      val driveT0 = System.nanoTime()
-      // memoize only on SUCCESS: a failed drive must retry on the
-      // next invocation, not poison the JVM with a partial store
-      // on-disk DONE marker — q141's cross-JVM memoization rule
-      val doneMark = java.nio.file.Paths.get(s"$base/_Q154_DRIVE_DONE")
-      if (!q154Driven.contains(base)
-          && !java.nio.file.Files.exists(doneMark)) {
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(store))
-        PipelineMetrics.ensureTable(target)
-        PipelineMetrics.ensureExpectTable(target)
-        val raw = spark.read.schema(org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("value",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("offset",
-            org.apache.spark.sql.types.LongType)))).json(feedDir)
-        val orders = CdcPipeline(name = "orders_enforced",
-          subscription = Subscription(Set("shop"), Set("orders")),
-          rowSchema = ChangeFeed.ordersRowSchema, idKey = "o_orderkey",
-          deadLetterDir = Some(dead), metrics = Some(target),
-          expectations = Seq(Profile.InRange("price_cap", "o_totalprice",
-            0.0, 300000.0, action = Profile.Drop)))
-        val cfg = EsSink.Config("http://graft-local/lww_orders_q154",
-          "graft", "graft", "o_orderkey")
-        orders.applyBatch(orders.changeRows(raw), cfg,
-          new EsSink.FileDocStore(store), 0L)
-        java.nio.file.Files.createFile(doneMark)
-        DriveCost.record(base, "q154", driveT0, dir)
-        q154Driven.add(base); ()
-      }
+    DriveCost.once(base, "q154", dir) {
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(store))
+      PipelineMetrics.ensureTable(target)
+      PipelineMetrics.ensureExpectTable(target)
+      val raw = rawWire(spark, feedDir)
+      val orders = CdcPipeline(name = "orders_enforced",
+        subscription = Subscription(Set("shop"), Set("orders")),
+        rowSchema = ChangeFeed.ordersRowSchema, idKey = "o_orderkey",
+        deadLetterDir = Some(dead), metrics = Some(target),
+        expectations = Seq(Profile.InRange("price_cap", "o_totalprice",
+          0.0, 300000.0, action = Profile.Drop)))
+      val cfg = EsSink.Config("http://graft-local/lww_orders_q154",
+        "graft", "graft", "o_orderkey")
+      orders.applyBatch(orders.changeRows(raw), cfg,
+        new EsSink.FileDocStore(store), 0L)
     }
     (store, dead, target)
   }
@@ -2554,10 +2481,6 @@ object PipelineQueries {
         col("r.o_totalprice").as("price"))
   }
 
-  private val q156Lock = new Object
-  private val q156Driven = java.util.concurrent.ConcurrentHashMap
-    .newKeySet[String]()
-
   /** Q156: CONF-DECLARED REFERENTIAL INTEGRITY under the oracle gate —
     * the q150 family's declarative parity: the dimension arrives as a
     * conf-declared parquet path + key column
@@ -2583,57 +2506,39 @@ object PipelineQueries {
       |       'cust_in_nation' AS rule, violations,
       |       CAST(0 AS BIGINT) AS budget, violations <= 0 AS pass
       |FROM v""".stripMargin) { (spark, dir) =>
-    import graft.cdc.{ChangeFeed, DeltaLog}
+    import graft.cdc.ChangeFeed
     import graft.sinks.EsSink
     import graft.streaming.{PipelineMetrics, PipelineRegistry}
     val feedDir = ChangeFeed.stagedJsonl(spark, dir)
-    val fp = graft.sources.Staging.fingerprint(
-      Seq(s"$dir/orders.parquet", s"$dir/customer.parquet"))
-    val base = DeltaLog.logBase(spark,
-      s"refconf_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", fp)
+    val base = driveBase(spark, "refconf", dir, "orders", "customer")
     val url = s"jdbc:derby:$base/derby;create=true"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q156")
     val blackhole = new EsSink.Transport {
       def send(req: EsSink.Request): Int = 200
     }
-    q156Lock.synchronized {
-      val driveT0 = System.nanoTime()
-      // memoize only on SUCCESS: a failed drive must retry on the
-      // next invocation, not poison the JVM with a partial store
-      // on-disk DONE marker — q141's cross-JVM memoization rule
-      val doneMark = java.nio.file.Paths.get(s"$base/_Q156_DRIVE_DONE")
-      if (!q156Driven.contains(base)
-          && !java.nio.file.Files.exists(doneMark)) {
-        val confDir = java.nio.file.Paths.get(s"$base/conf")
-        java.nio.file.Files.createDirectories(confDir)
-        java.nio.file.Files.write(confDir.resolve("orders_ref.json"),
-          java.util.List.of(
-            s"""{"name":"orders_refconf","databases":["shop"],
-               |"tables":["orders"],"idKey":"o_orderkey",
-               |"schema":"o_orderkey BIGINT, o_custkey BIGINT,
-               | o_orderstatus STRING, o_totalprice DOUBLE,
-               | o_orderpriority STRING",
-               |"metrics":{"url":"jdbc:derby:$base/derby;create=true",
-               |"table":"pipeline_metrics_q156"},
-               |"expectations":[{"rule":"ref_integrity",
-               |"name":"cust_in_nation","column":"o_custkey",
-               |"dim":{"path":"$dir/nation.parquet",
-               |"keyColumn":"n_nationkey"}}]}""".stripMargin
-              .replace("\n", "")))
-        val entries = PipelineRegistry.load(confDir.toString)
-        val raw = spark.read.schema(org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("value",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("offset",
-            org.apache.spark.sql.types.LongType)))).json(feedDir)
-        val p = entries.head.pipeline
-        p.applyBatch(p.changeRows(raw),
-          EsSink.Config("http://graft-local/lww_orders_q156", "graft",
-            "graft", "o_orderkey"), blackhole, 0L)
-        java.nio.file.Files.createFile(doneMark)
-        DriveCost.record(base, "q156", driveT0, dir)
-        q156Driven.add(base); ()
-      }
+    DriveCost.once(base, "q156", dir) {
+      val confDir = java.nio.file.Paths.get(s"$base/conf")
+      java.nio.file.Files.createDirectories(confDir)
+      java.nio.file.Files.write(confDir.resolve("orders_ref.json"),
+        java.util.List.of(
+          s"""{"name":"orders_refconf","databases":["shop"],
+             |"tables":["orders"],"idKey":"o_orderkey",
+             |"schema":"o_orderkey BIGINT, o_custkey BIGINT,
+             | o_orderstatus STRING, o_totalprice DOUBLE,
+             | o_orderpriority STRING",
+             |"metrics":{"url":"jdbc:derby:$base/derby;create=true",
+             |"table":"pipeline_metrics_q156"},
+             |"expectations":[{"rule":"ref_integrity",
+             |"name":"cust_in_nation","column":"o_custkey",
+             |"dim":{"path":"$dir/nation.parquet",
+             |"keyColumn":"n_nationkey"}}]}""".stripMargin
+            .replace("\n", "")))
+      val entries = PipelineRegistry.load(confDir.toString)
+      val raw = rawWire(spark, feedDir)
+      val p = entries.head.pipeline
+      p.applyBatch(p.changeRows(raw),
+        EsSink.Config("http://graft-local/lww_orders_q156", "graft",
+          "graft", "o_orderkey"), blackhole, 0L)
     }
     PipelineMetrics.expectRows(spark, target)
       .filter(col("pipeline") === "orders_refconf")
@@ -2870,10 +2775,6 @@ object PipelineQueries {
     Seq(badtype, twoNew, oneNew, clean).reduce(_ unionByName _)
   }
 
-  private val q159Lock = new Object
-  private val q159Driven = java.util.concurrent.ConcurrentHashMap
-    .newKeySet[String]()
-
   /** Q159: PER-BATCH SCHEMA-DRIFT VERDICTS under the oracle gate — the
     * streaming operationalization of the reference's DDL-event
     * awareness (R7), certified by an independent engine: a drifting
@@ -2910,46 +2811,30 @@ object PipelineQueries {
       |  CASE WHEN (SELECT c FROM nb) > 0 THEN 'o_totalprice'
       |       ELSE '' END AS changed_names,
       |  CAST(0 AS INT) AS names_truncated""".stripMargin) { (spark, dir) =>
-    import graft.cdc.{ChangeFeed, DeltaLog, Subscription}
+    import graft.cdc.{ChangeFeed, Subscription}
     import graft.sinks.EsSink
     import graft.streaming.{CdcPipeline, PipelineMetrics}
-    val fp = graft.sources.Staging.fingerprint(Seq(s"$dir/orders.parquet"))
-    val base = DeltaLog.logBase(spark,
-      s"drift_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", fp)
+    val base = driveBase(spark, "drift", dir, "orders")
     val url = s"jdbc:derby:$base/derby;create=true"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q159")
-    q159Lock.synchronized {
-      val driveT0 = System.nanoTime()
-      // memoize only on SUCCESS: a failed drive must retry on the
-      // next invocation, not poison the JVM with a partial store
-      // on-disk DONE marker — q141's cross-JVM memoization rule
-      val doneMark = java.nio.file.Paths.get(s"$base/_Q159_DRIVE_DONE")
-      if (!q159Driven.contains(base)
-          && !java.nio.file.Files.exists(doneMark)) {
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(base))
-        PipelineMetrics.ensureTable(target)
-        PipelineMetrics.ensureDriftTable(target)
-        val feed = driftingOrdersWire(spark, dir)
-        val pipeline = CdcPipeline(name = "orders_drift",
-          subscription = Subscription(Set("shop"), Set("orders")),
-          rowSchema = ChangeFeed.ordersRowSchema, idKey = "o_orderkey",
-          metrics = Some(target), driftCheck = true)
-        val blackhole = new EsSink.Transport {
-          def send(req: EsSink.Request): Int = 200
-        }
-        pipeline.applyBatch(pipeline.changeRows(feed),
-          EsSink.Config("http://graft-local/lww_orders_q159", "graft",
-            "graft", "o_orderkey"), blackhole, 0L)
-        java.nio.file.Files.createFile(doneMark)
-        DriveCost.record(base, "q159", driveT0, dir)
-        q159Driven.add(base); ()
+    DriveCost.once(base, "q159", dir) {
+      PipelineMetrics.ensureTable(target)
+      PipelineMetrics.ensureDriftTable(target)
+      val feed = driftingOrdersWire(spark, dir)
+      val pipeline = CdcPipeline(name = "orders_drift",
+        subscription = Subscription(Set("shop"), Set("orders")),
+        rowSchema = ChangeFeed.ordersRowSchema, idKey = "o_orderkey",
+        metrics = Some(target), driftCheck = true)
+      val blackhole = new EsSink.Transport {
+        def send(req: EsSink.Request): Int = 200
       }
+      pipeline.applyBatch(pipeline.changeRows(feed),
+        EsSink.Config("http://graft-local/lww_orders_q159", "graft",
+          "graft", "o_orderkey"), blackhole, 0L)
     }
     PipelineMetrics.driftRows(spark, target)
       .filter(col("pipeline") === "orders_drift")
   }
-
-  private val q160Lock = new Object
 
   /** Q160: ENFORCEMENT ON THE ADDITIVE STORE under the oracle gate —
     * q154 certifies drop enforcement for keyed-document serving; this
@@ -2981,10 +2866,7 @@ object PipelineQueries {
     import graft.ops.Profile
     import graft.streaming.{PipelineMetrics, SearchServingPipeline}
     val feed = ChangeFeed.stagedDocsJsonl(spark, dir)
-    val fp = graft.sources.Staging.fingerprint(
-      Seq(s"$dir/documents.parquet", s"$dir/customer.parquet"))
-    val base = DeltaLog.logBase(spark,
-      s"enfsearch_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", fp)
+    val base = driveBase(spark, "enfsearch", dir, "documents", "customer")
     val url = s"jdbc:derby:$base/derby;create=true"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q160")
     val pipeline = SearchServingPipeline(
@@ -2997,30 +2879,14 @@ object PipelineQueries {
       expectations = Seq(Profile.RefIntegrityPath("doc_in_customer",
         "doc_id", s"$dir/customer.parquet", "c_custkey",
         budget = 0L, action = Profile.Drop)))
-    q160Lock.synchronized {
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(base))
+    DeltaLog.withBuildLock(base) {
       PipelineMetrics.ensureTable(target)
       PipelineMetrics.ensureExpectTable(target)
-      val c = java.sql.DriverManager.getConnection(url)
-      try {
-        val st = c.createStatement()
-        def mk(ddl: String): Unit =
-          try { st.execute(ddl); () }
-          catch { // X0Y32: table already exists (idempotent re-drive)
-            case e: java.sql.SQLException if e.getSQLState == "X0Y32" => ()
-          }
-        mk("""CREATE TABLE postings_q160 ("token" VARCHAR(256) NOT NULL,
-             | "doc_id" BIGINT NOT NULL, "tf" BIGINT,
-             | PRIMARY KEY ("token", "doc_id"))""".stripMargin.replace("\n", ""))
-        mk("""CREATE TABLE doclens_q160 ("doc_id" BIGINT NOT NULL PRIMARY
-             | KEY, "len" BIGINT)""".stripMargin.replace("\n", ""))
-      } finally c.close()
+      pipeline.ensureStoreTables()
       pipeline.runOnce(spark, feed, s"$base/work")
     }
     pipeline.servedPostings(spark)
   }
-
-  private val q161Lock = new Object
 
   /** Q161: ENFORCEMENT ON THE VIEW STORE under the oracle gate — the
     * third store kind after q154 (keyed LWW) and q160 (additive
@@ -3049,10 +2915,7 @@ object PipelineQueries {
     import graft.ops.Profile
     import graft.streaming.{JdbcTarget, PipelineMetrics, ViewPipeline}
     val feed = ChangeFeed.stagedJsonl(spark, dir)
-    val fp = graft.sources.Staging.fingerprint(
-      Seq(s"$dir/orders.parquet", s"$dir/customer.parquet"))
-    val base = DeltaLog.logBase(spark,
-      s"enfview_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", fp)
+    val base = driveBase(spark, "enfview", dir, "orders", "customer")
     val url = s"jdbc:derby:$base/derby;create=true"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q161")
     val pipeline = ViewPipeline(
@@ -3068,29 +2931,10 @@ object PipelineQueries {
       metrics = Some(target), deadLetterDir = Some(s"$base/dead"),
       expectations = Seq(Profile.InRange("bal_cap", "c_acctbal",
         0.0, 10000.0, action = Profile.Drop)))
-    q161Lock.synchronized {
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(base))
+    DeltaLog.withBuildLock(base) {
       PipelineMetrics.ensureTable(target)
       PipelineMetrics.ensureExpectTable(target)
-      val c = java.sql.DriverManager.getConnection(url)
-      try {
-        val st = c.createStatement()
-        try st.execute(
-          // c_nationkey is INTEGER, matching the row schema's type
-          // exactly: Derby's MERGE INSERT stores the staged value
-          // without normalizing its width, so an INT staged into a
-          // BIGINT column corrupts the page (XSDA7 EOF on the next
-          // scan's SQLLongint read)
-          """CREATE TABLE enriched_q161 ("o_orderkey" BIGINT NOT NULL
-            | PRIMARY KEY, "o_custkey" BIGINT, "o_orderstatus" VARCHAR(8),
-            | "o_totalprice" DOUBLE, "o_orderpriority" VARCHAR(32),
-            | "c_custkey" BIGINT, "c_name" VARCHAR(64),
-            | "c_nationkey" INTEGER, "c_acctbal" DOUBLE,
-            | "c_mktsegment" VARCHAR(32))""".stripMargin.replace("\n", ""))
-        catch { // X0Y32: table already exists (idempotent re-drive)
-          case e: java.sql.SQLException if e.getSQLState == "X0Y32" => ()
-        }
-      } finally c.close()
+      JdbcSink.createTableIfAbsent(url, enrichedDdl("enriched_q161"))
       pipeline.runOnce(spark, feed, s"$base/work")
     }
     spark.read.jdbc(url, "enriched_q161", new java.util.Properties())
@@ -3099,8 +2943,6 @@ object PipelineQueries {
         col("c_custkey").cast("long").as("c_custkey"), col("c_name"),
         col("c_acctbal"))
   }
-
-  private val q162Lock = new Object
 
   /** Q162: ENFORCEMENT ON THE ANN STORE under the oracle gate — the
     * vector index's serving rows are POSTING actions (id, advisory
@@ -3136,9 +2978,7 @@ object PipelineQueries {
     import graft.streaming.{AnnServingPipeline, PipelineMetrics}
     val cents = MandateQueries.ivfCentroidsFor(spark, dir)
     val feed = ChangeFeed.stagedEmbeddingsJsonl(spark, dir)
-    val fp = graft.sources.Staging.fingerprint(Seq(s"$dir/embeddings.parquet"))
-    val base = DeltaLog.logBase(spark,
-      s"enfann_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", fp)
+    val base = driveBase(spark, "enfann", dir, "embeddings")
     val url = s"jdbc:derby:$base/derby;create=true"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q162")
     val pipeline = AnnServingPipeline(
@@ -3148,21 +2988,10 @@ object PipelineQueries {
       metrics = Some(target), deadLetterDir = Some(s"$base/dead"),
       expectations = Seq(Profile.InRange("vec_cap", "vec_id",
         0.0, 400.0, action = Profile.Drop)))
-    q162Lock.synchronized {
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(base))
+    DeltaLog.withBuildLock(base) {
       PipelineMetrics.ensureTable(target)
       PipelineMetrics.ensureExpectTable(target)
-      val c = java.sql.DriverManager.getConnection(url)
-      try {
-        val st = c.createStatement()
-        try st.execute(
-          """CREATE TABLE postings_q162 ("vec_id" BIGINT NOT NULL PRIMARY
-            | KEY, "cell" INTEGER, "emb_json" VARCHAR(32000))"""
-            .stripMargin.replace("\n", ""))
-        catch { // X0Y32: table already exists (idempotent re-drive)
-          case e: java.sql.SQLException if e.getSQLState == "X0Y32" => ()
-        }
-      } finally c.close()
+      JdbcSink.createTableIfAbsent(url, vecPostingsDdl("postings_q162"))
       pipeline.runOnce(spark, feed, s"$base/work")
     }
     spark.read.jdbc(url, "postings_q162", new java.util.Properties())
@@ -3177,8 +3006,6 @@ object PipelineQueries {
         (col("cell") === VectorSearch.nearestCell(col("emb"), cents))
           .as("cell_ok"))
   }
-
-  private val q163Lock = new Object
 
   /** Q163: ENFORCEMENT ON THE DEDUP-CLUSTER STORE under the oracle gate
     * — the last of the five kinds: cluster rows are GRAPH-shaped, so
@@ -3208,9 +3035,7 @@ object PipelineQueries {
     import graft.ops.Profile
     import graft.streaming.{DedupClusterPipeline, JdbcTarget, PipelineMetrics}
     val feed = ChangeFeed.stagedDocsJsonl(spark, dir)
-    val fp = graft.sources.Staging.fingerprint(Seq(s"$dir/documents.parquet"))
-    val base = DeltaLog.logBase(spark,
-      s"enfdedup_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", fp)
+    val base = driveBase(spark, "enfdedup", dir, "documents")
     val url = s"jdbc:derby:$base/derby;create=true"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q163")
     val pipeline = DedupClusterPipeline(
@@ -3221,27 +3046,14 @@ object PipelineQueries {
       metrics = Some(target), deadLetterDir = Some(s"$base/dead"),
       expectations = Seq(Profile.InRange("doc_floor", "doc_id",
         100.0, 1000000.0, action = Profile.Drop)))
-    q163Lock.synchronized {
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(base))
+    DeltaLog.withBuildLock(base) {
       PipelineMetrics.ensureTable(target)
       PipelineMetrics.ensureExpectTable(target)
-      val c = java.sql.DriverManager.getConnection(url)
-      try {
-        val st = c.createStatement()
-        try st.execute(
-          """CREATE TABLE clusters_q163 ("doc_id" BIGINT NOT NULL PRIMARY
-            | KEY, "cluster_id" BIGINT, "is_canonical" INTEGER)"""
-            .stripMargin.replace("\n", ""))
-        catch { // X0Y32: table already exists (idempotent re-drive)
-          case e: java.sql.SQLException if e.getSQLState == "X0Y32" => ()
-        }
-      } finally c.close()
+      JdbcSink.createTableIfAbsent(url, clustersDdl("clusters_q163"))
       pipeline.runOnce(spark, feed, s"$base/work")
     }
     pipeline.servedClusters(spark)
   }
-
-  private val q164Lock = new Object
 
   /** Q164: the ADAPTIVE WIDTH RIDING PRODUCTION SERVING under the
     * oracle gate — q158 pins [[VectorSearch.adaptiveProbes]] offline
@@ -3285,38 +3097,24 @@ object PipelineQueries {
     import graft.streaming.AnnServingPipeline
     val cents = MandateQueries.ivfCentroidsFor(spark, dir)
     val feed = ChangeFeed.stagedEmbeddingsJsonl(spark, dir)
-    val fp = graft.sources.Staging.fingerprint(Seq(s"$dir/embeddings.parquet"))
-    val base = DeltaLog.logBase(spark,
-      s"servecert_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", fp)
+    val base = driveBase(spark, "servecert", dir, "embeddings")
     val url = s"jdbc:derby:$base/derby;create=true"
     val pipeline = AnnServingPipeline(
       name = "q164", databases = Set("shop"), table = "embeddings",
       idField = "vec_id", vectorField = "embedding", cents = cents,
       jdbcUrl = url, postingsTable = "postings_q164",
       certTable = Some("ann_cert_q164"), k = 5, nProbe = 4)
-    q164Lock.synchronized {
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(base))
-      val c = java.sql.DriverManager.getConnection(url)
-      try {
-        val st = c.createStatement()
-        def mk(ddl: String): Unit =
-          try { st.execute(ddl); () }
-          catch { // X0Y32: table already exists (idempotent re-drive)
-            case e: java.sql.SQLException if e.getSQLState == "X0Y32" => ()
-          }
-        mk("""CREATE TABLE postings_q164 ("vec_id" BIGINT NOT NULL PRIMARY
-             | KEY, "cell" INTEGER, "emb_json" VARCHAR(32000))"""
-          .stripMargin.replace("\n", ""))
-        mk("""CREATE TABLE ann_cert_q164 ("pipeline" VARCHAR(64) NOT NULL
-             | PRIMARY KEY, "batch_id" BIGINT, "recall" DOUBLE,
-             | "recall_ok" INTEGER, "skew" DOUBLE, "drift_ok" INTEGER,
-             | "probed" INTEGER)""".stripMargin.replace("\n", ""))
-        mk("""CREATE TABLE ann_cert_q164_f ("pipeline" VARCHAR(64) NOT NULL,
-             | "tag" VARCHAR(64) NOT NULL, "n_allowed" BIGINT,
-             | "probes" INTEGER, "recall" DOUBLE, "recall_ok" INTEGER,
-             | PRIMARY KEY ("pipeline", "tag"))"""
-          .stripMargin.replace("\n", ""))
-      } finally c.close()
+    DeltaLog.withBuildLock(base) {
+      Seq(vecPostingsDdl("postings_q164"),
+        """CREATE TABLE ann_cert_q164 ("pipeline" VARCHAR(64) NOT NULL
+          | PRIMARY KEY, "batch_id" BIGINT, "recall" DOUBLE,
+          | "recall_ok" INTEGER, "skew" DOUBLE, "drift_ok" INTEGER,
+          | "probed" INTEGER)""".stripMargin.replace("\n", ""),
+        """CREATE TABLE ann_cert_q164_f ("pipeline" VARCHAR(64) NOT NULL,
+          | "tag" VARCHAR(64) NOT NULL, "n_allowed" BIGINT,
+          | "probes" INTEGER, "recall" DOUBLE, "recall_ok" INTEGER,
+          | PRIMARY KEY ("pipeline", "tag"))""".stripMargin.replace("\n", ""))
+        .foreach(JdbcSink.createTableIfAbsent(url, _))
       pipeline.runOnce(spark, feed, s"$base/work")
       val served = pipeline.servedPostings(spark).localCheckpoint(true)
       val queries = served.filter(col("vec_id") < 10)
@@ -3348,10 +3146,6 @@ object PipelineQueries {
         (col("recall_ok") === 1).as("recall_ok"))
   }
 
-  private val q165Lock = new Object
-  private val q165Driven = java.util.concurrent.ConcurrentHashMap
-    .newKeySet[String]()
-
   /** Q165: DRIFT ENFORCEMENT under the oracle gate — q159 records
     * schema-drift verdicts; this certifies the conf-declared
     * ESCALATION ([[graft.streaming.CdcPipeline.DriftPolicy]], the
@@ -3373,41 +3167,28 @@ object PipelineQueries {
       |FROM orders
       |WHERE o_orderkey % 11 <> 0 AND o_orderkey % 7 <> 0""".stripMargin) {
     (spark, dir) =>
-    import graft.cdc.{ChangeFeed, DeltaLog, Subscription}
+    import graft.cdc.{ChangeFeed, Subscription}
     import graft.sinks.EsSink
     import graft.streaming.{CdcPipeline, PipelineMetrics}
-    val fp = graft.sources.Staging.fingerprint(Seq(s"$dir/orders.parquet"))
-    val base = DeltaLog.logBase(spark,
-      s"driftenf_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", fp)
+    val base = driveBase(spark, "driftenf", dir, "orders")
     val url = s"jdbc:derby:$base/derby;create=true"
     val store = s"$base/store"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q165")
-    q165Lock.synchronized {
-      val driveT0 = System.nanoTime()
-      // memoize only on SUCCESS: a failed drive must retry on the
-      // next invocation, not poison the JVM with a partial store
-      // on-disk DONE marker — q141's cross-JVM memoization rule
-      val doneMark = java.nio.file.Paths.get(s"$base/_Q165_DRIVE_DONE")
-      if (!q165Driven.contains(base)
-          && !java.nio.file.Files.exists(doneMark)) {
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(store))
-        PipelineMetrics.ensureTable(target)
-        PipelineMetrics.ensureDriftTable(target)
-        val feed = driftingOrdersWire(spark, dir)
-        val pipeline = CdcPipeline(name = "orders_drift_enf",
-          subscription = Subscription(Set("shop"), Set("orders")),
-          rowSchema = ChangeFeed.ordersRowSchema, idKey = "o_orderkey",
-          metrics = Some(target), deadLetterDir = Some(s"$base/dead"),
-          driftPolicy = Some(CdcPipeline.DriftPolicy(newColsBudget = 0L,
-            action = graft.ops.Profile.Drop)))
-        pipeline.applyBatch(pipeline.changeRows(feed),
-          EsSink.Config("http://graft-local/lww_orders_q165", "graft",
-            "graft", "o_orderkey"),
-          new EsSink.FileDocStore(store), 0L)
-        java.nio.file.Files.createFile(doneMark)
-        DriveCost.record(base, "q165", driveT0, dir)
-        q165Driven.add(base); ()
-      }
+    DriveCost.once(base, "q165", dir) {
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(store))
+      PipelineMetrics.ensureTable(target)
+      PipelineMetrics.ensureDriftTable(target)
+      val feed = driftingOrdersWire(spark, dir)
+      val pipeline = CdcPipeline(name = "orders_drift_enf",
+        subscription = Subscription(Set("shop"), Set("orders")),
+        rowSchema = ChangeFeed.ordersRowSchema, idKey = "o_orderkey",
+        metrics = Some(target), deadLetterDir = Some(s"$base/dead"),
+        driftPolicy = Some(CdcPipeline.DriftPolicy(newColsBudget = 0L,
+          action = graft.ops.Profile.Drop)))
+      pipeline.applyBatch(pipeline.changeRows(feed),
+        EsSink.Config("http://graft-local/lww_orders_q165", "graft",
+          "graft", "o_orderkey"),
+        new EsSink.FileDocStore(store), 0L)
     }
     readDocStore(spark, store, ChangeFeed.ordersRowSchema)
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
@@ -3437,18 +3218,12 @@ object PipelineQueries {
     import graft.streaming.PipelineMetrics
     // share q165's drive (memoized per warehouse base)
     q165.fn(spark, dir).count()
-    val fp = graft.sources.Staging.fingerprint(Seq(s"$dir/orders.parquet"))
-    val base = graft.cdc.DeltaLog.logBase(spark,
-      s"driftenf_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", fp)
+    val base = driveBase(spark, "driftenf", dir, "orders")
     PipelineMetrics.driftDeadLetters(spark, s"$base/dead")
       .select(col("batch_id"), col("violated"),
         get_json_object(col("row_json"), "$.o_orderkey").cast("bigint")
           .as("o_orderkey"))
   }
-
-  private val q167Lock = new Object
-  private val q167Driven = java.util.concurrent.ConcurrentHashMap
-    .newKeySet[String]()
 
   /** Q167: the DEAD-LETTER REPLAY lifecycle under the oracle gate — the
     * operational half of drop quarantine
@@ -3470,64 +3245,45 @@ object PipelineQueries {
       |            ELSE o_totalprice END AS price,
       |       o_orderpriority
       |FROM orders WHERE o_orderkey % 5 <> 0""".stripMargin) { (spark, dir) =>
-    import graft.cdc.{ChangeFeed, DeltaLog, Subscription}
+    import graft.cdc.{ChangeFeed, Subscription}
     import graft.ops.Profile
     import graft.sinks.EsSink
     import graft.streaming.{CdcPipeline, PipelineMetrics}
     val feedDir = ChangeFeed.stagedJsonl(spark, dir)
-    val fp = graft.sources.Staging.fingerprint(
-      Seq(s"$dir/orders.parquet", s"$dir/customer.parquet"))
-    val base = DeltaLog.logBase(spark,
-      s"replayenf_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", fp)
+    val base = driveBase(spark, "replayenf", dir, "orders", "customer")
     val store = s"$base/store"
     val dead = s"$base/dead"
     val url = s"jdbc:derby:$base/derby;create=true"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q167")
-    q167Lock.synchronized {
-      val driveT0 = System.nanoTime()
-      // memoize only on SUCCESS: a failed drive must retry on the
-      // next invocation, not poison the JVM with a partial store
-      // on-disk DONE marker — q141's cross-JVM memoization rule
-      val doneMark = java.nio.file.Paths.get(s"$base/_Q167_DRIVE_DONE")
-      if (!q167Driven.contains(base)
-          && !java.nio.file.Files.exists(doneMark)) {
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(store))
-        PipelineMetrics.ensureTable(target)
-        PipelineMetrics.ensureExpectTable(target)
-        // the replay feed file must not leak between drives
-        // ([[stageDriveLocalFeed]]'s contract)
-        val myFeed = stageDriveLocalFeed(spark, feedDir, base, "q167")
-        def rawOf(path: String) = spark.read.schema(
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("value",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("offset",
-              org.apache.spark.sql.types.LongType)))).json(path)
-        def pipe(hi: Double) = CdcPipeline(name = "orders_replay",
-          subscription = Subscription(Set("shop"), Set("orders")),
-          rowSchema = ChangeFeed.ordersRowSchema, idKey = "o_orderkey",
-          deadLetterDir = Some(dead), metrics = Some(target),
-          expectations = Seq(Profile.InRange("price_cap", "o_totalprice",
-            0.0, hi, action = Profile.Drop)))
-        val cfg = EsSink.Config("http://graft-local/lww_orders_q167",
-          "graft", "graft", "o_orderkey")
-        val sink = new EsSink.FileDocStore(store)
-        // batch 0: the strict rule drops high-price winners
-        val strict = pipe(hi = 300000.0)
-        strict.applyBatch(strict.changeRows(rawOf(myFeed)), cfg, sink, 0L)
-        // conf fix + replay: the withheld winners re-enter the feed as
-        // ordinary wire events (ts above the feed's tail so they win)
-        PipelineMetrics.replayExpectDeadLetters(spark, dead,
-          "orders_replay", "shop", "orders", myFeed, tsMs = 9000000000L)
-        // batch 1: ONLY the replayed file drains through the FIXED rule
-        val fixed = pipe(hi = Double.MaxValue)
-        fixed.applyBatch(fixed.changeRows(
-          rawOf(s"$myFeed/replay_expect_orders_replay_9000000000.json")),
-          cfg, sink, 1L)
-        java.nio.file.Files.createFile(doneMark)
-        DriveCost.record(base, "q167", driveT0, dir)
-        q167Driven.add(base); ()
-      }
+    DriveCost.once(base, "q167", dir) {
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(store))
+      PipelineMetrics.ensureTable(target)
+      PipelineMetrics.ensureExpectTable(target)
+      // the replay feed file must not leak between drives
+      // ([[stageDriveLocalFeed]]'s contract)
+      val myFeed = stageDriveLocalFeed(spark, feedDir, base, "q167")
+      def pipe(hi: Double) = CdcPipeline(name = "orders_replay",
+        subscription = Subscription(Set("shop"), Set("orders")),
+        rowSchema = ChangeFeed.ordersRowSchema, idKey = "o_orderkey",
+        deadLetterDir = Some(dead), metrics = Some(target),
+        expectations = Seq(Profile.InRange("price_cap", "o_totalprice",
+          0.0, hi, action = Profile.Drop)))
+      val cfg = EsSink.Config("http://graft-local/lww_orders_q167",
+        "graft", "graft", "o_orderkey")
+      val sink = new EsSink.FileDocStore(store)
+      // batch 0: the strict rule drops high-price winners
+      val strict = pipe(hi = 300000.0)
+      strict.applyBatch(strict.changeRows(rawWire(spark, myFeed)), cfg, sink, 0L)
+      // conf fix + replay: the withheld winners re-enter the feed as
+      // ordinary wire events (ts above the feed's tail so they win)
+      PipelineMetrics.replayExpectDeadLetters(spark, dead,
+        "orders_replay", "shop", "orders", myFeed, tsMs = 9000000000L)
+      // batch 1: ONLY the replayed file drains through the FIXED rule
+      val fixed = pipe(hi = Double.MaxValue)
+      fixed.applyBatch(fixed.changeRows(
+        rawWire(spark,
+          s"$myFeed/replay_expect_orders_replay_9000000000.json")),
+        cfg, sink, 1L)
     }
     readDocStore(spark, store, ChangeFeed.ordersRowSchema)
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
@@ -3559,10 +3315,6 @@ object PipelineQueries {
     myFeed
   }
 
-  private val q168Lock = new Object
-  private val q168Driven = java.util.concurrent.ConcurrentHashMap
-    .newKeySet[String]()
-
   /** Q168: the KEYED REPLAY lifecycle on the VIEW kind under the oracle
     * gate — q167's quarantine→fix→replay story where the dead letter is
     * a DERIVED row and cannot re-enter the feed as wire: drive 1 runs
@@ -3588,14 +3340,11 @@ object PipelineQueries {
       |       c.c_custkey, c.c_name, c.c_acctbal
       |FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
       |WHERE o.o_orderkey % 5 <> 0""".stripMargin) { (spark, dir) =>
-    import graft.cdc.{ChangeFeed, DeltaLog}
+    import graft.cdc.ChangeFeed
     import graft.ops.Profile
     import graft.streaming.{JdbcTarget, PipelineMetrics, ViewPipeline}
     val feedDir = ChangeFeed.stagedJsonl(spark, dir)
-    val fp = graft.sources.Staging.fingerprint(
-      Seq(s"$dir/orders.parquet", s"$dir/customer.parquet"))
-    val base = DeltaLog.logBase(spark,
-      s"replayview_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", fp)
+    val base = driveBase(spark, "replayview", dir, "orders", "customer")
     val url = s"jdbc:derby:$base/derby;create=true"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q168")
     def pipe(lo: Double, hi: Double) = ViewPipeline(
@@ -3611,53 +3360,27 @@ object PipelineQueries {
       metrics = Some(target), deadLetterDir = Some(s"$base/dead"),
       expectations = Seq(Profile.InRange("bal_cap", "c_acctbal",
         lo, hi, action = Profile.Drop)))
-    q168Lock.synchronized {
-      val driveT0 = System.nanoTime()
-      // memoize only on SUCCESS (q167's rule): a failed drive retries
-      // on-disk DONE marker — q141's cross-JVM memoization rule
-      val doneMark = java.nio.file.Paths.get(s"$base/_Q168_DRIVE_DONE")
-      if (!q168Driven.contains(base)
-          && !java.nio.file.Files.exists(doneMark)) {
-        java.nio.file.Files.createDirectories(
-          java.nio.file.Paths.get(base))
-        PipelineMetrics.ensureTable(target)
-        PipelineMetrics.ensureExpectTable(target)
-        val myFeed = stageDriveLocalFeed(spark, feedDir, base, "q168")
-        val c = java.sql.DriverManager.getConnection(url)
-        try {
-          val st = c.createStatement()
-          try st.execute(
-            // exact-width DDL (q161's Derby MERGE rule)
-            """CREATE TABLE enriched_q168 ("o_orderkey" BIGINT NOT NULL
-              | PRIMARY KEY, "o_custkey" BIGINT, "o_orderstatus" VARCHAR(8),
-              | "o_totalprice" DOUBLE, "o_orderpriority" VARCHAR(32),
-              | "c_custkey" BIGINT, "c_name" VARCHAR(64),
-              | "c_nationkey" INTEGER, "c_acctbal" DOUBLE,
-              | "c_mktsegment" VARCHAR(32))""".stripMargin.replace("\n", ""))
-          catch { // X0Y32: table already exists (idempotent re-drive)
-            case e: java.sql.SQLException if e.getSQLState == "X0Y32" => ()
-          }
-        } finally c.close()
-        val work = s"$base/work"
-        val epoch = 9000000000L
-        // drive 1: the strict rule quarantines negative-balance
-        // customers' enriched orders. Skipped when a prior attempt
-        // already published the keyed replay (q172's retry rule: the
-        // strict conf must never drain the replay file)
-        if (!PipelineMetrics.replayStarted(spark, myFeed, "_expect",
-            "q168", epoch))
-          pipe(0.0, 10000.0).runOnce(spark, myFeed, work)
-        // conf fix + keyed replay: dead letters resolve to fact keys,
-        // the keys' CURRENT fact rows re-enter the feed at the epoch
-        val fixed = pipe(-1e12, 1e12)
-        fixed.replayExpectDeadLetters(spark, work, myFeed, "shop",
-          tsMs = epoch)
-        // drive 2: only the replayed file drains, through the FIXED rule
-        fixed.runOnce(spark, myFeed, work)
-        java.nio.file.Files.createFile(doneMark)
-        DriveCost.record(base, "q168", driveT0, dir)
-        q168Driven.add(base); ()
-      }
+    DriveCost.once(base, "q168", dir) {
+      PipelineMetrics.ensureTable(target)
+      PipelineMetrics.ensureExpectTable(target)
+      val myFeed = stageDriveLocalFeed(spark, feedDir, base, "q168")
+      JdbcSink.createTableIfAbsent(url, enrichedDdl("enriched_q168"))
+      val work = s"$base/work"
+      val epoch = 9000000000L
+      // drive 1: the strict rule quarantines negative-balance
+      // customers' enriched orders. Skipped when a prior attempt
+      // already published the keyed replay (q172's retry rule: the
+      // strict conf must never drain the replay file)
+      if (!PipelineMetrics.replayStarted(spark, myFeed, "_expect",
+          "q168", epoch))
+        pipe(0.0, 10000.0).runOnce(spark, myFeed, work)
+      // conf fix + keyed replay: dead letters resolve to fact keys,
+      // the keys' CURRENT fact rows re-enter the feed at the epoch
+      val fixed = pipe(-1e12, 1e12)
+      fixed.replayExpectDeadLetters(spark, work, myFeed, "shop",
+        tsMs = epoch)
+      // drive 2: only the replayed file drains, through the FIXED rule
+      fixed.runOnce(spark, myFeed, work)
     }
     spark.read.jdbc(url, "enriched_q168", new java.util.Properties())
       .select(col("o_orderkey").cast("long").as("o_orderkey"),
@@ -3727,31 +3450,8 @@ object PipelineQueries {
     feed
   }
 
-  /** The (vec_id, cell, emb_json) Derby postings DDL the drift drives
-    * serve into; X0Y32 = table already exists (idempotent re-drive).
-    */
-  private def ensureVecPostings(url: String, table: String): Unit = {
-    val c = java.sql.DriverManager.getConnection(url)
-    try {
-      val st = c.createStatement()
-      try st.execute(
-        s"""CREATE TABLE $table ("vec_id" BIGINT NOT NULL PRIMARY
-          | KEY, "cell" INTEGER, "emb_json" VARCHAR(32000))"""
-          .stripMargin.replace("\n", ""))
-      catch {
-        case e: java.sql.SQLException if e.getSQLState == "X0Y32" => ()
-      }
-    } finally c.close()
-  }
-
-  private val q169Lock = new Object
-  private val q169Driven = java.util.concurrent.ConcurrentHashMap
-    .newKeySet[String]()
-
   private def q169Base(spark: SparkSession, dir: String): String =
-    graft.cdc.DeltaLog.logBase(spark,
-      s"driftann_${dir.replaceAll("[^a-zA-Z0-9]", "_")}",
-      graft.sources.Staging.fingerprint(Seq(s"$dir/embeddings.parquet")))
+    driveBase(spark, "driftann", dir, "embeddings")
 
   private def q169Drive(spark: SparkSession, dir: String): String = {
     import graft.streaming.{AnnServingPipeline, CdcPipeline, PipelineMetrics}
@@ -3766,24 +3466,12 @@ object PipelineQueries {
       metrics = Some(target), deadLetterDir = Some(s"$base/dead"),
       driftPolicy = Some(CdcPipeline.DriftPolicy(newColsBudget = 0L,
         action = graft.ops.Profile.Drop)))
-    q169Lock.synchronized {
-      val driveT0 = System.nanoTime()
-      // memoize only on SUCCESS (q167's rule): a failed drive retries
-      // on-disk DONE marker — q141's cross-JVM memoization rule
-      val doneMark = java.nio.file.Paths.get(s"$base/_Q169_DRIVE_DONE")
-      if (!q169Driven.contains(base)
-          && !java.nio.file.Files.exists(doneMark)) {
-        java.nio.file.Files.createDirectories(
-          java.nio.file.Paths.get(base))
-        PipelineMetrics.ensureTable(target)
-        PipelineMetrics.ensureDriftTable(target)
-        val feed = publishDriftFeed(spark, dir, base)
-        ensureVecPostings(url, "postings_q169")
-        pipeline.runOnce(spark, feed, s"$base/work")
-        java.nio.file.Files.createFile(doneMark)
-        DriveCost.record(base, "q169", driveT0, dir)
-        q169Driven.add(base); ()
-      }
+    DriveCost.once(base, "q169", dir) {
+      PipelineMetrics.ensureTable(target)
+      PipelineMetrics.ensureDriftTable(target)
+      val feed = publishDriftFeed(spark, dir, base)
+      JdbcSink.createTableIfAbsent(url, vecPostingsDdl("postings_q169"))
+      pipeline.runOnce(spark, feed, s"$base/work")
     }
     url
   }
@@ -3932,14 +3620,8 @@ object PipelineQueries {
       10.minutes).reduce(_ unionByName _)
   }
 
-  private val q172Lock = new Object
-  private val q172Driven = java.util.concurrent.ConcurrentHashMap
-    .newKeySet[String]()
-
   private def q172Base(spark: SparkSession, dir: String): String =
-    graft.cdc.DeltaLog.logBase(spark,
-      s"driftreplay_${dir.replaceAll("[^a-zA-Z0-9]", "_")}",
-      graft.sources.Staging.fingerprint(Seq(s"$dir/embeddings.parquet")))
+    driveBase(spark, "driftreplay", dir, "embeddings")
 
   /** The q169 drive carried through the FULL drift lifecycle: strict
     * conf quarantines both drift classes; the conf EVOLVES (the
@@ -3948,7 +3630,7 @@ object PipelineQueries {
     * evolution IS the schema repair); the kind-agnostic drift replay
     * re-injects the RAW quarantined bytes at an epoch above the feed
     * tail; a second drain judges them by the EVOLVED conf — never a
-    * side door. Memoized only on success (q167's rule).
+    * side door. Driven once per store ([[DriveCost.once]]).
     */
   private def q172Drive(spark: SparkSession, dir: String): String = {
     import graft.streaming.{AnnServingPipeline, CdcPipeline, PipelineMetrics}
@@ -3963,44 +3645,32 @@ object PipelineQueries {
       metrics = Some(target), deadLetterDir = Some(s"$base/dead"),
       driftPolicy = Some(CdcPipeline.DriftPolicy(newColsBudget = budget,
         action = graft.ops.Profile.Drop)))
-    q172Lock.synchronized {
-      val driveT0 = System.nanoTime()
-      // memoize only on SUCCESS (q167's rule): a failed drive retries
-      // on-disk DONE marker — q141's cross-JVM memoization rule
-      val doneMark = java.nio.file.Paths.get(s"$base/_Q172_DRIVE_DONE")
-      if (!q172Driven.contains(base)
-          && !java.nio.file.Files.exists(doneMark)) {
-        java.nio.file.Files.createDirectories(
-          java.nio.file.Paths.get(base))
-        PipelineMetrics.ensureTable(target)
-        PipelineMetrics.ensureDriftTable(target)
-        val feed = publishDriftFeed(spark, dir, base)
-        ensureVecPostings(url, "postings_q172")
-        val work = s"$base/work"
-        val epoch = 9000000000L
-        // drive 1: zero tolerated evolution — the gate quarantines
-        // both the bad-typed and the undeclared-field events. SKIPPED
-        // when a prior attempt already started the replay: the strict
-        // gate would otherwise drain the published replay file at
-        // budget 0 and the used epoch could never re-publish the
-        // re-quarantined note carriers — the retry must resume at the
-        // replay step (idempotent) and drain under the evolved conf.
-        if (!PipelineMetrics.replayStarted(spark, feed, "_drift",
-            "q172", epoch))
-          pipe(0L).runOnce(spark, feed, work)
-        // conf fix + replay: the raw quarantined bytes re-enter the
-        // feed as ordinary wire events at the epoch (same verb Serve
-        // `replay drift` wraps — kind-agnostic, raw payload per kind)
-        PipelineMetrics.replayDriftDeadLetters(spark, s"$base/dead",
-          "q172", "shop", "embeddings", feed, tsMs = epoch)
-        // drive 2: ONLY the replayed file drains, through the EVOLVED
-        // conf — `note` now tolerated, the bad-typed rows re-judged
-        // (and re-quarantined) by the same fixed rule
-        pipe(1000L).runOnce(spark, feed, work)
-        java.nio.file.Files.createFile(doneMark)
-        DriveCost.record(base, "q172", driveT0, dir)
-        q172Driven.add(base); ()
-      }
+    DriveCost.once(base, "q172", dir) {
+      PipelineMetrics.ensureTable(target)
+      PipelineMetrics.ensureDriftTable(target)
+      val feed = publishDriftFeed(spark, dir, base)
+      JdbcSink.createTableIfAbsent(url, vecPostingsDdl("postings_q172"))
+      val work = s"$base/work"
+      val epoch = 9000000000L
+      // drive 1: zero tolerated evolution — the gate quarantines
+      // both the bad-typed and the undeclared-field events. SKIPPED
+      // when a prior attempt already started the replay: the strict
+      // gate would otherwise drain the published replay file at
+      // budget 0 and the used epoch could never re-publish the
+      // re-quarantined note carriers — the retry must resume at the
+      // replay step (idempotent) and drain under the evolved conf.
+      if (!PipelineMetrics.replayStarted(spark, feed, "_drift",
+          "q172", epoch))
+        pipe(0L).runOnce(spark, feed, work)
+      // conf fix + replay: the raw quarantined bytes re-enter the
+      // feed as ordinary wire events at the epoch (same verb Serve
+      // `replay drift` wraps — kind-agnostic, raw payload per kind)
+      PipelineMetrics.replayDriftDeadLetters(spark, s"$base/dead",
+        "q172", "shop", "embeddings", feed, tsMs = epoch)
+      // drive 2: ONLY the replayed file drains, through the EVOLVED
+      // conf — `note` now tolerated, the bad-typed rows re-judged
+      // (and re-quarantined) by the same fixed rule
+      pipe(1000L).runOnce(spark, feed, work)
     }
     url
   }
@@ -4117,15 +3787,8 @@ object PipelineQueries {
       .reduce(_ unionByName _)
   }
 
-  private val q174Lock = new Object
-  private val q174Driven = java.util.concurrent.ConcurrentHashMap
-    .newKeySet[String]()
-
   private def q174Base(spark: SparkSession, dir: String): String =
-    graft.cdc.DeltaLog.logBase(spark,
-      s"driftview_${dir.replaceAll("[^a-zA-Z0-9]", "_")}",
-      graft.sources.Staging.fingerprint(
-        Seq(s"$dir/orders.parquet", s"$dir/customer.parquet")))
+    driveBase(spark, "driftview", dir, "orders", "customer")
 
   private def q174Drive(spark: SparkSession, dir: String): String = {
     import graft.cdc.ChangeFeed
@@ -4151,48 +3814,22 @@ object PipelineQueries {
         action = graft.ops.Profile.Drop)),
       dimDriftPolicy = Some(CdcPipeline.DriftPolicy(newColsBudget = 0L,
         action = graft.ops.Profile.Warn)))
-    q174Lock.synchronized {
-      val driveT0 = System.nanoTime()
-      // memoize only on SUCCESS (q167's rule): a failed drive retries
-      // on-disk DONE marker — q141's cross-JVM memoization rule
-      val doneMark = java.nio.file.Paths.get(s"$base/_Q174_DRIVE_DONE")
-      if (!q174Driven.contains(base)
-          && !java.nio.file.Files.exists(doneMark)) {
-        java.nio.file.Files.createDirectories(
-          java.nio.file.Paths.get(base))
-        PipelineMetrics.ensureTable(target)
-        PipelineMetrics.ensureDriftTable(target)
-        val feed = s"$base/feed"
-        val fs = new org.apache.hadoop.fs.Path(feed)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(new org.apache.hadoop.fs.Path(feed))) {
-          // stage-then-rename (the shared drift-drive discipline)
-          driftingViewWire(spark, dir).repartition(4)
-            .write.mode("overwrite").json(s"$base/feed_tmp")
-          require(fs.rename(new org.apache.hadoop.fs.Path(s"$base/feed_tmp"),
-            new org.apache.hadoop.fs.Path(feed)),
-            s"q174: could not publish the drive-local feed $feed")
-        }
-        val c = java.sql.DriverManager.getConnection(url)
-        try {
-          val st = c.createStatement()
-          try st.execute(
-            // exact-width DDL (q161's Derby MERGE rule)
-            """CREATE TABLE enriched_q174 ("o_orderkey" BIGINT NOT NULL
-              | PRIMARY KEY, "o_custkey" BIGINT, "o_orderstatus" VARCHAR(8),
-              | "o_totalprice" DOUBLE, "o_orderpriority" VARCHAR(32),
-              | "c_custkey" BIGINT, "c_name" VARCHAR(64),
-              | "c_nationkey" INTEGER, "c_acctbal" DOUBLE,
-              | "c_mktsegment" VARCHAR(32))""".stripMargin.replace("\n", ""))
-          catch { // X0Y32: table already exists (idempotent re-drive)
-            case e: java.sql.SQLException if e.getSQLState == "X0Y32" => ()
-          }
-        } finally c.close()
-        pipeline.runOnce(spark, feed, s"$base/work")
-        java.nio.file.Files.createFile(doneMark)
-        DriveCost.record(base, "q174", driveT0, dir)
-        q174Driven.add(base); ()
+    DriveCost.once(base, "q174", dir) {
+      PipelineMetrics.ensureTable(target)
+      PipelineMetrics.ensureDriftTable(target)
+      val feed = s"$base/feed"
+      val fs = new org.apache.hadoop.fs.Path(feed)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (!fs.exists(new org.apache.hadoop.fs.Path(feed))) {
+        // stage-then-rename (the shared drift-drive discipline)
+        driftingViewWire(spark, dir).repartition(4)
+          .write.mode("overwrite").json(s"$base/feed_tmp")
+        require(fs.rename(new org.apache.hadoop.fs.Path(s"$base/feed_tmp"),
+          new org.apache.hadoop.fs.Path(feed)),
+          s"q174: could not publish the drive-local feed $feed")
       }
+      JdbcSink.createTableIfAbsent(url, enrichedDdl("enriched_q174"))
+      pipeline.runOnce(spark, feed, s"$base/work")
     }
     url
   }
@@ -4248,10 +3885,6 @@ object PipelineQueries {
           .as("o_orderkey"))
   }
 
-  private val q176Lock = new Object
-  private val q176Driven = java.util.concurrent.ConcurrentHashMap
-    .newKeySet[String]()
-
   /** Q176: the KEYED REPLAY lifecycle on the ANN kind under the oracle
     * gate — q168's story where the dead letter is a POSTING action
     * (id, advisory cell, embedding): drive 1 runs the q162-shaped
@@ -4287,14 +3920,12 @@ object PipelineQueries {
       |            AS BIGINT) AS emb_fp,
       |       TRUE AS cell_ok
       |FROM e""".stripMargin) { (spark, dir) =>
-    import graft.cdc.{ChangeFeed, DeltaLog}
+    import graft.cdc.ChangeFeed
     import graft.ops.Profile
     import graft.streaming.{AnnServingPipeline, PipelineMetrics}
     val cents = MandateQueries.ivfCentroidsFor(spark, dir)
     val feedDir = ChangeFeed.stagedEmbeddingsJsonl(spark, dir)
-    val fp = graft.sources.Staging.fingerprint(Seq(s"$dir/embeddings.parquet"))
-    val base = DeltaLog.logBase(spark,
-      s"rpann_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", fp)
+    val base = driveBase(spark, "rpann", dir, "embeddings")
     val url = s"jdbc:derby:$base/derby;create=true"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q176")
     def pipe(hi: Double) = AnnServingPipeline(
@@ -4304,49 +3935,27 @@ object PipelineQueries {
       metrics = Some(target), deadLetterDir = Some(s"$base/dead"),
       expectations = Seq(Profile.InRange("vec_cap", "vec_id",
         0.0, hi, action = Profile.Drop)))
-    q176Lock.synchronized {
-      val driveT0 = System.nanoTime()
-      // memoize only on SUCCESS (q167's rule): a failed drive retries
-      // on-disk DONE marker — q141's cross-JVM memoization rule
-      val doneMark = java.nio.file.Paths.get(s"$base/_Q176_DRIVE_DONE")
-      if (!q176Driven.contains(base)
-          && !java.nio.file.Files.exists(doneMark)) {
-        java.nio.file.Files.createDirectories(
-          java.nio.file.Paths.get(base))
-        PipelineMetrics.ensureTable(target)
-        PipelineMetrics.ensureExpectTable(target)
-        val myFeed = stageDriveLocalFeed(spark, feedDir, base, "q176")
-        val c = java.sql.DriverManager.getConnection(url)
-        try {
-          val st = c.createStatement()
-          try st.execute(
-            """CREATE TABLE postings_q176 ("vec_id" BIGINT NOT NULL PRIMARY
-              | KEY, "cell" INTEGER, "emb_json" VARCHAR(32000))"""
-              .stripMargin.replace("\n", ""))
-          catch { // X0Y32: table already exists (idempotent re-drive)
-            case e: java.sql.SQLException if e.getSQLState == "X0Y32" => ()
-          }
-        } finally c.close()
-        val work = s"$base/work"
-        val epoch = 9000000000L
-        // drive 1: the strict cap quarantines high-id posting upserts.
-        // Skipped when a prior attempt already published the keyed
-        // replay (q168/q172's retry rule: the strict conf must never
-        // drain the published replay file)
-        if (!PipelineMetrics.replayStarted(spark, myFeed, "_expect",
-            "q176", epoch))
-          pipe(hi = 400.0).runOnce(spark, myFeed, work)
-        // conf fix + keyed replay: dead letters resolve to vector ids,
-        // each id's CURRENT table-log truth re-enters at the epoch
-        val fixed = pipe(hi = 1e12)
-        fixed.replayExpectDeadLetters(spark, work, myFeed, "shop",
-          tsMs = epoch)
-        // drive 2: only the replayed file drains, through the FIXED rule
-        fixed.runOnce(spark, myFeed, work)
-        java.nio.file.Files.createFile(doneMark)
-        DriveCost.record(base, "q176", driveT0, dir)
-        q176Driven.add(base); ()
-      }
+    DriveCost.once(base, "q176", dir) {
+      PipelineMetrics.ensureTable(target)
+      PipelineMetrics.ensureExpectTable(target)
+      val myFeed = stageDriveLocalFeed(spark, feedDir, base, "q176")
+      JdbcSink.createTableIfAbsent(url, vecPostingsDdl("postings_q176"))
+      val work = s"$base/work"
+      val epoch = 9000000000L
+      // drive 1: the strict cap quarantines high-id posting upserts.
+      // Skipped when a prior attempt already published the keyed
+      // replay (q168/q172's retry rule: the strict conf must never
+      // drain the published replay file)
+      if (!PipelineMetrics.replayStarted(spark, myFeed, "_expect",
+          "q176", epoch))
+        pipe(hi = 400.0).runOnce(spark, myFeed, work)
+      // conf fix + keyed replay: dead letters resolve to vector ids,
+      // each id's CURRENT table-log truth re-enters at the epoch
+      val fixed = pipe(hi = 1e12)
+      fixed.replayExpectDeadLetters(spark, work, myFeed, "shop",
+        tsMs = epoch)
+      // drive 2: only the replayed file drains, through the FIXED rule
+      fixed.runOnce(spark, myFeed, work)
     }
     spark.read.jdbc(url, "postings_q176", new java.util.Properties())
       .select(col("vec_id").cast("long").as("vec_id"),
@@ -4360,10 +3969,6 @@ object PipelineQueries {
         (col("cell") === VectorSearch.nearestCell(col("emb"), cents))
           .as("cell_ok"))
   }
-
-  private val q177Lock = new Object
-  private val q177Driven = java.util.concurrent.ConcurrentHashMap
-    .newKeySet[String]()
 
   /** Q177: the KEYED REPLAY lifecycle on the DEDUP-CLUSTER kind under
     * the oracle gate — the subtlest of the three derived-row kinds,
@@ -4388,13 +3993,11 @@ object PipelineQueries {
     */
   val q177 = QueryDef.sql(
     "q177_dedup_keyed_replay", clusterOracleSql) { (spark, dir) =>
-    import graft.cdc.{ChangeFeed, DeltaLog}
+    import graft.cdc.ChangeFeed
     import graft.ops.Profile
     import graft.streaming.{DedupClusterPipeline, JdbcTarget, PipelineMetrics}
     val feedDir = ChangeFeed.stagedDocsJsonl(spark, dir)
-    val fp = graft.sources.Staging.fingerprint(Seq(s"$dir/documents.parquet"))
-    val base = DeltaLog.logBase(spark,
-      s"rpdedup_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", fp)
+    val base = driveBase(spark, "rpdedup", dir, "documents")
     val url = s"jdbc:derby:$base/derby;create=true"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q177")
     def pipe(lo: Double) = DedupClusterPipeline(
@@ -4405,53 +4008,28 @@ object PipelineQueries {
       metrics = Some(target), deadLetterDir = Some(s"$base/dead"),
       expectations = Seq(Profile.InRange("doc_floor", "doc_id",
         lo, 1000000.0, action = Profile.Drop)))
-    q177Lock.synchronized {
-      val driveT0 = System.nanoTime()
-      // on-disk DONE marker — q141's cross-JVM memoization rule
-      val doneMark = java.nio.file.Paths.get(s"$base/_Q177_DRIVE_DONE")
-      if (!q177Driven.contains(base)
-          && !java.nio.file.Files.exists(doneMark)) {
-        java.nio.file.Files.createDirectories(
-          java.nio.file.Paths.get(base))
-        PipelineMetrics.ensureTable(target)
-        PipelineMetrics.ensureExpectTable(target)
-        val myFeed = stageDriveLocalFeed(spark, feedDir, base, "q177")
-        val c = java.sql.DriverManager.getConnection(url)
-        try {
-          val st = c.createStatement()
-          try st.execute(
-            """CREATE TABLE clusters_q177 ("doc_id" BIGINT NOT NULL PRIMARY
-              | KEY, "cluster_id" BIGINT, "is_canonical" INTEGER)"""
-              .stripMargin.replace("\n", ""))
-          catch { // X0Y32: table already exists (idempotent re-drive)
-            case e: java.sql.SQLException if e.getSQLState == "X0Y32" => ()
-          }
-        } finally c.close()
-        val work = s"$base/work"
-        val epoch = 9000000000L
-        // drive 1: the strict floor quarantines low-id cluster rows —
-        // skipped on a crash-retry once the replay published
-        if (!PipelineMetrics.replayStarted(spark, myFeed, "_expect",
-            "q177", epoch))
-          pipe(lo = 100.0).runOnce(spark, myFeed, work)
-        // conf fix + keyed replay, then drive 2 drains the replayed
-        // file: a marker-only batch that re-emits the replayed docs'
-        // CURRENT labels through the fixed judgment
-        val fixed = pipe(lo = 0.0)
-        fixed.replayExpectDeadLetters(spark, work, myFeed, "shop",
-          tsMs = epoch)
-        fixed.runOnce(spark, myFeed, work)
-        java.nio.file.Files.createFile(doneMark)
-        DriveCost.record(base, "q177", driveT0, dir)
-        q177Driven.add(base); ()
-      }
+    DriveCost.once(base, "q177", dir) {
+      PipelineMetrics.ensureTable(target)
+      PipelineMetrics.ensureExpectTable(target)
+      val myFeed = stageDriveLocalFeed(spark, feedDir, base, "q177")
+      JdbcSink.createTableIfAbsent(url, clustersDdl("clusters_q177"))
+      val work = s"$base/work"
+      val epoch = 9000000000L
+      // drive 1: the strict floor quarantines low-id cluster rows —
+      // skipped on a crash-retry once the replay published
+      if (!PipelineMetrics.replayStarted(spark, myFeed, "_expect",
+          "q177", epoch))
+        pipe(lo = 100.0).runOnce(spark, myFeed, work)
+      // conf fix + keyed replay, then drive 2 drains the replayed
+      // file: a marker-only batch that re-emits the replayed docs'
+      // CURRENT labels through the fixed judgment
+      val fixed = pipe(lo = 0.0)
+      fixed.replayExpectDeadLetters(spark, work, myFeed, "shop",
+        tsMs = epoch)
+      fixed.runOnce(spark, myFeed, work)
     }
     pipe(lo = 0.0).servedClusters(spark)
   }
-
-  private val q178Lock = new Object
-  private val q178Driven = java.util.concurrent.ConcurrentHashMap
-    .newKeySet[String]()
 
   /** Q178: the CERTIFIED REBUILD lifecycle on the SEARCH kind under
     * the oracle gate — the fifth kind's quarantine closure, completing
@@ -4485,16 +4063,14 @@ object PipelineQueries {
       |        FROM cur)
       |SELECT token, doc_id, CAST(count(*) AS BIGINT) AS tf
       |FROM tok GROUP BY token, doc_id""".stripMargin) { (spark, dir) =>
-    import graft.cdc.{ChangeFeed, DeltaLog}
+    import graft.cdc.ChangeFeed
     import graft.ops.Profile
     import graft.streaming.{PipelineMetrics, SearchServingPipeline}
     val feed = ChangeFeed.stagedDocsJsonl(spark, dir)
-    val fp = graft.sources.Staging.fingerprint(Seq(s"$dir/documents.parquet"))
     // v2: the v1 drives left post-lifecycle state without the DONE
-    // marker below — indistinguishable from a fresh dir, so the bump
-    // orphans them (warehouse GC retires superseded fingerprints)
-    val base = DeltaLog.logBase(spark,
-      s"rbsearch2_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", fp)
+    // marker — indistinguishable from a fresh dir, so the bump orphans
+    // them (warehouse GC retires superseded fingerprints)
+    val base = driveBase(spark, "rbsearch2", dir, "documents")
     val url = s"jdbc:derby:$base/derby;create=true"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q178")
     val dead = s"$base/dead"
@@ -4506,59 +4082,44 @@ object PipelineQueries {
       metrics = Some(target), deadLetterDir = Some(dead),
       expectations = Seq(Profile.InRange("doc_cap", "doc_id",
         0.0, hi, action = Profile.Drop)))
-    q178Lock.synchronized {
-      val driveT0 = System.nanoTime()
-      // the lifecycle completes ONCE per store, across JVMs: an
-      // on-disk DONE marker (not just the in-JVM set) gates the whole
-      // drive, because a fresh JVM re-driving a completed store would
-      // find the strict stage vacuous (checkpoints drain nothing, the
-      // quarantine already retired) and the lifecycle requires below
-      // would misfire. Crash anywhere before the marker → the retry
-      // converges: the REBUILT marker skips the strict stage (whose
-      // letters the rebuild already consumed) and the rebuild itself
-      // re-truncates whatever a partial attempt left.
-      val doneMark = java.nio.file.Paths.get(s"$base/_Q178_LIFECYCLE_DONE")
+    // the lifecycle completes ONCE per store, across JVMs: a fresh JVM
+    // re-driving a completed store would find the strict stage vacuous
+    // (checkpoints drain nothing, the quarantine already retired) and
+    // the lifecycle requires below would misfire. Crash anywhere before
+    // the marker → the retry converges: the REBUILD_STARTED marker
+    // skips the strict stage (whose letters the rebuild already
+    // consumed) and the rebuild itself re-truncates whatever a partial
+    // attempt left.
+    DriveCost.once(base, "q178", dir, lifecycle = true) {
       val rbMark = java.nio.file.Paths.get(s"$base/_Q178_REBUILD_STARTED")
-      if (!q178Driven.contains(base)
-          && !java.nio.file.Files.exists(doneMark)) {
-        java.nio.file.Files.createDirectories(
-          java.nio.file.Paths.get(base))
-        PipelineMetrics.ensureTable(target)
-        PipelineMetrics.ensureExpectTable(target)
-        // v0 store tables from the pipeline's OWN canonical DDL — the
-        // serving schema has exactly one definition
-        pipe(hi = 100.0).ensureStoreTables()
-        val work = s"$base/work"
-        // drive 1: the strict cap quarantines high-id contributions —
-        // skipped once the rebuild has started (its letters are
-        // consumed; a crash-retry must not demand them back)
-        if (!java.nio.file.Files.exists(rbMark)) {
-          pipe(hi = 100.0).runOnce(spark, feed, work)
-          require(!PipelineMetrics.expectDeadLetters(spark, dead)
-              .filter(col("pipeline") === "q178").isEmpty,
-            "q178: the strict cap must actually quarantine — a vacuous " +
-              "lifecycle certifies nothing")
-          java.nio.file.Files.createFile(rbMark)
-          ()
-        }
-        // conf fix + rebuild: frozen verdicts cleared, store truncated,
-        // quarantine retired, full feed re-judged by the fixed rule
-        pipe(hi = 1e9).rebuildStore(spark, feed, work)
-        require(PipelineMetrics.expectDeadLetters(spark, dead)
+      PipelineMetrics.ensureTable(target)
+      PipelineMetrics.ensureExpectTable(target)
+      // v0 store tables from the pipeline's OWN canonical DDL — the
+      // serving schema has exactly one definition
+      pipe(hi = 100.0).ensureStoreTables()
+      val work = s"$base/work"
+      // drive 1: the strict cap quarantines high-id contributions —
+      // skipped once the rebuild has started (its letters are
+      // consumed; a crash-retry must not demand them back)
+      if (!java.nio.file.Files.exists(rbMark)) {
+        pipe(hi = 100.0).runOnce(spark, feed, work)
+        require(!PipelineMetrics.expectDeadLetters(spark, dead)
             .filter(col("pipeline") === "q178").isEmpty,
-          "q178: the rebuild must close the quarantine — nothing " +
-            "violates the widened cap")
-        java.nio.file.Files.createFile(doneMark)
-        DriveCost.record(base, "q178", driveT0, dir)
-        q178Driven.add(base); ()
+          "q178: the strict cap must actually quarantine — a vacuous " +
+            "lifecycle certifies nothing")
+        java.nio.file.Files.createFile(rbMark)
+        ()
       }
+      // conf fix + rebuild: frozen verdicts cleared, store truncated,
+      // quarantine retired, full feed re-judged by the fixed rule
+      pipe(hi = 1e9).rebuildStore(spark, feed, work)
+      require(PipelineMetrics.expectDeadLetters(spark, dead)
+          .filter(col("pipeline") === "q178").isEmpty,
+        "q178: the rebuild must close the quarantine — nothing " +
+          "violates the widened cap")
     }
     pipe(hi = 1e9).servedPostings(spark)
   }
-
-  private val q179Lock = new Object
-  private val q179Driven = java.util.concurrent.ConcurrentHashMap
-    .newKeySet[String]()
 
   /** Q179: the ONLINE (zero-downtime) rebuild lifecycle under the
     * oracle gate — q178's swap-mechanized sibling
@@ -4588,13 +4149,11 @@ object PipelineQueries {
       |        FROM cur)
       |SELECT token, doc_id, CAST(count(*) AS BIGINT) AS tf
       |FROM tok GROUP BY token, doc_id""".stripMargin) { (spark, dir) =>
-    import graft.cdc.{ChangeFeed, DeltaLog}
+    import graft.cdc.ChangeFeed
     import graft.ops.Profile
     import graft.streaming.{PipelineMetrics, SearchServingPipeline}
     val feed = ChangeFeed.stagedDocsJsonl(spark, dir)
-    val fp = graft.sources.Staging.fingerprint(Seq(s"$dir/documents.parquet"))
-    val base = DeltaLog.logBase(spark,
-      s"rbsearchol_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", fp)
+    val base = driveBase(spark, "rbsearchol", dir, "documents")
     val url = s"jdbc:derby:$base/derby;create=true"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q179")
     val dead = s"$base/dead"
@@ -4606,88 +4165,73 @@ object PipelineQueries {
       metrics = Some(target), deadLetterDir = Some(dead),
       expectations = Seq(Profile.InRange("doc_cap", "doc_id",
         0.0, hi, action = Profile.Drop)))
-    q179Lock.synchronized {
-      val driveT0 = System.nanoTime()
-      // same crash-retry protocol as q178: the on-disk DONE marker
-      // gates the lifecycle across JVMs; REBUILD_STARTED skips the
-      // strict stage on retry (its letters are consumed). A crash
-      // after the flip retries the online verb from the flipped
-      // version — idempotent, the pointer just lands one higher.
-      val doneMark = java.nio.file.Paths.get(s"$base/_Q179_LIFECYCLE_DONE")
+    // same crash-retry protocol as q178: REBUILD_STARTED skips the
+    // strict stage on retry (its letters are consumed). A crash after
+    // the flip retries the online verb from the flipped version —
+    // idempotent, the pointer just lands one higher.
+    DriveCost.once(base, "q179", dir, lifecycle = true) {
       val rbMark = java.nio.file.Paths.get(s"$base/_Q179_REBUILD_STARTED")
-      if (!q179Driven.contains(base)
-          && !java.nio.file.Files.exists(doneMark)) {
-        java.nio.file.Files.createDirectories(
-          java.nio.file.Paths.get(base))
-        PipelineMetrics.ensureTable(target)
-        PipelineMetrics.ensureExpectTable(target)
-        // v0 tables under the conf's DECLARED names (the verb carries
-        // a pre-versioning store to _v1 without downtime), created
-        // from the pipeline's own canonical DDL
-        pipe(hi = 100.0).ensureStoreTables()
-        val work = s"$base/work"
-        if (!java.nio.file.Files.exists(rbMark)) {
-          pipe(hi = 100.0).runOnce(spark, feed, work)
-          require(!PipelineMetrics.expectDeadLetters(spark, dead)
-              .filter(col("pipeline") === "q179").isEmpty,
-            "q179: the strict cap must actually quarantine — a vacuous " +
-              "lifecycle certifies nothing")
-          java.nio.file.Files.createFile(rbMark)
-          ()
-        }
-        val widened = pipe(hi = 1e9)
-        // store fingerprint (count, Σtf, Σdoc_id·tf) — cheap, collision-
-        // resistant enough to distinguish the capped and full stores
-        def fpOf(): (Long, Long, Long) = {
-          val r = widened.servedPostings(spark)
-            .agg(count(lit(1)), sum(col("tf")),
-              sum(col("doc_id") * col("tf"))).collect().head
-          (r.getLong(0), Option(r.get(1)).fold(0L)(_ => r.getLong(1)),
-            Option(r.get(2)).fold(0L)(_ => r.getLong(2)))
-        }
-        val preFp = fpOf()
-        val samples =
-          new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Long)]()
-        val stopSampling = new java.util.concurrent.atomic.AtomicBoolean(false)
-        val sampler = new Thread(() =>
-          while (!stopSampling.get()) {
-            // a read in flight exactly when the old tables retire
-            // fails loud by contract — not a stale read, not a sample
-            try { samples.add(fpOf()); () }
-            catch { case _: Exception => () }
-            Thread.sleep(100)
-          }, "q179-sampler")
-        samples.add(preFp)
-        sampler.start()
-        try widened.rebuildStoreOnline(spark, feed, work)
-        finally { stopSampling.set(true); sampler.join(30000) }
-        val postFp = fpOf()
-        val obs = scala.jdk.CollectionConverters.IteratorHasAsScala(
-          samples.iterator()).asScala.toSeq
-        require(obs.head == preFp && obs.forall(o =>
-            o == preFp || o == postFp),
-          s"q179: a served read must see the old store or the new one, " +
-            s"never a blend — pre=$preFp post=$postFp obs=${obs.distinct}")
-        require(widened.currentVersion() >= 1,
-          "q179: the pointer must flip")
-        val oldGone = scala.util.Try(spark.read.jdbc(url,
-          "postings_q179", new java.util.Properties()).count()).isFailure
-        require(oldGone, "q179: the superseded v0 tables must retire")
-        require(PipelineMetrics.expectDeadLetters(spark, dead)
+      PipelineMetrics.ensureTable(target)
+      PipelineMetrics.ensureExpectTable(target)
+      // v0 tables under the conf's DECLARED names (the verb carries
+      // a pre-versioning store to _v1 without downtime), created
+      // from the pipeline's own canonical DDL
+      pipe(hi = 100.0).ensureStoreTables()
+      val work = s"$base/work"
+      if (!java.nio.file.Files.exists(rbMark)) {
+        pipe(hi = 100.0).runOnce(spark, feed, work)
+        require(!PipelineMetrics.expectDeadLetters(spark, dead)
             .filter(col("pipeline") === "q179").isEmpty,
-          "q179: the rebuild must close the quarantine — nothing " +
-            "violates the widened cap")
-        java.nio.file.Files.createFile(doneMark)
-        DriveCost.record(base, "q179", driveT0, dir)
-        q179Driven.add(base); ()
+          "q179: the strict cap must actually quarantine — a vacuous " +
+            "lifecycle certifies nothing")
+        java.nio.file.Files.createFile(rbMark)
+        ()
       }
+      val widened = pipe(hi = 1e9)
+      // store fingerprint (count, Σtf, Σdoc_id·tf) — cheap, collision-
+      // resistant enough to distinguish the capped and full stores
+      def fpOf(): (Long, Long, Long) = {
+        val r = widened.servedPostings(spark)
+          .agg(count(lit(1)), sum(col("tf")),
+            sum(col("doc_id") * col("tf"))).collect().head
+        (r.getLong(0), Option(r.get(1)).fold(0L)(_ => r.getLong(1)),
+          Option(r.get(2)).fold(0L)(_ => r.getLong(2)))
+      }
+      val preFp = fpOf()
+      val samples =
+        new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Long)]()
+      val stopSampling = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val sampler = new Thread(() =>
+        while (!stopSampling.get()) {
+          // a read in flight exactly when the old tables retire
+          // fails loud by contract — not a stale read, not a sample
+          try { samples.add(fpOf()); () }
+          catch { case _: Exception => () }
+          Thread.sleep(100)
+        }, "q179-sampler")
+      samples.add(preFp)
+      sampler.start()
+      try widened.rebuildStoreOnline(spark, feed, work)
+      finally { stopSampling.set(true); sampler.join(30000) }
+      val postFp = fpOf()
+      val obs = scala.jdk.CollectionConverters.IteratorHasAsScala(
+        samples.iterator()).asScala.toSeq
+      require(obs.head == preFp && obs.forall(o =>
+          o == preFp || o == postFp),
+        s"q179: a served read must see the old store or the new one, " +
+          s"never a blend — pre=$preFp post=$postFp obs=${obs.distinct}")
+      require(widened.currentVersion() >= 1,
+        "q179: the pointer must flip")
+      val oldGone = scala.util.Try(spark.read.jdbc(url,
+        "postings_q179", new java.util.Properties()).count()).isFailure
+      require(oldGone, "q179: the superseded v0 tables must retire")
+      require(PipelineMetrics.expectDeadLetters(spark, dead)
+          .filter(col("pipeline") === "q179").isEmpty,
+        "q179: the rebuild must close the quarantine — nothing " +
+          "violates the widened cap")
     }
     pipe(hi = 1e9).servedPostings(spark)
   }
-
-  private val q180Lock = new Object
-  private val q180Driven = java.util.concurrent.ConcurrentHashMap
-    .newKeySet[String]()
 
   /** Q180: the GRACE-WINDOW retirement contract of the online rebuild
     * under the oracle gate — q179's multi-driver sibling. A conf with
@@ -4720,13 +4264,11 @@ object PipelineQueries {
       |        FROM cur)
       |SELECT token, doc_id, CAST(count(*) AS BIGINT) AS tf
       |FROM tok GROUP BY token, doc_id""".stripMargin) { (spark, dir) =>
-    import graft.cdc.{ChangeFeed, DeltaLog}
+    import graft.cdc.ChangeFeed
     import graft.ops.Profile
     import graft.streaming.{PipelineMetrics, SearchServingPipeline}
     val feed = ChangeFeed.stagedDocsJsonl(spark, dir)
-    val fp = graft.sources.Staging.fingerprint(Seq(s"$dir/documents.parquet"))
-    val base = DeltaLog.logBase(spark,
-      s"rbsearchgr_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", fp)
+    val base = driveBase(spark, "rbsearchgr", dir, "documents")
     val url = s"jdbc:derby:$base/derby;create=true"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q180")
     val dead = s"$base/dead"
@@ -4740,77 +4282,67 @@ object PipelineQueries {
       expectations = Seq(Profile.InRange("doc_cap", "doc_id",
         0.0, hi, action = Profile.Drop)),
       retireAfterMs = graceMs)
-    q180Lock.synchronized {
-      val driveT0 = System.nanoTime()
-      // q178/q179's crash-retry protocol: the DONE marker gates the
-      // lifecycle across JVMs; REBUILD_STARTED skips the strict stage
-      // on retry. A crash between the flip and the final sweep leaves
-      // v0 inside its grace window — the retry's sweeps converge.
-      val doneMark = java.nio.file.Paths.get(s"$base/_Q180_LIFECYCLE_DONE")
+    // q178/q179's crash-retry protocol: REBUILD_STARTED skips the
+    // strict stage on retry. A crash between the flip and the final
+    // sweep leaves v0 inside its grace window — the retry's sweeps
+    // converge.
+    DriveCost.once(base, "q180", dir, lifecycle = true) {
       val rbMark = java.nio.file.Paths.get(s"$base/_Q180_REBUILD_STARTED")
-      if (!q180Driven.contains(base)
-          && !java.nio.file.Files.exists(doneMark)) {
-        java.nio.file.Files.createDirectories(
-          java.nio.file.Paths.get(base))
-        PipelineMetrics.ensureTable(target)
-        PipelineMetrics.ensureExpectTable(target)
-        pipe(hi = 100.0).ensureStoreTables()
-        val work = s"$base/work"
-        if (!java.nio.file.Files.exists(rbMark)) {
-          pipe(hi = 100.0).runOnce(spark, feed, work)
-          require(!PipelineMetrics.expectDeadLetters(spark, dead)
-              .filter(col("pipeline") === "q180").isEmpty,
-            "q180: the strict cap must actually quarantine — a vacuous " +
-              "lifecycle certifies nothing")
-          java.nio.file.Files.createFile(rbMark)
-          ()
-        }
-        val widened = pipe(hi = 1e9)
-        def fpOf(df: org.apache.spark.sql.DataFrame): (Long, Long, Long) = {
-          val r = df.agg(count(lit(1)), sum(col("tf").cast("long")),
-            sum(col("doc_id").cast("long") * col("tf").cast("long")))
-            .collect().head
-          (r.getLong(0), Option(r.get(1)).fold(0L)(_ => r.getLong(1)),
-            Option(r.get(2)).fold(0L)(_ => r.getLong(2)))
-        }
-        def v0Postings() = spark.read.jdbc(url, "postings_q180",
-          new java.util.Properties())
-        val wasFlipped = widened.currentVersion() >= 1
-        // preFp: the capped store a pinned reader is mid-read on. On a
-        // crash-retry AFTER the flip the pre-flip store is gone — the
-        // pinned-reader equality check is skipped, the sweep contract
-        // below still certifies.
-        val preFp = if (wasFlipped) None else Some(fpOf(v0Postings()))
-        widened.rebuildStoreOnline(spark, feed, work)
-        require(widened.currentVersion() >= 1, "q180: the pointer must flip")
-        // the grace window holds: v0 still answers, bit-for-bit the
-        // store the flip superseded
-        val v0Now = scala.util.Try(fpOf(v0Postings()))
-        require(v0Now.isSuccess,
-          "q180: grace must leave the superseded tables readable")
-        preFp.foreach(pre => require(v0Now.get == pre,
-          s"q180: a pinned reader's store must not mutate mid-grace — " +
-            s"pre=$pre now=${v0Now.get}"))
-        val now = System.currentTimeMillis()
-        require(widened.sweepSupersededVersions(spark, work, now) == 0
-            && scala.util.Try(fpOf(v0Postings())).isSuccess,
-          "q180: a sweep inside the window must retire nothing")
-        require(widened.sweepSupersededVersions(spark, work,
-            now + graceMs + 60000L) >= 1,
-          "q180: a sweep past the due-clock must retire the stale version")
-        require(scala.util.Try(v0Postings().count()).isFailure,
-          "q180: the swept version's tables must be gone")
-        require(widened.sweepSupersededVersions(spark, work,
-            now + graceMs + 120000L) == 0,
-          "q180: the sweep must be idempotent once the store is clean")
-        require(PipelineMetrics.expectDeadLetters(spark, dead)
+      PipelineMetrics.ensureTable(target)
+      PipelineMetrics.ensureExpectTable(target)
+      pipe(hi = 100.0).ensureStoreTables()
+      val work = s"$base/work"
+      if (!java.nio.file.Files.exists(rbMark)) {
+        pipe(hi = 100.0).runOnce(spark, feed, work)
+        require(!PipelineMetrics.expectDeadLetters(spark, dead)
             .filter(col("pipeline") === "q180").isEmpty,
-          "q180: the rebuild must close the quarantine — nothing " +
-            "violates the widened cap")
-        java.nio.file.Files.createFile(doneMark)
-        DriveCost.record(base, "q180", driveT0, dir)
-        q180Driven.add(base); ()
+          "q180: the strict cap must actually quarantine — a vacuous " +
+            "lifecycle certifies nothing")
+        java.nio.file.Files.createFile(rbMark)
+        ()
       }
+      val widened = pipe(hi = 1e9)
+      def fpOf(df: org.apache.spark.sql.DataFrame): (Long, Long, Long) = {
+        val r = df.agg(count(lit(1)), sum(col("tf").cast("long")),
+          sum(col("doc_id").cast("long") * col("tf").cast("long")))
+          .collect().head
+        (r.getLong(0), Option(r.get(1)).fold(0L)(_ => r.getLong(1)),
+          Option(r.get(2)).fold(0L)(_ => r.getLong(2)))
+      }
+      def v0Postings() = spark.read.jdbc(url, "postings_q180",
+        new java.util.Properties())
+      val wasFlipped = widened.currentVersion() >= 1
+      // preFp: the capped store a pinned reader is mid-read on. On a
+      // crash-retry AFTER the flip the pre-flip store is gone — the
+      // pinned-reader equality check is skipped, the sweep contract
+      // below still certifies.
+      val preFp = if (wasFlipped) None else Some(fpOf(v0Postings()))
+      widened.rebuildStoreOnline(spark, feed, work)
+      require(widened.currentVersion() >= 1, "q180: the pointer must flip")
+      // the grace window holds: v0 still answers, bit-for-bit the
+      // store the flip superseded
+      val v0Now = scala.util.Try(fpOf(v0Postings()))
+      require(v0Now.isSuccess,
+        "q180: grace must leave the superseded tables readable")
+      preFp.foreach(pre => require(v0Now.get == pre,
+        s"q180: a pinned reader's store must not mutate mid-grace — " +
+          s"pre=$pre now=${v0Now.get}"))
+      val now = System.currentTimeMillis()
+      require(widened.sweepSupersededVersions(spark, work, now) == 0
+          && scala.util.Try(fpOf(v0Postings())).isSuccess,
+        "q180: a sweep inside the window must retire nothing")
+      require(widened.sweepSupersededVersions(spark, work,
+          now + graceMs + 60000L) >= 1,
+        "q180: a sweep past the due-clock must retire the stale version")
+      require(scala.util.Try(v0Postings().count()).isFailure,
+        "q180: the swept version's tables must be gone")
+      require(widened.sweepSupersededVersions(spark, work,
+          now + graceMs + 120000L) == 0,
+        "q180: the sweep must be idempotent once the store is clean")
+      require(PipelineMetrics.expectDeadLetters(spark, dead)
+          .filter(col("pipeline") === "q180").isEmpty,
+        "q180: the rebuild must close the quarantine — nothing " +
+          "violates the widened cap")
     }
     pipe(hi = 1e9).servedPostings(spark)
   }

@@ -112,7 +112,16 @@ object EsSink {
       val f = fileOf(encodedId)
       val tmp = f.resolveSibling(
         s"${f.getFileName}.tmp.${java.util.UUID.randomUUID()}")
-      Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
+      val bytes = body.getBytes(StandardCharsets.UTF_8)
+      // the dir was removed from outside after `ready` created it (an
+      // operator wipe mid-drive): re-create it once and retry, instead
+      // of failing every later put of this instance
+      try Files.write(tmp, bytes)
+      catch {
+        case _: java.nio.file.NoSuchFileException =>
+          Files.createDirectories(Paths.get(dir))
+          Files.write(tmp, bytes)
+      }
       Files.move(tmp, f, StandardCopyOption.REPLACE_EXISTING,
         StandardCopyOption.ATOMIC_MOVE)
       ()

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.cdc.DeltaLog
 import graft.ops.VectorSearch
 import graft.sinks.JdbcSink
 import org.apache.spark.sql.functions._
@@ -122,11 +121,13 @@ final case class AnnServingPipeline(
     * ([[DriftGate]]; the ctor requires validate metrics/dlDir).
     */
   private val driftGate = DriftGate(name, "ann", databases, table,
-    rowSchema, driftCheck, driftPolicy, metrics, deadLetterDir)
-  private def judgedBase(workRoot: String) = s"$workRoot/judged"
+    rowSchema, idField, driftCheck, driftPolicy, metrics, deadLetterDir)
 
   private def logDir(workRoot: String) = s"$workRoot/log"
   private def ckptDir(workRoot: String, stage: String) = s"$workRoot/ckpt_$stage"
+  private def tableLog(workRoot: String) = DriftGate.TableLog(
+    s"ann_${name}_log", logDir(workRoot), ckptDir(workRoot, "log"),
+    s"$workRoot/judged", ckptDir(workRoot, "gate"))
   private def quantDir(workRoot: String) = s"$workRoot/quantizer"
 
   /** Seed gen_0 from the ctor quantizer if no generation exists yet. */
@@ -167,28 +168,6 @@ final case class AnnServingPipeline(
     import scala.jdk.CollectionConverters._
     node.elements().asScala.map(row =>
       row.elements().asScala.map(_.floatValue()).toArray).toArray
-  }
-
-  private def logQuery(spark: SparkSession, feedDir: String,
-      workRoot: String, trigger: Trigger): StreamingQuery = {
-    val keyExpr =
-      coalesce(col(s"after.$idField"), col(s"before.$idField")).cast("long")
-    val deltas = if (driftGate.reroutes)
-      DeltaLog.deltaStreamFromJudged(spark, judgedBase(workRoot), rowSchema,
-        keyExpr)
-    else DeltaLog.deltaStream(spark, feedDir, table, rowSchema, keyExpr,
-      databases)
-    val dir = logDir(workRoot)
-    deltas.writeStream
-      .queryName(s"ann_${name}_log")
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", ckptDir(workRoot, "log"))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$dir/batch_id=$batchId")
-        ()
-      }
-      .start()
   }
 
   /** Read the served postings back as the relational index (vec_id,
@@ -627,12 +606,8 @@ final case class AnnServingPipeline(
   def runOnce(spark: SparkSession, feedDir: String, workRoot: String,
       esTransport: graft.sinks.EsSink.Transport =
         new graft.sinks.EsSink.HttpTransport): Unit = {
-    Files.createDirectories(Paths.get(logDir(workRoot)))
     ensureQuantizer(workRoot)
-    driftGate.drainOnce(spark, feedDir, judgedBase(workRoot),
-      ckptDir(workRoot, "gate"))
-    logQuery(spark, feedDir, workRoot, Trigger.AvailableNow())
-      .awaitTermination()
+    driftGate.ingestOnce(spark, feedDir, tableLog(workRoot))
     indexQuery(spark, workRoot, Trigger.AvailableNow(), esTransport)
       .awaitTermination()
   }
@@ -646,11 +621,8 @@ final case class AnnServingPipeline(
       esTransport: graft.sinks.EsSink.Transport =
         new graft.sinks.EsSink.HttpTransport): Seq[StreamingQuery] = {
     val t = Trigger.ProcessingTime(interval)
-    Files.createDirectories(Paths.get(logDir(workRoot)))
     ensureQuantizer(workRoot)
-    driftGate.startIfEnabled(spark, feedDir, judgedBase(workRoot),
-      ckptDir(workRoot, "gate"), t) ++
-      Seq(logQuery(spark, feedDir, workRoot, t),
-        indexQuery(spark, workRoot, t, esTransport))
+    driftGate.startIngest(spark, feedDir, tableLog(workRoot), t) :+
+      indexQuery(spark, workRoot, t, esTransport)
   }
 }

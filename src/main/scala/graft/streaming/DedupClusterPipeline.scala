@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.cdc.DeltaLog
 import graft.ops.{CorpusOps, MinHashLsh}
 import graft.sinks.JdbcSink
 import org.apache.spark.sql.functions._
@@ -95,12 +94,14 @@ final case class DedupClusterPipeline(
 
   /** Drift gate over the raw wire BEFORE the doc log ([[DriftGate]]). */
   private val driftGate = DriftGate(name, "dedup", databases, table,
-    rowSchema, driftCheck, driftPolicy, metrics, deadLetterDir)
-  private def judgedBase(workRoot: String) = s"$workRoot/judged"
+    rowSchema, idField, driftCheck, driftPolicy, metrics, deadLetterDir)
 
   private def docLogDir(workRoot: String) = s"$workRoot/log_docs"
   private def pairLogDir(workRoot: String) = s"$workRoot/log_pairs"
   private def ckptDir(workRoot: String, stage: String) = s"$workRoot/ckpt_$stage"
+  private def docLog(workRoot: String) = DriftGate.TableLog(
+    s"dedup_${name}_doclog", docLogDir(workRoot), ckptDir(workRoot, "doclog"),
+    s"$workRoot/judged", ckptDir(workRoot, "gate"))
 
   // ---- state as append-only logs with base compaction ([[StateLog]]):
   // per-batch writes are O(churn), reads are base + recent log, and
@@ -150,28 +151,6 @@ final case class DedupClusterPipeline(
   }
 
   // ---- stages --------------------------------------------------------
-
-  private def docLogQuery(spark: SparkSession, feedDir: String,
-      workRoot: String, trigger: Trigger): StreamingQuery = {
-    val keyExpr =
-      coalesce(col(s"after.$idField"), col(s"before.$idField")).cast("long")
-    val deltas = if (driftGate.reroutes)
-      DeltaLog.deltaStreamFromJudged(spark, judgedBase(workRoot), rowSchema,
-        keyExpr)
-    else DeltaLog.deltaStream(spark, feedDir, table, rowSchema, keyExpr,
-      databases)
-    val dir = docLogDir(workRoot)
-    deltas.writeStream
-      .queryName(s"dedup_${name}_doclog")
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", ckptDir(workRoot, "doclog"))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$dir/batch_id=$batchId")
-        ()
-      }
-      .start()
-  }
 
   /** The stateful LSH stage: doc deltas → ±pair support deltas. Bucket
     * membership state lives in the stream's state store (RocksDB-ready);
@@ -522,12 +501,8 @@ final case class DedupClusterPipeline(
   def runOnce(spark: SparkSession, feedDir: String, workRoot: String,
       esTransport: graft.sinks.EsSink.Transport =
         new graft.sinks.EsSink.HttpTransport): Unit = {
-    Files.createDirectories(Paths.get(docLogDir(workRoot)))
     Files.createDirectories(Paths.get(pairLogDir(workRoot)))
-    driftGate.drainOnce(spark, feedDir, judgedBase(workRoot),
-      ckptDir(workRoot, "gate"))
-    docLogQuery(spark, feedDir, workRoot, Trigger.AvailableNow())
-      .awaitTermination()
+    driftGate.ingestOnce(spark, feedDir, docLog(workRoot))
     pairLogQuery(spark, workRoot, Trigger.AvailableNow()).awaitTermination()
     clusterQuery(spark, workRoot, Trigger.AvailableNow(), esTransport)
       .awaitTermination()
@@ -539,12 +514,9 @@ final case class DedupClusterPipeline(
       esTransport: graft.sinks.EsSink.Transport =
         new graft.sinks.EsSink.HttpTransport): Seq[StreamingQuery] = {
     val t = Trigger.ProcessingTime(interval)
-    Files.createDirectories(Paths.get(docLogDir(workRoot)))
     Files.createDirectories(Paths.get(pairLogDir(workRoot)))
-    driftGate.startIfEnabled(spark, feedDir, judgedBase(workRoot),
-      ckptDir(workRoot, "gate"), t) ++
-      Seq(docLogQuery(spark, feedDir, workRoot, t),
-        pairLogQuery(spark, workRoot, t),
+    driftGate.startIngest(spark, feedDir, docLog(workRoot), t) ++
+      Seq(pairLogQuery(spark, workRoot, t),
         clusterQuery(spark, workRoot, t, esTransport))
   }
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.cdc.Subscription
+import graft.cdc.{DeltaLog, Subscription}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -34,10 +34,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * The surviving events append to a [[StateLog]]-layout judged log
   * (`<judgedBase>/log/batch_id=N`, O(churn) per batch, overwrite →
-  * replay-idempotent), which the pipeline's LWW log stage consumes as
-  * a file stream ([[graft.cdc.DeltaLog.deltaStreamFromJudged]]) instead
-  * of the raw feed. Enforcement granularity note: the gate judges
-  * EVENTS (pre-LWW), where the lww kind judges winners (post-LWW) — a
+  * replay-idempotent), which the table-log stage consumes as a file
+  * stream ([[graft.cdc.DeltaLog.deltaStreamFromJudged]]) instead of the
+  * raw feed.
+  *
+  * The gate also OWNS that table-log stage ([[ingestOnce]] /
+  * [[startIngest]]) — the one feed → gate → LWW table-log ingest every
+  * delta-log kind runs: the reference's per-subscriber named tailer
+  * over one durable queue (SURVEY R10/R11), as one checkpointed
+  * incremental query per pipeline over the durable feed.
+  *
+  * Enforcement granularity note: the gate judges EVENTS (pre-LWW),
+  * where the lww kind judges winners (post-LWW) — a
   * key whose newest event drifted keeps serving its latest CLEAN state
   * (the drifted event never enters the log), which is the same
   * pre-batch-survives outcome the expectation Drop contract gives.
@@ -56,6 +64,7 @@ final case class DriftGate(
     databases: Set[String],
     table: String,
     rowSchema: StructType,
+    idField: String, // the table's key column (the LWW key)
     driftCheck: Boolean,
     policy: Option[CdcPipeline.DriftPolicy],
     metrics: Option[PipelineMetrics.Target],
@@ -176,28 +185,11 @@ final case class DriftGate(
         PipelineMetrics.writeKindMarker(spark, dir, "_drift", safe, kind)
     }
 
-  /** Drain the gate over the feed's current contents (no-op when the
-    * conf declares no drift) — the one shared boot block every
-    * pipeline kind's `runOnce` calls: seeds the judged log dir (only
-    * when rerouting — a file stream needs it to exist) and blocks
-    * until the feed is judged, so the log stage that runs next reads a
-    * complete judged log.
+  /** Start the gate as a query on `trigger` (none when no drift is
+    * declared). Seeds the judged log dir first (only when rerouting — a
+    * file stream needs it to exist).
     */
-  def drainOnce(spark: SparkSession, feedDir: String, judgedBase: String,
-      checkpointDir: String): Unit =
-    if (enabled) {
-      backfillKindMarker(spark)
-      if (reroutes)
-        java.nio.file.Files.createDirectories(
-          java.nio.file.Paths.get(s"$judgedBase/log"))
-      query(spark, feedDir, judgedBase, checkpointDir,
-        Trigger.AvailableNow()).awaitTermination()
-    }
-
-  /** The live-deployment half of [[drainOnce]]: start the gate as a
-    * long-running query (empty when no drift is declared).
-    */
-  def startIfEnabled(spark: SparkSession, feedDir: String,
+  private def startIfEnabled(spark: SparkSession, feedDir: String,
       judgedBase: String, checkpointDir: String,
       trigger: Trigger): Seq[StreamingQuery] =
     if (!enabled) Nil
@@ -208,4 +200,77 @@ final case class DriftGate(
           java.nio.file.Paths.get(s"$judgedBase/log"))
       Seq(query(spark, feedDir, judgedBase, checkpointDir, trigger))
     }
+
+  /** Drain the gate over the feed's current contents (no-op when the
+    * conf declares no drift): blocks until the feed is judged, so the
+    * log stage that runs next reads a complete judged log.
+    */
+  def drainOnce(spark: SparkSession, feedDir: String, judgedBase: String,
+      checkpointDir: String): Unit =
+    startIfEnabled(spark, feedDir, judgedBase, checkpointDir,
+      Trigger.AvailableNow()).foreach(_.awaitTermination())
+
+  /** The TABLE-LOG query: this gate's source — the judged log when it
+    * [[reroutes]], else the raw feed routed to `table` — → routed/
+    * filtered keyed events → per-key LWW deltas
+    * ([[graft.cdc.DeltaLog.deltaStream]]) → `<logDir>/batch_id=N`. Each
+    * micro-batch writes ONLY its churn, overwriting its own batch dir,
+    * so checkpoint replay is idempotent; history never rewrites.
+    */
+  private def logQuery(spark: SparkSession, feedDir: String,
+      l: DriftGate.TableLog, trigger: Trigger): StreamingQuery = {
+    val keyExpr =
+      coalesce(col(s"after.$idField"), col(s"before.$idField")).cast("long")
+    val deltas =
+      if (reroutes) DeltaLog.deltaStreamFromJudged(spark, l.judgedBase,
+        rowSchema, keyExpr)
+      else DeltaLog.deltaStream(spark, feedDir, table, rowSchema, keyExpr,
+        databases)
+    val dir = l.logDir
+    deltas.writeStream
+      .queryName(l.queryName)
+      .outputMode("append")
+      .trigger(trigger)
+      .option("checkpointLocation", l.logCheckpoint)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        batch.write.mode("overwrite").parquet(s"$dir/batch_id=$batchId")
+        ()
+      }
+      .start()
+  }
+
+  /** Ingest the feed's current contents into the table log: the gate
+    * drains first (when declared), then the log stage runs to
+    * completion over its source. Incremental across calls (durable
+    * checkpoints at both stages). Seeds the log dir, so a downstream
+    * file stream over it can start even when the table has no events.
+    */
+  def ingestOnce(spark: SparkSession, feedDir: String,
+      l: DriftGate.TableLog): Unit = {
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(l.logDir))
+    drainOnce(spark, feedDir, l.judgedBase, l.gateCheckpoint)
+    logQuery(spark, feedDir, l, Trigger.AvailableNow()).awaitTermination()
+  }
+
+  /** Live deployment of [[ingestOnce]]: the gate (when declared) and the
+    * log stage as long-running queries on `trigger`.
+    */
+  def startIngest(spark: SparkSession, feedDir: String,
+      l: DriftGate.TableLog, trigger: Trigger): Seq[StreamingQuery] = {
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(l.logDir))
+    startIfEnabled(spark, feedDir, l.judgedBase, l.gateCheckpoint,
+      trigger) :+ logQuery(spark, feedDir, l, trigger)
+  }
+}
+
+object DriftGate {
+  /** Where one table-log stage keeps its state under a pipeline's work
+    * root: the streaming query's name, the batch-partitioned log dir,
+    * the log query's checkpoint, the judged-log base, and the gate
+    * query's checkpoint. Each kind names these itself — the names are
+    * on-disk and operator-visible (`view_<n>_log_fact`, `ckpt_gate`, …),
+    * so warm work dirs keep resuming.
+    */
+  final case class TableLog(queryName: String, logDir: String,
+      logCheckpoint: String, judgedBase: String, gateCheckpoint: String)
 }

@@ -38,26 +38,19 @@ object PipelineMetrics {
     */
   final case class Target(url: String, table: String)
 
-  /** Create the metrics table if missing (idempotent — Derby's
-    * `X0Y32` = exists). Called by the registry at conf load, so a
-    * malformed URL fails registration, not the first batch.
+  /** Create the metrics table if missing (idempotent on every engine
+    * [[graft.sinks.JdbcSink.createTableIfAbsent]] qualifies). Called by
+    * the registry at conf load, so a malformed URL fails registration,
+    * not the first batch.
     */
-  def ensureTable(t: Target): Unit = {
-    val conn = java.sql.DriverManager.getConnection(t.url)
-    try {
-      val st = conn.createStatement()
-      try st.execute(
-        s"""CREATE TABLE ${t.table} ("pipeline" VARCHAR(64) NOT NULL,
-           | "kind" VARCHAR(16), "batch_id" BIGINT NOT NULL,
-           | "rows_in" BIGINT, "dead_letters" BIGINT, "state_rows" BIGINT,
-           | "wall_ms" BIGINT, "info" VARCHAR(1024),
-           | PRIMARY KEY ("pipeline", "batch_id"))"""
-          .stripMargin.replace("\n", ""))
-      catch {
-        case e: java.sql.SQLException if e.getSQLState == "X0Y32" => ()
-      }
-    } finally conn.close()
-  }
+  def ensureTable(t: Target): Unit =
+    graft.sinks.JdbcSink.createTableIfAbsent(t.url,
+      s"""CREATE TABLE ${t.table} ("pipeline" VARCHAR(64) NOT NULL,
+         | "kind" VARCHAR(16), "batch_id" BIGINT NOT NULL,
+         | "rows_in" BIGINT, "dead_letters" BIGINT, "state_rows" BIGINT,
+         | "wall_ms" BIGINT, "info" VARCHAR(1024),
+         | PRIMARY KEY ("pipeline", "batch_id"))"""
+        .stripMargin.replace("\n", ""))
 
   /** Upsert the (pipeline, batch_id) metrics row. Failures are logged
     * and swallowed — the serving stage must survive a down metrics
@@ -105,21 +98,13 @@ object PipelineMetrics {
     * serving path). Called at conf load like [[ensureTable]], so a bad
     * metrics store fails registration, not the first batch.
     */
-  def ensureExpectTable(t: Target): Unit = {
-    val conn = java.sql.DriverManager.getConnection(t.url)
-    try {
-      val st = conn.createStatement()
-      try st.execute(
-        s"""CREATE TABLE ${t.table}_expect ("pipeline" VARCHAR(64) NOT NULL,
-           | "batch_id" BIGINT NOT NULL, "rule" VARCHAR(64) NOT NULL,
-           | "violations" BIGINT, "budget" BIGINT, "pass" BOOLEAN,
-           | PRIMARY KEY ("pipeline", "batch_id", "rule"))"""
-          .stripMargin.replace("\n", ""))
-      catch {
-        case e: java.sql.SQLException if e.getSQLState == "X0Y32" => ()
-      }
-    } finally conn.close()
-  }
+  def ensureExpectTable(t: Target): Unit =
+    graft.sinks.JdbcSink.createTableIfAbsent(t.url,
+      s"""CREATE TABLE ${t.table}_expect ("pipeline" VARCHAR(64) NOT NULL,
+         | "batch_id" BIGINT NOT NULL, "rule" VARCHAR(64) NOT NULL,
+         | "violations" BIGINT, "budget" BIGINT, "pass" BOOLEAN,
+         | PRIMARY KEY ("pipeline", "batch_id", "rule"))"""
+        .stripMargin.replace("\n", ""))
 
   /** Upsert a batch's expectation verdicts (DELETE+INSERT keyed
     * (pipeline, batch_id) in one transaction — a replayed batch

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.cdc.DeltaLog
 import graft.ops.CorpusOps
 import graft.sinks.JdbcSink
 import org.apache.spark.sql.functions._
@@ -88,11 +87,13 @@ final case class SearchServingPipeline(
     * conf's schema evolves.
     */
   private val driftGate = DriftGate(name, "search", databases, table,
-    rowSchema, driftCheck, driftPolicy, metrics, deadLetterDir)
-  private def judgedBase(workRoot: String) = s"$workRoot/judged"
+    rowSchema, idField, driftCheck, driftPolicy, metrics, deadLetterDir)
 
   private def logDir(workRoot: String) = s"$workRoot/log"
   private def ckptDir(workRoot: String, stage: String) = s"$workRoot/ckpt_$stage"
+  private def tableLog(workRoot: String) = DriftGate.TableLog(
+    s"search_${name}_log", logDir(workRoot), ckptDir(workRoot, "log"),
+    s"$workRoot/judged", ckptDir(workRoot, "gate"))
 
   // ---------- STORE VERSIONING (the online rebuild's swap seam) ----------
 
@@ -386,28 +387,6 @@ final case class SearchServingPipeline(
       case r => r
     }
 
-  private def logQuery(spark: SparkSession, feedDir: String,
-      workRoot: String, trigger: Trigger): StreamingQuery = {
-    val keyExpr =
-      coalesce(col(s"after.$idField"), col(s"before.$idField")).cast("long")
-    val deltas = if (driftGate.reroutes)
-      DeltaLog.deltaStreamFromJudged(spark, judgedBase(workRoot), rowSchema,
-        keyExpr)
-    else DeltaLog.deltaStream(spark, feedDir, table, rowSchema, keyExpr,
-      databases)
-    val dir = logDir(workRoot)
-    deltas.writeStream
-      .queryName(s"search_${name}_log")
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", ckptDir(workRoot, "log"))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$dir/batch_id=$batchId")
-        ()
-      }
-      .start()
-  }
-
   private def indexQuery(spark: SparkSession, workRoot: String,
       trigger: Trigger): StreamingQuery = {
     val stream = spark.readStream.schema(ViewPipeline.LogSchema)
@@ -691,12 +670,8 @@ final case class SearchServingPipeline(
 
   private def driveOnce(spark: SparkSession, feedDir: String,
       workRoot: String): Unit = {
-    Files.createDirectories(Paths.get(logDir(workRoot)))
     clearStaleProgressIfFresh(workRoot)
-    driftGate.drainOnce(spark, feedDir, judgedBase(workRoot),
-      ckptDir(workRoot, "gate"))
-    logQuery(spark, feedDir, workRoot, Trigger.AvailableNow())
-      .awaitTermination()
+    driftGate.ingestOnce(spark, feedDir, tableLog(workRoot))
     indexQuery(spark, workRoot, Trigger.AvailableNow()).awaitTermination()
   }
 
@@ -713,11 +688,8 @@ final case class SearchServingPipeline(
   private def startQueries(spark: SparkSession, feedDir: String,
       workRoot: String, interval: String): Seq[StreamingQuery] = {
     val t = Trigger.ProcessingTime(interval)
-    Files.createDirectories(Paths.get(logDir(workRoot)))
     clearStaleProgressIfFresh(workRoot)
-    driftGate.startIfEnabled(spark, feedDir, judgedBase(workRoot),
-      ckptDir(workRoot, "gate"), t) ++
-      Seq(logQuery(spark, feedDir, workRoot, t),
-        indexQuery(spark, workRoot, t))
+    driftGate.startIngest(spark, feedDir, tableLog(workRoot), t) :+
+      indexQuery(spark, workRoot, t)
   }
 }

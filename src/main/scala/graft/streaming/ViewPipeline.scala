@@ -1,12 +1,11 @@
 package graft.streaming
 
-import graft.cdc.{DeltaLog, IncrementalJoin}
+import graft.cdc.IncrementalJoin
 import graft.sinks.JdbcSink
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.nio.file.{Files, Paths}
 
 /** A registry-declarable VIEW pipeline: fact ⋈ dim CDC denormalization
   * from a shared bronze feed into a typed JDBC serving table — the
@@ -96,14 +95,13 @@ final case class ViewPipeline(
     * the right table.
     */
   private def sideGate(side: String, table: String, schema: StructType,
-      policy: Option[CdcPipeline.DriftPolicy]) =
-    DriftGate(s"$name.$side", "view", databases, table, schema,
+      idField: String, policy: Option[CdcPipeline.DriftPolicy]) =
+    DriftGate(s"$name.$side", "view", databases, table, schema, idField,
       driftCheck, policy.orElse(driftPolicy), metrics, deadLetterDir)
-  private val factGate =
-    sideGate("fact", factTable, factSchema, factDriftPolicy)
-  private val dimGate = sideGate("dim", dimTable, dimSchema, dimDriftPolicy)
-  private def judgedBase(workRoot: String, side: String) =
-    s"$workRoot/judged_$side"
+  private val factGate = sideGate("fact", factTable, factSchema,
+    factIdField, factDriftPolicy)
+  private val dimGate =
+    sideGate("dim", dimTable, dimSchema, dimIdField, dimDriftPolicy)
   require(factSchema.fieldNames.toSet.intersect(dimSchema.fieldNames.toSet).isEmpty,
     s"view $name: fact and dim schemas share field names — the serving " +
       "table flattens both sides, so names must not collide")
@@ -154,37 +152,13 @@ final case class ViewPipeline(
     s"${logBase(workRoot, side)}/log"
   private def ckptDir(workRoot: String, stage: String) = s"$workRoot/ckpt_$stage"
 
-  /** One LWW replay: feed → routed/filtered keyed events → per-key
-    * deltas → batch_id-partitioned state-log append, on the given
-    * trigger. Each micro-batch writes ONLY its churn
-    * ([[StateLog.appendBatch]] — overwrite per batch dir, so checkpoint
-    * replay is idempotent); history never rewrites.
+  /** A side's table-log stage layout ([[DriftGate.ingestOnce]]) — the
+    * SIDE'S OWN gate decides the source, never the other side's.
     */
-  private def logQuery(spark: SparkSession, feedDir: String, workRoot: String,
-      side: String, table: String, schema: StructType, idField: String,
-      trigger: Trigger): StreamingQuery = {
-    val keyExpr =
-      coalesce(col(s"after.$idField"), col(s"before.$idField")).cast("long")
-    // the SIDE'S OWN gate decides the source — never the other side's:
-    // the two are conf-identical today, but a per-side policy must not
-    // silently read the wrong source
-    val gate = if (side == "fact") factGate else dimGate
-    val deltas = if (gate.reroutes)
-      DeltaLog.deltaStreamFromJudged(spark, judgedBase(workRoot, side),
-        schema, keyExpr)
-    else DeltaLog.deltaStream(spark, feedDir, table, schema, keyExpr,
-      databases)
-    val base = logBase(workRoot, side)
-    deltas.writeStream
-      .queryName(s"view_${name}_log_$side")
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", ckptDir(workRoot, side))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        StateLog.appendBatch(batch, base, batchId)
-      }
-      .start()
-  }
+  private def sideLog(workRoot: String, side: String) = DriftGate.TableLog(
+    s"view_${name}_log_$side", logDir(workRoot, side),
+    ckptDir(workRoot, side), s"$workRoot/judged_$side",
+    ckptDir(workRoot, s"gate_$side"))
 
   /** The join/serving stage: file-stream both logs → seq-ordered
     * Δ(fact⋈dim) → typed flatten → keyed JDBC apply, on the given
@@ -386,22 +360,6 @@ final case class ViewPipeline(
       }
     }
 
-  /** Seed both log directories BEFORE any query starts. The join
-    * stage's file streams read them with a STATIC schema
-    * ([[ViewPipeline.LogSchema]]), so an empty-but-existing dir is a
-    * perfectly good stream source (zero files → zero batches) — which
-    * means the join stage never has to wait for a side's first event.
-    * The case that matters: a leftOuter view over a feed that has fact
-    * events but no dim events yet must serve null-enriched facts
-    * immediately, not sit unserved until the first dim row ever
-    * arrives.
-    */
-  private def seedLogDirs(workRoot: String): Unit = {
-    Files.createDirectories(Paths.get(logDir(workRoot, "fact")))
-    Files.createDirectories(Paths.get(logDir(workRoot, "dim")))
-    ()
-  }
-
   /** Run every stage to completion over the feed's CURRENT contents.
     * Safe to call repeatedly; each call processes only data that arrived
     * since the last one (durable checkpoints at every stage).
@@ -409,15 +367,8 @@ final case class ViewPipeline(
   def runOnce(spark: SparkSession, feedDir: String, workRoot: String,
       esTransport: graft.sinks.EsSink.Transport =
         new graft.sinks.EsSink.HttpTransport): Unit = {
-    seedLogDirs(workRoot)
-    factGate.drainOnce(spark, feedDir, judgedBase(workRoot, "fact"),
-      ckptDir(workRoot, "gate_fact"))
-    dimGate.drainOnce(spark, feedDir, judgedBase(workRoot, "dim"),
-      ckptDir(workRoot, "gate_dim"))
-    logQuery(spark, feedDir, workRoot, "fact", factTable, factSchema,
-      factIdField, Trigger.AvailableNow()).awaitTermination()
-    logQuery(spark, feedDir, workRoot, "dim", dimTable, dimSchema,
-      dimIdField, Trigger.AvailableNow()).awaitTermination()
+    factGate.ingestOnce(spark, feedDir, sideLog(workRoot, "fact"))
+    dimGate.ingestOnce(spark, feedDir, sideLog(workRoot, "dim"))
     viewQuery(spark, workRoot, Trigger.AvailableNow(), esTransport)
       .awaitTermination()
     // every log batch is now consumed — the drained-join precondition
@@ -452,10 +403,12 @@ final case class ViewPipeline(
 
   /** LIVE deployment: the same three stages as long-running queries on
     * a processing-time trigger — new feed files flow through to the
-    * serving table continuously. Log dirs are seeded eagerly
-    * ([[seedLogDirs]]), so the join stage starts immediately and a
-    * side with no events yet contributes an empty stream (leftOuter
-    * facts serve null-enriched from the first fact batch). Stop the
+    * serving table continuously. Both side logs are seeded before the
+    * join stage starts ([[DriftGate.startIngest]]), and the join stage
+    * reads them with a STATIC schema ([[ViewPipeline.LogSchema]]), so
+    * a side with no events yet contributes an empty stream: a leftOuter
+    * view serves null-enriched facts from the first fact batch instead
+    * of waiting for the first dim row ever. Stop the
     * returned queries to shut down; checkpoints make a later [[start]]
     * or [[runOnce]] resume exactly where serving stopped.
     */
@@ -464,16 +417,9 @@ final case class ViewPipeline(
       esTransport: graft.sinks.EsSink.Transport =
         new graft.sinks.EsSink.HttpTransport): Seq[StreamingQuery] = {
     val t = Trigger.ProcessingTime(interval)
-    seedLogDirs(workRoot)
-    factGate.startIfEnabled(spark, feedDir, judgedBase(workRoot, "fact"),
-      ckptDir(workRoot, "gate_fact"), t) ++
-    dimGate.startIfEnabled(spark, feedDir, judgedBase(workRoot, "dim"),
-      ckptDir(workRoot, "gate_dim"), t) ++ Seq(
-      logQuery(spark, feedDir, workRoot, "fact", factTable, factSchema,
-        factIdField, t),
-      logQuery(spark, feedDir, workRoot, "dim", dimTable, dimSchema,
-        dimIdField, t),
-      viewQuery(spark, workRoot, t, esTransport))
+    factGate.startIngest(spark, feedDir, sideLog(workRoot, "fact"), t) ++
+      dimGate.startIngest(spark, feedDir, sideLog(workRoot, "dim"), t) :+
+      viewQuery(spark, workRoot, t, esTransport)
   }
 }
 

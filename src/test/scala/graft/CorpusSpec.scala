@@ -732,6 +732,32 @@ class CorpusSpec extends SparkSpec {
     assert(got == scratch, "over-cap dists fallthrough diverged from scratch")
   }
 
+  test("incrementalBfs: an over-cap seed set falls through to the distributed path with the same distances") {
+    // a small graph whose edges, dists and deltas all fit edgeCap = 10,
+    // queried with 12 seeds that were not derived from the stored
+    // distances (11 lie outside the graph): the seed probe alone must
+    // close the driver-graph tier, and the distributed answer must
+    // equal the driver tier's and from-scratch BFS on the post-churn graph
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L))
+    val base = CorpusOps.bfsDistances(edges.toDF("u", "v"), Seq(1L).toDF("id"))
+    val seeds = (Seq(1L) ++ (100L to 110L)).toDF("id")
+    val deltas = Seq((2L, 3L, -1), (1L, 4L, 1)).toDF("u", "v", "delta")
+    val post = Seq((1L, 2L), (3L, 4L), (1L, 4L)).toDF("u", "v")
+    assert(!CorpusOps.fitsLocalBfsTier(post, base, deltas, seeds, 10),
+      "12 seeds must breach a cap of 10")
+    assert(CorpusOps.fitsLocalBfsTier(post, base, deltas,
+      Seq(1L).toDF("id"), 10), "the same graph with one seed fits the tier")
+    def norm(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val got = norm(CorpusOps.incrementalBfs(edges.toDF("u", "v"), base,
+      deltas, seeds, edgeCap = 10))
+    val local = norm(CorpusOps.incrementalBfs(edges.toDF("u", "v"), base,
+      deltas, seeds))
+    val scratch = norm(CorpusOps.bfsDistances(post, Seq(1L).toDF("id")))
+    assert(got == local, s"fallthrough $got vs driver tier $local")
+    assert(got == scratch, s"fallthrough $got vs scratch $scratch")
+  }
+
   test("incrementalBfs equals from-scratch BFS on random churn waves") {
     val rnd = new scala.util.Random(31)
     val allEdges = (1 to 120).map { _ =>

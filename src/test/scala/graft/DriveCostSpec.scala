@@ -16,6 +16,70 @@ class DriveCostSpec extends AnyFunSuite {
   private def mkWarehouse(): java.nio.file.Path =
     Files.createTempDirectory("graft_drivecost_")
 
+  // ---- the once-per-store protocol (DeltaLog.buildOnce + DriveCost.once)
+
+  test("buildOnce with a custom marker runs the body once per base") {
+    val wh = mkWarehouse()
+    val runs = new java.util.concurrent.atomic.AtomicInteger()
+    Seq("a", "a", "b", "a").foreach { b =>
+      graft.cdc.DeltaLog.buildOnce(wh.resolve(b).toString, "_MY_DONE") { () =>
+        runs.incrementAndGet(); ()
+      }
+    }
+    assert(runs.get == 2, "one run per base")
+    assert(Files.exists(wh.resolve("a/_MY_DONE")))
+    assert(!Files.exists(wh.resolve("a/_GRAFT_DONE")),
+      "a custom marker replaces the default one")
+  }
+
+  test("a drive that throws leaves no marker and no cost sidecar; the retry runs") {
+    val base = mkWarehouse().resolve("metrics_x/fp1")
+    var attempts = 0
+    def drive(): Unit = DriveCost.once(base.toString, "q141", "/data/x") {
+      attempts += 1
+      if (attempts == 1) throw new IllegalStateException("crash mid-drive")
+    }
+    assertThrows[IllegalStateException](drive())
+    assert(!Files.exists(base.resolve("_Q141_DRIVE_DONE")))
+    assert(!Files.exists(base.resolve("_DRIVE_COST.json")))
+    drive()
+    assert(attempts == 2, "the retry must re-drive")
+    assert(Files.exists(base.resolve("_Q141_DRIVE_DONE")))
+    assert(Files.exists(base.resolve("_DRIVE_COST.json")))
+    drive()
+    assert(attempts == 2, "a driven store never re-drives")
+    DriveCost.once(base.toString, "q178", "/data/x", lifecycle = true) {}
+    assert(Files.exists(base.resolve("_Q178_LIFECYCLE_DONE")))
+  }
+
+  test("a pre-existing _Q141_DRIVE_DONE skips the drive (warm warehouse)") {
+    val base = mkWarehouse().resolve("metrics_x/fp1")
+    Files.createDirectories(base)
+    Files.createFile(base.resolve("_Q141_DRIVE_DONE"))
+    var ran = false
+    DriveCost.once(base.toString, "q141", "/data/x") { ran = true }
+    assert(!ran, "a store driven by an earlier build must keep serving")
+    assert(!Files.exists(base.resolve("_DRIVE_COST.json")),
+      "a skipped drive must not re-record its cost")
+    assert(!Files.exists(base.resolve("_GRAFT_DONE")))
+  }
+
+  test("two threads on one base run the drive once") {
+    val base = mkWarehouse().resolve("metrics_x/fp1").toString
+    val runs = new java.util.concurrent.atomic.AtomicInteger()
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val threads = (1 to 2).map { _ =>
+      new Thread(() => {
+        start.await()
+        DriveCost.once(base, "q151", "/data/x") {
+          runs.incrementAndGet(); Thread.sleep(200)
+        }
+      })
+    }
+    threads.foreach(_.start()); start.countDown(); threads.foreach(_.join())
+    assert(runs.get == 1)
+  }
+
   test("record/collect round-trip carries drive, cost and data-root tag") {
     val wh = mkWarehouse()
     val base = wh.resolve("metrics_data_sf0_1/fp123")

@@ -617,7 +617,7 @@ class MetricsSpec extends SparkSpec {
     // the gate is the subtree's declared owner: booting it claims the
     // unmarked dir
     val gate = graft.streaming.DriftGate("bf.fact", "view", Set("d"), "t",
-      StructType.fromDDL("id BIGINT"), driftCheck = false,
+      StructType.fromDDL("id BIGINT"), idField = "id", driftCheck = false,
       policy = Some(CdcPipeline.DriftPolicy(newColsBudget = 0L,
         action = graft.ops.Profile.Drop)),
       metrics = Some(target), deadLetterDir = Some(dl))

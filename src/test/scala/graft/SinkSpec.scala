@@ -407,6 +407,21 @@ class SinkSpec extends SparkSpec {
     assert(EsSink.readProgress(cfg, new EsSink.FileDocStore(dir), "p1")
       == Some(7L))
   }
+
+  test("FileDocStore: a store dir removed between two puts on one instance is re-created, and the second put lands") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_fds_rm_")
+      .resolve("store")
+    val t = new EsSink.FileDocStore(dir.toString)
+    assert(t.send(EsSink.Request("PUT", s"${cfg.url}/_doc/a", Map(),
+      """{"v":1}""")) == 200)
+    // removed from outside mid-drive (the instance already created it)
+    java.nio.file.Files.delete(dir.resolve("a.json"))
+    java.nio.file.Files.delete(dir)
+    assert(t.send(EsSink.Request("PUT", s"${cfg.url}/_doc/b", Map(),
+      """{"v":2}""")) == 200)
+    assert(t.get(s"${cfg.url}/_doc/b", Map()) ==
+      ((200, """{"found":true,"_source":{"v":2}}""")))
+  }
 }
 
 object SinkSpec {
