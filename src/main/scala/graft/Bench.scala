@@ -18,6 +18,24 @@ import org.apache.spark.sql.SparkSession
   * the medians measured the box, not the code.
   */
 object Bench {
+  /** The session of every bench-side main (Bench, BenchOne, JobCount,
+    * PlanDump, StreamProbe, Verify), so a probe runs the plan the bench
+    * runs: `SPARK_GRAFT_CPUS` local threads (default `defaultCpus`) and
+    * as many shuffle partitions, UTC, naive parquet timestamps read as
+    * TIMESTAMP (see [[Tables]]), AQE on, no UI, log level ERROR.
+    */
+  def session(defaultCpus: String = "32"): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false").getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
+
   /** Median-of-3 with bounded re-measurement when the spread says the
     * box was busy (r7 postmortem: per-run ranges like 1.4→22.4 s at
     * loadavg 4.7 shipped a 2.4×-overstated headline). A max/min ratio
@@ -59,15 +77,7 @@ object Bench {
     // before we start working.
     val loadStart = loadavg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = session()
     spark.sparkContext.setLogLevel("WARN")
 
     // RAM-disk hygiene before measuring: leaked throwaway checkpoints

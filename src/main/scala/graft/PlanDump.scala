@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dump `.explain("formatted")` for queries (names as args) — dev
@@ -8,23 +7,16 @@ import java.nio.file.{Files, Paths}
   * (REQUIRED — a baked-in round default would silently mislabel dumps
   * in later rounds), SPARK_GRAFT_PLAN_SUFFIX (e.g. "before"/"after").
   *
-  * Mirrors Bench's session configuration exactly so the dumped plan is
+  * Runs in Bench's session ([[Bench.session]]), so the dumped plan is
   * the one the bench actually executes (shuffle partitions, AQE, UTC).
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR",
       sys.error("SPARK_GRAFT_PLANS_DIR must be set (e.g. plans/r17)"))
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session()
     Files.createDirectories(Paths.get(outDir))
     args.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)

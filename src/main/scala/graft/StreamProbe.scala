@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Per-micro-batch breakdown for the streaming queries (names as args) —
@@ -8,26 +7,12 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * Prints every StreamingQueryProgress as one JSON line: durationMs
   * {addBatch, getBatch, queryPlanning, walCommit, commitOffsets,
   * triggerExecution} plus stateOperators (commit times, rows, memory).
-  * Mirrors Bench's session configuration.
+  * Runs in Bench's session ([[Bench.session]]).
   */
 object StreamProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    // A/B a state-store provider without touching the bench session
-    // (e.g. org.apache.spark.sql.execution.streaming.state
-    // .RocksDBStateStoreProvider) — probe-only knob
-    val spark = sys.env.get("SPARK_GRAFT_STATE_PROVIDER")
-      .fold(builder)(p => builder
-        .config("spark.sql.streaming.stateStore.providerClass", p))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session()
     spark.streams.addListener(new StreamingQueryListener {
       override def onQueryStarted(
           e: StreamingQueryListener.QueryStartedEvent): Unit = ()

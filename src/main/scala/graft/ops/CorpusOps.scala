@@ -45,13 +45,13 @@ object CorpusOps {
     // contraction pays ~7 rounds × ~5 jobs of scheduling floor on a
     // graph whose whole edge list is smaller than one shuffle block;
     // over the cap (or a non-orderable id type) nothing changes —
-    // 100-TB pair graphs keep the distributed fixpoint. The count is
-    // limit-bounded so the over-cap probe never scans past the cap.
-    val idOrd = localIdOrdering(edges.schema("u").dataType)
-    if (idOrd.isDefined &&
-        edges.limit(DriverComponentsEdgeCap + 1).count() <= DriverComponentsEdgeCap)
-      localComponents(edges, idOrd.get)
-    else starContraction(edges)._1
+    // 100-TB pair graphs keep the distributed fixpoint. One bounded
+    // read both gates the tier and fetches its edges.
+    val local = for {
+      ord <- localIdOrdering(edges.schema("u").dataType)
+      rows <- Bounded.collect(edges, DriverComponentsEdgeCap)
+    } yield localComponents(edges, rows, ord)
+    local.getOrElse(starContraction(edges)._1)
   }
 
   /** [[dupClusters]] plus the number of large-star/small-star rounds it
@@ -109,10 +109,12 @@ object CorpusOps {
   }
 
   /** The driver tier: union-find with min-id roots over the collected
-    * canonical edge list — bit-identical labels to [[starContraction]]
-    * (component label = minimum member id; exactly one canonical row).
+    * canonical edge `rows` of `edges` — bit-identical labels to
+    * [[starContraction]] (component label = minimum member id; exactly
+    * one canonical row).
     */
-  private def localComponents(edges: DataFrame, ord: Ordering[Any]): DataFrame = {
+  private def localComponents(edges: DataFrame,
+      rows: Array[org.apache.spark.sql.Row], ord: Ordering[Any]): DataFrame = {
     import scala.jdk.CollectionConverters._
     val spark = edges.sparkSession
     val idType = edges.schema("u").dataType
@@ -126,7 +128,7 @@ object CorpusOps {
       }
       x
     }
-    edges.collect().foreach { r =>
+    rows.foreach { r =>
       val u = r.get(0); val v = r.get(1)
       parent.getOrElseUpdate(u, u)
       parent.getOrElseUpdate(v, v)
@@ -142,11 +144,11 @@ object CorpusOps {
       org.apache.spark.sql.types.StructField("cluster_id", idType),
       org.apache.spark.sql.types.StructField("is_canonical",
         org.apache.spark.sql.types.BooleanType)))
-    val rows = parent.keysIterator.map { id =>
+    val labels = parent.keysIterator.map { id =>
       val root = find(id)
       org.apache.spark.sql.Row(id, root, id == root)
     }.toSeq
-    spark.createDataFrame(rows.asJava, schema)
+    spark.createDataFrame(labels.asJava, schema)
   }
 
   /** The distributed tier: alternating large-star/small-star label
@@ -549,8 +551,9 @@ object CorpusOps {
   /** Edge-count cap for the DRIVER-GRAPH tier of [[bfsDistances]] /
     * [[incrementalBfs]]: under it the whole edge relation collects once
     * (≤ a few tens of MB of boxed ids) and the entire level loop runs
-    * in memory — ZERO jobs per level instead of one. The probe is
-    * limit-bounded so an over-cap graph never scans past the cap.
+    * in memory — ZERO jobs per level instead of one. Only EDGE
+    * relations answer to it: node-sized ones (seeds, stored distances,
+    * delta dsts) answer to the node cap `cap` ([[DriverFrontierCap]]).
     */
   private[graft] val DriverEdgeCap = 500000
 
@@ -560,35 +563,16 @@ object CorpusOps {
     val spark = edges.sparkSession
     val seed0 = seeds.select(col("id")).distinct()
       .select(col("id"), lit(0L).as("dist")).localCheckpoint(true)
-    // Pin BOTH relations to ONE id type up front: the driver tier
-    // dedupes collected ids in a HashSet[Any] and rebuilds frames with
-    // a declared type, so INT edges against BIGINT seeds would either
-    // fail createDataFrame row validation or mis-compare boxed Integer
-    // vs Long and revisit nodes. The unified type is the WIDER of the
-    // two when both are integral — narrowing the edge ids to the seed
-    // type would wrap/null endpoints above the seed type's range and
-    // silently traverse a mangled graph.
-    val seedIdType = {
-      import org.apache.spark.sql.types._
-      val integral: Set[org.apache.spark.sql.types.DataType] =
-        Set(ByteType, ShortType, IntegerType, LongType)
-      // widest across seed id AND both edge endpoints — a mixed-width
-      // edge frame (INT u, BIGINT v) must not narrow either side
-      val all = Seq(seed0.schema("id").dataType,
-        edges.schema("u").dataType, edges.schema("v").dataType)
-      if (all.distinct.size == 1) all.head
-      else if (all.forall(integral)) all.maxBy(_.defaultSize)
-      else
-        // a non-integral MIX (e.g. STRING edges vs LONG seeds) has no
-        // lossless unified type: casting edges to the seed type nulls
-        // unparseable endpoints and silently traverses a mangled graph.
-        // Fail loud — the caller aligns its id types.
-        throw new IllegalArgumentException(
-          "bfsDistances: seed and edge id types must be equal or all " +
-            s"integral; got seeds=${seed0.schema("id").dataType.sql}, " +
-            s"u=${edges.schema("u").dataType.sql}, " +
-            s"v=${edges.schema("v").dataType.sql}")
-    }
+    // Pin BOTH relations to ONE id type up front (Bounded.idType): the
+    // driver tier dedupes collected ids in a HashSet[Any] and rebuilds
+    // frames with a declared type, so INT edges against BIGINT seeds
+    // would either fail createDataFrame row validation or mis-compare
+    // boxed Integer vs Long and revisit nodes. The widest across seed id
+    // AND both edge endpoints — a mixed-width edge frame (INT u, BIGINT
+    // v) must not narrow either side.
+    val seedIdType = Bounded.idType("bfsDistances",
+      "seeds" -> seed0.schema("id").dataType,
+      "u" -> edges.schema("u").dataType, "v" -> edges.schema("v").dataType)
     // pin the edge relation ONCE — the level loop runs one JOB per BFS
     // level against it, and an unpinned derivation (scan + window
     // shuffle, q122's shape) would re-execute per level — EXCEPT when
@@ -626,10 +610,12 @@ object CorpusOps {
       if (seedIdType == seed0.schema("id").dataType) seed0
       else seed0.select(col("id").cast(seedIdType).as("id"), col("dist"))
         .localCheckpoint(true)
-    val seedN = seed0w.count()
-    if (seedN > cap)
+    val seedRows = Bounded.collect(seed0w.select(col("id")), cap)
+    if (seedRows.isEmpty) {
+      val seedN = seed0w.count()
       return bfsDistributedLoop(e, seed0w.select(col("id")), seedN,
         seed0w, seedN, Seq(seed0w), maxIter)
+    }
 
     import scala.jdk.CollectionConverters._
     val idType = seedIdType
@@ -637,7 +623,7 @@ object CorpusOps {
       org.apache.spark.sql.types.StructField("id", idType)))
     val outSchema = idSchema.add("dist",
       org.apache.spark.sql.types.LongType, nullable = false)
-    val seedIds: Array[Any] = seed0w.select(col("id")).collect().map(_.get(0))
+    val seedIds: Array[Any] = seedRows.get.map(_.get(0))
 
     // DRIVER-GRAPH tier (guide §2.4): a model-sized edge relation
     // collects ONCE and the whole level loop runs in memory — zero jobs
@@ -645,10 +631,11 @@ object CorpusOps {
     // so the output is bit-identical to the frontier tier's. Over the
     // cap the frontier tier below keeps the one-job-per-level shape and
     // its distributed spill — 100-TB graphs are untouched.
-    if (edgeCap > 0 && e.limit(edgeCap + 1).count() <= edgeCap) {
+    val edgeRows = Bounded.collect(e, edgeCap)
+    if (edgeRows.isDefined) {
       val adj = scala.collection.mutable.HashMap
         .empty[Any, scala.collection.mutable.ArrayBuffer[Any]]
-      e.collect().foreach { r =>
+      edgeRows.get.foreach { r =>
         adj.getOrElseUpdate(r.get(0),
           scala.collection.mutable.ArrayBuffer.empty[Any]) += r.get(1)
       }
@@ -690,11 +677,13 @@ object CorpusOps {
       val fDf = spark.createDataFrame(
         frontier.toSeq.map(org.apache.spark.sql.Row(_)).asJava, idSchema)
       // leftsemi keeps the edge relation's v only; distinct is the one
-      // shuffle (map-side partial), CollectLimit bounds the driver copy
-      val nxt = e.join(broadcast(fDf), e("u") === fDf("id"), "left_semi")
-        .select(col("v")).distinct()
-        .limit(cap + 1).collect()
-      if (nxt.length > cap) return spill()
+      // shuffle (map-side partial), the bounded read caps the driver copy
+      val nxt = Bounded.collect(
+        e.join(broadcast(fDf), e("u") === fDf("id"), "left_semi")
+          .select(col("v")).distinct(), cap) match {
+        case Some(rows) => rows
+        case None => return spill()
+      }
       val fresh = nxt.iterator.map(_.get(0))
         .filterNot(visited.contains).toArray
       if (visited.size + fresh.length > cap) return spill()
@@ -795,8 +784,9 @@ object CorpusOps {
     // re-solved from boundary + member seeds), so the output matches to
     // the bit. A type mix falls through to the distributed path, whose
     // BFS widens ids itself; 100-TB graphs are untouched.
-    if (fitsLocalBfsTier(newE, dists, edgeDeltas, seeds, edgeCap))
-      return incrementalBfsLocal(newE, dists, edgeDeltas, seeds, maxIter)
+    val local = incrementalBfsLocal(newE, dists, edgeDeltas, seeds,
+      maxIter, cap, edgeCap)
+    if (local.isDefined) return local.get
     val deltaDst = edgeDeltas.select(col("v").as("id")).distinct()
     val affected = bfsDistances(newE, deltaDst, maxIter, cap, edgeCap)
       .select(col("id")).localCheckpoint(true)
@@ -884,34 +874,38 @@ object CorpusOps {
     }
   }
 
-  /** The gate of [[incrementalBfs]]'s driver-graph tier. The local tier
-    * collects newE, the stored distance relation, the delta dsts AND the
-    * seeds — the edge probe alone bounds none of the others (a delta
-    * that deletes most of a huge graph passes the edge probe yet `dists`
-    * is node-sized for the PRE-churn graph; a seed set can be any size),
-    * so each collected relation gets its own limit-bounded probe. A type
-    * mix also falls through: the distributed BFS widens ids itself.
+  /** The driver-graph tier of [[incrementalBfs]]: the identical
+    * affected-region algebra over bounded reads of the post-churn edges
+    * (by `edgeCap`) and of the node-sized delta dsts, stored distances
+    * and seeds (by the node cap `cap`) — the edge read alone bounds none
+    * of the others (a delta that deletes most of a huge graph leaves
+    * few edges yet `dists` node-sized for the PRE-churn graph; a seed
+    * set can be any size). None, after at most the reads so far, when
+    * one breaches its cap or the id columns do not share one type.
+    * Edges read first, so a large graph falls through after one read.
     */
-  private[graft] def fitsLocalBfsTier(newE: DataFrame, dists: DataFrame,
-      edgeDeltas: DataFrame, seeds: DataFrame, edgeCap: Int): Boolean = {
-    val idTypes = Seq(newE.schema("u").dataType, newE.schema("v").dataType,
+  private[graft] def incrementalBfsLocal(newE: DataFrame, dists: DataFrame,
+      edgeDeltas: DataFrame, seeds: DataFrame, maxIter: Int, cap: Int,
+      edgeCap: Int): Option[DataFrame] = {
+    val idType = newE.schema("u").dataType
+    val idTypes = Seq(idType, newE.schema("v").dataType,
       dists.schema("id").dataType, seeds.schema("id").dataType)
-    edgeCap > 0 && idTypes.distinct.size == 1 &&
-      Seq(newE, dists, edgeDeltas, seeds)
-        .forall(_.limit(edgeCap + 1).count() <= edgeCap)
+    if (idTypes.distinct.size != 1) return None
+    for {
+      edgeRows <- Bounded.collect(newE, edgeCap)
+      dstRows <- Bounded.collect(edgeDeltas.select(col("v")).distinct(), cap)
+      distRows <- Bounded.collect(dists.select(col("id"), col("dist")), cap)
+      seedRows <- Bounded.collect(seeds.select(col("id")).distinct(), cap)
+    } yield incrementalBfsSolve(newE.sparkSession, idType,
+      edgeRows.map(r => (r.get(0), r.get(1))), dstRows.map(_.get(0)),
+      distRows, seedRows.map(_.get(0)), maxIter)
   }
 
-  /** The driver-graph tier of [[incrementalBfs]]: the identical
-    * affected-region algebra off ONE collect of the post-churn edge
-    * relation. Caller has checked the cap and that every id column
-    * shares one type.
-    */
-  private def incrementalBfsLocal(newE: DataFrame, dists: DataFrame,
-      edgeDeltas: DataFrame, seeds: DataFrame, maxIter: Int): DataFrame = {
+  private def incrementalBfsSolve(spark: org.apache.spark.sql.SparkSession,
+      idType: org.apache.spark.sql.types.DataType, edges: Array[(Any, Any)],
+      deltaDstIds: Array[Any], distRows: Array[org.apache.spark.sql.Row],
+      seedIds: Array[Any], maxIter: Int): DataFrame = {
     import scala.jdk.CollectionConverters._
-    val spark = newE.sparkSession
-    val idType = newE.schema("u").dataType
-    val edges = newE.collect().map(r => (r.get(0), r.get(1)))
     val adj = scala.collection.mutable.HashMap
       .empty[Any, scala.collection.mutable.ArrayBuffer[Any]]
     edges.foreach { case (u, v) =>
@@ -920,8 +914,6 @@ object CorpusOps {
     }
     // affected = delta dsts + their new-graph descendants (the same
     // bounded BFS the distributed path runs)
-    val deltaDstIds = edgeDeltas.select(col("v")).distinct()
-      .collect().map(_.get(0))
     val affected = scala.collection.mutable.HashSet[Any](deltaDstIds.toSeq: _*)
     var frontier: Array[Any] = deltaDstIds
     var it = 0
@@ -932,7 +924,6 @@ object CorpusOps {
       it += 1
     }
     // splice: unaffected stored distances pass through untouched
-    val distRows = dists.select(col("id"), col("dist")).collect()
     val unaffected = distRows.filter(r => !affected.contains(r.get(0)))
     val distMap = scala.collection.mutable.HashMap.empty[Any, Long]
     distRows.foreach(r => distMap(r.get(0)) = r.getLong(1))
@@ -945,8 +936,7 @@ object CorpusOps {
       if (affected.contains(v) && !affected.contains(u))
         distMap.get(u).foreach(du => offer(v, du + 1))
     }
-    seeds.select(col("id")).distinct().collect().map(_.get(0))
-      .filter(affected.contains).foreach(offer(_, 0L))
+    seedIds.filter(affected.contains).foreach(offer(_, 0L))
     val regionAdj = scala.collection.mutable.HashMap
       .empty[Any, scala.collection.mutable.ArrayBuffer[Any]]
     edges.foreach { case (u, v) =>

@@ -80,40 +80,31 @@ object PageRank {
 
   /** Run [[ranksLocal]] over a materialized edge FRAME and return the
     * (node, rank) result as a one-partition DataFrame in the edge key's
-    * type. Caller has already checked the cap.
+    * type; None when the frame has more than [[DriverGraphCap]] edges.
     */
   private def ranksLocalFrame(e: DataFrame, iters: Int,
-      damping: Double): DataFrame = {
+      damping: Double): Option[DataFrame] = {
     import scala.jdk.CollectionConverters._
     val spark = e.sparkSession
     // the declared node type must admit BOTH endpoint columns: collected
     // rank keys include dst values, so a mixed-width edge frame (src INT,
     // dst BIGINT) declared as src's type fails createDataFrame row
-    // validation on the driver — unify to the wider integral type up
-    // front (bfsDistances' widening rule) and fail loud on a
-    // non-integral mix, where any cast would null/mangle ids
-    val nodeType = {
-      import org.apache.spark.sql.types._
-      val integral: Set[DataType] =
-        Set(ByteType, ShortType, IntegerType, LongType)
-      val both = Seq(e.schema("src").dataType, e.schema("dst").dataType)
-      if (both.distinct.size == 1) both.head
-      else if (both.forall(integral)) both.maxBy(_.defaultSize)
-      else throw new IllegalArgumentException(
-        "PageRank.ranks: src and dst id types must be equal or both " +
-          s"integral; got src=${both.head.sql}, dst=${both(1).sql}")
+    // validation on the driver. The shared widening rule runs before the
+    // read, so a non-integral mix fails loud at any graph size.
+    val nodeType = Bounded.idType("PageRank.ranks",
+      "src" -> e.schema("src").dataType, "dst" -> e.schema("dst").dataType)
+    Bounded.collect(e.select(col("src").cast(nodeType),
+        col("dst").cast(nodeType)), DriverGraphCap).map { rows =>
+      val rank = ranksLocal(rows.map(r => (r.get(0), r.get(1))), iters, damping)
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("node", nodeType),
+        org.apache.spark.sql.types.StructField("rank",
+          org.apache.spark.sql.types.DoubleType, nullable = false)))
+      spark.createDataFrame(
+        rank.iterator.map { case (v, r) =>
+          org.apache.spark.sql.Row(v, r)
+        }.toSeq.asJava, schema)
     }
-    val edges = e.select(col("src").cast(nodeType), col("dst").cast(nodeType))
-      .collect().map(r => (r.get(0), r.get(1)))
-    val rank = ranksLocal(edges, iters, damping)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node", nodeType),
-      org.apache.spark.sql.types.StructField("rank",
-        org.apache.spark.sql.types.DoubleType, nullable = false)))
-    spark.createDataFrame(
-      rank.iterator.map { case (v, r) =>
-        org.apache.spark.sql.Row(v, r)
-      }.toSeq.asJava, schema)
   }
 
   /** @param edges (src, dst) directed edge list (deduplicated)
@@ -125,10 +116,10 @@ object PageRank {
     // scan) would re-derive from source each round — measured 3× the
     // whole loop's cost on the TextRank graph
     val e = edges.localCheckpoint(true)
-    // model-sized graph → driver tier (see [[DriverGraphCap]]); the
-    // count is free on the just-checkpointed frame
-    if (e.count() <= DriverGraphCap) ranksLocalFrame(e, iters, damping)
-    else ranksDistributed(e, iters, damping)
+    // model-sized graph → driver tier (see [[DriverGraphCap]]), gated
+    // and read in one bounded collect of the checkpointed frame
+    ranksLocalFrame(e, iters, damping)
+      .getOrElse(ranksDistributed(e, iters, damping))
   }
 
   /** The distributed tier of [[ranks]] — the over-cap fixpoint (also
@@ -261,8 +252,10 @@ object PageRank {
     // post-churn fixed-point values (the splice argument), and both
     // tiers share the fixed-point algebra. The stats path (spec-pinned
     // affected-mass counts) keeps the distributed loop.
-    if (!withStats && newE.count() <= DriverGraphCap)
-      return (ranksLocalFrame(newE, history.size - 1, damping), Nil)
+    if (!withStats) {
+      val local = ranksLocalFrame(newE, iters, damping)
+      if (local.isDefined) return (local.get, Nil)
+    }
     val nodes = newE.select(col("src").as("node"))
       .union(newE.select(col("dst").as("node"))).distinct()
     val n = nodes.count().toDouble

@@ -715,27 +715,52 @@ class CorpusSpec extends SparkSpec {
 
   test("incrementalBfs: node-sized dists forces the distributed path even when post-churn edges fit") {
     // star 0→1..40, then a churn that deletes 36 spokes: the POST-churn
-    // edge list (4 edges) passes the edge probe, but the stored distance
-    // relation is PRE-churn node-sized — the dists probe must force the
-    // distributed path instead of collecting it (and the result must
-    // still equal from-scratch BFS on the post-churn graph)
+    // edge list (4 edges) passes the edge cap, but the stored distance
+    // relation is PRE-churn node-sized — over the node cap its bounded
+    // read must force the distributed path instead of collecting it
+    // (and the result must still equal from-scratch BFS on the
+    // post-churn graph)
     val edges = (1 to 40).map(i => (0L, i.toLong))
     val seeds = Seq(0L).toDF("id")
     val base = CorpusOps.bfsDistances(edges.toDF("u", "v"), seeds)
     val deltas = (5 to 40).map(i => (0L, i.toLong, -1)).toDF("u", "v", "delta")
-    val got = CorpusOps.incrementalBfs(edges.toDF("u", "v"), base, deltas,
-      seeds, edgeCap = 10)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val out = CorpusOps.incrementalBfs(edges.toDF("u", "v"), base, deltas,
+      seeds, cap = 10, edgeCap = 10)
+    assert(!out.queryExecution.analyzed.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+      "over the node cap the update must leave the driver tier")
+    val got = out.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val scratch = CorpusOps.bfsDistances(
       (1 to 4).map(i => (0L, i.toLong)).toDF("u", "v"), seeds)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == scratch, "over-cap dists fallthrough diverged from scratch")
   }
 
+  test("incrementalBfs: more stored nodes than edgeCap but within the node cap stays on the driver tier") {
+    // the same star churn: 41 stored distances and 36 delta dsts exceed
+    // edgeCap = 10, but node-sized relations answer to the node cap
+    // (default 500k), so only the 4 post-churn edges meet edgeCap and
+    // the whole update runs on the driver — its result is a
+    // LocalRelation, not the distributed tier's union of frames
+    val edges = (1 to 40).map(i => (0L, i.toLong))
+    val seeds = Seq(0L).toDF("id")
+    val base = CorpusOps.bfsDistances(edges.toDF("u", "v"), seeds)
+    val deltas = (5 to 40).map(i => (0L, i.toLong, -1)).toDF("u", "v", "delta")
+    val out = CorpusOps.incrementalBfs(edges.toDF("u", "v"), base, deltas,
+      seeds, edgeCap = 10)
+    assert(out.queryExecution.analyzed.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+      s"expected the driver tier, got:\n${out.queryExecution.analyzed}")
+    val scratch = CorpusOps.bfsDistances(
+      (1 to 4).map(i => (0L, i.toLong)).toDF("u", "v"), seeds)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(out.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == scratch)
+  }
+
   test("incrementalBfs: an over-cap seed set falls through to the distributed path with the same distances") {
-    // a small graph whose edges, dists and deltas all fit edgeCap = 10,
-    // queried with 12 seeds that were not derived from the stored
-    // distances (11 lie outside the graph): the seed probe alone must
+    // a small graph whose edges, dists and delta dsts all fit caps of
+    // 10, queried with 12 seeds that were not derived from the stored
+    // distances (11 lie outside the graph): the seed read alone must
     // close the driver-graph tier, and the distributed answer must
     // equal the driver tier's and from-scratch BFS on the post-churn graph
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L))
@@ -743,14 +768,15 @@ class CorpusSpec extends SparkSpec {
     val seeds = (Seq(1L) ++ (100L to 110L)).toDF("id")
     val deltas = Seq((2L, 3L, -1), (1L, 4L, 1)).toDF("u", "v", "delta")
     val post = Seq((1L, 2L), (3L, 4L), (1L, 4L)).toDF("u", "v")
-    assert(!CorpusOps.fitsLocalBfsTier(post, base, deltas, seeds, 10),
-      "12 seeds must breach a cap of 10")
-    assert(CorpusOps.fitsLocalBfsTier(post, base, deltas,
-      Seq(1L).toDF("id"), 10), "the same graph with one seed fits the tier")
+    assert(CorpusOps.incrementalBfsLocal(post, base, deltas, seeds,
+      200, cap = 10, edgeCap = 10).isEmpty, "12 seeds must breach a cap of 10")
+    assert(CorpusOps.incrementalBfsLocal(post, base, deltas,
+      Seq(1L).toDF("id"), 200, cap = 10, edgeCap = 10).isDefined,
+      "the same graph with one seed fits the tier")
     def norm(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val got = norm(CorpusOps.incrementalBfs(edges.toDF("u", "v"), base,
-      deltas, seeds, edgeCap = 10))
+      deltas, seeds, cap = 10, edgeCap = 10))
     val local = norm(CorpusOps.incrementalBfs(edges.toDF("u", "v"), base,
       deltas, seeds))
     val scratch = norm(CorpusOps.bfsDistances(post, Seq(1L).toDF("id")))

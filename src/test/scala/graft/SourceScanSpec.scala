@@ -4,12 +4,14 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-/** Keeps two protocols in one place each, by scanning the main sources:
-  * table-exists handling lives in [[graft.sinks.JdbcSink]]
+/** Keeps three protocols in one place each, by scanning the main
+  * sources: table-exists handling lives in [[graft.sinks.JdbcSink]]
   * (`createTableIfAbsent` swallows every engine's already-exists state,
-  * not just Derby's), and the once-per-store drive protocol lives in
+  * not just Derby's); the once-per-store drive protocol lives in
   * [[graft.cdc.DeltaLog.buildOnce]] — no query hand-rolls a done marker
-  * or an in-JVM memo set.
+  * or an in-JVM memo set; and the graph operators' driver tiers gate
+  * and read through [[graft.ops.Bounded.collect]] — no size probe, and
+  * no unbounded collect without a reason on record.
   */
 class SourceScanSpec extends AnyFunSuite {
 
@@ -44,5 +46,42 @@ class SourceScanSpec extends AnyFunSuite {
       hits(files, """newKeySet""")
     assert(found.isEmpty,
       s"memoized drives go through DriveCost.once / DeltaLog.buildOnce: $found")
+  }
+
+  test("no limit(n + 1).count() size probe: a driver tier gates by its bounded read") {
+    val found = hits(scalaFiles("src/main/scala"),
+      """limit\([^)]*\+\s*1\)\s*\.count\(\)""")
+    assert(found.isEmpty, s"gate and read in one Bounded.collect: $found")
+  }
+
+  /** The graph operators' driver reads that do not go through
+    * Bounded.collect, matched by line text, each with why its size is
+    * bounded anyway.
+    */
+  private val graphReadAllowlist = Seq(
+    "best0.collect()" ->
+      "incrementalBfs relaxation entry points: affected keys only, read under affectedN <= cap",
+    ".agg((min(col(\"du\")) + 1).as(\"nd\")).collect()" ->
+      "incrementalBfs relaxation candidates: affected keys only, read under affectedN <= cap",
+    ".as[(Long, Long, Long, Long, Long)].collect().head" ->
+      "curation funnel: a one-row crossJoin of two global aggregates")
+
+  test("no raw driver collect in the graph operators outside Bounded.collect") {
+    val files = Seq("CorpusOps.scala", "PageRank.scala")
+      .map(f => Paths.get("src/main/scala/graft/ops", f))
+    val reads = files.flatMap { f =>
+      Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if """\.collect\(\)|collectAsList|toLocalIterator""".r
+            .findFirstIn(line).isDefined => (s"$f:${i + 1}", line)
+      }
+    }
+    val unlisted = reads.filterNot { case (_, line) =>
+      graphReadAllowlist.exists { case (text, _) => line.contains(text) }
+    }
+    assert(unlisted.isEmpty,
+      s"read through Bounded.collect, or allowlist with a reason: ${unlisted.map(_._1)}")
+    val stale = graphReadAllowlist.map(_._1)
+      .filterNot(text => reads.exists(_._2.contains(text)))
+    assert(stale.isEmpty, s"allowlist entries that match no read: $stale")
   }
 }
