@@ -1,7 +1,8 @@
 package graft
 
 import graft.sinks.EsSink
-import graft.streaming.PipelineWatcher
+import graft.streaming.{PipelineRegistry, PipelineWatcher,
+  SearchServingPipeline, ServedPipeline}
 import org.apache.spark.sql.SparkSession
 
 import java.nio.file.{Files, Paths}
@@ -81,14 +82,6 @@ object Serve {
     }
   }
 
-  /** One-shot REPLAY verb (the quarantine lifecycle's CLI half): parse
-    * `replay <expect|drift> <deadLetterDir> <pipeline> <db> <table>
-    * <sourceDir> <tsMs> [batchIds,csv]` and re-inject the pipeline's
-    * dead letters into the feed — a RUNNING Serve process drains them
-    * on its next trigger; a stopped one on its next boot. Split out of
-    * main so tests drive the identical arg contract without a session
-    * boot. Returns the number of rows re-injected.
-    */
   /** Shared arg validators of the two replay verbs — one copy, so a
     * contract fix cannot silently miss the other verb. Both fail as
     * usage text BEFORE the SparkSession boots.
@@ -112,6 +105,14 @@ object Serve {
       s.toLong
     }.toSeq
 
+  /** One-shot REPLAY verb (the quarantine lifecycle's CLI half): parse
+    * `replay <expect|drift> <deadLetterDir> <pipeline> <db> <table>
+    * <sourceDir> <tsMs> [batchIds,csv]` and re-inject the pipeline's
+    * dead letters into the feed — a RUNNING Serve process drains them
+    * on its next trigger; a stopped one on its next boot. Split out of
+    * main so tests drive the identical arg contract without a session
+    * boot. Returns the number of rows re-injected.
+    */
   def runReplay(spark: SparkSession, args: Seq[String]): Long = {
     require(args.length >= 7,
       "usage: Serve replay <expect|drift> <deadLetterDir> <pipeline> " +
@@ -133,18 +134,6 @@ object Serve {
     }
   }
 
-  /** One-shot keyed REPLAY verb for the non-LWW kinds: parse
-    * `replay-keys <view|ann|dedup> <confDir> <name> <workDir> <db>
-    * <sourceDir> <tsMs> [batchIds,csv]`, resolve the named conf (the
-    * registration unit — replay must run through the FIXED conf, so the
-    * verb reads it rather than trusting caller-supplied shape args) and
-    * re-drive its dead letters by originating key
-    * ([[graft.streaming.PipelineMetrics.replayKeyedExpectDeadLetters]]).
-    * `workDir` is the pipeline's work root (the runner derives it as
-    * `<workRoot>/ckpt/<conf-basename>` — [[PipelineWatcher]]'s layout).
-    * The search kind is deliberately absent: an additive store's
-    * enforcement-policy change rebuilds the store (frozen verdicts).
-    */
   /** Resolve exactly ONE registration unit by (kind, name) — shared by
     * the repair verbs: the registry tolerates two files (mis)sharing a
     * name, but a repair must not, because picking whichever file lists
@@ -152,12 +141,14 @@ object Serve {
     * dir (re-injecting wrong-shaped rows, retiring a foreign
     * quarantine, truncating a foreign store).
     */
-  private def resolveOne[A](verb: String, kind: String, confDir: String,
-      name: String, entries: Seq[A], nameOf: A => String): A = {
-    val hit = entries.filter(e => nameOf(e) == name)
+  private def resolveOne(verb: String, kind: String, confDir: String,
+      name: String): ServedPipeline = {
+    val entries = PipelineRegistry.load(confDir).map(_.pipeline)
+      .filter(_.kind == kind)
+    val hit = entries.filter(_.name == name)
     require(hit.nonEmpty,
       s"Serve $verb: no $kind conf named '$name' in $confDir " +
-        s"(have: ${entries.map(nameOf).mkString(", ")})")
+        s"(have: ${entries.map(_.name).mkString(", ")})")
     require(hit.size == 1,
       s"Serve $verb: ${hit.size} $kind confs in $confDir share " +
         s"the name '$name' — the verb must resolve ONE registration " +
@@ -209,10 +200,8 @@ object Serve {
     val online = extras.contains("--online")
     kind match {
       case "search" =>
-        val p = resolveOne("rebuild", kind, confDir, name,
-          graft.streaming.PipelineRegistry.loadSearch(confDir),
-          (_: graft.streaming.PipelineRegistry.SearchEntry).pipeline.name)
-          .pipeline
+        val p = resolveOne("rebuild", kind, confDir, name)
+          .asInstanceOf[SearchServingPipeline]
         if (online) p.rebuildStoreOnline(spark, sourceDir, workDir)
         else p.rebuildStore(spark, sourceDir, workDir)
       case other => throw new IllegalArgumentException(
@@ -223,69 +212,65 @@ object Serve {
     }
   }
 
+  /** One-shot keyed REPLAY verb for the derived-row kinds: parse
+    * `replay-keys <kind> <confDir> <name> <workDir> <db> <sourceDir>
+    * <tsMs> [batchIds,csv]`, resolve the named conf (the registration
+    * unit — replay must run through the FIXED conf, so the verb reads
+    * it rather than trusting caller-supplied shape args) and re-drive
+    * its dead letters by originating key
+    * ([[ServedPipeline.replayExpectDeadLetters]]). `workDir` is the
+    * pipeline's work root (the runner derives it as
+    * `<workRoot>/ckpt/<conf-basename>` — [[PipelineWatcher]]'s layout).
+    * The kind table says which kinds refuse and why: lww dead letters
+    * are wire (`Serve replay`), and an additive search store's
+    * enforcement-policy change rebuilds the store (frozen verdicts).
+    */
   def runReplayKeys(spark: SparkSession, args: Seq[String]): Long = {
     require(args.length >= 7,
-      "usage: Serve replay-keys <view|ann|dedup> <confDir> <name> " +
+      s"usage: Serve replay-keys <$keyedKinds> <confDir> <name> " +
         "<workDir> <db> <sourceDir> <tsMs> [batchIds,csv]")
     val Seq(kind, confDir, name, workDir, db, sourceDir, tsMsArg) =
       args.take(7)
     val tsMs = parseTsMs("replay-keys", tsMsArg)
     val batchIds = parseBatchIds("replay-keys", args)
-    def resolve[A](entries: Seq[A], nameOf: A => String): A =
-      resolveOne("replay-keys", kind, confDir, name, entries, nameOf)
+    PipelineRegistry.keyedReplayRefusal(kind).foreach(why =>
+      throw new IllegalArgumentException(s"Serve replay-keys: $why"))
+    val p = resolveOne("replay-keys", kind, confDir, name)
     // the verb resolves the conf precisely so replay runs through the
     // FIXED registration unit — that must include the db: events
     // published under a db outside the conf's subscription would be
-    // routed away while the dead letters still retire (silent loss)
-    def checkDb(dbs: Set[String]): Unit =
-      require(dbs.contains(db),
-        s"Serve replay-keys: db '$db' is not in conf '$name''s databases " +
-          s"${dbs.mkString("{", ", ", "}")} — the re-injected events would " +
-          "be routed away and the dead letters still retired")
-    import graft.streaming.PipelineRegistry
-    kind match {
-      case "view" =>
-        val p = resolve(PipelineRegistry.loadViews(confDir),
-          (_: PipelineRegistry.ViewEntry).pipeline.name).pipeline
-        checkDb(p.databases)
-        p.replayExpectDeadLetters(spark, workDir, sourceDir, db, tsMs,
-          batchIds)
-      case "ann" =>
-        val p = resolve(PipelineRegistry.loadAnn(confDir),
-          (_: PipelineRegistry.AnnEntry).pipeline.name).pipeline
-        checkDb(p.databases)
-        p.replayExpectDeadLetters(spark, workDir, sourceDir, db, tsMs,
-          batchIds)
-      case "dedup" =>
-        val p = resolve(PipelineRegistry.loadDedup(confDir),
-          (_: PipelineRegistry.DedupEntry).pipeline.name).pipeline
-        checkDb(p.databases)
-        p.replayExpectDeadLetters(spark, workDir, sourceDir, db, tsMs,
-          batchIds)
-      case "search" => throw new IllegalArgumentException(
-        "Serve replay-keys: the search kind cannot feed-replay — its " +
-          "additive store's drop verdicts are frozen for the store's " +
-          "lifetime, so an enforcement-policy change rebuilds the store " +
-          "under the evolved conf: Serve rebuild search <confDir> " +
-          "<name> <workDir> <sourceDir>")
-      case other => throw new IllegalArgumentException(
-        s"Serve replay-keys: unknown kind '$other' (expected view, ann " +
-          "or dedup)")
-    }
+    // routed away while the dead letters still retire (silent loss).
+    // An empty set subscribes to every db.
+    require(p.databases.isEmpty || p.databases.contains(db),
+      s"Serve replay-keys: db '$db' is not in conf '$name''s databases " +
+        s"${p.databases.mkString("{", ", ", "}")} — the re-injected events " +
+        "would be routed away and the dead letters still retired")
+    p.replayExpectDeadLetters(spark, workDir, sourceDir, db, tsMs, batchIds)
+  }
+
+  private def keyedKinds: String = PipelineRegistry.keyedReplayKinds.mkString("|")
+
+  /** The session every Serve mode runs in: `SPARK_GRAFT_CPUS` threads
+    * (default 4), UTC, no NTZ inference. The server adds RocksDB state.
+    */
+  private def session(extra: (String, String)*): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val sp = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      .config(extra.toMap)
+      .getOrCreate()
+    sp.sparkContext.setLogLevel("WARN")
+    sp
   }
 
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("replay") ||
         args.headOption.contains("replay-keys") ||
         args.headOption.contains("rebuild")) {
-      val cpus0 = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-      val sp = SparkSession.builder()
-        .master(s"local[$cpus0]")
-        .config("spark.sql.shuffle.partitions", cpus0)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        .getOrCreate()
-      sp.sparkContext.setLogLevel("WARN")
+      val sp = session()
       args.head match {
         case "replay" =>
           val n = runReplay(sp, args.drop(1).toSeq)
@@ -305,7 +290,7 @@ object Serve {
       "usage: Serve <confDir> <sourceDir> <workRoot> <esUrl> [esUser esPass] [pollMs]" +
         "\n   or: Serve replay <expect|drift> <deadLetterDir> <pipeline> " +
         "<db> <table> <sourceDir> <tsMs> [batchIds,csv]" +
-        "\n   or: Serve replay-keys <view|ann|dedup> <confDir> <name> " +
+        s"\n   or: Serve replay-keys <$keyedKinds> <confDir> <name> " +
         "<workDir> <db> <sourceDir> <tsMs> [batchIds,csv]" +
         "\n   or: Serve rebuild search <confDir> <name> <workDir> " +
         "<sourceDir> [--online]")
@@ -316,16 +301,8 @@ object Serve {
       if (args.length >= 7) args(6).toLong
       else if (args.length == 5) args(4).toLong // url + pollMs, no auth
       else 500L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session("spark.sql.streaming.stateStore.providerClass" ->
+      graft.streaming.CdcPipeline.RocksDbProvider)
     val transport: EsSink.Transport =
       if (esUrl.startsWith("file:"))
         new EsSink.FileDocStore(esUrl.stripPrefix("file:"))

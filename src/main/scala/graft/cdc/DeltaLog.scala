@@ -276,12 +276,6 @@ object DeltaLog {
   def ordersDeltas(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(ordersLogDir(spark, dir))
 
-  /** LWW delta relation of the `customer` feed (the join view's
-    * dimension side).
-    */
-  def customerDeltas(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(customerLogDir(spark, dir))
-
   /** Directory of the materialized orders delta log (ensures it is
     * written) — consumable as a batch relation OR a file stream, which
     * is how downstream views subscribe to the log in production.

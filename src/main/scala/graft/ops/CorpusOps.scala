@@ -1679,24 +1679,6 @@ object CorpusOps {
     (nAllowed, probes, nTot == 0L || nHit.toDouble >= recallFloor * nTot)
   }
 
-  /** The EXACT filtered fusion — [[hybridFromStoresAnnFiltered]]'s
-    * certificate companion ([[hybridFromStores]] over the allowed
-    * slice): what the fused-recall floor compares against.
-    */
-  def hybridFromStoresFiltered(postings: DataFrame, docLens: DataFrame,
-      vecStore: DataFrame, allowed: DataFrame, queryTokens: Seq[String],
-      queryVecId: Long, listK: Int = 100, topK: Int = 20,
-      rrfK: Int = 60): DataFrame = {
-    val allow = allowed.select(col("vec_id")).distinct()
-    hybridFromStores(
-      postings.join(allow.select(col("vec_id").as("doc_id")),
-        Seq("doc_id"), "left_semi"),
-      docLens.join(allow.select(col("vec_id").as("doc_id")),
-        Seq("doc_id"), "left_semi"),
-      vecStore.join(allow, Seq("vec_id"), "left_semi"),
-      queryTokens, queryVecId, listK, topK, rrfK)
-  }
-
   /** Integer-keyed rank assignment of a scored list's top `listK` (the
     * q42 rank-key rule; ties to the smaller doc id): TakeOrderedAndProject
     * cut, ranks by position in the one collected listK-row array — no

@@ -21,8 +21,4 @@ object Dedup {
       .agg(min_by(struct(cols: _*), ord).as("_row"))
       .select(col("_row.*"))
   }
-
-  /** Set-semantics dedup (Spark built-in, hash aggregate). */
-  def distinctBy(df: DataFrame, key: Seq[String]): DataFrame =
-    df.dropDuplicates(key)
 }

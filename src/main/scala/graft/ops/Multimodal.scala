@@ -477,22 +477,6 @@ object Multimodal {
     out.array()
   }
 
-  /** Per-partition decimation over (doc_id, payload) WAV blobs.
-    * Non-WAV/corrupt inputs are DROPPED (resampleWav returns null for
-    * them) rather than emitted as null payloads that would NPE any
-    * downstream reader.
-    */
-  def resampleWavPayloads(spark: SparkSession, withPayload: DataFrame,
-      factor: Int): DataFrame = {
-    import spark.implicits._
-    withPayload.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, bytes) =>
-        Option(resampleWav(bytes, factor)).map((id, _))
-      })
-      .toDF("doc_id", "payload")
-  }
-
   /** One frame-aligned analysis window of a WAV's PCM stream. */
   case class AudioWindow(doc_id: Long, win_idx: Long, n_values: Long,
       sum_abs: Long, peak_abs: Int)

@@ -64,16 +64,4 @@ object Shingles {
       .filter(col("jac") >= threshold)
       .select(col("ida").as("doc_id_a"), col("idb").as("doc_id_b"), col("jac"))
   }
-
-  /** Exact Jaccard restricted to a given candidate pair set (the
-    * verify stage after LSH banding). `candidates`: (doc_id_a, doc_id_b).
-    */
-  def jaccardOnCandidates(shingles: DataFrame, candidates: DataFrame,
-      threshold: Double): DataFrame = {
-    val docs = candidates.select(col("doc_id_a").as("id"))
-      .union(candidates.select(col("doc_id_b").as("id"))).distinct()
-    val sub = shingles.join(docs, Seq("id"), "left_semi")
-    jaccardPairs(sub, threshold)
-      .join(candidates, Seq("doc_id_a", "doc_id_b"), "left_semi")
-  }
 }

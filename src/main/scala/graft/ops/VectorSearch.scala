@@ -26,13 +26,6 @@ object VectorSearch {
     */
   def dot(a: Column, b: Column): Column = graft.functions.VecFunctions.dotF(a, b)
 
-  /** The HOF formulation (kept as the readable reference / for non-float
-    * arrays): numerically identical to `dot`.
-    */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
-
   def norm(v: Column): Column = sqrt(dot(v, v))
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
@@ -245,22 +238,6 @@ object VectorSearch {
       .withColumn("cos_sim", dot(col("ea"), col("eb")) / (col("na") * col("nb")))
       .filter(col("cos_sim") >= threshold)
       .select(col("vec_id_a"), col("vec_id_b"), col("cos_sim"))
-  }
-
-  /** Deterministic random hyperplanes: numPlanes x dim, seeded. Float so
-    * the codegen'd float dot product applies.
-    */
-  private def planes(numPlanes: Int, dim: Int, seed: Long): Array[Array[Float]] = {
-    val rnd = new scala.util.Random(seed)
-    Array.fill(numPlanes)(Array.fill(dim)(rnd.nextGaussian().toFloat))
-  }
-
-  /** Sign-bucket id (0 .. 2^numPlanes-1) for an embedding column. */
-  def lshBucket(emb: Column, numPlanes: Int, dim: Int, seed: Long = 7L): Column = {
-    val ps = planes(numPlanes, dim, seed)
-    ps.toSeq.zipWithIndex.map { case (p, i) =>
-      when(dot(emb, typedlit(p.toSeq)) > 0, lit(1 << i)).otherwise(lit(0))
-    }.reduce((a: Column, b: Column) => a.bitwiseOR(b))
   }
 
   /** Nearest-by-cosine cell id against literal centroids, via the fused
@@ -494,31 +471,6 @@ object VectorSearch {
         Seq("n_vec_id"))
       .withColumn("cos_sim", dot(col("q_emb"), col("n_emb")) / (col("q_norm") * col("n_norm")))
       .select(col("q_vec_id"), col("n_vec_id"), col("cos_sim"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-  }
-
-  /** ANN top-k: hyperplane-bucketed corpus, multi-probe (Hamming-1)
-    * queries, exact ranking of candidates. Same output shape as
-    * knnExact; recall < 1 by construction.
-    */
-  def knnAnn(queries: DataFrame, corpus: DataFrame, k: Int,
-      numPlanes: Int = 8, dim: Int = 64): DataFrame = {
-    val c = corpus.select(col("vec_id").as("n_vec_id"), col("embedding").as("n_emb"),
-      norm(col("embedding")).as("n_norm"),
-      lshBucket(col("embedding"), numPlanes, dim).as("bucket"))
-    val probes: Column = array((lit(0) +:
-      (0 until numPlanes).map(i => lit(1 << i))): _*)
-    val q = queries.select(col("vec_id").as("q_vec_id"), col("embedding").as("q_emb"),
-      norm(col("embedding")).as("q_norm"),
-      lshBucket(col("embedding"), numPlanes, dim).as("qb"))
-      .withColumn("bucket", explode(transform(probes, m => col("qb").bitwiseXOR(m))))
-    val w = Window.partitionBy(col("q_vec_id"))
-      .orderBy(col("cos_sim").desc, col("n_vec_id"))
-    broadcast(q).join(c, Seq("bucket"))
-      .filter(col("q_vec_id") =!= col("n_vec_id"))
-      .withColumn("cos_sim", dot(col("q_emb"), col("n_emb")) / (col("q_norm") * col("n_norm")))
-      .select(col("q_vec_id"), col("n_vec_id"), col("cos_sim")).distinct()
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
   }

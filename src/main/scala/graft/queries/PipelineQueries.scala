@@ -2535,7 +2535,7 @@ object PipelineQueries {
             .replace("\n", "")))
       val entries = PipelineRegistry.load(confDir.toString)
       val raw = rawWire(spark, feedDir)
-      val p = entries.head.pipeline
+      val p = entries.head.pipeline.asInstanceOf[graft.streaming.CdcPipeline]
       p.applyBatch(p.changeRows(raw),
         EsSink.Config("http://graft-local/lww_orders_q156", "graft",
           "graft", "o_orderkey"), blackhole, 0L)

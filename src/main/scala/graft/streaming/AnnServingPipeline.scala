@@ -105,7 +105,9 @@ final case class AnnServingPipeline(
     expectations: Seq[graft.ops.Profile.Rule] = Nil,
     driftCheck: Boolean = false,
     driftPolicy: Option[CdcPipeline.DriftPolicy] = None,
-    deadLetterRetentionMs: Long = 0L) {
+    deadLetterRetentionMs: Long = 0L) extends TableLogPipeline {
+
+  def kind: String = "ann"
 
   graft.ops.Profile.requireEnforceable("ann", name, expectations,
     metrics, deadLetterDir)
@@ -447,7 +449,7 @@ final case class AnnServingPipeline(
     * micro-batch boundary, so the swap itself stays SERIALIZED with
     * batch application (the same in-stream path as the
     * tripped-certificate retrain) — the watcher thread never mutates
-    * the store or the generation pointer. [[PipelineWatcher.pollOnce]]
+    * the store or the generation pointer. The maintenance [[tick]]
     * calls this for every live ann pipeline. Returns true when a
     * retrain was scheduled (marker present after the call).
     */
@@ -577,52 +579,27 @@ final case class AnnServingPipeline(
       .start()
   }
 
-  /** RE-DRIVE expectation-dropped vectors through the fixed conf — an
-    * ann dead letter is a DERIVED posting action (id + advisory cell),
-    * so replay resolves it to the originating vector id, re-injects the
-    * vector's CURRENT raw row from the table log (the LWW fold of the
-    * bronze feed) at the epoch, and the normal path re-assigns under
-    * whatever quantizer generation is then CURRENT, re-judges with the
-    * fixed rules, and key-addressed MERGEs the posting — idempotent
-    * store effects, so convergence holds. Deleted vectors resolve to
-    * nothing and their dead letters retire. See
-    * [[PipelineMetrics.replayKeyedExpectDeadLetters]].
-    */
-  def replayExpectDeadLetters(spark: SparkSession, workRoot: String,
-      feedDir: String, db: String, tsMs: Long,
-      batchIds: Seq[Long] = Nil): Long = {
-    require(deadLetterDir.isDefined,
-      s"ann $name: replay needs the conf-declared deadLetterDir")
-    PipelineMetrics.replayKeyedExpectDeadLetters(spark, deadLetterDir.get,
-      name, "ann", idField,
-      StateLog.latestLiveRows(spark, logDir(workRoot)),
-      db, table, feedDir, tsMs, batchIds)
+  override def tick(spark: SparkSession, workRoot: String): Unit = {
+    scheduleRetrainIfStale(workRoot); ()
   }
 
-  /** Drain the feed's current contents through both stages; incremental
-    * across calls (durable checkpoints — [[ViewPipeline.runOnce]]'s
-    * contract).
+  /** An ann dead letter is a DERIVED posting action (id + advisory
+    * cell): it replays by vector id against the table log, and the
+    * normal path re-assigns under whatever quantizer generation is then
+    * CURRENT.
     */
-  def runOnce(spark: SparkSession, feedDir: String, workRoot: String,
-      esTransport: graft.sinks.EsSink.Transport =
-        new graft.sinks.EsSink.HttpTransport): Unit = {
-    ensureQuantizer(workRoot)
-    driftGate.ingestOnce(spark, feedDir, tableLog(workRoot))
-    indexQuery(spark, workRoot, Trigger.AvailableNow(), esTransport)
-      .awaitTermination()
-  }
+  override protected def keyedReplay: Option[ServedPipeline.KeyedReplay] =
+    Some(ServedPipeline.KeyedReplay(idField, table,
+      (spark, workRoot) => StateLog.latestLiveRows(spark, logDir(workRoot))))
 
-  /** Live deployment: both stages as long-running queries; vector churn
-    * flows to the serving store continuously. Stop the returned queries
-    * to shut down; checkpoints resume either mode.
+  /** Gate + table log, then the posting index/serving stage; gen_0 is
+    * seeded from the ctor quantizer first.
     */
-  def start(spark: SparkSession, feedDir: String, workRoot: String,
-      interval: String = "500 milliseconds",
-      esTransport: graft.sinks.EsSink.Transport =
-        new graft.sinks.EsSink.HttpTransport): Seq[StreamingQuery] = {
-    val t = Trigger.ProcessingTime(interval)
+  protected def stages(spark: SparkSession, feedDir: String,
+      workRoot: String, esTransport: graft.sinks.EsSink.Transport)
+      : Seq[Trigger => StreamingQuery] = {
     ensureQuantizer(workRoot)
-    driftGate.startIngest(spark, feedDir, tableLog(workRoot), t) :+
-      indexQuery(spark, workRoot, t, esTransport)
+    driftGate.stages(spark, feedDir, tableLog(workRoot)) :+
+      ((t: Trigger) => indexQuery(spark, workRoot, t, esTransport))
   }
 }

@@ -35,7 +35,10 @@ final case class CdcPipeline(
     expectations: Seq[graft.ops.Profile.Rule] = Nil,
     driftCheck: Boolean = false,
     driftPolicy: Option[CdcPipeline.DriftPolicy] = None,
-    deadLetterRetentionMs: Long = 0L) {
+    deadLetterRetentionMs: Long = 0L) extends ServedPipeline {
+
+  def kind: String = "lww"
+  def databases: Set[String] = subscription.databases
 
   require(deadLetterRetentionMs == 0L || deadLetterDir.isDefined,
     s"pipeline $name: deadLetterRetentionMs needs a deadLetterDir")
@@ -140,6 +143,20 @@ final case class CdcPipeline(
       .drop("src_db", "src_table")
     startOver(raw, s"cdc_v2_$name", checkpointDir, cfg, transport, trigger)
   }
+
+  /** The registry's single-query stage ([[startDsv2]]) on the runner's
+    * lww trigger. The sink config is the conf's own `"es"` target or the
+    * runner's default url/auth, ALWAYS re-keyed to this conf's declared
+    * idKey: the sink extracts the document id via `cfg.idKey`, so a
+    * process-global idKey would break (or silently mis-key) every conf
+    * whose id column is named differently — the reference passes
+    * url/username/password/idKey PER CALL from each script
+    * (ElasticsearchUtils.java:106-118).
+    */
+  def startLive(spark: SparkSession, feedDir: String, workRoot: String,
+      live: ServedPipeline.Live): Seq[StreamingQuery] =
+    Seq(startDsv2(spark, feedDir, workRoot, live.cfg.copy(idKey = idKey),
+      live.transport, live.lwwTrigger))
 
   // trigger default: AvailableNow drains-and-terminates (batch-drain
   // runners, tests); a long-running server passes ProcessingTime so

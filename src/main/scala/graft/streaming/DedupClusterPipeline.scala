@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 /** STREAMING DEDUP-CLUSTER SERVING — the composition that closes the
   * near-dup index story: a documents CDC feed drives the streaming LSH
@@ -82,7 +82,9 @@ final case class DedupClusterPipeline(
     expectations: Seq[graft.ops.Profile.Rule] = Nil,
     driftCheck: Boolean = false,
     driftPolicy: Option[CdcPipeline.DriftPolicy] = None,
-    deadLetterRetentionMs: Long = 0L) {
+    deadLetterRetentionMs: Long = 0L) extends TableLogPipeline {
+
+  def kind: String = "dedup"
 
   graft.ops.Profile.requireEnforceable("dedup", name, expectations,
     metrics, deadLetterDir)
@@ -472,52 +474,27 @@ final case class DedupClusterPipeline(
       .start()
   }
 
-  /** Drain the feed through all three stages; incremental across calls
-    * (durable checkpoints at every stage — [[ViewPipeline.runOnce]]'s
-    * contract).
+  /** A dedup dead letter is a DERIVED cluster row (doc, cluster,
+    * canonical flag): it replays by doc id against the doc log, and the
+    * normal path re-shingles, re-stitches and re-judges — the
+    * clustering algebra was never wrong (state recorded the withheld
+    * members), only the serving surface re-emits.
     */
-  /** RE-DRIVE expectation-dropped documents through the fixed conf —
-    * a dedup dead letter is a DERIVED cluster row (doc, cluster,
-    * canonical flag), so replay resolves it to the originating doc id,
-    * re-injects the doc's CURRENT raw row from the doc log (the LWW
-    * fold of the bronze feed) at the epoch, and lets the normal path
-    * re-shingle, re-stitch and re-judge — the clustering algebra was
-    * never wrong (state recorded the withheld members), only the
-    * serving surface re-emits. Deleted docs resolve to nothing and
-    * their dead letters retire. See
-    * [[PipelineMetrics.replayKeyedExpectDeadLetters]].
+  override protected def keyedReplay: Option[ServedPipeline.KeyedReplay] =
+    Some(ServedPipeline.KeyedReplay(idField, table,
+      (spark, workRoot) => StateLog.latestLiveRows(spark, docLogDir(workRoot))))
+
+  /** Gate + doc log, the LSH pair stage, then the cluster/serving
+    * stage; the pair-log dir is seeded first (the cluster stage's file
+    * stream needs it).
     */
-  def replayExpectDeadLetters(spark: SparkSession, workRoot: String,
-      feedDir: String, db: String, tsMs: Long,
-      batchIds: Seq[Long] = Nil): Long = {
-    require(deadLetterDir.isDefined,
-      s"dedup $name: replay needs the conf-declared deadLetterDir")
-    PipelineMetrics.replayKeyedExpectDeadLetters(spark, deadLetterDir.get,
-      name, "dedup", idField,
-      StateLog.latestLiveRows(spark, docLogDir(workRoot)),
-      db, table, feedDir, tsMs, batchIds)
-  }
-
-  def runOnce(spark: SparkSession, feedDir: String, workRoot: String,
-      esTransport: graft.sinks.EsSink.Transport =
-        new graft.sinks.EsSink.HttpTransport): Unit = {
+  protected def stages(spark: SparkSession, feedDir: String,
+      workRoot: String, esTransport: graft.sinks.EsSink.Transport)
+      : Seq[Trigger => StreamingQuery] = {
     Files.createDirectories(Paths.get(pairLogDir(workRoot)))
-    driftGate.ingestOnce(spark, feedDir, docLog(workRoot))
-    pairLogQuery(spark, workRoot, Trigger.AvailableNow()).awaitTermination()
-    clusterQuery(spark, workRoot, Trigger.AvailableNow(), esTransport)
-      .awaitTermination()
-  }
-
-  /** Live deployment: all three stages on a processing-time trigger. */
-  def start(spark: SparkSession, feedDir: String, workRoot: String,
-      interval: String = "500 milliseconds",
-      esTransport: graft.sinks.EsSink.Transport =
-        new graft.sinks.EsSink.HttpTransport): Seq[StreamingQuery] = {
-    val t = Trigger.ProcessingTime(interval)
-    Files.createDirectories(Paths.get(pairLogDir(workRoot)))
-    driftGate.startIngest(spark, feedDir, docLog(workRoot), t) ++
-      Seq(pairLogQuery(spark, workRoot, t),
-        clusterQuery(spark, workRoot, t, esTransport))
+    driftGate.stages(spark, feedDir, docLog(workRoot)) ++ Seq(
+      (t: Trigger) => pairLogQuery(spark, workRoot, t),
+      (t: Trigger) => clusterQuery(spark, workRoot, t, esTransport))
   }
 
   /** The served clusters read back (JDBC targets — tests / operational

@@ -38,9 +38,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * stream ([[graft.cdc.DeltaLog.deltaStreamFromJudged]]) instead of the
   * raw feed.
   *
-  * The gate also OWNS that table-log stage ([[ingestOnce]] /
-  * [[startIngest]]) — the one feed → gate → LWW table-log ingest every
-  * delta-log kind runs: the reference's per-subscriber named tailer
+  * The gate also OWNS that table-log stage ([[stages]]) — the one
+  * feed → gate → LWW table-log ingest every delta-log kind runs
+  * ([[TableLogPipeline]]): the reference's per-subscriber named tailer
   * over one durable queue (SURVEY R10/R11), as one checkpointed
   * incremental query per pipeline over the durable feed.
   *
@@ -185,31 +185,6 @@ final case class DriftGate(
         PipelineMetrics.writeKindMarker(spark, dir, "_drift", safe, kind)
     }
 
-  /** Start the gate as a query on `trigger` (none when no drift is
-    * declared). Seeds the judged log dir first (only when rerouting — a
-    * file stream needs it to exist).
-    */
-  private def startIfEnabled(spark: SparkSession, feedDir: String,
-      judgedBase: String, checkpointDir: String,
-      trigger: Trigger): Seq[StreamingQuery] =
-    if (!enabled) Nil
-    else {
-      backfillKindMarker(spark)
-      if (reroutes)
-        java.nio.file.Files.createDirectories(
-          java.nio.file.Paths.get(s"$judgedBase/log"))
-      Seq(query(spark, feedDir, judgedBase, checkpointDir, trigger))
-    }
-
-  /** Drain the gate over the feed's current contents (no-op when the
-    * conf declares no drift): blocks until the feed is judged, so the
-    * log stage that runs next reads a complete judged log.
-    */
-  def drainOnce(spark: SparkSession, feedDir: String, judgedBase: String,
-      checkpointDir: String): Unit =
-    startIfEnabled(spark, feedDir, judgedBase, checkpointDir,
-      Trigger.AvailableNow()).foreach(_.awaitTermination())
-
   /** The TABLE-LOG query: this gate's source — the judged log when it
     * [[reroutes]], else the raw feed routed to `table` — → routed/
     * filtered keyed events → per-key LWW deltas
@@ -239,27 +214,27 @@ final case class DriftGate(
       .start()
   }
 
-  /** Ingest the feed's current contents into the table log: the gate
-    * drains first (when declared), then the log stage runs to
-    * completion over its source. Incremental across calls (durable
-    * checkpoints at both stages). Seeds the log dir, so a downstream
-    * file stream over it can start even when the table has no events.
+  /** The feed → gate → table-log stages, in drain order: the gate
+    * (when declared) judges the feed, then the log stage folds its
+    * source into the table log. Seeds the log dir — so a downstream
+    * file stream over it can start even when the table has no events —
+    * and, with a gate, claims its dead-letter subtree and seeds the
+    * judged log dir (a file stream needs it to exist).
     */
-  def ingestOnce(spark: SparkSession, feedDir: String,
-      l: DriftGate.TableLog): Unit = {
+  def stages(spark: SparkSession, feedDir: String,
+      l: DriftGate.TableLog): Seq[Trigger => StreamingQuery] = {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(l.logDir))
-    drainOnce(spark, feedDir, l.judgedBase, l.gateCheckpoint)
-    logQuery(spark, feedDir, l, Trigger.AvailableNow()).awaitTermination()
-  }
-
-  /** Live deployment of [[ingestOnce]]: the gate (when declared) and the
-    * log stage as long-running queries on `trigger`.
-    */
-  def startIngest(spark: SparkSession, feedDir: String,
-      l: DriftGate.TableLog, trigger: Trigger): Seq[StreamingQuery] = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(l.logDir))
-    startIfEnabled(spark, feedDir, l.judgedBase, l.gateCheckpoint,
-      trigger) :+ logQuery(spark, feedDir, l, trigger)
+    val gate =
+      if (!enabled) Nil
+      else {
+        backfillKindMarker(spark)
+        if (reroutes)
+          java.nio.file.Files.createDirectories(
+            java.nio.file.Paths.get(s"${l.judgedBase}/log"))
+        Seq((t: Trigger) =>
+          query(spark, feedDir, l.judgedBase, l.gateCheckpoint, t))
+      }
+    gate :+ ((t: Trigger) => logQuery(spark, feedDir, l, t))
   }
 }
 

@@ -1,55 +1,40 @@
 package graft.streaming
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.cdc.Subscription
 import graft.sinks.EsSink
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 import java.io.File
+import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 
 /** Config-driven pipeline registration — the reference's script
   * discovery (S1: ScriptContainer.java:35-58 lists a scripts dir and
   * registers each one; initCDC() declares db/table subscriptions)
   * re-expressed as data instead of code: one JSON file per pipeline in
-  * a conf directory.
-  *
-  * Conf format (one object per `*.json` file):
-  * {{{
-  *   { "name": "orders",
-  *     "databases": ["shop"], "tables": ["orders"],
-  *     "idKey": "o_orderkey",
-  *     "schema": "o_orderkey BIGINT, o_orderstatus STRING" }
-  * }}}
-  * plus an optional per-conf `"es": { "url", "username", "password" }`
-  * serving target (see [[effectiveCfg]] — without it the runner's
-  * default url/auth apply, re-keyed to the conf's idKey).
+  * a conf directory, its `"kind"` (default `lww`) picking the parser
+  * from one kind table. Every kind builds a [[ServedPipeline]], so the
+  * lifecycle below is kind-blind.
   *
   * Hot reload (S2) is deliberately restart-based, per SURVEY §2.2 S2:
   * streaming queries cannot swap their plan mid-flight, so the faithful
-  * analog is [[changedSince]] → stop the affected query → [[load]] →
-  * start again from its checkpoint (offsets preserve the cursor; the
+  * analog is [[changedSince]] → stop the affected queries → [[reload]]
+  * → start again from the checkpoint (offsets preserve the cursor; the
   * 500 ms debounce machinery of WatchFile.java dissolves into whatever
   * schedules the restart).
   */
 object PipelineRegistry {
 
-  final case class Entry(pipeline: CdcPipeline, file: String, mtime: Long,
-      target: Option[EsSink.Config] = None)
-
-  /** The sink config an lww entry actually serves through. The
-    * reference passes url/username/password/idKey PER CALL from each
-    * script (ElasticsearchUtils.java:106-118) — targets are per
-    * pipeline, never process-global. A conf may declare its own
-    * `"es"` target; one that does not inherits the runner's default
-    * url/auth but ALWAYS serves under its own declared idKey: the sink
-    * extracts the document id via `cfg.idKey`, so a process-global
-    * idKey would break (or silently mis-key) every conf whose id
-    * column is named differently.
+  /** One registered conf: its pipeline (any kind), the conf file it was
+    * read from (the registration and reload unit), the file's mtime at
+    * that read, and — lww confs only — the conf-declared `"es"` serving
+    * target (without one the runner's default url/auth apply, re-keyed
+    * to the conf's idKey by [[CdcPipeline.startLive]]).
     */
-  def effectiveCfg(e: Entry, default: EsSink.Config): EsSink.Config =
-    e.target.getOrElse(default.copy(idKey = e.pipeline.idKey))
+  final case class Entry(pipeline: ServedPipeline, file: String, mtime: Long,
+      target: Option[EsSink.Config] = None)
 
   /** Checkpoint directory key for a registered conf: derived from the
     * CONF FILE (the registration unit), not the pipeline name — two
@@ -67,65 +52,48 @@ object PipelineRegistry {
     Option(new File(dir).listFiles()).getOrElse(Array.empty[File])
       .filter(f => f.isFile && f.getName.endsWith(".json")).sortBy(_.getName).toSeq
 
+  /** The kind table: one row per conf kind — its parser and, where the
+    * kind's expectation dead letters cannot be re-driven by key
+    * ([[ServedPipeline.replayExpectDeadLetters]]), why not. A sixth
+    * kind is one row here plus its [[ServedPipeline]] class.
+    */
+  private final case class Kind(parse: Conf => Entry,
+      keyedReplayRefusal: Option[String] = None)
+
+  private val Kinds: ListMap[String, Kind] = ListMap(
+    "lww" -> Kind(lww, Some("the lww kind's dead letters are wire-shaped " +
+      "— re-inject them with Serve replay <expect|drift>")),
+    "view" -> Kind(view),
+    "ann" -> Kind(ann),
+    "dedup" -> Kind(dedup),
+    "search" -> Kind(search, Some("the search kind cannot feed-replay — " +
+      "its additive store's drop verdicts are frozen for the store's " +
+      "lifetime, so an enforcement-policy change rebuilds the store " +
+      "under the evolved conf: Serve rebuild search <confDir> <name> " +
+      "<workDir> <sourceDir>")))
+
   /** Recognized pipeline kinds. Anything else fails fast WITH the file
     * name (register-at-boot contract, S3): a typo'd `"kind": "veiw"`
     * must not make a production pipeline silently vanish from every
     * lifecycle.
     */
-  private val Kinds = Set("lww", "view", "ann", "dedup", "search")
-
-  private def kindOf(f: File,
-      node: com.fasterxml.jackson.databind.JsonNode): String = {
+  private def kindOf(f: File, node: JsonNode): String = {
     val k = if (node.hasNonNull("kind")) node.get("kind").asText() else "lww"
-    require(Kinds(k),
-      s"${f.getName}: unrecognized pipeline kind '$k' (expected one of ${Kinds.mkString(", ")})")
+    require(Kinds.contains(k),
+      s"${f.getName}: unrecognized pipeline kind '$k' (expected one of ${Kinds.keys.mkString(", ")})")
     k
   }
 
-  /** The conf file's CURRENT kind, read leniently: None when the file
-    * is gone, unparseable, or carries an unrecognized kind. The
-    * lifecycle scan path runs on this — a malformed conf dropped into
-    * the dir mid-run must quarantine itself, not abort the whole
-    * watcher cycle (boot keeps the fail-fast [[kindOf]]). Memoized by
-    * (path → (mtime, length)): one pollOnce asks "what kind is this
-    * file" ~2x per registered kind, and re-parsing identical JSON ten
-    * times per 500 ms tick is pure waste. Keying on length TOO narrows
-    * the same-mtime staleness window — a file rewritten within the
-    * filesystem's mtime granularity usually changes size as well.
-    * Entries for files deleted from a scanned dir are evicted during
-    * [[confFilesOfKind]] scans, so a long-lived watcher process does
-    * not accumulate dead paths forever.
+  /** The kinds whose expectation dead letters replay by key. */
+  def keyedReplayKinds: Seq[String] =
+    Kinds.collect { case (k, v) if v.keyedReplayRefusal.isEmpty => k }.toSeq
+
+  /** Why `kind` refuses the keyed replay verb, if it does (an unknown
+    * kind included).
     */
-  private val kindCache =
-    new java.util.concurrent.ConcurrentHashMap[String, ((Long, Long), Option[String])]()
-
-  private def lenientKindOf(f: File): Option[String] = {
-    val stamp = (f.lastModified(), f.length())
-    val cached = kindCache.get(f.getAbsolutePath)
-    if (cached != null && cached._1 == stamp) cached._2
-    else {
-      val k = scala.util.Try {
-        val node = new ObjectMapper().readTree(f)
-        if (node.hasNonNull("kind")) node.get("kind").asText() else "lww"
-      }.toOption.filter(Kinds)
-      kindCache.put(f.getAbsolutePath, (stamp, k))
-      k
-    }
-  }
-
-  /** Drop cache entries for files under `dir` that no longer exist —
-    * called from every kind-scoped scan, which already holds the dir's
-    * live listing. Test-visible via [[kindCacheKeys]].
-    */
-  private def evictDeleted(dir: String, live: Set[String]): Unit = {
-    val prefix = new File(dir).getAbsolutePath + File.separator
-    kindCache.keySet().removeIf(p => p.startsWith(prefix) && !live(p))
-    ()
-  }
-
-  /** Cached conf paths (lifecycle-leak regression tests). */
-  private[graft] def kindCacheKeys: Set[String] =
-    kindCache.keySet().asScala.toSet
+  def keyedReplayRefusal(kind: String): Option[String] =
+    Kinds.get(kind).fold(Option(s"unknown kind '$kind' (expected " +
+      s"${keyedReplayKinds.mkString(", ")})"))(_.keyedReplayRefusal)
 
   /** Parse a conf's optional `"transform"` node into an
     * [[ExprTransform]] — the R12 data-declared per-event reshape:
@@ -138,8 +106,7 @@ object PipelineRegistry {
     * typo'd conf fails HERE — at registration — not in the first
     * micro-batch (S3).
     */
-  private def parseTransform(f: File,
-      node: com.fasterxml.jackson.databind.JsonNode): Option[ExprTransform] =
+  private def parseTransform(f: File, node: JsonNode): Option[ExprTransform] =
     if (!node.hasNonNull("transform")) None
     else {
       val t = node.get("transform")
@@ -173,8 +140,7 @@ object PipelineRegistry {
     * per-batch write failures at runtime only log (monitoring must not
     * take down the monitored — see [[PipelineMetrics.record]]).
     */
-  private def parseMetrics(f: File,
-      node: com.fasterxml.jackson.databind.JsonNode): Option[PipelineMetrics.Target] =
+  private def parseMetrics(f: File, node: JsonNode): Option[PipelineMetrics.Target] =
     if (!node.hasNonNull("metrics")) None
     else {
       val m = node.get("metrics")
@@ -222,7 +188,7 @@ object PipelineRegistry {
     * pipeline when violations exceed budget.
     */
   private def parseExpectations(f: File,
-      node: com.fasterxml.jackson.databind.JsonNode,
+      node: JsonNode,
       schema: org.apache.spark.sql.types.StructType): Seq[graft.ops.Profile.Rule] =
     if (!node.hasNonNull("expectations")) Nil
     else node.get("expectations").elements().asScala.map { e =>
@@ -294,7 +260,7 @@ object PipelineRegistry {
     * is ensured at load (register-at-boot, S3).
     */
   private def parseExpectationsWithStore(f: File,
-      node: com.fasterxml.jackson.databind.JsonNode,
+      node: JsonNode,
       schema: org.apache.spark.sql.types.StructType,
       metricsTarget: Option[PipelineMetrics.Target],
       deadLetterDir: Option[String] = None): Seq[graft.ops.Profile.Rule] = {
@@ -325,7 +291,7 @@ object PipelineRegistry {
     * `_drift` verdict table is ensured at load.
     */
   private def parseDrift(f: File,
-      node: com.fasterxml.jackson.databind.JsonNode,
+      node: JsonNode,
       dlDir: Option[String],
       metricsTarget: Option[PipelineMetrics.Target])
       : (Boolean, Option[CdcPipeline.DriftPolicy]) = {
@@ -348,7 +314,7 @@ object PipelineRegistry {
     * key in error messages.
     */
   private def parseDriftPolicy(f: File, owner: String,
-      p: com.fasterxml.jackson.databind.JsonNode,
+      p: JsonNode,
       dlDir: Option[String]): CdcPipeline.DriftPolicy = {
     val action =
       if (!p.hasNonNull("action")) graft.ops.Profile.Warn
@@ -370,42 +336,28 @@ object PipelineRegistry {
       action = action)
   }
 
-  /** Conf-declared dead-letter retention, shared by all five kinds:
-    * `"deadLetterRetentionMs": N` ages out quarantined rows on the
-    * watcher's maintenance tick
-    * ([[PipelineMetrics.retireAgedDeadLetters]]). Default 0 keeps
-    * everything — failures are data; aging them out is opt-in.
+  /** A conf-declared duration in milliseconds, default 0, with the
+    * fail-loud conf discipline: a sign typo or a "7d" string (asLong()
+    * -> 0) must not register cleanly as "0" and silently mean something
+    * else. Two fields use it:
+    *  - `"deadLetterRetentionMs"` (all five kinds) ages out quarantined
+    *    rows on the watcher's maintenance tick
+    *    ([[PipelineMetrics.retireAgedDeadLetters]]); 0 keeps everything
+    *    — failures are data, aging them out is opt-in;
+    *  - `"retireAfterMs"` (search) is the grace window before an online
+    *    rebuild's superseded store versions retire
+    *    ([[SearchServingPipeline.rebuildStoreOnline]] step 5); 0
+    *    retires at the flip (the single-process contract), a
+    *    multi-driver deployment declares a window and the maintenance
+    *    tick sweeps once it elapses.
     */
-  private def parseDlRetention(f: File,
-      node: com.fasterxml.jackson.databind.JsonNode): Long =
-    if (!node.hasNonNull("deadLetterRetentionMs")) 0L
+  private def parseMillis(f: File, node: JsonNode, field: String): Long =
+    if (!node.hasNonNull(field)) 0L
     else {
-      val v = node.get("deadLetterRetentionMs")
-      // fail-loud conf discipline: a sign typo or a "7d" string
-      // (asLong() -> 0) would register cleanly and silently never
-      // retire anything the operator believes is aging out
+      val v = node.get(field)
       require(v.isNumber && v.canConvertToLong && v.asLong() >= 0L,
-        s"${f.getName}: deadLetterRetentionMs must be a non-negative " +
-          s"integer of milliseconds, got ${v.toString}")
-      v.asLong()
-    }
-
-  /** Grace window before an online rebuild's superseded store versions
-    * retire ([[SearchServingPipeline.rebuildStoreOnline]] step 5) — 0
-    * (the default) retires immediately at the flip, the single-process
-    * contract; a multi-driver deployment declares a window and the
-    * watcher's maintenance tick sweeps once it elapses. Same fail-loud
-    * discipline as deadLetterRetentionMs: a "5m" string or a sign typo
-    * must not register as "retire immediately".
-    */
-  private def parseRetireAfter(f: File,
-      node: com.fasterxml.jackson.databind.JsonNode): Long =
-    if (!node.hasNonNull("retireAfterMs")) 0L
-    else {
-      val v = node.get("retireAfterMs")
-      require(v.isNumber && v.canConvertToLong && v.asLong() >= 0L,
-        s"${f.getName}: retireAfterMs must be a non-negative integer " +
-          s"of milliseconds, got ${v.toString}")
+        s"${f.getName}: $field must be a non-negative integer of " +
+          s"milliseconds, got ${v.toString}")
       v.asLong()
     }
 
@@ -416,8 +368,7 @@ object PipelineRegistry {
     * clobbering each other's dead letters) or diverge between the
     * stores that record raw vs sanitized values.
     */
-  private def validName(f: File,
-      node: com.fasterxml.jackson.databind.JsonNode): String = {
+  private def validName(f: File, node: JsonNode): String = {
     val n = node.get("name").asText()
     require(n.matches("[A-Za-z0-9._-]+"),
       s"${f.getName}: pipeline name '$n' must match [A-Za-z0-9._-]+ — it " +
@@ -454,71 +405,120 @@ object PipelineRegistry {
         None
       }.get
 
-  /** Discover and build every single-table LWW pipeline defined in
-    * `dir` (confs without a `kind`, or `"kind": "lww"`). Fails fast on
-    * a malformed conf (the reference's register-at-boot contract, S3)
-    * unless `strict = false` (watcher scans — see [[perFile]]).
-    * `"kind": "view"` confs are [[loadViews]]'s.
+  /** One conf file under parse: the JSON node plus the fields every
+    * kind reads the same way, each parsed at most once, on first use —
+    * a kind checks its own required fields before touching them, so the
+    * first failure names what the operator must fix.
     */
-  def load(dir: String, strict: Boolean = true): Seq[Entry] = {
-    val mapper = new ObjectMapper()
-    confFiles(dir).flatMap { f => perFile(f, strict) {
-      val node = mapper.readTree(f)
-      if (kindOf(f, node) != "lww") None
+  private final class Conf(val f: File, val node: JsonNode, val kind: String,
+      mtime: Long) {
+    def has(field: String): Boolean = node.hasNonNull(field)
+    def str(field: String): String = node.get(field).asText()
+    def int(field: String, dflt: Int): Int =
+      if (has(field)) node.get(field).asInt() else dflt
+    def dbl(field: String, dflt: Double): Double =
+      if (has(field)) node.get(field).asDouble() else dflt
+    def fail(msg: String): Nothing =
+      throw new IllegalArgumentException(s"${f.getName}: $msg")
+    def need(ok: Boolean, msg: => String): Unit = if (!ok) fail(msg)
+    def strSet(field: String): Set[String] =
+      if (node.has(field)) node.get(field).elements().asScala.map(_.asText()).toSet
+      else Set.empty
+
+    lazy val name: String = validName(f, node)
+    /** `"databases"`: the subscribed source dbs. Absent subscribes to
+      * EVERY db, for all kinds ([[graft.cdc.Subscription.route]] reads
+      * an empty set as all).
+      */
+    lazy val databases: Set[String] = strSet("databases")
+    lazy val deadLetterDir: Option[String] =
+      if (has("deadLetterDir")) Some(str("deadLetterDir")) else None
+    lazy val metrics: Option[PipelineMetrics.Target] = parseMetrics(f, node)
+    lazy val drift: (Boolean, Option[CdcPipeline.DriftPolicy]) =
+      parseDrift(f, node, deadLetterDir, metrics)
+    lazy val deadLetterRetentionMs: Long =
+      parseMillis(f, node, "deadLetterRetentionMs")
+    def expectations(schema: StructType): Seq[graft.ops.Profile.Rule] =
+      parseExpectationsWithStore(f, node, schema, metrics, deadLetterDir)
+
+    /** `"es": { "url", "username", "password" }` — an Elasticsearch
+      * serving target; auth is optional.
+      */
+    def es: Option[EsTarget] =
+      if (!has("es")) None
       else {
-        def strSet(field: String): Set[String] =
-          if (node.has(field)) node.get(field).elements().asScala.map(_.asText()).toSet
-          else Set.empty
-        require(node.hasNonNull("name") && node.hasNonNull("idKey")
-            && node.hasNonNull("schema"),
-          s"${f.getName}: name, idKey and schema are required")
-        val rowSchema = StructType.fromDDL(node.get("schema").asText())
-        val metricsTarget = parseMetrics(f, node)
-        val dlDir = if (node.hasNonNull("deadLetterDir"))
-          Some(node.get("deadLetterDir").asText()) else None
-        // two-step build: the ctor validates the transform (file-named),
-        // so the OUTGOING document schema — what expectations must
-        // resolve against — is computable before the rules parse
-        val (drift, driftPol) = parseDrift(f, node, dlDir, metricsTarget)
-        val pipeline0 = named(f)(CdcPipeline(
-          name = validName(f, node),
-          subscription = Subscription(strSet("databases"), strSet("tables")),
-          rowSchema = rowSchema,
-          idKey = node.get("idKey").asText(),
-          deadLetterDir = dlDir,
-          exprTransform = parseTransform(f, node),
-          metrics = metricsTarget,
-          driftCheck = drift,
-          driftPolicy = driftPol,
-          deadLetterRetentionMs = parseDlRetention(f, node)))
-        val servingSchema =
-          SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-            .map(pipeline0.outgoingRowSchema).getOrElse(rowSchema)
-        val expectRules = parseExpectationsWithStore(f, node, servingSchema,
-          metricsTarget, dlDir)
-        val pipeline = named(f)(pipeline0.copy(expectations = expectRules))
-        // optional per-conf serving target (the reference's per-script
-        // url/auth); its id key is ALWAYS the conf's declared idKey
-        val target =
-          if (!node.hasNonNull("es")) None
-          else {
-            val es = node.get("es")
-            require(es.hasNonNull("url") && es.hasNonNull("username")
-                && es.hasNonNull("password"),
-              s"${f.getName}: es target needs url, username and password")
-            Some(EsSink.Config(es.get("url").asText(),
-              es.get("username").asText(), es.get("password").asText(),
-              idKey = node.get("idKey").asText()))
-          }
-        Some(Entry(pipeline, f.getAbsolutePath, f.lastModified(), target))
+        val es = node.get("es")
+        need(es.hasNonNull("url"), "es needs url")
+        def opt(field: String) =
+          if (es.hasNonNull(field)) es.get(field).asText() else ""
+        Some(EsTarget(es.get("url").asText(), opt("username"), opt("password")))
       }
-    }}
+
+    /** The jdbc-or-es sink half ([[ViewTarget]]): `"jdbc": { "url",
+      * <tableField>, "stagingColumnTypes"? }`, else the `"es"` target.
+      */
+    def viewTarget(tableField: String): ViewTarget =
+      if (has("jdbc")) {
+        val jdbc = node.get("jdbc")
+        need(jdbc.hasNonNull("url") && jdbc.hasNonNull(tableField),
+          s"jdbc needs url and $tableField")
+        JdbcTarget(jdbc.get("url").asText(), jdbc.get(tableField).asText(),
+          if (jdbc.hasNonNull("stagingColumnTypes"))
+            Some(jdbc.get("stagingColumnTypes").asText()) else None)
+      } else es.getOrElse(fail(s"$kind confs need a jdbc or es target"))
+
+    def entry(p: ServedPipeline, target: Option[EsSink.Config] = None): Entry =
+      Entry(p, f.getAbsolutePath, mtime, target)
   }
 
-  final case class ViewEntry(pipeline: ViewPipeline, file: String, mtime: Long)
+  /** The registration-time serving schema, when a session exists to
+    * compute it (expectations resolve against it).
+    */
+  private def servingSchema(of: SparkSession => StructType,
+      dflt: => StructType): StructType =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(of).getOrElse(dflt)
 
-  /** Discover and build every `"kind": "view"` pipeline in `dir` — the
-    * fact ⋈ dim denormalization flow as registry data:
+  /** `lww` (or no `"kind"`): a single-table LWW pipeline.
+    * {{{
+    *   { "name": "orders",
+    *     "databases": ["shop"], "tables": ["orders"],
+    *     "idKey": "o_orderkey",
+    *     "schema": "o_orderkey BIGINT, o_orderstatus STRING" }
+    * }}}
+    * plus an optional `"es": { "url", "username", "password" }` serving
+    * target (the reference's per-script url/auth); its id key is ALWAYS
+    * the conf's declared idKey.
+    */
+  private def lww(c: Conf): Entry = {
+    c.need(c.has("name") && c.has("idKey") && c.has("schema"),
+      "name, idKey and schema are required")
+    val rowSchema = StructType.fromDDL(c.str("schema"))
+    val metrics = c.metrics
+    val (drift, driftPol) = c.drift
+    // two-step build: the ctor validates the transform (file-named),
+    // so the OUTGOING document schema — what expectations must resolve
+    // against — is computable before the rules parse
+    val p0 = named(c.f)(CdcPipeline(
+      name = c.name,
+      subscription = Subscription(c.databases, c.strSet("tables")),
+      rowSchema = rowSchema,
+      idKey = c.str("idKey"),
+      deadLetterDir = c.deadLetterDir,
+      exprTransform = parseTransform(c.f, c.node),
+      metrics = metrics,
+      driftCheck = drift,
+      driftPolicy = driftPol,
+      deadLetterRetentionMs = c.deadLetterRetentionMs))
+    val rules = c.expectations(servingSchema(p0.outgoingRowSchema, rowSchema))
+    val p = named(c.f)(p0.copy(expectations = rules))
+    c.need(!c.has("es") || Seq("url", "username", "password")
+        .forall(c.node.get("es").hasNonNull),
+      "es target needs url, username and password")
+    c.entry(p, c.es.map(_.config(p.idKey)))
+  }
+
+  /** `view`: the fact ⋈ dim denormalization flow ([[ViewPipeline]]).
     * {{{
     *   { "kind": "view", "name": "orders_enriched",
     *     "databases": ["shop"], "leftOuter": true,
@@ -532,115 +532,65 @@ object PipelineRegistry {
     *               "stagingColumnTypes": "c_name VARCHAR(64), ..." } }
     * }}}
     * The sink half is a [[ViewTarget]]: `"jdbc"` as above, or `"es"`
-    * (`{ "url", "username", "password" }`) for the reference's
-    * id-keyed Elasticsearch document serving.
-    * Each side object may also declare its OWN `"driftPolicy"` (same
-    * shape as the conf-level one, which it overrides for that side):
-    * the fact and dim wires evolve on different clocks, so dim-side
-    * warn monitoring can ride beside fact-side drop enforcement.
-    * Same lifecycle as LWW entries: [[changedSince]]/[[removedSince]]
-    * key on the conf file, and the work dir a runner derives from the
-    * conf file name ([[ckptKey]]) preserves checkpoints across restarts.
+    * for the reference's id-keyed Elasticsearch document serving. Each
+    * side object may also declare its OWN `"driftPolicy"` (same shape as
+    * the conf-level one, which it overrides for that side): the fact and
+    * dim wires evolve on different clocks, so dim-side warn monitoring
+    * can ride beside fact-side drop enforcement.
     */
-  def loadViews(dir: String, strict: Boolean = true): Seq[ViewEntry] = {
-    val mapper = new ObjectMapper()
-    confFiles(dir).flatMap { f => perFile(f, strict) {
-      val node = mapper.readTree(f)
-      if (kindOf(f, node) != "view") None
-      else {
-        require(node.hasNonNull("name") && node.hasNonNull("fact")
-            && node.hasNonNull("dim"),
-          s"${f.getName}: view confs need name, fact and dim")
-        def side(field: String) = {
-          val s = node.get(field)
-          require(s.hasNonNull("table") && s.hasNonNull("idKey")
-              && s.hasNonNull("joinKey") && s.hasNonNull("schema"),
-            s"${f.getName}: $field needs table, idKey, joinKey and schema")
-          (s.get("table").asText(), StructType.fromDDL(s.get("schema").asText()),
-            s.get("idKey").asText(), s.get("joinKey").asText())
-        }
-        val (fTable, fSchema, fId, fJoin) = side("fact")
-        val (dTable, dSchema, dId, dJoin) = side("dim")
-        val viewMetrics = parseMetrics(f, node)
-        val tgt: ViewTarget =
-          if (node.hasNonNull("jdbc")) {
-            val jdbc = node.get("jdbc")
-            require(jdbc.hasNonNull("url") && jdbc.hasNonNull("table"),
-              s"${f.getName}: jdbc needs url and table")
-            JdbcTarget(jdbc.get("url").asText(), jdbc.get("table").asText(),
-              if (jdbc.hasNonNull("stagingColumnTypes"))
-                Some(jdbc.get("stagingColumnTypes").asText()) else None)
-          } else {
-            require(node.hasNonNull("es"),
-              s"${f.getName}: view confs need a jdbc or es target")
-            val es = node.get("es")
-            require(es.hasNonNull("url"), s"${f.getName}: es needs url")
-            EsTarget(es.get("url").asText(),
-              if (es.hasNonNull("username")) es.get("username").asText() else "",
-              if (es.hasNonNull("password")) es.get("password").asText() else "")
-          }
-        val dbs =
-          if (node.has("databases"))
-            node.get("databases").elements().asScala.map(_.asText()).toSet
-          else Set("shop")
-        val dlDir = if (node.hasNonNull("deadLetterDir"))
-          Some(node.get("deadLetterDir").asText()) else None
-        val (vDrift, vDriftPol) = parseDrift(f, node, dlDir, viewMetrics)
-        // per-side overrides of the shared policy: the fact and dim
-        // wires evolve on different clocks, so each side object may
-        // declare its own `"driftPolicy"` (same shape, same
-        // invariants) — e.g. dim-side warn-monitoring beside fact-side
-        // drop enforcement
-        def sideDriftPol(field: String): Option[CdcPipeline.DriftPolicy] = {
-          val s = node.get(field)
-          if (!s.hasNonNull("driftPolicy")) None
-          else Some(parseDriftPolicy(f, s"$field.driftPolicy",
-            s.get("driftPolicy"), dlDir))
-        }
-        val fDriftPol = sideDriftPol("fact")
-        val dDriftPol = sideDriftPol("dim")
-        if (fDriftPol.isDefined || dDriftPol.isDefined) {
-          require(viewMetrics.isDefined,
-            s"${f.getName}: a per-side driftPolicy needs a metrics " +
-              "target to record into")
-          viewMetrics.foreach(PipelineMetrics.ensureDriftTable)
-        }
-        // two-step build (the lww precedent): ctor validates the
-        // transform, then expectations resolve against the
-        // POST-TRANSFORM flattened serving row a consumer reads
-        val pipeline0 = named(f)(ViewPipeline(
-          name = validName(f, node),
-          databases = dbs,
-          factTable = fTable, factSchema = fSchema, factIdField = fId,
-          factJoinField = fJoin,
-          dimTable = dTable, dimSchema = dSchema, dimIdField = dId,
-          dimJoinField = dJoin,
-          leftOuter = node.has("leftOuter") && node.get("leftOuter").asBoolean(),
-          target = tgt,
-          deadLetterDir = dlDir,
-          exprTransform = parseTransform(f, node),
-          metrics = viewMetrics,
-          driftCheck = vDrift, driftPolicy = vDriftPol,
-          factDriftPolicy = fDriftPol, dimDriftPolicy = dDriftPol,
-          deadLetterRetentionMs = parseDlRetention(f, node)))
-        val servingSchema =
-          SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-            .map(pipeline0.servingRowSchema)
-            .getOrElse(StructType(fSchema.fields ++ dSchema.fields))
-        val expectRules = parseExpectationsWithStore(f, node, servingSchema,
-          viewMetrics, dlDir)
-        val pipeline = named(f)(pipeline0.copy(expectations = expectRules))
-        Some(ViewEntry(pipeline, f.getAbsolutePath, f.lastModified()))
-      }
-    }}
+  private def view(c: Conf): Entry = {
+    c.need(c.has("name") && c.has("fact") && c.has("dim"),
+      "view confs need name, fact and dim")
+    def side(field: String) = {
+      val s = c.node.get(field)
+      c.need(s.hasNonNull("table") && s.hasNonNull("idKey")
+          && s.hasNonNull("joinKey") && s.hasNonNull("schema"),
+        s"$field needs table, idKey, joinKey and schema")
+      (s.get("table").asText(), StructType.fromDDL(s.get("schema").asText()),
+        s.get("idKey").asText(), s.get("joinKey").asText())
+    }
+    val (fTable, fSchema, fId, fJoin) = side("fact")
+    val (dTable, dSchema, dId, dJoin) = side("dim")
+    val metrics = c.metrics
+    val tgt = c.viewTarget("table")
+    def sideDriftPol(field: String): Option[CdcPipeline.DriftPolicy] = {
+      val s = c.node.get(field)
+      if (!s.hasNonNull("driftPolicy")) None
+      else Some(parseDriftPolicy(c.f, s"$field.driftPolicy",
+        s.get("driftPolicy"), c.deadLetterDir))
+    }
+    val (drift, driftPol) = c.drift
+    val fDriftPol = sideDriftPol("fact")
+    val dDriftPol = sideDriftPol("dim")
+    if (fDriftPol.isDefined || dDriftPol.isDefined) {
+      c.need(metrics.isDefined,
+        "a per-side driftPolicy needs a metrics target to record into")
+      metrics.foreach(PipelineMetrics.ensureDriftTable)
+    }
+    // two-step build (the lww precedent): ctor validates the transform,
+    // then expectations resolve against the POST-TRANSFORM flattened
+    // serving row a consumer reads
+    val p0 = named(c.f)(ViewPipeline(
+      name = c.name,
+      databases = c.databases,
+      factTable = fTable, factSchema = fSchema, factIdField = fId,
+      factJoinField = fJoin,
+      dimTable = dTable, dimSchema = dSchema, dimIdField = dId,
+      dimJoinField = dJoin,
+      leftOuter = c.node.has("leftOuter") && c.node.get("leftOuter").asBoolean(),
+      target = tgt,
+      deadLetterDir = c.deadLetterDir,
+      exprTransform = parseTransform(c.f, c.node),
+      metrics = metrics,
+      driftCheck = drift, driftPolicy = driftPol,
+      factDriftPolicy = fDriftPol, dimDriftPolicy = dDriftPol,
+      deadLetterRetentionMs = c.deadLetterRetentionMs))
+    val rules = c.expectations(servingSchema(p0.servingRowSchema,
+      StructType(fSchema.fields ++ dSchema.fields)))
+    c.entry(named(c.f)(p0.copy(expectations = rules)))
   }
 
-  final case class AnnEntry(pipeline: AnnServingPipeline, file: String,
-      mtime: Long)
-
-  /** Discover and build every `"kind": "ann"` pipeline in `dir` — the
-    * streaming ANN serving flow ([[AnnServingPipeline]]) as registry
-    * data:
+  /** `ann`: the streaming ANN serving flow ([[AnnServingPipeline]]).
     * {{{
     *   { "kind": "ann", "name": "vecs",
     *     "databases": ["shop"], "table": "embeddings",
@@ -653,93 +603,52 @@ object PipelineRegistry {
     * `centroids` is the BOOTSTRAP quantizer — an index artifact shipped
     * as conf data, seeding generation 0 only; retrain-and-swap evolves
     * it through the generation pointer without touching the conf.
-    * Optional `"es": { "url", "username", "password" }` adds the
-    * consumer-facing document MIRROR (one ES document per served
-    * vector; jdbc stays the index's source of truth), with optional
-    * `"deadLetterDir"` for undeliverable mirror rows.
-    * Same lifecycle keys as the other kinds (conf file + [[ckptKey]]).
+    * Optional `"es"` adds the consumer-facing document MIRROR (one ES
+    * document per served vector; jdbc stays the index's source of
+    * truth), with optional `"deadLetterDir"` for undeliverable mirror
+    * rows.
     */
-  def loadAnn(dir: String, strict: Boolean = true): Seq[AnnEntry] = {
-    val mapper = new ObjectMapper()
-    confFiles(dir).flatMap { f => perFile(f, strict) {
-      val node = mapper.readTree(f)
-      if (kindOf(f, node) != "ann") None
-      else {
-        require(node.hasNonNull("name") && node.hasNonNull("table")
-            && node.hasNonNull("idKey") && node.hasNonNull("vectorField")
-            && node.hasNonNull("centroids") && node.hasNonNull("jdbc"),
-          s"${f.getName}: ann confs need name, table, idKey, vectorField, " +
-            "centroids and jdbc")
-        val cents = node.get("centroids").elements().asScala.map(row =>
-          row.elements().asScala.map(_.floatValue()).toArray).toArray
-        require(cents.nonEmpty && cents.forall(_.length == cents.head.length),
-          s"${f.getName}: centroids must be a non-empty rectangular array")
-        val jdbc = node.get("jdbc")
-        require(jdbc.hasNonNull("url") && jdbc.hasNonNull("postingsTable"),
-          s"${f.getName}: jdbc needs url and postingsTable")
-        def dbl(field: String, dflt: Double): Double =
-          if (node.hasNonNull(field)) node.get(field).asDouble() else dflt
-        def int(field: String, dflt: Int): Int =
-          if (node.hasNonNull(field)) node.get(field).asInt() else dflt
-        val dbs =
-          if (node.has("databases"))
-            node.get("databases").elements().asScala.map(_.asText()).toSet
-          else Set("shop")
-        val annMetrics = parseMetrics(f, node)
-        val annDlDir = if (node.hasNonNull("deadLetterDir"))
-          Some(node.get("deadLetterDir").asText()) else None
-        val (annDrift, annDriftPol) = parseDrift(f, node, annDlDir, annMetrics)
-        val pipeline = AnnServingPipeline(
-          name = validName(f, node),
-          databases = dbs,
-          table = node.get("table").asText(),
-          idField = node.get("idKey").asText(),
-          vectorField = node.get("vectorField").asText(),
-          cents = cents,
-          jdbcUrl = jdbc.get("url").asText(),
-          postingsTable = jdbc.get("postingsTable").asText(),
-          certTable = if (jdbc.hasNonNull("certTable"))
-            Some(jdbc.get("certTable").asText()) else None,
-          k = int("k", 5), nProbe = int("nProbe", 4),
-          recallFloor = dbl("recallFloor", 0.6),
-          skewBound = dbl("skewBound", 4.0),
-          autoRetrain = node.hasNonNull("autoRetrain")
-            && node.get("autoRetrain").asBoolean(),
-          maxGenAgeMs =
-            if (node.hasNonNull("maxGenAgeMs")) node.get("maxGenAgeMs").asLong()
-            else 0L,
-          metrics = annMetrics,
-          // expectation columns resolve against the posting ACTION row
-          // the index store serves: the conf's id plus the advisory cell
-          expectations = parseExpectationsWithStore(f, node,
-            StructType.fromDDL(
-              s"${node.get("idKey").asText()} BIGINT, cell INT"),
-            annMetrics, annDlDir),
-          // optional consumer-facing document mirror (the view/dedup
-          // confs' "es" shape); jdbc stays the index's source of truth
-          esMirror =
-            if (!node.hasNonNull("es")) None
-            else {
-              val es = node.get("es")
-              require(es.hasNonNull("url"), s"${f.getName}: es needs url")
-              Some(EsTarget(es.get("url").asText(),
-                if (es.hasNonNull("username")) es.get("username").asText() else "",
-                if (es.hasNonNull("password")) es.get("password").asText() else ""))
-            },
-          deadLetterDir = annDlDir,
-          driftCheck = annDrift, driftPolicy = annDriftPol,
-          deadLetterRetentionMs = parseDlRetention(f, node))
-        Some(AnnEntry(pipeline, f.getAbsolutePath, f.lastModified()))
-      }
-    }}
+  private def ann(c: Conf): Entry = {
+    c.need(Seq("name", "table", "idKey", "vectorField", "centroids", "jdbc")
+        .forall(c.has),
+      "ann confs need name, table, idKey, vectorField, centroids and jdbc")
+    val cents = c.node.get("centroids").elements().asScala.map(row =>
+      row.elements().asScala.map(_.floatValue()).toArray).toArray
+    c.need(cents.nonEmpty && cents.forall(_.length == cents.head.length),
+      "centroids must be a non-empty rectangular array")
+    val jdbc = c.node.get("jdbc")
+    c.need(jdbc.hasNonNull("url") && jdbc.hasNonNull("postingsTable"),
+      "jdbc needs url and postingsTable")
+    val (drift, driftPol) = c.drift
+    c.entry(AnnServingPipeline(
+      name = c.name,
+      databases = c.databases,
+      table = c.str("table"),
+      idField = c.str("idKey"),
+      vectorField = c.str("vectorField"),
+      cents = cents,
+      jdbcUrl = jdbc.get("url").asText(),
+      postingsTable = jdbc.get("postingsTable").asText(),
+      certTable = if (jdbc.hasNonNull("certTable"))
+        Some(jdbc.get("certTable").asText()) else None,
+      k = c.int("k", 5), nProbe = c.int("nProbe", 4),
+      recallFloor = c.dbl("recallFloor", 0.6),
+      skewBound = c.dbl("skewBound", 4.0),
+      autoRetrain = c.has("autoRetrain") && c.node.get("autoRetrain").asBoolean(),
+      maxGenAgeMs = if (c.has("maxGenAgeMs")) c.node.get("maxGenAgeMs").asLong() else 0L,
+      metrics = c.metrics,
+      // expectation columns resolve against the posting ACTION row the
+      // index store serves: the conf's id plus the advisory cell
+      expectations = c.expectations(
+        StructType.fromDDL(s"${c.str("idKey")} BIGINT, cell INT")),
+      esMirror = c.es,
+      deadLetterDir = c.deadLetterDir,
+      driftCheck = drift, driftPolicy = driftPol,
+      deadLetterRetentionMs = c.deadLetterRetentionMs))
   }
 
-  final case class DedupEntry(pipeline: DedupClusterPipeline, file: String,
-      mtime: Long)
-
-  /** Discover and build every `"kind": "dedup"` pipeline in `dir` — the
-    * streaming dedup-cluster serving flow ([[DedupClusterPipeline]]) as
-    * registry data:
+  /** `dedup`: the streaming dedup-cluster serving flow
+    * ([[DedupClusterPipeline]]).
     * {{{
     *   { "kind": "dedup", "name": "docs",
     *     "databases": ["shop"], "table": "documents",
@@ -748,78 +657,37 @@ object PipelineRegistry {
     *     "shingleN": 3, "bands": 16, "rows": 4, "maxBucket": 256 }
     * }}}
     * The sink half is a [[ViewTarget]] like view confs: `"jdbc"` as
-    * above, or `"es"` (`{ "url", "username", "password" }`) for
-    * id-keyed cluster documents.
+    * above, or `"es"` for id-keyed cluster documents.
     */
-  def loadDedup(dir: String, strict: Boolean = true): Seq[DedupEntry] = {
-    val mapper = new ObjectMapper()
-    confFiles(dir).flatMap { f => perFile(f, strict) {
-      val node = mapper.readTree(f)
-      if (kindOf(f, node) != "dedup") None
-      else {
-        require(node.hasNonNull("name") && node.hasNonNull("table")
-            && node.hasNonNull("idKey") && node.hasNonNull("textField"),
-          s"${f.getName}: dedup confs need name, table, idKey and textField")
-        val tgt: ViewTarget =
-          if (node.hasNonNull("jdbc")) {
-            val jdbc = node.get("jdbc")
-            require(jdbc.hasNonNull("url") && jdbc.hasNonNull("clustersTable"),
-              s"${f.getName}: jdbc needs url and clustersTable")
-            JdbcTarget(jdbc.get("url").asText(),
-              jdbc.get("clustersTable").asText())
-          } else {
-            require(node.hasNonNull("es"),
-              s"${f.getName}: dedup confs need a jdbc or es target")
-            val es = node.get("es")
-            require(es.hasNonNull("url"), s"${f.getName}: es needs url")
-            EsTarget(es.get("url").asText(),
-              if (es.hasNonNull("username")) es.get("username").asText() else "",
-              if (es.hasNonNull("password")) es.get("password").asText() else "")
-          }
-        def int(field: String, dflt: Int): Int =
-          if (node.hasNonNull(field)) node.get(field).asInt() else dflt
-        val dbs =
-          if (node.has("databases"))
-            node.get("databases").elements().asScala.map(_.asText()).toSet
-          else Set("shop")
-        val dedupMetrics = parseMetrics(f, node)
-        val dedupDlDir = if (node.hasNonNull("deadLetterDir"))
-          Some(node.get("deadLetterDir").asText()) else None
-        val (ddDrift, ddDriftPol) = parseDrift(f, node, dedupDlDir,
-          dedupMetrics)
-        val pipeline = DedupClusterPipeline(
-          name = validName(f, node),
-          databases = dbs,
-          table = node.get("table").asText(),
-          idField = node.get("idKey").asText(),
-          textField = node.get("textField").asText(),
-          target = tgt,
-          shingleN = int("shingleN", 3), bands = int("bands", 16),
-          rows = int("rows", 4), maxBucket = int("maxBucket", Int.MaxValue),
-          deadLetterDir = dedupDlDir,
-          verifyThreshold =
-            if (node.hasNonNull("verifyThreshold"))
-              Some(node.get("verifyThreshold").asDouble()) else None,
-          metrics = dedupMetrics,
-          // expectation columns resolve against the changed CLUSTER row
-          // a serving consumer reads: conf id + cluster assignment
-          expectations = parseExpectationsWithStore(f, node,
-            StructType.fromDDL(s"${node.get("idKey").asText()} BIGINT, " +
-              "cluster_id BIGINT, is_canonical BOOLEAN"),
-            dedupMetrics, dedupDlDir),
-          driftCheck = ddDrift, driftPolicy = ddDriftPol,
-          deadLetterRetentionMs = parseDlRetention(f, node))
-        Some(DedupEntry(pipeline, f.getAbsolutePath, f.lastModified()))
-      }
-    }}
+  private def dedup(c: Conf): Entry = {
+    c.need(Seq("name", "table", "idKey", "textField").forall(c.has),
+      "dedup confs need name, table, idKey and textField")
+    val tgt = c.viewTarget("clustersTable")
+    val (drift, driftPol) = c.drift
+    c.entry(DedupClusterPipeline(
+      name = c.name,
+      databases = c.databases,
+      table = c.str("table"),
+      idField = c.str("idKey"),
+      textField = c.str("textField"),
+      target = tgt,
+      shingleN = c.int("shingleN", 3), bands = c.int("bands", 16),
+      rows = c.int("rows", 4), maxBucket = c.int("maxBucket", Int.MaxValue),
+      deadLetterDir = c.deadLetterDir,
+      verifyThreshold =
+        if (c.has("verifyThreshold")) Some(c.node.get("verifyThreshold").asDouble())
+        else None,
+      metrics = c.metrics,
+      // expectation columns resolve against the changed CLUSTER row a
+      // serving consumer reads: conf id + cluster assignment
+      expectations = c.expectations(StructType.fromDDL(
+        s"${c.str("idKey")} BIGINT, cluster_id BIGINT, is_canonical BOOLEAN")),
+      driftCheck = drift, driftPolicy = driftPol,
+      deadLetterRetentionMs = c.deadLetterRetentionMs))
   }
 
-  final case class SearchEntry(pipeline: SearchServingPipeline, file: String,
-      mtime: Long)
-
-  /** Discover and build every `"kind": "search"` pipeline in `dir` —
-    * the streaming inverted-index/BM25 serving flow
-    * ([[SearchServingPipeline]]) as registry data:
+  /** `search`: the streaming inverted-index/BM25 serving flow
+    * ([[SearchServingPipeline]]).
     * {{{
     *   { "kind": "search", "name": "docs",
     *     "databases": ["shop"], "table": "documents",
@@ -828,152 +696,92 @@ object PipelineRegistry {
     *               "lensTable": "doclens" } }
     * }}}
     */
-  def loadSearch(dir: String, strict: Boolean = true): Seq[SearchEntry] = {
+  private def search(c: Conf): Entry = {
+    c.need(Seq("name", "table", "idKey", "textField", "jdbc").forall(c.has),
+      "search confs need name, table, idKey, textField and jdbc")
+    val jdbc = c.node.get("jdbc")
+    c.need(Seq("url", "postingsTable", "lensTable").forall(jdbc.hasNonNull),
+      "jdbc needs url, postingsTable and lensTable")
+    val (drift, driftPol) = c.drift
+    c.entry(SearchServingPipeline(
+      name = c.name,
+      databases = c.databases,
+      table = c.str("table"),
+      idField = c.str("idKey"),
+      textField = c.str("textField"),
+      jdbcUrl = jdbc.get("url").asText(),
+      postingsTable = jdbc.get("postingsTable").asText(),
+      lensTable = jdbc.get("lensTable").asText(),
+      k1 = c.dbl("k1", 1.2), b = c.dbl("b", 0.75),
+      metrics = c.metrics,
+      // expectation columns resolve against the batch's ± posting
+      // contribution row the additive MERGE applies
+      expectations = c.expectations(
+        StructType.fromDDL("token STRING, doc_id BIGINT, tf BIGINT")),
+      deadLetterDir = c.deadLetterDir,
+      driftCheck = drift, driftPolicy = driftPol,
+      deadLetterRetentionMs = c.deadLetterRetentionMs,
+      retireAfterMs = parseMillis(c.f, c.node, "retireAfterMs")))
+  }
+
+  private def loadFiles(files: Seq[File], strict: Boolean): Seq[Entry] = {
     val mapper = new ObjectMapper()
-    confFiles(dir).flatMap { f => perFile(f, strict) {
+    files.flatMap { f => perFile(f, strict) {
+      // stamp BEFORE the read: an edit landing mid-parse then shows as
+      // changed on the next scan instead of hiding behind a newer mtime
+      val mtime = f.lastModified()
       val node = mapper.readTree(f)
-      if (kindOf(f, node) != "search") None
-      else {
-        require(node.hasNonNull("name") && node.hasNonNull("table")
-            && node.hasNonNull("idKey") && node.hasNonNull("textField")
-            && node.hasNonNull("jdbc"),
-          s"${f.getName}: search confs need name, table, idKey, textField and jdbc")
-        val jdbc = node.get("jdbc")
-        require(jdbc.hasNonNull("url") && jdbc.hasNonNull("postingsTable")
-            && jdbc.hasNonNull("lensTable"),
-          s"${f.getName}: jdbc needs url, postingsTable and lensTable")
-        val dbs =
-          if (node.has("databases"))
-            node.get("databases").elements().asScala.map(_.asText()).toSet
-          else Set("shop")
-        def dbl(field: String, dflt: Double): Double =
-          if (node.hasNonNull(field)) node.get(field).asDouble() else dflt
-        val searchMetrics = parseMetrics(f, node)
-        val searchDlDir = if (node.hasNonNull("deadLetterDir"))
-          Some(node.get("deadLetterDir").asText()) else None
-        val (sDrift, sDriftPol) = parseDrift(f, node, searchDlDir,
-          searchMetrics)
-        val pipeline = SearchServingPipeline(
-          name = validName(f, node),
-          databases = dbs,
-          table = node.get("table").asText(),
-          idField = node.get("idKey").asText(),
-          textField = node.get("textField").asText(),
-          jdbcUrl = jdbc.get("url").asText(),
-          postingsTable = jdbc.get("postingsTable").asText(),
-          lensTable = jdbc.get("lensTable").asText(),
-          k1 = dbl("k1", 1.2), b = dbl("b", 0.75),
-          metrics = searchMetrics,
-          // expectation columns resolve against the batch's ± posting
-          // contribution row the additive MERGE applies
-          expectations = parseExpectationsWithStore(f, node,
-            StructType.fromDDL("token STRING, doc_id BIGINT, tf BIGINT"),
-            searchMetrics, searchDlDir),
-          deadLetterDir = searchDlDir,
-          driftCheck = sDrift, driftPolicy = sDriftPol,
-          deadLetterRetentionMs = parseDlRetention(f, node),
-          retireAfterMs = parseRetireAfter(f, node))
-        Some(SearchEntry(pipeline, f.getAbsolutePath, f.lastModified()))
-      }
+      val kind = kindOf(f, node)
+      Some(Kinds(kind).parse(new Conf(f, node, kind, mtime)))
     }}
   }
 
-  /** [[changedSince]] for the search-pipeline lifecycle. */
-  def changedSearchSince(known: Seq[SearchEntry], dir: String): Seq[String] =
-    changedOfKind(known.map(e => e.file -> e.mtime).toMap, dir, "search")
-
-  /** [[removedSince]] for the search-pipeline lifecycle. */
-  def removedSearchSince(known: Seq[SearchEntry], dir: String): Seq[String] =
-    removedOfKind(known.map(_.file), "search")
-
-  /** [[changedSince]] for the dedup-pipeline lifecycle. */
-  def changedDedupSince(known: Seq[DedupEntry], dir: String): Seq[String] =
-    changedOfKind(known.map(e => e.file -> e.mtime).toMap, dir, "dedup")
-
-  /** [[removedSince]] for the dedup-pipeline lifecycle. */
-  def removedDedupSince(known: Seq[DedupEntry], dir: String): Seq[String] =
-    removedOfKind(known.map(_.file), "dedup")
-
-  /** [[changedSince]] for the ann-pipeline lifecycle. */
-  def changedAnnSince(known: Seq[AnnEntry], dir: String): Seq[String] =
-    changedOfKind(known.map(e => e.file -> e.mtime).toMap, dir, "ann")
-
-  /** [[removedSince]] for the ann-pipeline lifecycle. */
-  def removedAnnSince(known: Seq[AnnEntry], dir: String): Seq[String] =
-    removedOfKind(known.map(_.file), "ann")
-
-  /** Run every registered view pipeline once over the feed's current
-    * contents — each under its own conf-file-keyed work dir (the same
-    * checkpoint-identity rule as [[ckptKey]]), so restarts resume and a
-    * renamed view keeps its cursor.
+  /** Discover and build every pipeline defined in `dir`, whatever its
+    * kind, in conf-file order. Fails fast on a malformed conf (the
+    * reference's register-at-boot contract, S3) unless `strict = false`
+    * (watcher scans — see [[perFile]]).
     */
-  def runViews(entries: Seq[ViewEntry], spark: SparkSession,
-      sourceDir: String, workRoot: String,
-      esTransport: graft.sinks.EsSink.Transport =
-        new graft.sinks.EsSink.HttpTransport): Unit =
-    entries.foreach { e =>
-      e.pipeline.runOnce(spark, sourceDir, s"$workRoot/${ckptKey(e.file)}",
-        esTransport)
-    }
+  def load(dir: String, strict: Boolean = true): Seq[Entry] =
+    loadFiles(confFiles(dir), strict)
 
-  private def confFilesOfKind(dir: String, kind: String): Seq[File] = {
-    // lenient: a file that cannot be parsed (or carries an unknown
-    // kind) matches NO kind — it is quarantined from every scan rather
-    // than aborting the watcher's whole cycle
-    val files = confFiles(dir)
-    evictDeleted(dir, files.map(_.getAbsolutePath).toSet)
-    files.filter(f => lenientKindOf(f).contains(kind))
+  /** Re-read the named conf files leniently — the watcher's reload of
+    * what [[changedSince]] flagged. A file that no longer parses is
+    * quarantined (logged, left out), so its running pipeline keeps its
+    * last good conf; that includes an edit that changes `"kind"` AND
+    * breaks the conf.
+    */
+  def reload(files: Seq[String]): Seq[Entry] =
+    loadFiles(files.map(new File(_)).filter(_.isFile), strict = false)
+
+  /** Conf files added or modified since `known` was loaded — the
+    * pipelines whose queries need a (re)start (S2 reload semantics).
+    * Lists the dir and compares mtimes; parses nothing, so a scan costs
+    * no JSON read for an unchanged conf. An edited `"kind"` is an edit
+    * like any other: the reload stops the old kind's queries and starts
+    * the new kind's against the same work dir.
+    */
+  def changedSince(known: Seq[Entry], dir: String): Seq[String] = {
+    val stamps = known.map(e => e.file -> e.mtime).toMap
+    confFiles(dir).filterNot(f =>
+      stamps.get(f.getAbsolutePath).contains(f.lastModified()))
+      .map(_.getAbsolutePath)
   }
 
-  /** Known conf files that left this lifecycle: deleted from the dir,
-    * OR still present but now carrying a DIFFERENT recognized kind — an
-    * edited `"kind"` field re-homes the file, and the old-kind queries
-    * must stop (otherwise they keep running untracked while the
-    * new-kind pipeline starts against the same work dir). A file whose
-    * kind is currently unreadable is NOT removed — quarantine keeps the
-    * running pipeline on its last good conf.
+  /** Known conf files deleted from the dir: the pipelines whose queries
+    * must be STOPPED (deregistration, the delete half of the reference's
+    * script-watcher lifecycle).
     */
-  private def removedOfKind(knownFiles: Seq[String], kind: String): Seq[String] =
-    knownFiles.filter { path =>
-      val f = new File(path)
-      !f.exists() || lenientKindOf(f).exists(_ != kind)
-    }
+  def removedSince(known: Seq[Entry]): Seq[String] =
+    known.map(_.file).filterNot(f => new File(f).isFile)
 
-  private def changedOfKind(knownFiles: Map[String, Long], dir: String,
-      kind: String): Seq[String] =
-    confFilesOfKind(dir, kind).filter { f =>
-      knownFiles.get(f.getAbsolutePath) match {
-        case Some(m) => f.lastModified() != m
-        case None => true
-      }
-    }.map(_.getAbsolutePath)
-
-  /** LWW conf files added or modified since `known` was loaded — the
-    * pipelines whose queries need a restart (S2 reload semantics).
-    * Kind-scoped: a `"kind": "view"` conf in the same dir belongs to
-    * [[changedViewsSince]]'s lifecycle, not this one — without the
-    * filter an LWW watcher would flag it as "new" forever (load() never
-    * admits it to the known set) and busy-loop on reloads.
+  /** Start one registered pipeline live under `ckptRoot`, in its
+    * conf-file-keyed work dir ([[ckptKey]]) — the one start path boot,
+    * reload and [[startAll]] share.
     */
-  def changedSince(known: Seq[Entry], dir: String): Seq[String] =
-    changedOfKind(known.map(e => e.file -> e.mtime).toMap, dir, "lww")
-
-  /** [[changedSince]] for the view-pipeline lifecycle. */
-  def changedViewsSince(known: Seq[ViewEntry], dir: String): Seq[String] =
-    changedOfKind(known.map(e => e.file -> e.mtime).toMap, dir, "view")
-
-  /** Known conf files that left the LWW lifecycle — deleted, or
-    * re-homed to another kind by an edited `"kind"` field
-    * ([[removedOfKind]]): the pipelines whose queries must be STOPPED
-    * (deregistration, the delete half of the reference's script-watcher
-    * lifecycle).
-    */
-  def removedSince(known: Seq[Entry], dir: String): Seq[String] =
-    removedOfKind(known.map(_.file), "lww")
-
-  /** [[removedSince]] for the view-pipeline lifecycle. */
-  def removedViewsSince(known: Seq[ViewEntry], dir: String): Seq[String] =
-    removedOfKind(known.map(_.file), "view")
+  def start(e: Entry, spark: SparkSession, sourceDir: String,
+      ckptRoot: String, live: ServedPipeline.Live): Seq[StreamingQuery] =
+    e.pipeline.startLive(spark, sourceDir, s"$ckptRoot/${ckptKey(e.file)}",
+      e.target.fold(live)(t => live.copy(cfg = t)))
 
   /** Start every registered pipeline over one shared feed — the
     * reference's fan-out topology (R11): each query gets its own
@@ -983,8 +791,6 @@ object PipelineRegistry {
   def startAll(entries: Seq[Entry], spark: SparkSession, sourceDir: String,
       ckptRoot: String, cfg: EsSink.Config,
       transport: EsSink.Transport): Seq[StreamingQuery] =
-    entries.map { e =>
-      e.pipeline.startDsv2(spark, sourceDir,
-        s"$ckptRoot/${ckptKey(e.file)}", effectiveCfg(e, cfg), transport)
-    }
+    entries.flatMap(start(_, spark, sourceDir, ckptRoot,
+      ServedPipeline.Live(cfg, transport)))
 }

@@ -31,18 +31,14 @@ import scala.collection.mutable
   * Driver-side control loop only — the data path stays the streaming
   * queries'; the watcher never touches rows.
   *
-  * ALL registry kinds live under one watcher: `"kind": "lww"` confs
-  * drive single-query CdcPipelines, `"kind": "view"` confs the
-  * three-query ViewPipeline lineage (two log replays + the join/serving
-  * stage), `"kind": "ann"` confs the two-query AnnServingPipeline
-  * (delta log + posting index/serving), `"kind": "dedup"` confs the
-  * three-query DedupClusterPipeline (doc log, LSH pair stage,
-  * cluster/serving). The lifecycle contract is
-  * identical — add starts, change stops-rebuilds-restarts against the
-  * SAME work dir (every stage's checkpoint resumes, so no event is
-  * re-served beyond the idempotent keyed-apply contract), delete stops
-  * all of a pipeline's queries and preserves its checkpoints for a
-  * later restore.
+  * ALL registry kinds live under one watcher, through one lifecycle
+  * ([[ServedPipeline]]): add starts a conf's queries (one for lww,
+  * three for view and dedup, two for ann and search), change
+  * stops-rebuilds-restarts them against the SAME work dir (every
+  * stage's checkpoint resumes, so no event is re-served beyond the
+  * idempotent keyed-apply contract) — an edited `"kind"` included —
+  * and delete stops all of a pipeline's queries and preserves its
+  * checkpoints for a later restore.
   */
 final class PipelineWatcher(
     spark: SparkSession, confDir: String, sourceDir: String, ckptRoot: String,
@@ -54,193 +50,70 @@ final class PipelineWatcher(
     maintainMaxBatches: Int = 64,
     maintainRetentionMs: Long = 24L * 3600 * 1000) {
 
-  private val entries = mutable.Map.empty[String, PipelineRegistry.Entry]
   // Keyed by CONF FILE — the unit of reload — not pipeline name: a conf
-  // that renames its pipeline must still stop the query it previously
+  // that renames its pipeline must still stop the queries it previously
   // started, and two confs that (mis)share a name must not clobber each
-  // other's handle (an unreachable handle is an unstoppable query).
-  private val queries = mutable.Map.empty[String, StreamingQuery]
-  private val viewEntries = mutable.Map.empty[String, PipelineRegistry.ViewEntry]
-  private val viewQueries = mutable.Map.empty[String, Seq[StreamingQuery]]
-  private val annEntries = mutable.Map.empty[String, PipelineRegistry.AnnEntry]
-  private val annQueries = mutable.Map.empty[String, Seq[StreamingQuery]]
-  private val dedupEntries =
-    mutable.Map.empty[String, PipelineRegistry.DedupEntry]
-  private val dedupQueries = mutable.Map.empty[String, Seq[StreamingQuery]]
-  private val searchEntries =
-    mutable.Map.empty[String, PipelineRegistry.SearchEntry]
-  private val searchQueries = mutable.Map.empty[String, Seq[StreamingQuery]]
+  // other's handles (an unreachable handle is an unstoppable query).
+  private val pipelines =
+    mutable.Map.empty[String, (PipelineRegistry.Entry, Seq[StreamingQuery])]
   @volatile private var running = false
   private var loop: Thread = _
   // maintenance clock starts at construction: the first pass waits a
   // full interval instead of racing the boot
   private var lastMaintainMs = System.currentTimeMillis()
 
+  private val live = ServedPipeline.Live(cfg, transport,
+    viewTriggerInterval, lwwTrigger)
+
   private def workDir(file: String): String =
     s"$ckptRoot/${PipelineRegistry.ckptKey(file)}"
 
-  private def startLww(e: PipelineRegistry.Entry): StreamingQuery = {
-    val q = e.pipeline.startDsv2(spark, sourceDir, workDir(e.file),
-      PipelineRegistry.effectiveCfg(e, cfg), transport, lwwTrigger)
-    entries(e.file) = e
-    queries(e.file) = q
-    q
-  }
+  private def stopAll(qs: Seq[StreamingQuery]): Unit =
+    qs.foreach(q => if (q.isActive) q.stop())
 
-  private def startView(e: PipelineRegistry.ViewEntry): Seq[StreamingQuery] = {
-    val qs = e.pipeline.start(spark, sourceDir, workDir(e.file),
-      interval = viewTriggerInterval, esTransport = transport)
-    viewEntries(e.file) = e
-    viewQueries(e.file) = qs
+  private def start(e: PipelineRegistry.Entry): Seq[StreamingQuery] = {
+    val qs = PipelineRegistry.start(e, spark, sourceDir, ckptRoot, live)
+    pipelines(e.file) = (e, qs)
     qs
   }
 
-  private def startAnn(e: PipelineRegistry.AnnEntry): Seq[StreamingQuery] = {
-    val qs = e.pipeline.start(spark, sourceDir, workDir(e.file),
-      interval = viewTriggerInterval, esTransport = transport)
-    annEntries(e.file) = e
-    annQueries(e.file) = qs
-    qs
-  }
-
-  private def startDedup(e: PipelineRegistry.DedupEntry): Seq[StreamingQuery] = {
-    val qs = e.pipeline.start(spark, sourceDir, workDir(e.file),
-      interval = viewTriggerInterval, esTransport = transport)
-    dedupEntries(e.file) = e
-    dedupQueries(e.file) = qs
-    qs
-  }
-
-  private def startSearch(e: PipelineRegistry.SearchEntry): Seq[StreamingQuery] = {
-    val qs = e.pipeline.start(spark, sourceDir, workDir(e.file),
-      interval = viewTriggerInterval)
-    searchEntries(e.file) = e
-    searchQueries(e.file) = qs
-    qs
-  }
-
-  /** Initial discovery + start of every registered pipeline of BOTH
-    * kinds (the boot half; [[PipelineRegistry.startAll]] semantics,
-    * tracked for reload). Returns every started query — one per LWW
-    * conf, three per view conf.
+  /** Initial discovery + start of every registered pipeline, every kind
+    * (the boot half, fail-fast; tracked for reload). Returns every
+    * started query.
     */
   def startPipelines(): Seq[StreamingQuery] = synchronized {
-    PipelineRegistry.load(confDir).map(startLww) ++
-      PipelineRegistry.loadViews(confDir).flatMap(startView) ++
-      PipelineRegistry.loadAnn(confDir).flatMap(startAnn) ++
-      PipelineRegistry.loadDedup(confDir).flatMap(startDedup) ++
-      PipelineRegistry.loadSearch(confDir).flatMap(startSearch)
+    PipelineRegistry.load(confDir).flatMap(start)
   }
 
   /** One detection/reload cycle; returns the names of pipelines that
-    * were (re)started. Deleted confs DEREGISTER: their query stops and
-    * leaves the control maps (the checkpoint stays on disk, so a
-    * restored conf resumes from its cursor). Exposed so tests drive
-    * the reload deterministically — the background loop just calls
-    * this on a timer.
+    * were (re)started. Deleted confs DEREGISTER: their queries stop and
+    * leave the control map (the checkpoints stay on disk, so a restored
+    * conf resumes from its cursor). A changed conf that no longer
+    * parses is quarantined and its pipeline keeps running on the last
+    * good conf. Exposed so tests drive the reload deterministically —
+    * the background loop just calls this on a timer.
     */
   def pollOnce(): Seq[String] = synchronized {
-    // ALL removals first — including files whose edited `kind` re-homed
-    // them to another lifecycle (removedOfKind): the old-kind queries
-    // must be stopped before the new-kind scan below starts the file's
-    // new pipeline against the same work dir
-    PipelineRegistry.removedSince(entries.values.toSeq, confDir).foreach { f =>
-      queries.remove(f).foreach(q => if (q.isActive) q.stop())
-      entries.remove(f)
+    def known = pipelines.values.map(_._1).toSeq
+    PipelineRegistry.removedSince(known)
+      .foreach(f => pipelines.remove(f).foreach(r => stopAll(r._2)))
+    // the old queries (whatever their kind) stop before the reloaded
+    // conf's start against the same work dir
+    val changed = PipelineRegistry.changedSince(known, confDir)
+    val restarted = PipelineRegistry.reload(changed).map { e =>
+      pipelines.get(e.file).foreach(r => stopAll(r._2))
+      start(e)
+      e.pipeline.name
     }
-    PipelineRegistry.removedViewsSince(viewEntries.values.toSeq, confDir)
-      .foreach { f =>
-        viewQueries.remove(f).foreach(_.foreach(q => if (q.isActive) q.stop()))
-        viewEntries.remove(f)
-      }
-    PipelineRegistry.removedAnnSince(annEntries.values.toSeq, confDir)
-      .foreach { f =>
-        annQueries.remove(f).foreach(_.foreach(q => if (q.isActive) q.stop()))
-        annEntries.remove(f)
-      }
-    PipelineRegistry.removedDedupSince(dedupEntries.values.toSeq, confDir)
-      .foreach { f =>
-        dedupQueries.remove(f).foreach(_.foreach(q => if (q.isActive) q.stop()))
-        dedupEntries.remove(f)
-      }
-    PipelineRegistry.removedSearchSince(searchEntries.values.toSeq, confDir)
-      .foreach { f =>
-        searchQueries.remove(f).foreach(_.foreach(q => if (q.isActive) q.stop()))
-        searchEntries.remove(f)
-      }
-    val changed =
-      PipelineRegistry.changedSince(entries.values.toSeq, confDir).toSet
-    val restartedLww =
-      if (changed.isEmpty) Seq.empty
-      else PipelineRegistry.load(confDir, strict = false)
-        .filter(e => changed(e.file)).map { e =>
-        queries.get(e.file).foreach(q => if (q.isActive) q.stop())
-        startLww(e)
-        e.pipeline.name
-      }
-    val changedViews =
-      PipelineRegistry.changedViewsSince(viewEntries.values.toSeq, confDir).toSet
-    val restartedViews =
-      if (changedViews.isEmpty) Seq.empty
-      else PipelineRegistry.loadViews(confDir, strict = false)
-        .filter(e => changedViews(e.file)).map { e =>
-          viewQueries.get(e.file)
-            .foreach(_.foreach(q => if (q.isActive) q.stop()))
-          startView(e)
-          e.pipeline.name
-        }
-    val changedAnn =
-      PipelineRegistry.changedAnnSince(annEntries.values.toSeq, confDir).toSet
-    val restartedAnn =
-      if (changedAnn.isEmpty) Seq.empty
-      else PipelineRegistry.loadAnn(confDir, strict = false)
-        .filter(e => changedAnn(e.file)).map { e =>
-          annQueries.get(e.file)
-            .foreach(_.foreach(q => if (q.isActive) q.stop()))
-          startAnn(e)
-          e.pipeline.name
-        }
-    val changedDedup =
-      PipelineRegistry.changedDedupSince(dedupEntries.values.toSeq, confDir).toSet
-    val restartedDedup =
-      if (changedDedup.isEmpty) Seq.empty
-      else PipelineRegistry.loadDedup(confDir, strict = false)
-        .filter(e => changedDedup(e.file)).map { e =>
-          dedupQueries.get(e.file)
-            .foreach(_.foreach(q => if (q.isActive) q.stop()))
-          startDedup(e)
-          e.pipeline.name
-        }
-    val changedSearch =
-      PipelineRegistry.changedSearchSince(searchEntries.values.toSeq, confDir)
-        .toSet
-    val restartedSearch =
-      if (changedSearch.isEmpty) Seq.empty
-      else PipelineRegistry.loadSearch(confDir, strict = false)
-        .filter(e => changedSearch(e.file)).map { e =>
-          searchQueries.get(e.file)
-            .foreach(_.foreach(q => if (q.isActive) q.stop()))
-          startSearch(e)
-          e.pipeline.name
-        }
-    // maintenance tick: schedule an age-triggered retrain for any live
-    // ann pipeline whose quantizer generation has gone stale — the
-    // marker is honored by the index stage at its next batch boundary
-    // (the watcher thread itself never mutates a store)
-    annEntries.values.foreach { e =>
-      e.pipeline.scheduleRetrainIfStale(workDir(e.file))
-      ()
-    }
-    // ...and retire any search conf's grace-kept superseded store
-    // versions whose retireAfterMs window has elapsed since the flip
-    // (sweepSupersededVersions self-heals every crash point and is a
-    // fast no-op when nothing is pending); per-conf failure logs and
-    // the tick continues — maintenance must not take down serving
-    searchEntries.values.foreach { e =>
-      try { e.pipeline.sweepSupersededVersions(spark, workDir(e.file)); () }
+    // per-kind maintenance (ann's age-triggered retrain marker, search's
+    // grace-kept version sweep): the watcher thread never mutates a
+    // store itself, and a per-conf failure logs and the tick continues —
+    // maintenance must not take down serving
+    pipelines.values.foreach { case (e, _) =>
+      try e.pipeline.tick(spark, workDir(e.file))
       catch {
         case ex: Exception => System.err.println(
-          s"[PipelineWatcher] superseded-version sweep failed for " +
+          s"[PipelineWatcher] maintenance tick failed for " +
             s"${e.pipeline.name}: ${ex.getMessage}")
       }
     }
@@ -267,17 +140,8 @@ final class PipelineWatcher(
         // ([[PipelineMetrics.retireAgedDeadLetters]]): never-replayed
         // quarantines and warn-only drift letters age out only where a
         // conf opted in — per-conf failure logs and the tick continues
-        val dlTargets: Iterable[(String, Option[String], Long)] =
-          entries.values.map(e => (e.pipeline.name,
-            e.pipeline.deadLetterDir, e.pipeline.deadLetterRetentionMs)) ++
-          viewEntries.values.map(e => (e.pipeline.name,
-            e.pipeline.deadLetterDir, e.pipeline.deadLetterRetentionMs)) ++
-          annEntries.values.map(e => (e.pipeline.name,
-            e.pipeline.deadLetterDir, e.pipeline.deadLetterRetentionMs)) ++
-          dedupEntries.values.map(e => (e.pipeline.name,
-            e.pipeline.deadLetterDir, e.pipeline.deadLetterRetentionMs)) ++
-          searchEntries.values.map(e => (e.pipeline.name,
-            e.pipeline.deadLetterDir, e.pipeline.deadLetterRetentionMs))
+        val dlTargets = pipelines.values.map(_._1.pipeline).map(p =>
+          (p.name, p.deadLetterDir, p.deadLetterRetentionMs))
         // root sink files interleave pipelines row-wise, so they may
         // age only where EVERY conf sharing the dir opted into a
         // retention — a keep-forever neighbor vetoes the sweep — and
@@ -310,8 +174,7 @@ final class PipelineWatcher(
         }
       }
     }
-    restartedLww ++ restartedViews ++ restartedAnn ++ restartedDedup ++
-      restartedSearch
+    restarted
   }
 
   /** Spawn the daemon polling loop (the WatchFile thread). */
@@ -335,56 +198,18 @@ final class PipelineWatcher(
     this
   }
 
-  /** Stop watching and stop every active query (both kinds). */
+  /** Stop running and stop every active query, every kind. */
   def stop(): Unit = {
     running = false
     if (loop != null) { loop.interrupt(); loop.join(5000) }
-    synchronized {
-      queries.values.foreach(q => if (q.isActive) q.stop())
-      viewQueries.values.foreach(_.foreach(q => if (q.isActive) q.stop()))
-      annQueries.values.foreach(_.foreach(q => if (q.isActive) q.stop()))
-      dedupQueries.values.foreach(_.foreach(q => if (q.isActive) q.stop()))
-      searchQueries.values.foreach(_.foreach(q => if (q.isActive) q.stop()))
-    }
+    synchronized { pipelines.values.foreach(r => stopAll(r._2)) }
   }
 
-  /** Active query per pipeline name (tests / operational visibility —
-    * the control map stays conf-file-keyed; this is the display view).
+  /** Active queries per pipeline name, every kind (tests / operational
+    * visibility — the control map stays conf-file-keyed; this is the
+    * display view).
     */
-  def activeQueries: Map[String, StreamingQuery] = synchronized {
-    entries.values.flatMap(e =>
-      queries.get(e.file).map(q => e.pipeline.name -> q)).toMap
-  }
-
-  /** Active query set per VIEW pipeline name (three queries per live
-    * view: fact log, dim log, join/serving).
-    */
-  def activeViewQueries: Map[String, Seq[StreamingQuery]] = synchronized {
-    viewEntries.values.flatMap(e =>
-      viewQueries.get(e.file).map(qs => e.pipeline.name -> qs)).toMap
-  }
-
-  /** Active query set per ANN pipeline name (two queries per live
-    * pipeline: delta log, posting index/serving).
-    */
-  def activeAnnQueries: Map[String, Seq[StreamingQuery]] = synchronized {
-    annEntries.values.flatMap(e =>
-      annQueries.get(e.file).map(qs => e.pipeline.name -> qs)).toMap
-  }
-
-  /** Active query set per DEDUP pipeline name (three queries per live
-    * pipeline: doc log, LSH pair stage, cluster/serving).
-    */
-  def activeDedupQueries: Map[String, Seq[StreamingQuery]] = synchronized {
-    dedupEntries.values.flatMap(e =>
-      dedupQueries.get(e.file).map(qs => e.pipeline.name -> qs)).toMap
-  }
-
-  /** Active query set per SEARCH pipeline name (two queries per live
-    * pipeline: doc log, posting/length index serving).
-    */
-  def activeSearchQueries: Map[String, Seq[StreamingQuery]] = synchronized {
-    searchEntries.values.flatMap(e =>
-      searchQueries.get(e.file).map(qs => e.pipeline.name -> qs)).toMap
+  def activeQueries: Map[String, Seq[StreamingQuery]] = synchronized {
+    pipelines.values.map { case (e, qs) => e.pipeline.name -> qs }.toMap
   }
 }

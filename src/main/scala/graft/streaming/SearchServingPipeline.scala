@@ -60,7 +60,9 @@ final case class SearchServingPipeline(
     driftCheck: Boolean = false,
     driftPolicy: Option[CdcPipeline.DriftPolicy] = None,
     deadLetterRetentionMs: Long = 0L,
-    retireAfterMs: Long = 0L) {
+    retireAfterMs: Long = 0L) extends TableLogPipeline {
+
+  def kind: String = "search"
 
   require(deadLetterRetentionMs == 0L || deadLetterDir.isDefined,
     s"search $name: deadLetterRetentionMs needs a deadLetterDir")
@@ -514,7 +516,7 @@ final case class SearchServingPipeline(
     val retired = deadLetterDir.fold(0L)(dir =>
       PipelineMetrics.retireDeadLetterSubtrees(spark, dir, name))
     // 4. re-drive the full feed through the fixed conf's normal path
-    driveOnce(spark, feedDir, workRoot)
+    ServedPipeline.drain(stagesAt(spark, feedDir, workRoot))
     retired
   }
 
@@ -611,7 +613,7 @@ final case class SearchServingPipeline(
     //    exists, so it binds the _v<N> names directly
     val twin = copy(postingsTable = newPt, lensTable = newLt,
       deadLetterDir = stagingDl)
-    twin.driveOnce(spark, feedDir, newWr)
+    ServedPipeline.drain(twin.stagesAt(spark, feedDir, newWr))
     // 3. the build succeeded: retire the old quarantine and adopt the
     //    staged one (kind markers travel with the rename)
     val retired = stagingDl.fold(0L) { staged =>
@@ -658,38 +660,30 @@ final case class SearchServingPipeline(
       queryTokens, k1, b)
   }
 
-  /** Drain the feed's current contents through both stages; incremental
-    * across calls (durable checkpoints). Resolves the CURRENT store
-    * version first, so after an online rebuild the same conf continues
-    * into the new version's tables from the build's checkpoints.
+  /** Gate + table log, then the index stage, at the CURRENT store
+    * version (resolved here): after an online rebuild the same conf
+    * continues into the new version's tables from the build's
+    * checkpoints, and a live restart picks up a flipped pointer.
     */
-  def runOnce(spark: SparkSession, feedDir: String, workRoot: String): Unit = {
+  protected def stages(spark: SparkSession, feedDir: String,
+      workRoot: String, esTransport: graft.sinks.EsSink.Transport)
+      : Seq[Trigger => StreamingQuery] = {
     val (p, wr) = atCurrent(workRoot)
-    p.driveOnce(spark, feedDir, wr)
+    p.stagesAt(spark, feedDir, wr)
   }
 
-  private def driveOnce(spark: SparkSession, feedDir: String,
-      workRoot: String): Unit = {
+  private def stagesAt(spark: SparkSession, feedDir: String,
+      workRoot: String): Seq[Trigger => StreamingQuery] = {
     clearStaleProgressIfFresh(workRoot)
-    driftGate.ingestOnce(spark, feedDir, tableLog(workRoot))
-    indexQuery(spark, workRoot, Trigger.AvailableNow()).awaitTermination()
+    driftGate.stages(spark, feedDir, tableLog(workRoot)) :+
+      ((t: Trigger) => indexQuery(spark, workRoot, t))
   }
 
-  /** Live deployment: both stages on a processing-time trigger, at the
-    * CURRENT store version (resolved at start — the normal restart-
-    * from-checkpoint upgrade picks up a flipped pointer).
+  /** Retires grace-kept superseded store versions once `retireAfterMs`
+    * has elapsed since the flip ([[sweepSupersededVersions]] self-heals
+    * every crash point and is a fast no-op when nothing is pending).
     */
-  def start(spark: SparkSession, feedDir: String, workRoot: String,
-      interval: String = "500 milliseconds"): Seq[StreamingQuery] = {
-    val (p, wr) = atCurrent(workRoot)
-    p.startQueries(spark, feedDir, wr, interval)
-  }
-
-  private def startQueries(spark: SparkSession, feedDir: String,
-      workRoot: String, interval: String): Seq[StreamingQuery] = {
-    val t = Trigger.ProcessingTime(interval)
-    clearStaleProgressIfFresh(workRoot)
-    driftGate.startIngest(spark, feedDir, tableLog(workRoot), t) :+
-      indexQuery(spark, workRoot, t)
+  override def tick(spark: SparkSession, workRoot: String): Unit = {
+    sweepSupersededVersions(spark, workRoot); ()
   }
 }

@@ -74,7 +74,9 @@ final case class ViewPipeline(
     driftPolicy: Option[CdcPipeline.DriftPolicy] = None,
     factDriftPolicy: Option[CdcPipeline.DriftPolicy] = None,
     dimDriftPolicy: Option[CdcPipeline.DriftPolicy] = None,
-    deadLetterRetentionMs: Long = 0L) {
+    deadLetterRetentionMs: Long = 0L) extends TableLogPipeline {
+
+  def kind: String = "view"
 
   graft.ops.Profile.requireEnforceable("view", name, expectations,
     metrics, deadLetterDir)
@@ -152,7 +154,7 @@ final case class ViewPipeline(
     s"${logBase(workRoot, side)}/log"
   private def ckptDir(workRoot: String, stage: String) = s"$workRoot/ckpt_$stage"
 
-  /** A side's table-log stage layout ([[DriftGate.ingestOnce]]) — the
+  /** A side's table-log stage layout ([[DriftGate.stages]]) — the
     * SIDE'S OWN gate decides the source, never the other side's.
     */
   private def sideLog(workRoot: String, side: String) = DriftGate.TableLog(
@@ -360,67 +362,32 @@ final case class ViewPipeline(
       }
     }
 
-  /** Run every stage to completion over the feed's CURRENT contents.
-    * Safe to call repeatedly; each call processes only data that arrived
-    * since the last one (durable checkpoints at every stage).
+  /** The three-stage lineage in drain order: each side's gate + table
+    * log, then the join/serving stage. Both side logs are seeded before
+    * the join stage starts, and the join stage reads them with a STATIC
+    * schema ([[ViewPipeline.LogSchema]]), so a side with no events yet
+    * contributes an empty stream: a live leftOuter view serves
+    * null-enriched facts from the first fact batch instead of waiting
+    * for the first dim row ever.
     */
-  def runOnce(spark: SparkSession, feedDir: String, workRoot: String,
-      esTransport: graft.sinks.EsSink.Transport =
-        new graft.sinks.EsSink.HttpTransport): Unit = {
-    factGate.ingestOnce(spark, feedDir, sideLog(workRoot, "fact"))
-    dimGate.ingestOnce(spark, feedDir, sideLog(workRoot, "dim"))
-    viewQuery(spark, workRoot, Trigger.AvailableNow(), esTransport)
-      .awaitTermination()
-    // every log batch is now consumed — the drained-join precondition
-    compactSideLogs(spark, workRoot)
-  }
+  protected def stages(spark: SparkSession, feedDir: String,
+      workRoot: String, esTransport: graft.sinks.EsSink.Transport)
+      : Seq[Trigger => StreamingQuery] =
+    factGate.stages(spark, feedDir, sideLog(workRoot, "fact")) ++
+      dimGate.stages(spark, feedDir, sideLog(workRoot, "dim")) :+
+      ((t: Trigger) => viewQuery(spark, workRoot, t, esTransport))
 
-  /** RE-DRIVE this view's expectation-dropped keys through the fixed
-    * conf — the non-LWW half of the quarantine lifecycle
-    * ([[PipelineMetrics.replayKeyedExpectDeadLetters]]): a view dead
-    * letter is the DERIVED enriched serving row, so it cannot re-enter
-    * the feed as wire. Instead each dead letter is resolved to its
-    * originating FACT key, the key's CURRENT raw fact row is read from
-    * the fact table log ([[tableState]] — the LWW fold of the bronze
-    * feed, the durable source of record) and re-injected as an ordinary
-    * fact wire event at the epoch. The running pipeline's normal path
-    * re-LWWs it (epoch wins), the join stage re-enriches against the
-    * CURRENT dim state, the (fixed) expectations re-judge, and the
-    * serving store converges to the never-dropped view. A fact key
-    * deleted upstream since the drop resolves to nothing — its dead
-    * letters retire without resurrecting the key. Returns the number of
-    * wire rows re-injected.
-    */
-  def replayExpectDeadLetters(spark: SparkSession, workRoot: String,
-      feedDir: String, db: String, tsMs: Long,
-      batchIds: Seq[Long] = Nil): Long = {
-    require(deadLetterDir.isDefined,
-      s"view $name: replay needs the conf-declared deadLetterDir")
-    PipelineMetrics.replayKeyedExpectDeadLetters(spark, deadLetterDir.get,
-      name, "view", factIdField, tableState(spark, workRoot, "fact"),
-      db, factTable, feedDir, tsMs, batchIds)
-  }
+  /** Every log batch is now consumed — the drained-join precondition. */
+  override protected def afterDrain(spark: SparkSession,
+      workRoot: String): Unit = compactSideLogs(spark, workRoot)
 
-  /** LIVE deployment: the same three stages as long-running queries on
-    * a processing-time trigger — new feed files flow through to the
-    * serving table continuously. Both side logs are seeded before the
-    * join stage starts ([[DriftGate.startIngest]]), and the join stage
-    * reads them with a STATIC schema ([[ViewPipeline.LogSchema]]), so
-    * a side with no events yet contributes an empty stream: a leftOuter
-    * view serves null-enriched facts from the first fact batch instead
-    * of waiting for the first dim row ever. Stop the
-    * returned queries to shut down; checkpoints make a later [[start]]
-    * or [[runOnce]] resume exactly where serving stopped.
+  /** A view dead letter is the DERIVED enriched serving row: it replays
+    * by its originating FACT key against the fact table log, and the
+    * join stage re-enriches against the CURRENT dim state.
     */
-  def start(spark: SparkSession, feedDir: String, workRoot: String,
-      interval: String = "500 milliseconds",
-      esTransport: graft.sinks.EsSink.Transport =
-        new graft.sinks.EsSink.HttpTransport): Seq[StreamingQuery] = {
-    val t = Trigger.ProcessingTime(interval)
-    factGate.startIngest(spark, feedDir, sideLog(workRoot, "fact"), t) ++
-      dimGate.startIngest(spark, feedDir, sideLog(workRoot, "dim"), t) :+
-      viewQuery(spark, workRoot, t, esTransport)
-  }
+  override protected def keyedReplay: Option[ServedPipeline.KeyedReplay] =
+    Some(ServedPipeline.KeyedReplay(factIdField, factTable,
+      tableState(_, _, "fact")))
 }
 
 /** Where a view pipeline serves its enriched rows — the conf's sink

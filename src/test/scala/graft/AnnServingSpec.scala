@@ -550,7 +550,7 @@ class AnnServingSpec extends SparkSpec {
            |"jdbc":{"url":"$url","postingsTable":"postings3"}}"""
           .stripMargin.replace("\n", "")).asJava)
       assert(watcher.pollOnce() == Seq("vecs"))
-      assert(watcher.activeAnnQueries("vecs").size == 2)
+      assert(watcher.activeQueries("vecs").size == 2)
       def served(): Map[Long, Int] =
         spark.read.jdbc(url, "postings3", new java.util.Properties())
           .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
@@ -559,10 +559,10 @@ class AnnServingSpec extends SparkSpec {
         Thread.sleep(200)
       assert(served() == Map(0L -> 0, 1L -> 1), "conf-declared ANN must serve")
 
-      val live = watcher.activeAnnQueries("vecs")
+      val live = watcher.activeQueries("vecs")
       assert(conf.delete())
       assert(watcher.pollOnce().isEmpty)
-      assert(live.forall(!_.isActive) && watcher.activeAnnQueries.isEmpty)
+      assert(live.forall(!_.isActive) && watcher.activeQueries.isEmpty)
       val workDir = s"$ckptRoot/${PipelineRegistry.ckptKey(conf.getAbsolutePath)}"
       assert(new java.io.File(s"$workDir/ckpt_index").exists()
         && new java.io.File(s"$workDir/quantizer/CURRENT").exists(),

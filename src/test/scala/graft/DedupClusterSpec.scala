@@ -353,7 +353,7 @@ class DedupClusterSpec extends SparkSpec {
            |"jdbc":{"url":"$url","clustersTable":"clusters2"}}"""
           .stripMargin.replace("\n", "")).asJava)
       assert(watcher.pollOnce() == Seq("docs"))
-      assert(watcher.activeDedupQueries("docs").size == 3)
+      assert(watcher.activeQueries("docs").size == 3)
       def served(): Map[Long, Long] =
         spark.read.jdbc(url, "clusters2", new java.util.Properties())
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -362,10 +362,10 @@ class DedupClusterSpec extends SparkSpec {
         Thread.sleep(200)
       assert(served() == Map(1L -> 1L, 2L -> 1L), "conf-declared dedup must serve")
 
-      val live = watcher.activeDedupQueries("docs")
+      val live = watcher.activeQueries("docs")
       assert(conf.delete())
       assert(watcher.pollOnce().isEmpty)
-      assert(live.forall(!_.isActive) && watcher.activeDedupQueries.isEmpty)
+      assert(live.forall(!_.isActive) && watcher.activeQueries.isEmpty)
       val workDir = s"$ckptRoot/${PipelineRegistry.ckptKey(conf.getAbsolutePath)}"
       assert(new java.io.File(s"$workDir/ckpt_clusters").exists()
         && new java.io.File(s"$workDir/state_labels/log").exists(),

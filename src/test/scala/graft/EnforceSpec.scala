@@ -298,8 +298,8 @@ class EnforceSpec extends SparkSpec {
          |{"rule":"in_range","name":"r","column":"doc_id","lo":0,"hi":9,
          |"action":"halt"},
          |{"rule":"unique","name":"u","column":"doc_id"}]}""")
-    val loaded = PipelineRegistry.load(good.toString)
-    val acts = loaded.head.pipeline.expectations.map(r => r.name -> r.action).toMap
+    val loaded = registered[CdcPipeline](good.toString)
+    val acts = loaded.head.expectations.map(r => r.name -> r.action).toMap
     assert(acts == Map("t" -> Profile.Drop, "r" -> Profile.Halt,
       "u" -> Profile.Warn))
     // drop without a deadLetterDir dies at registration
@@ -343,8 +343,8 @@ class EnforceSpec extends SparkSpec {
          |"expectations":[{"rule":"ref_integrity","name":"cust_known",
          |"column":"o_custkey",
          |"dim":{"path":"$dimPath","keyColumn":"c_custkey"}}]}""")
-    val loaded = PipelineRegistry.load(good.toString)
-    val rule = loaded.head.pipeline.expectations.head
+    val loaded = registered[CdcPipeline](good.toString)
+    val rule = loaded.head.expectations.head
       .asInstanceOf[Profile.RefIntegrityPath]
     assert(rule.dimPath == dimPath && rule.dimColumn == "c_custkey")
     // a nonexistent path dies at registration naming file + path
@@ -406,8 +406,8 @@ class EnforceSpec extends SparkSpec {
          |"metrics":{"url":"$url","table":"enf_metrics"},
          |"expectations":[{"rule":"in_range","name":"tok_cap",
          |"column":"n_tok","lo":0,"hi":100}]}""")
-    assert(PipelineRegistry.load(added.toString).head
-      .pipeline.expectations.size == 1)
+    assert(registered[CdcPipeline](added.toString).head
+      .expectations.size == 1)
     // same contract for views: a transform-dropped dim column referenced
     // by an expectation dies at registration
     val vdrop = Files.createTempDirectory("graft_enf_ptview_").toFile
@@ -423,7 +423,7 @@ class EnforceSpec extends SparkSpec {
          |"metrics":{"url":"$url","table":"enf_metrics"},
          |"expectations":[{"rule":"not_null","name":"n","column":"c_name"}]}""")
     val e2 = intercept[IllegalArgumentException](
-      PipelineRegistry.loadViews(vdrop.toString))
+      PipelineRegistry.load(vdrop.toString))
     assert(e2.getMessage.contains("v.json") && e2.getMessage.contains("c_name"),
       s"got: ${e2.getMessage}")
   }
@@ -504,7 +504,7 @@ class EnforceSpec extends SparkSpec {
       writeConf(budget = 1L)
       val restarted = watcher.pollOnce()
       assert(restarted.nonEmpty, "conf edit restarts the quarantined pipeline")
-      watcher.activeQueries.values.foreach(_.awaitTermination())
+      watcher.activeQueries.values.flatten.foreach(_.awaitTermination())
       val sent = EnforceSpec.recorded.asScala.map(r => r.url + "\n" + r.body)
         .mkString
       assert(sent.contains("\"doc_id\":1") && sent.contains("\"doc_id\":2"),
@@ -669,8 +669,8 @@ class EnforceSpec extends SparkSpec {
          |"metrics":{"url":"$url","table":"enf_metrics"},
          |"driftPolicy":{"newColsBudget":2,"badTypeRowsBudget":0,
          |"action":"drop"}}""")
-    val loaded = PipelineRegistry.load(good.toString)
-    val p = loaded.head.pipeline.driftPolicy.get
+    val loaded = registered[CdcPipeline](good.toString)
+    val p = loaded.head.driftPolicy.get
     assert(p.newColsBudget == 2L && p.badTypeRowsBudget == 0L
       && p.action == Profile.Drop)
     val nodl = Files.createTempDirectory("graft_enf_dpnodl_").toFile
@@ -708,8 +708,8 @@ class EnforceSpec extends SparkSpec {
          |"deadLetterDir":"/tmp/graft_enf_dpann_dl",
          |"metrics":{"url":"$url","table":"enf_metrics"},
          |"driftPolicy":{"newColsBudget":0,"action":"drop"}}""")
-    val ann = PipelineRegistry.loadAnn(good.toString)
-    val ap = ann.head.pipeline.driftPolicy.get
+    val ann = registered[AnnServingPipeline](good.toString)
+    val ap = ann.head.driftPolicy.get
     assert(ap.newColsBudget == 0L && ap.action == Profile.Drop)
     conf(good, "v.json",
       s"""{"kind":"view","name":"dpview","databases":["shop"],
@@ -720,7 +720,7 @@ class EnforceSpec extends SparkSpec {
          |"jdbc":{"url":"$url","table":"dp_enr"},
          |"metrics":{"url":"$url","table":"enf_metrics"},
          |"driftCheck":true}""")
-    assert(PipelineRegistry.loadViews(good.toString).head.pipeline.driftCheck)
+    assert(registered[ViewPipeline](good.toString).head.driftCheck)
     // the shared invariant holds on every kind: a monitor without a
     // verdict store is silent monitoring — boot-time refusal (S3)
     val bad = Files.createTempDirectory("graft_enf_dpdd_").toFile
@@ -731,7 +731,7 @@ class EnforceSpec extends SparkSpec {
         |"clustersTable":"dp_cl"},
         |"driftCheck":true}""")
     val e = intercept[IllegalArgumentException](
-      PipelineRegistry.loadDedup(bad.toString))
+      PipelineRegistry.load(bad.toString))
     assert(e.getMessage.contains("d.json")
       && e.getMessage.contains("metrics"), s"got: ${e.getMessage}")
   }
@@ -904,7 +904,7 @@ class EnforceSpec extends SparkSpec {
     val good = Files.createTempDirectory("graft_enf_vside_").toFile
     conf(good, "v.json",
       viewConf(""","deadLetterDir":"/tmp/graft_vside_dl""""))
-    val p = PipelineRegistry.loadViews(good.toString).head.pipeline
+    val p = registered[ViewPipeline](good.toString).head
     assert(p.factDriftPolicy.exists(fp => fp.action == Profile.Drop
       && fp.newColsBudget == 0L))
     assert(p.dimDriftPolicy.exists(_.action == Profile.Warn))
@@ -914,7 +914,7 @@ class EnforceSpec extends SparkSpec {
     val bad = Files.createTempDirectory("graft_enf_vside_bad_").toFile
     conf(bad, "v.json", viewConf(""))
     val e = intercept[IllegalArgumentException](
-      PipelineRegistry.loadViews(bad.toString))
+      PipelineRegistry.load(bad.toString))
     assert(e.getMessage.contains("fact.driftPolicy")
       && e.getMessage.contains("deadLetterDir"), s"got: ${e.getMessage}")
   }

@@ -192,8 +192,8 @@ class MetricsSpec extends SparkSpec {
          |"idKey":"doc_id","schema":"doc_id BIGINT, text STRING",
          |"metrics":{"url":"$url","table":"pipe_metrics"}}"""
         .stripMargin.replace("\n", "")).asJava)
-    val loaded = PipelineRegistry.load(confDir.toString)
-    assert(loaded.head.pipeline.metrics == Some(target))
+    val loaded = registered[CdcPipeline](confDir.toString)
+    assert(loaded.head.metrics == Some(target))
     // bad metrics store → boot fail-fast, naming the conf file
     val badDir = Files.createTempDirectory("graft_mx_badconf_").toFile
     Files.write(new java.io.File(badDir, "bad.json").toPath, Seq(
@@ -365,7 +365,7 @@ class MetricsSpec extends SparkSpec {
          |"expectations":[{"rule":"not_null","name":"e","column":"embedding"}]}"""
         .stripMargin.replace("\n", "")).asJava)
     val e = intercept[IllegalArgumentException](
-      PipelineRegistry.loadAnn(badAnn.toString))
+      PipelineRegistry.load(badAnn.toString))
     assert(e.getMessage.contains("a.json")
       && e.getMessage.contains("embedding"), s"got: ${e.getMessage}")
   }
@@ -414,7 +414,7 @@ class MetricsSpec extends SparkSpec {
          |"idKey":"doc_id","schema":"doc_id BIGINT, text STRING",
          |"metrics":{"url":"$url","table":"pipe_metrics"},
          |"driftCheck":true}""".stripMargin.replace("\n", "")).asJava)
-    assert(PipelineRegistry.load(confDir.toString).head.pipeline.driftCheck)
+    assert(registered[CdcPipeline](confDir.toString).head.driftCheck)
     val bad = Files.createTempDirectory("graft_mx_drift_bad_").toFile
     Files.write(new java.io.File(bad, "b.json").toPath, Seq(
       """{"name":"mdriftb","databases":["shop"],"tables":["documents"],
@@ -592,8 +592,8 @@ class MetricsSpec extends SparkSpec {
          |"schema":"id BIGINT","deadLetterDir":"$dl",
          |"deadLetterRetentionMs":123456}"""
         .stripMargin.replace("\n", "")).asJava)
-    assert(PipelineRegistry.load(confDir.toString)
-      .head.pipeline.deadLetterRetentionMs == 123456L)
+    assert(registered[CdcPipeline](confDir.toString)
+      .head.deadLetterRetentionMs == 123456L)
   }
 
   test("ownership backfill: a pre-marker drift quarantine gains its gate's kind marker at boot, so side-tag retention still works") {
@@ -624,7 +624,11 @@ class MetricsSpec extends SparkSpec {
     val feed = Files.createTempDirectory("graft_dlbf_feed_").toString
     val judged = Files.createTempDirectory("graft_dlbf_judged_").toString
     val ckpt = Files.createTempDirectory("graft_dlbf_ckpt_").toString
-    gate.drainOnce(spark, feed, judged, ckpt)
+    def drainGate(g: DriftGate, judged: String, ckpt: String): Unit =
+      ServedPipeline.drain(g.stages(spark, feed, DriftGate.TableLog(
+        s"log_${g.tag}", s"$judged/table_log", s"$judged/ckpt_log", judged,
+        ckpt)))
+    drainGate(gate, judged, ckpt)
     assert(Files.exists(marker),
       "boot must backfill the owner's kind marker on an unmarked dir")
     // ...and the marker-gated retention sweep can now retire the tag
@@ -640,7 +644,7 @@ class MetricsSpec extends SparkSpec {
     Files.createFile(java.nio.file.Paths.get(
       s"$dl/_drift/pipeline=bf2/_KIND_ann"))
     val gate2 = gate.copy(tag = "bf2")
-    gate2.drainOnce(spark, feed,
+    drainGate(gate2,
       Files.createTempDirectory("graft_dlbf_j2_").toString,
       Files.createTempDirectory("graft_dlbf_c2_").toString)
     assert(!Files.exists(java.nio.file.Paths.get(
@@ -702,8 +706,8 @@ class MetricsSpec extends SparkSpec {
          |"metrics":{"url":"$url","table":"pipe_metrics"},
          |"expectations":[{"rule":"not_null","name":"t","column":"text"},
          |{"rule":"in_range","name":"r","column":"doc_id","lo":0,"hi":9,"budget":2}]}""")
-    val loaded = PipelineRegistry.load(good.toString)
-    assert(loaded.head.pipeline.expectations.size == 2)
+    val loaded = registered[CdcPipeline](good.toString)
+    assert(loaded.head.expectations.size == 2)
     // a typo'd column dies at REGISTRATION naming file + column
     val typo = Files.createTempDirectory("graft_exp_typo_").toFile
     conf(typo, "typo.json",

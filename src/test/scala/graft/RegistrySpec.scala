@@ -22,7 +22,8 @@ class RegistrySpec extends SparkSpec {
 
     val entries = PipelineRegistry.load(confDir.toString)
     assert(entries.map(_.pipeline.name) == Seq("t1", "t2"))
-    assert(entries.head.pipeline.subscription.tables == Set("t"))
+    assert(registered[graft.streaming.CdcPipeline](confDir.toString)
+      .head.subscription.tables == Set("t"))
 
     // one shared feed with events for both tables; each pipeline only
     // sinks its own slice (R11 fan-out + R3 routing, DSv2 pushdown)
@@ -157,7 +158,7 @@ class RegistrySpec extends SparkSpec {
         |"transform":{"set":[{"field":"amt","expr":"amt * missing_col"}]}}"""
         .stripMargin.replace("\n", "")).asJava)
     val vErr = intercept[IllegalArgumentException](
-      PipelineRegistry.loadViews(vDir.toString))
+      PipelineRegistry.load(vDir.toString))
     assert(vErr.getMessage.contains("vw.json")
         && vErr.getMessage.contains("'amt'"), s"got: ${vErr.getMessage}")
   }
@@ -180,39 +181,37 @@ class RegistrySpec extends SparkSpec {
     // no phantom removal)
     assert(PipelineRegistry.load(confDir.toString, strict = false)
       .map(_.pipeline.name) == Seq("g"))
-    assert(PipelineRegistry.changedSince(entries, confDir.toString).isEmpty)
-    assert(PipelineRegistry.removedSince(entries, confDir.toString).isEmpty)
+    def reloaded() = PipelineRegistry.reload(
+      PipelineRegistry.changedSince(entries, confDir.toString))
+    assert(reloaded().isEmpty)
+    assert(PipelineRegistry.removedSince(entries).isEmpty)
 
     // unreadable JSON on a KNOWN conf likewise quarantines: the running
     // pipeline keeps its last good conf — neither removed nor restarted
     val before = good.lastModified()
     Files.write(good.toPath, Seq("""{not json""").asJava)
     good.setLastModified(before) // mtime-neutral: isolate the parse path
-    assert(PipelineRegistry.changedSince(entries, confDir.toString).isEmpty)
-    assert(PipelineRegistry.removedSince(entries, confDir.toString).isEmpty)
+    assert(reloaded().isEmpty)
+    assert(PipelineRegistry.removedSince(entries).isEmpty)
 
-    // an edited `kind` RE-HOMES the conf: it leaves the lww lifecycle
-    // (old queries must stop — the leak this guards against) and joins
-    // the dedup one as a new file
+    // an edited `kind` RE-HOMES the conf: the reload rebuilds it as the
+    // dedup kind (the watcher stops the lww queries first — the leak
+    // this guards against) and it is not a deletion
     Files.write(good.toPath, Seq(
       """{"kind":"dedup","name":"g","table":"documents","idKey":"doc_id",
         |"textField":"text","jdbc":{"url":"u","clustersTable":"t"}}"""
         .stripMargin.replace("\n", "")).asJava)
-    assert(PipelineRegistry.removedSince(entries, confDir.toString)
-      == Seq(good.getAbsolutePath))
-    assert(PipelineRegistry.changedDedupSince(Seq.empty, confDir.toString)
-      == Seq(good.getAbsolutePath))
+    good.setLastModified(before + 5000)
+    assert(reloaded().map(e => e.file -> e.pipeline.kind)
+      == Seq(good.getAbsolutePath -> "dedup"))
+    assert(PipelineRegistry.removedSince(entries).isEmpty)
 
-    // kind-cache hygiene: entries for files DELETED from a scanned dir
-    // are evicted by the next scan — a long-lived watcher process must
-    // not accumulate dead paths forever
-    def cachedHere(): Set[String] = PipelineRegistry.kindCacheKeys
-      .filter(_.startsWith(confDir.getAbsolutePath))
-    assert(cachedHere().nonEmpty, "scans above must have populated the cache")
+    // deleted conf files leave the lifecycle: the next scan reports them
+    // removed and flags nothing else
     assert(bad.delete() && good.delete())
-    PipelineRegistry.changedSince(Seq.empty, confDir.toString) // any kind-scoped scan
-    assert(cachedHere().isEmpty,
-      s"deleted conf files must leave the kind cache, still held: ${cachedHere()}")
+    assert(PipelineRegistry.removedSince(entries)
+      == Seq(good.getAbsolutePath))
+    assert(PipelineRegistry.changedSince(entries, confDir.toString).isEmpty)
   }
 
   test("PipelineWatcher in-flight reload: conf change restarts from checkpoint, state equals uninterrupted run (S2)") {
@@ -247,7 +246,7 @@ class RegistrySpec extends SparkSpec {
       Files.write(new java.io.File(srcDir, "001.json").toPath, Seq(
         wire("t", 1, "a2", "u", 2, 3), wire("u", 3, "b1", "c", 2, 4)).asJava)
       assert(watcher.pollOnce() == Seq("p"))
-      watcher.activeQueries("p").awaitTermination()
+      watcher.activeQueries("p").foreach(_.awaitTermination())
     } finally watcher.stop()
     val puts = SinkSpec.recorded.asScala.toSeq.filter(_.method == "PUT").map(_.body)
     // file 1 is NOT re-applied after the reload (checkpoint cursor
@@ -292,7 +291,7 @@ class RegistrySpec extends SparkSpec {
       // name-keyed control would have missed the old query (stop() could
       // then never reach it) and kept a stale "old" entry in the view
       assert(watcher.activeQueries.keySet == Set("renamed"))
-      watcher.activeQueries("renamed").awaitTermination()
+      watcher.activeQueries("renamed").foreach(_.awaitTermination())
     } finally watcher.stop()
   }
 
@@ -329,7 +328,7 @@ class RegistrySpec extends SparkSpec {
         Seq(wire(2, "b", 2, 2)).asJava)
       Files.write(conf.toPath, Seq(confJson).asJava)
       assert(watcher.pollOnce() == Seq("p"))
-      watcher.activeQueries("p").awaitTermination()
+      watcher.activeQueries("p").foreach(_.awaitTermination())
     } finally watcher.stop()
     val puts = SinkSpec.recorded.asScala.toSeq.filter(_.method == "PUT").map(_.body)
     assert(puts.sorted == Seq("""{"id":1,"v":"a"}""", """{"id":2,"v":"b"}"""))
@@ -391,14 +390,14 @@ class RegistrySpec extends SparkSpec {
       viewTriggerInterval = "200 milliseconds")
     try {
       // boot over an empty conf dir: nothing runs
-      assert(watcher.startPipelines().isEmpty && watcher.activeViewQueries.isEmpty)
+      assert(watcher.startPipelines().isEmpty && watcher.activeQueries.isEmpty)
 
       // ADD: conf appears → pollOnce starts the three-stage lineage and
       // the view begins serving with no further driver action
       val conf = new java.io.File(confDir, "enr.json")
       Files.write(conf.toPath, Seq(confJson("enr")).asJava)
       assert(watcher.pollOnce() == Seq("enr"))
-      assert(watcher.activeViewQueries("enr").size == 3)
+      assert(watcher.activeQueries("enr").size == 3)
       awaitServing(Map(10L -> "Alice"), "after add")
 
       // settle, then record the fact log's batch partitions — the
@@ -413,12 +412,12 @@ class RegistrySpec extends SparkSpec {
 
       // EDIT: rename the view in the conf → pollOnce stops the three old
       // queries and restarts against the SAME work dir
-      val oldQueries = watcher.activeViewQueries("enr")
+      val oldQueries = watcher.activeQueries("enr")
       Files.write(conf.toPath, Seq(confJson("enr_v2")).asJava)
       conf.setLastModified(conf.lastModified() + 5000)
       assert(watcher.pollOnce() == Seq("enr_v2"))
       assert(oldQueries.forall(!_.isActive), "edit must stop the old queries")
-      assert(watcher.activeViewQueries.keySet == Set("enr_v2"))
+      assert(watcher.activeQueries.keySet == Set("enr_v2"))
 
       // no re-delivery on resume: new feed data flows, and the restarted
       // log stage appends only the NEW batch — pre-edit history untouched
@@ -433,11 +432,11 @@ class RegistrySpec extends SparkSpec {
 
       // DELETE: conf removed → pollOnce stops all three queries;
       // checkpoints stay on disk for a later restore
-      val liveQueries = watcher.activeViewQueries("enr_v2")
+      val liveQueries = watcher.activeQueries("enr_v2")
       assert(conf.delete())
       assert(watcher.pollOnce().isEmpty)
       assert(liveQueries.forall(!_.isActive), "delete must stop the view's queries")
-      assert(watcher.activeViewQueries.isEmpty)
+      assert(watcher.activeQueries.isEmpty)
       assert(new java.io.File(s"$workDir/ckpt_view").exists()
         && new java.io.File(s"$workDir/ckpt_fact").exists(),
         "deregistration preserves checkpoints")
@@ -504,14 +503,13 @@ class RegistrySpec extends SparkSpec {
           "\"textField\":\"text\",\"k1\":1.3"),
         "lww", lww()))
 
-    def activeOf(w: PipelineWatcher, kind: String, name: String): Option[Int] =
-      kind match {
-        case "lww" => w.activeQueries.get(name).map(_ => 1)
-        case "view" => w.activeViewQueries.get(name).map(_.size)
-        case "ann" => w.activeAnnQueries.get(name).map(_.size)
-        case "dedup" => w.activeDedupQueries.get(name).map(_.size)
-        case "search" => w.activeSearchQueries.get(name).map(_.size)
-      }
+    // the running kind shows in its query names (on-disk and
+    // operator-visible, so pinned): cdc_v2_<n>, view_<n>…, ann_<n>…
+    def activeOf(w: PipelineWatcher, kind: String, name: String): Option[Int] = {
+      val prefix = if (kind == "lww") "cdc_" else s"${kind}_"
+      w.activeQueries.get(name).filter(_.forall(_.name.startsWith(prefix)))
+        .map(_.size)
+    }
 
     cases.foreach { kc =>
       val confDir = Files.createTempDirectory(s"graft_mxk_${kc.kind}_conf_").toFile
@@ -543,6 +541,12 @@ class RegistrySpec extends SparkSpec {
         watcher.pollOnce()
         assert(activeOf(watcher, kc.kind, "mx") == Some(kc.nQueries),
           s"${kc.kind}: quarantined edit must keep the pipeline")
+        // ...and so does a kind-edit that leaves the conf invalid: the
+        // last good pipeline keeps running
+        put(s"""{"kind":"${kc.rehomeKind}","name":"mx"}""")
+        watcher.pollOnce()
+        assert(activeOf(watcher, kc.kind, "mx") == Some(kc.nQueries),
+          s"${kc.kind}: an invalid kind-edit must keep the last good pipeline")
         // KIND-EDIT — the file re-homes: old kind's queries stop, the
         // new kind starts against the same work dir
         put(kc.rehomed)
@@ -712,16 +716,16 @@ class RegistrySpec extends SparkSpec {
         .stripMargin.replace("\n", "")
     val f = new java.io.File(dir, "rg.json")
     Files.write(f.toPath, conf(""","retireAfterMs":300000""").getBytes)
-    val e = PipelineRegistry.loadSearch(dir.toString).head
-    assert(e.pipeline.retireAfterMs == 300000L,
+    val e = registered[graft.streaming.SearchServingPipeline](dir.toString).head
+    assert(e.retireAfterMs == 300000L,
       "the grace window must reach the pipeline")
     Files.write(f.toPath, conf("").getBytes)
-    assert(PipelineRegistry.loadSearch(dir.toString)
-      .head.pipeline.retireAfterMs == 0L, "absent = retire at the flip")
+    assert(registered[graft.streaming.SearchServingPipeline](dir.toString)
+      .head.retireAfterMs == 0L, "absent = retire at the flip")
     // fail-loud conf discipline: a "5m" string must not register as
     // "retire immediately"
     Files.write(f.toPath, conf(""","retireAfterMs":"5m"""").getBytes)
-    val err = intercept[Exception](PipelineRegistry.loadSearch(dir.toString))
+    val err = intercept[Exception](PipelineRegistry.load(dir.toString))
     assert(err.getMessage.contains("rg.json")
       && err.getMessage.contains("retireAfterMs"))
   }

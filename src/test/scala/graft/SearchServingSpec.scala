@@ -132,7 +132,7 @@ class SearchServingSpec extends SparkSpec {
            |        "lensTable":"doclens2"}}"""
           .stripMargin.replace("\n", "")).asJava)
       assert(watcher.pollOnce() == Seq("srch2"))
-      assert(watcher.activeSearchQueries("srch2").size == 2)
+      assert(watcher.activeQueries("srch2").size == 2)
       def served(): Set[(String, Long, Long)] =
         spark.read.jdbc(url, "postings2", new java.util.Properties())
           .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
@@ -143,10 +143,10 @@ class SearchServingSpec extends SparkSpec {
       assert(served() == Set(("vector", 1L, 1L), ("stream", 1L, 1L)),
         s"conf-declared search must serve, got ${served()}")
 
-      val live = watcher.activeSearchQueries("srch2")
+      val live = watcher.activeQueries("srch2")
       assert(conf.delete())
       assert(watcher.pollOnce().isEmpty)
-      assert(live.forall(!_.isActive) && watcher.activeSearchQueries.isEmpty)
+      assert(live.forall(!_.isActive) && watcher.activeQueries.isEmpty)
       val workDir = s"$ckptRoot/${PipelineRegistry.ckptKey(conf.getAbsolutePath)}"
       assert(new java.io.File(s"$workDir/ckpt_index").exists(),
         "deregistration preserves checkpoints")
@@ -190,7 +190,7 @@ class SearchServingSpec extends SparkSpec {
       cond
     }
     // LIVE deployment: gate + log + index stages run CONCURRENTLY on a
-    // processing-time trigger — the startIfEnabled path drainOnce never
+    // processing-time trigger — the concurrent path runOnce never
     // exercises
     val strict = pipe(budget = 0L)
     val queries = strict.start(spark, feedDir.toString, workRoot,

@@ -319,8 +319,8 @@ class ServeSpec extends SparkSpec {
     val work = Files.createTempDirectory("graft_srv_rb_work_").toString
     // strict conf (cap 2): doc 5's contributions quarantine
     conf(hi = 2L)
-    val strict = graft.streaming.PipelineRegistry
-      .loadSearch(confDir.toString).head.pipeline
+    val strict = registered[graft.streaming.SearchServingPipeline](
+      confDir.toString).head
     strict.runOnce(spark, feed, work)
     def servedDocs(): Set[Long] = strict.servedPostings(spark)
       .select(col("doc_id")).distinct().collect().map(_.getLong(0)).toSet
@@ -344,8 +344,8 @@ class ServeSpec extends SparkSpec {
     // --online: the zero-downtime variant through the same verb — the
     // next version builds beside, the pointer flips, the old tables
     // retire, and the served surface reads THROUGH the pointer
-    val widened = graft.streaming.PipelineRegistry
-      .loadSearch(confDir.toString).head.pipeline
+    val widened = registered[graft.streaming.SearchServingPipeline](
+      confDir.toString).head
     assert(Serve.runRebuild(spark, Seq("search", confDir.toString, "rb",
       work, feed, "--online")) >= 0L)
     assert(widened.currentVersion() == 1, "the verb must flip the pointer")

@@ -4,14 +4,17 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-/** Keeps three protocols in one place each, by scanning the main
+/** Keeps four protocols in one place each, by scanning the main
   * sources: table-exists handling lives in [[graft.sinks.JdbcSink]]
   * (`createTableIfAbsent` swallows every engine's already-exists state,
   * not just Derby's); the once-per-store drive protocol lives in
   * [[graft.cdc.DeltaLog.buildOnce]] — no query hand-rolls a done marker
   * or an in-JVM memo set; and the graph operators' driver tiers gate
   * and read through [[graft.ops.Bounded.collect]] — no size probe, and
-  * no unbounded collect without a reason on record.
+  * no unbounded collect without a reason on record; and the conf kinds
+  * share one lifecycle ([[graft.streaming.ServedPipeline]]) — no
+  * per-kind loader, scan or query view, and a watcher that names no
+  * pipeline class.
   */
 class SourceScanSpec extends AnyFunSuite {
 
@@ -83,5 +86,21 @@ class SourceScanSpec extends AnyFunSuite {
     val stale = graphReadAllowlist.map(_._1)
       .filterNot(text => reads.exists(_._2.contains(text)))
     assert(stale.isEmpty, s"allowlist entries that match no read: $stale")
+  }
+
+  test("one pipeline lifecycle: no per-kind loaders, scans or query views; the watcher names no pipeline class") {
+    val found = Seq(
+      """\bload(Views|Ann|Dedup|Search)\b""",
+      """\b(changed|removed)(Views|Ann|Dedup|Search)Since\b""",
+      """\bactive(View|Ann|Dedup|Search)Queries\b""")
+      .flatMap(hits(scalaFiles("src/main/scala"), _))
+    assert(found.isEmpty,
+      s"route every kind through PipelineRegistry.load / changedSince / activeQueries: $found")
+    val watcher =
+      Seq(Paths.get("src/main/scala/graft/streaming/PipelineWatcher.scala"))
+    val named = hits(watcher,
+      """\b(CdcPipeline|ViewPipeline|AnnServingPipeline|DedupClusterPipeline|SearchServingPipeline)\b""")
+    assert(named.isEmpty,
+      s"the watcher drives ServedPipeline, never a concrete kind: $named")
   }
 }

@@ -24,6 +24,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }.sum
     finally spark.conf.set(key, prev)
   }
+
+  /** The pipelines of one kind (class) that a conf dir registers. */
+  def registered[P <: graft.streaming.ServedPipeline: scala.reflect.ClassTag](
+      dir: String): Seq[P] =
+    graft.streaming.PipelineRegistry.load(dir).map(_.pipeline)
+      .collect { case p: P => p }
 }
 
 object SparkSpec {

@@ -1,7 +1,7 @@
 package graft
 
 import graft.cdc.IncrementalJoin
-import graft.streaming.PipelineRegistry
+import graft.streaming.{PipelineRegistry, ViewPipeline}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
@@ -12,6 +12,15 @@ import scala.jdk.CollectionConverters._
   * fold the file-stream composition depends on.
   */
 class ViewPipelineSpec extends SparkSpec {
+  /** Drain each registered view once under its conf-file-keyed work dir
+    * (the checkpoint-identity rule of [[PipelineRegistry.ckptKey]]).
+    */
+  private def runViews(entries: Seq[PipelineRegistry.Entry], feedDir: String,
+      workRoot: String, esTransport: graft.sinks.EsSink.Transport =
+        new graft.sinks.EsSink.HttpTransport): Unit =
+    entries.foreach(e => e.pipeline.asInstanceOf[ViewPipeline].runOnce(spark,
+      feedDir, s"$workRoot/${PipelineRegistry.ckptKey(e.file)}", esTransport))
+
   import spark.implicits._
 
   private case class SeqDelta(key: Long, action: String, rowJson: String,
@@ -111,16 +120,17 @@ class ViewPipelineSpec extends SparkSpec {
     Files.write(new java.io.File(confDir, "w.json").toPath, Seq(
       """{"name":"t1","databases":["d"],"tables":["t"],"idKey":"id","schema":"id BIGINT"}""").asJava)
 
-    val views = PipelineRegistry.loadViews(confDir.toString)
-    assert(views.map(_.pipeline.name) == Seq("enr"))
-    val v = views.head.pipeline
+    val views = registered[ViewPipeline](confDir.toString)
+    assert(views.map(_.name) == Seq("enr"))
+    val v = views.head
     assert(v.leftOuter && v.factJoinField == "o_custkey"
       && v.dimTable == "customer")
     assert(v.target == graft.streaming.JdbcTarget("jdbc:derby:memory:x",
       "enriched", Some("c_name VARCHAR(64)")))
     // the LWW loader must not try to build the view conf (it has no
     // idKey/schema at the top level and would fail fast)
-    assert(PipelineRegistry.load(confDir.toString).map(_.pipeline.name) == Seq("t1"))
+    assert(registered[graft.streaming.CdcPipeline](confDir.toString)
+      .map(_.name) == Seq("t1"))
   }
 
   test("watcher lifecycle is kind-scoped: a view conf never busy-loops an LWW watcher") {
@@ -136,23 +146,19 @@ class ViewPipelineSpec extends SparkSpec {
         |"jdbc":{"url":"jdbc:derby:memory:x","table":"t"}}"""
         .stripMargin.replace("\n", "")).asJava)
 
-    val lww = PipelineRegistry.load(confDir.toString)
-    val views = PipelineRegistry.loadViews(confDir.toString)
-    // steady state: NEITHER lifecycle sees phantom changes (the old
-    // unscoped changedSince flagged the view conf to the LWW watcher on
-    // every poll — a permanent busy-reload loop)
-    assert(PipelineRegistry.changedSince(lww, confDir.toString).isEmpty)
-    assert(PipelineRegistry.changedViewsSince(views, confDir.toString).isEmpty)
-    // a view conf edit surfaces ONLY to the view lifecycle
+    val all = PipelineRegistry.load(confDir.toString)
+    assert(all.map(_.pipeline.kind) == Seq("lww", "view"))
+    // steady state: no phantom changes (an unscoped-by-kind scan that
+    // flagged a conf it never admitted would busy-reload it forever)
+    assert(PipelineRegistry.changedSince(all, confDir.toString).isEmpty)
+    // a view conf edit surfaces ONLY that conf
     viewConf.setLastModified(viewConf.lastModified() + 5000)
-    assert(PipelineRegistry.changedSince(lww, confDir.toString).isEmpty)
-    assert(PipelineRegistry.changedViewsSince(views, confDir.toString)
+    assert(PipelineRegistry.changedSince(all, confDir.toString)
       == Seq(viewConf.getAbsolutePath))
-    // removal surfaces to its own lifecycle
+    // removal surfaces only the removed conf
     assert(viewConf.delete())
-    assert(PipelineRegistry.removedViewsSince(views, confDir.toString)
+    assert(PipelineRegistry.removedSince(all)
       == Seq(viewConf.getAbsolutePath))
-    assert(PipelineRegistry.removedSince(lww, confDir.toString).isEmpty)
   }
 
   test("LIVE mode: continuous-trigger pipeline follows feed appends to the serving table") {
@@ -240,8 +246,8 @@ class ViewPipelineSpec extends SparkSpec {
         |                    {"field":"margin","expr":"round(o_total * 0.1, 2)"}]},
         |"es":{"url":"http://es:9200/enriched","username":"u","password":"p"}}"""
         .stripMargin.replace("\n", "")).asJava)
-    val views = PipelineRegistry.loadViews(confDir.toString)
-    assert(views.head.pipeline.target ==
+    val views = PipelineRegistry.load(confDir.toString)
+    assert(views.head.pipeline.asInstanceOf[ViewPipeline].target ==
       graft.streaming.EsTarget("http://es:9200/enriched", "u", "p"))
 
     val feedDir = Files.createTempDirectory("graft_viewes_feed_").toFile
@@ -251,7 +257,7 @@ class ViewPipelineSpec extends SparkSpec {
       wire("orders", """{"o_orderkey":10,"o_custkey":1,"o_total":5.0}""",
         null, "c", 10, 2)).asJava)
     SinkSpec.recorded.clear()
-    PipelineRegistry.runViews(views, spark, feedDir.toString, workRoot,
+    runViews(views, feedDir.toString, workRoot,
       esTransport = new SinkSpec.Recorder)
     val puts = SinkSpec.recorded.asScala.toSeq.filter(r =>
       r.method == "PUT" && !r.url.contains("_graft_progress"))
@@ -269,7 +275,7 @@ class ViewPipelineSpec extends SparkSpec {
       wire("orders", null, """{"o_orderkey":10,"o_custkey":1,"o_total":5.0}""",
         "d", 20, 3)).asJava)
     SinkSpec.recorded.clear()
-    PipelineRegistry.runViews(views, spark, feedDir.toString, workRoot,
+    runViews(views, feedDir.toString, workRoot,
       esTransport = new SinkSpec.Recorder)
     val dels = SinkSpec.recorded.asScala.toSeq.filter(_.method == "DELETE")
     assert(dels.map(_.url) == Seq("http://es:9200/enriched/_doc/10"))
@@ -417,8 +423,8 @@ class ViewPipelineSpec extends SparkSpec {
       wire("orders", o(10, 1, 5.0), null, "c", 10, 3),
       wire("orders", o(11, 3, 7.0), null, "c", 10, 4)).asJava)
 
-    val views = PipelineRegistry.loadViews(confDir.toString)
-    PipelineRegistry.runViews(views, spark, feedDir.toString, workRoot)
+    val views = PipelineRegistry.load(confDir.toString)
+    runViews(views, feedDir.toString, workRoot)
 
     def serving(): Map[Long, (Long, Double, Option[Long], Option[String])] =
       spark.read.jdbc(url, "enriched", new java.util.Properties())
@@ -447,7 +453,7 @@ class ViewPipelineSpec extends SparkSpec {
       wire("orders", o(10, 2, 5.0), o(10, 1, 5.0), "u", 20, 7),
       wire("orders", null, o(11, 3, 7.0), "d", 21, 8)).asJava)
 
-    PipelineRegistry.runViews(views, spark, feedDir.toString, workRoot)
+    runViews(views, feedDir.toString, workRoot)
 
     assert(serving() == Map(
       10L -> ((2L, 5.0, Some(2L), Some("Bob")))),
@@ -457,5 +463,42 @@ class ViewPipelineSpec extends SparkSpec {
       .filter(_.startsWith("batch_id=")).toSet
     assert(batchesBefore.subsetOf(batchesAfter) && batchesAfter.size > batchesBefore.size,
       "run 2 appends new log batches; first-run history is untouched")
+  }
+
+  test("a view conf without databases subscribes to every db: a fact event from db prod serves") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def wire(table: String, after: String, off: Long): String = {
+      val ev = s"""{"payload":{"before":null,"after":$after,""" +
+        s""""source":{"db":"prod","table":"$table","ts_ms":$off},"op":"c","ts_ms":$off}}"""
+      s"""{"value":${mapper.writeValueAsString(ev)},"offset":$off}"""
+    }
+    val url = "jdbc:derby:memory:graftviewanydb;create=true"
+    val c0 = java.sql.DriverManager.getConnection(url)
+    c0.createStatement().execute(
+      """CREATE TABLE enriched ("o_orderkey" BIGINT NOT NULL PRIMARY KEY,
+        | "o_custkey" BIGINT, "c_custkey" BIGINT, "c_name" VARCHAR(64))"""
+        .stripMargin.replace("\n", ""))
+    c0.close()
+    val confDir = Files.createTempDirectory("graft_viewanydb_conf_").toFile
+    Files.write(new java.io.File(confDir, "any.json").toPath, Seq(
+      s"""{"kind":"view","name":"anydb","leftOuter":true,
+         |"fact":{"table":"orders","idKey":"o_orderkey","joinKey":"o_custkey",
+         |        "schema":"o_orderkey BIGINT, o_custkey BIGINT"},
+         |"dim":{"table":"customer","idKey":"c_custkey","joinKey":"c_custkey",
+         |       "schema":"c_custkey BIGINT, c_name STRING"},
+         |"jdbc":{"url":"$url","table":"enriched",
+         |        "stagingColumnTypes":"c_name VARCHAR(64)"}}"""
+        .stripMargin.replace("\n", "")).asJava)
+    val views = PipelineRegistry.load(confDir.toString)
+    assert(views.head.pipeline.databases.isEmpty)
+    val feedDir = Files.createTempDirectory("graft_viewanydb_feed_").toFile
+    Files.write(new java.io.File(feedDir, "000.json").toPath, Seq(
+      wire("customer", """{"c_custkey":1,"c_name":"Alice"}""", 1),
+      wire("orders", """{"o_orderkey":10,"o_custkey":1}""", 2)).asJava)
+    runViews(views, feedDir.toString,
+      Files.createTempDirectory("graft_viewanydb_work_").toString)
+    val served = spark.read.jdbc(url, "enriched", new java.util.Properties())
+      .collect().map(r => r.getLong(0) -> r.getString(3)).toMap
+    assert(served == Map(10L -> "Alice"), s"got $served")
   }
 }
