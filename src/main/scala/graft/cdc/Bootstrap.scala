@@ -34,7 +34,7 @@ object Bootstrap {
     */
   def snapshotEvents(snapshot: DataFrame, db: String, table: String,
       snapshotTsMs: Long = 0L, offsetBase: Long = 0L): DataFrame = {
-    val row = struct(snapshot.columns.map(col): _*)
+    val row = struct(snapshot.columns.toSeq.map(col): _*)
     val rowType = snapshot.select(row).schema.head.dataType
     val payload = struct(
       lit(null).cast(rowType).as("before"),

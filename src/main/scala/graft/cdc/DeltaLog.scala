@@ -491,10 +491,10 @@ object DeltaLog {
     clearTarget(spark, outDir)
     val log = spark.read.parquet(logDir)
     val keys = log.columns.filterNot(c => c == signedCol || c == "batch_id")
-    log.groupBy(keys.map(col): _*)
+    log.groupBy(keys.toSeq.map(col): _*)
       .agg(sum(col(signedCol)).cast("int").as(signedCol))
       .filter(col(signedCol) =!= 0)
-      .select(log.columns.filterNot(_ == "batch_id").map(col): _*)
+      .select(log.columns.toSeq.filterNot(_ == "batch_id").map(col): _*)
       .write.mode("overwrite").parquet(s"$outDir/batch_id=0")
   }
 

@@ -207,11 +207,11 @@ object JsonKeyProbe {
     */
   def topLongField(js: String, key: String, default: Long): Long = {
     if (js == null) return default
-    var i = skipWs(js, 0)
+    val i = skipWs(js, 0)
     if (i >= js.length || js.charAt(i) != '{') return default
     var vStart = valueStartOf(js, i, key)
     if (vStart < 0 || vStart >= js.length) return default
-    var vEnd =
+    val vEnd =
       if (js.charAt(vStart) == '"') { vStart += 1; skipString(js, vStart - 1) - 1 }
       else skipValue(js, vStart)
     if (vEnd <= vStart) return default

@@ -47,7 +47,7 @@ final class QuantileSketchAgg(capacity: Int)
     * minimum and pairs the rest; par==1 keeps the maximum).
     */
   private def compact(levels0: Array[Level]): Array[Level] = {
-    val levels = scala.collection.mutable.ArrayBuffer(levels0: _*)
+    val levels = scala.collection.mutable.ArrayBuffer.from(levels0)
     var i = 0
     while (i < levels.length) {
       if (levels(i).items.length > capacity) {

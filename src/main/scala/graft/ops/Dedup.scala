@@ -16,7 +16,7 @@ object Dedup {
 
   /** One survivor per key: the row minimizing `ord` (deterministic). */
   def keepMinBy(df: DataFrame, key: Seq[String], ord: Column): DataFrame = {
-    val cols = df.columns.map(col)
+    val cols = df.columns.toSeq.map(col)
     df.groupBy(key.map(col): _*)
       .agg(min_by(struct(cols: _*), ord).as("_row"))
       .select(col("_row.*"))

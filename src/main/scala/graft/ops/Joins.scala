@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 
 /** Join strategies for the cases that break naive plans at 100 TB:
   * skewed keys and time-ordered lookups.
@@ -22,7 +22,7 @@ object Joins {
   def saltedJoin(skewed: DataFrame, other: DataFrame, keys: Seq[String],
       numSalts: Int): DataFrame = {
     val salted = skewed.withColumn("_salt",
-      pmod(xxhash64(skewed.columns.map(col): _*), lit(numSalts)).cast("int"))
+      pmod(xxhash64(skewed.columns.toSeq.map(col): _*), lit(numSalts)).cast("int"))
     val replicated = other.withColumn("_salt",
       explode(sequence(lit(0), lit(numSalts - 1))))
     salted.join(replicated, keys :+ "_salt").drop("_salt")
@@ -117,7 +117,7 @@ object Joins {
     */
   def asofJoin(left: DataFrame, right: DataFrame, keyCol: String,
       tsCol: String): DataFrame = {
-    val rightPayload = struct(right.columns.map(col): _*)
+    val rightPayload = struct(right.columns.toSeq.map(col): _*)
     val rpayType = right.select(rightPayload).schema.head.dataType
     val l = left.withColumn("_side", lit(1))
       .withColumn("_rpay", lit(null).cast(rpayType))

@@ -35,6 +35,6 @@ object Pii {
     val clean = rules.foldLeft(col(textCol)) { (c, r) =>
       regexp_replace(c, lit(r.pattern), lit(r.replacement))
     }
-    df.select(df.columns.map(col) ++ counts :+ clean.as("clean"): _*)
+    df.select(df.columns.toSeq.map(col) ++ counts :+ clean.as("clean"): _*)
   }
 }

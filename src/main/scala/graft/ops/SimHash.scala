@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 
 /** SimHash near-duplicate detection (64-bit) with pigeonhole-chunked
   * candidate generation.

@@ -261,15 +261,30 @@ object EsSink {
     * channel; it is already materialized (localCheckpoint), so reading
     * it never re-sends.
     */
-  def upsert(df: DataFrame, cfg: Config, transport: Transport): DataFrame = {
-    val spark = df.sparkSession
+  def upsert(df: DataFrame, cfg: Config, transport: Transport): DataFrame =
+    send(df.select(col(cfg.idKey).cast("string").as("_id"),
+      to_json(struct(df.columns.toSeq.map(col): _*)).as("_json")),
+      cfg, transport, upsertRequests)
+
+  /** Delete by id for every row of `df`. Same eager dead-letter contract
+    * as [[upsert]] (record = null for deletes).
+    */
+  def delete(df: DataFrame, cfg: Config, transport: Transport): DataFrame =
+    send(df.select(col(cfg.idKey).cast("string").as("_id"),
+      lit(null).cast("string").as("_json")),
+      cfg, transport, (c, chunk) => deleteRequests(c, chunk.map(_._1)))
+
+  /** The one send loop: (`_id`, `_json`) pairs grouped per partition
+    * into `bulkSize` chunks, each chunk's requests sent with retry, and
+    * every record of a failed request returned as a [[DeadLetter]].
+    */
+  private def send(pairs: DataFrame, cfg: Config, transport: Transport,
+      requests: (Config, Seq[(String, String)]) => Seq[Request]): DataFrame = {
+    val spark = pairs.sparkSession
     import spark.implicits._
-    val pairs = df.select(
-      col(cfg.idKey).cast("string").as("_id"),
-      to_json(struct(df.columns.map(col): _*)).as("_json"))
     val dead = pairs.as[(String, String)].mapPartitions { it =>
       it.grouped(cfg.bulkSize).flatMap { chunk =>
-        upsertRequests(cfg, chunk).flatMap { req =>
+        requests(cfg, chunk).flatMap { req =>
           sendWithRetry(transport, req, cfg.maxRetries, cfg.backoffMs) match {
             case None => Nil
             case Some(err) => chunk.map { case (id, json) => DeadLetter(id, json, err) }
@@ -326,11 +341,13 @@ object EsSink {
   /** One serving micro-batch under the progress protocol — the ES
     * analog of [[JdbcSink]]'s in-transaction batch marker
     * (exactly-once effect AND no whole-batch re-sends on checkpoint
-    * replay): if the store's marker already covers `batchId`, the
+    * replay): if the store's `marker` already covers `batchId`, the
     * replayed batch sends NOTHING; otherwise deletes land first, then
     * upserts (the key-move contract), then `onDeadLetters`, then the
     * marker. Returns the (delete, upsert) dead-letter frames, or None
-    * when skipped.
+    * when skipped. A `marker` of None sends marker-free: no progress
+    * read or write, every call sends (re-sends stay idempotent, being
+    * id-keyed) — for callers without a checkpoint identity.
     *
     * `onDeadLetters` is the caller's persistence hook and runs BEFORE
     * the marker publishes: once the marker covers a batch, a replay
@@ -340,63 +357,18 @@ object EsSink {
     * data" contract. A hook that itself throws leaves the marker
     * unwritten, so the replay re-sends (idempotent) and re-persists.
     */
-  def applyKeyedBatch(pipeline: String, batchId: Long, deletes: DataFrame,
-      upserts: DataFrame, cfg: Config, transport: Transport,
+  def applyKeyedBatch(marker: Option[String], batchId: Long,
+      deletes: DataFrame, upserts: DataFrame, cfg: Config,
+      transport: Transport,
       onDeadLetters: (DataFrame, DataFrame) => Unit = (_, _) => ())
       : Option[(DataFrame, DataFrame)] =
-    if (readProgress(cfg, transport, pipeline).exists(_ >= batchId)) None
+    if (marker.exists(readProgress(cfg, transport, _).exists(_ >= batchId)))
+      None
     else {
       val dlDeletes = delete(deletes, cfg, transport)
       val dlUpserts = upsert(upserts, cfg, transport)
       onDeadLetters(dlDeletes, dlUpserts)
-      writeProgress(cfg, transport, pipeline, batchId)
+      marker.foreach(writeProgress(cfg, transport, _, batchId))
       Some((dlDeletes, dlUpserts))
     }
-
-  /** Upsert PRE-SERIALIZED documents: `df` carries (`idCol`,
-    * `jsonCol`) and each row's JSON string is sent VERBATIM as the
-    * document body. The path for callers that already hold the
-    * document as JSON — the stateful CDC sink's LWW state stores the
-    * (transformed) row as rowJson, and re-typing it through a declared
-    * schema would silently drop transform-ADDED fields and resurrect
-    * DROPPED ones. Same eager dead-letter contract as [[upsert]].
-    */
-  def upsertRaw(df: DataFrame, idCol: String, jsonCol: String, cfg: Config,
-      transport: Transport): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val pairs = df.select(col(idCol).cast("string").as("_id"),
-      col(jsonCol).as("_json"))
-    val dead = pairs.as[(String, String)].mapPartitions { it =>
-      it.grouped(cfg.bulkSize).flatMap { chunk =>
-        upsertRequests(cfg, chunk).flatMap { req =>
-          sendWithRetry(transport, req, cfg.maxRetries, cfg.backoffMs) match {
-            case None => Nil
-            case Some(err) => chunk.map { case (id, json) => DeadLetter(id, json, err) }
-          }
-        }
-      }
-    }
-    dead.toDF().localCheckpoint(true)
-  }
-
-  /** Delete by id for every row of `df`. Same eager dead-letter contract
-    * as [[upsert]] (record = null for deletes).
-    */
-  def delete(df: DataFrame, cfg: Config, transport: Transport): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val ids = df.select(col(cfg.idKey).cast("string").as("_id"))
-    val dead = ids.as[String].mapPartitions { it =>
-      it.grouped(cfg.bulkSize).flatMap { chunk =>
-        deleteRequests(cfg, chunk).flatMap { req =>
-          sendWithRetry(transport, req, cfg.maxRetries, cfg.backoffMs) match {
-            case None => Nil
-            case Some(err) => chunk.map(id => DeadLetter(id, null, err))
-          }
-        }
-      }
-    }
-    dead.toDF().localCheckpoint(true)
-  }
 }

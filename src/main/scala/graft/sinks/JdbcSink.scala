@@ -1,6 +1,7 @@
 package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.functions.col
 
 /** JDBC sink — the capability the reference README claims ("built-in
   * Elasticsearch and JDBC write support") but whose code does not exist
@@ -191,17 +192,33 @@ object JdbcSink {
       props: java.util.Properties = new java.util.Properties(),
       stagingColumnTypes: String = null,
       deleteStagingColumnTypes: String = null): Unit = {
-    import org.apache.spark.sql.functions.col
     // persist: this method runs TWO actions (delete staging + upsert
     // staging) over one frame — inside foreachBatch an uncached frame
     // re-executes the whole micro-batch plan per action, including any
     // stateful operator upstream (double compute; correct but wasteful,
     // and it doubles the reported state metrics)
     val cached = deltas.persist()
-    try applyViewDeltasCached(cached, url, table, keyCols, actionCol,
-      props, stagingColumnTypes, deleteStagingColumnTypes)
+    try applyKeyedDeltas(
+      cached.filter(col(actionCol) === "upsert").drop(actionCol),
+      cached.filter(col(actionCol) === "delete").select(keyCols.map(col): _*),
+      url, table, keyCols, props, stagingColumnTypes,
+      deleteStagingColumnTypes)
     finally { cached.unpersist(); () }
   }
+
+  /** [[applyViewDeltas]] with the two classes already apart: `upserts`
+    * are the rows to MERGE, `deletes` hold only the key columns. Runs
+    * one action over each frame; the caller pins the frame they share.
+    */
+  def applyKeyedDeltas(upserts: DataFrame, deletes: DataFrame, url: String,
+      table: String, keyCols: Seq[String],
+      props: java.util.Properties = new java.util.Properties(),
+      stagingColumnTypes: String = null,
+      deleteStagingColumnTypes: String = null): Unit =
+    writeLock(url, table).synchronized {
+      applyKeyedDeltasLocked(upserts, deletes, url, table, keyCols, props,
+        stagingColumnTypes, deleteStagingColumnTypes)
+    }
 
   /** Per-(url, table) JVM-wide write locks: the keyed-merge protocol
     * stages through FIXED table names (`<table>_stage`,
@@ -233,23 +250,10 @@ object JdbcSink {
   private def writeLock(url: String, table: String): Object =
     tableWriteLocks.computeIfAbsent(s"$url#$table", _ => new Object)
 
-  private def applyViewDeltasCached(deltas: DataFrame, url: String,
-      table: String, keyCols: Seq[String], actionCol: String,
-      props: java.util.Properties, stagingColumnTypes: String,
-      deleteStagingColumnTypes: String): Unit =
-    writeLock(url, table).synchronized {
-      applyViewDeltasLocked(deltas, url, table, keyCols, actionCol,
-        props, stagingColumnTypes, deleteStagingColumnTypes)
-    }
-
-  private def applyViewDeltasLocked(deltas: DataFrame, url: String,
-      table: String, keyCols: Seq[String], actionCol: String,
+  private def applyKeyedDeltasLocked(upserts: DataFrame, dels: DataFrame,
+      url: String, table: String, keyCols: Seq[String],
       props: java.util.Properties, stagingColumnTypes: String,
       deleteStagingColumnTypes: String): Unit = {
-    import org.apache.spark.sql.functions.col
-    val upserts = deltas.filter(col(actionCol) === "upsert").drop(actionCol)
-    val dels = deltas.filter(col(actionCol) === "delete")
-      .select(keyCols.map(col): _*)
     val stageDel = s"${table}_stage_del"
     val wd0 = dels.write.mode(SaveMode.Overwrite)
     val wd = if (deleteStagingColumnTypes == null) wd0

@@ -71,7 +71,7 @@ import java.nio.file.{Files, Paths}
   * (`ElasticsearchUtils.java:106-118`), and the ann pipeline's analog
   * is one document per served vector (`_id` = the vector id, body =
   * `{idField, cell, emb_json}`) mirrored per batch through
-  * [[graft.sinks.EsSink.applyKeyedBatch]]: deletes before upserts, the
+  * [[ServedPipeline.writeKeyed]]: deletes before upserts, the
   * in-band batch-progress marker so checkpoint replay re-sends
   * nothing, dead letters persisted under `deadLetterDir` BEFORE the
   * marker (S6). The JDBC postings table stays the INDEX's source of
@@ -505,57 +505,39 @@ final case class AnnServingPipeline(
           .select(col("vec_id").as(idF),
             when(col("w.sgn") > 0, "upsert").otherwise("delete").as("action"),
             col("w.cell").as("cell"), to_json(col("w.emb")).as("emb_json"))
-        // with metrics or the ES mirror on, pin the actions so the
-        // extra consumers below cannot re-run the batch plan
-        val flat = if (metrics.isDefined || esMirror.isDefined)
-          flat0.localCheckpoint(true) else flat0
-        // expectations judge the batch's UPSERT posting actions (id +
-        // advisory cell) BEFORE the index store commits: Halt fails the
-        // batch here, Drop violators dead-letter and are withheld from
-        // both the index store and the mirror
-        val violating = PipelineMetrics.enforceBatchExpectations(metrics,
-          name, batchId, expectations,
-          flat.filter(col("action") === "upsert").select(col(idF), col("cell")),
-          Seq(idF), deadLetterDir, kind = "ann")
-        val served = violating.fold(flat)(v =>
-          flat.filter(col("action") === "delete")
-            .unionByName(flat.filter(col("action") === "upsert")
-              .join(v.select(col(idF)), Seq(idF), "left_anti")))
-        JdbcSink.applyViewDeltas(served, jdbcUrl, postingsTable, Seq(idF),
-          stagingColumnTypes = "emb_json VARCHAR(32000)")
-        // mirror AFTER the index store commits: the document surface
-        // trails the source of truth, never leads it
-        var esDeadLetters = 0L
-        esMirror.foreach { es =>
-          // marker keyed (pipeline, work dir): a rebuilt work dir
-          // restarts batch ids at 0 and must not be skipped by the old
-          // run's marker (SearchServingPipeline's rebuild contract)
-          val markerId = s"${name}_${Integer.toHexString(workRoot.hashCode)}"
-          val applied = graft.sinks.EsSink.applyKeyedBatch(markerId, batchId,
-            served.filter(col("action") === "delete").select(col(idF)),
-            served.filter(col("action") === "upsert")
-              .select(col(idF), col("cell"), col("emb_json")),
-            es.config(idF), esTransport,
-            onDeadLetters = (dlDeletes, dlUpserts) =>
-              deadLetterDir.foreach { dir =>
-                val dead = dlDeletes.unionByName(dlUpserts)
-                  .withColumn("pipeline", lit(name))
-                if (!dead.isEmpty) dead.write.mode("append").parquet(dir)
-              })
-          esDeadLetters = applied
-            .map { case (d, u) => d.count() + u.count() }.getOrElse(0L)
-          ()
-        }
-        applyCertificate(spark, batchId, c)
-        metrics.foreach { m =>
-          val gen = Files.readString(
-            Paths.get(s"${quantDir(workRoot)}/CURRENT")).trim
-          PipelineMetrics.record(m, name, "ann", batchId,
-            rowsIn = flat.count(), deadLetters = esDeadLetters,
-            stateRows = flat.count(),
-            wallMs = System.currentTimeMillis() - t0,
-            info = s"""{"generation":"$gen"}""")
-        }
+        // pinned for its several readers (judge, the index store's
+        // delete and upsert stagings, the mirror, rows_in) so none
+        // re-runs the batch plan
+        val flat = flat0.persist()
+        try {
+          val upserts = flat.filter(col("action") === "upsert")
+            .drop("action")
+          // expectations judge the batch's UPSERT posting actions (id +
+          // advisory cell) BEFORE the index store commits; Drop
+          // violators are withheld from both the index store and the
+          // mirror, which is written AFTER the index store commits — the
+          // document surface trails the source of truth, never leads it
+          val esDeadLetters = ServedPipeline.writeKeyed(name, kind,
+            batchId, idF, upserts,
+            flat.filter(col("action") === "delete").select(col(idF)),
+            upserts.select(col(idF), col("cell")),
+            expectations, metrics, deadLetterDir,
+            jdbc = Some(JdbcTarget(jdbcUrl, postingsTable,
+              Some("emb_json VARCHAR(32000)"))),
+            es = esMirror.flatMap(ServedPipeline.targets(_, idF,
+              esTransport, name, workRoot)._2))
+            .getOrElse(0L)
+          applyCertificate(spark, batchId, c)
+          metrics.foreach { m =>
+            val gen = Files.readString(
+              Paths.get(s"${quantDir(workRoot)}/CURRENT")).trim
+            PipelineMetrics.record(m, name, "ann", batchId,
+              rowsIn = flat.count(), deadLetters = esDeadLetters,
+              stateRows = flat.count(),
+              wallMs = System.currentTimeMillis() - t0,
+              info = s"""{"generation":"$gen"}""")
+          }
+        } finally { flat.unpersist(); () }
         // SELF-HEALING: a tripped certificate triggers the retrain
         // in-stream — the swap lands between batches through CURRENT,
         // and the re-run certificate records the restored SLO

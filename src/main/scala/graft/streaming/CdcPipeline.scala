@@ -83,8 +83,8 @@ final case class CdcPipeline(
     * by the conf-declared transform (set fields added/replaced, drop
     * fields gone), computed by running [[ExprTransform.applyToStruct]]
     * itself over an empty frame so the semantics can never drift from
-    * the real reshape. This is the schema expectations resolve against
-    * (both registration validation and the stateful path's re-type): a
+    * the real reshape. This is the schema expectations resolve against,
+    * read only by registration validation ([[PipelineRegistry]]): a
     * conf whose transform drops a declared column referenced by an
     * expectation must die at boot, not throw in every micro-batch.
     */
@@ -112,28 +112,13 @@ final case class CdcPipeline(
     transform(exprTransform.fold(shaped)(_.applyToStruct(shaped)))
   }
 
-  /** Start the pipeline over a JSON-lines source directory, applying
-    * upserts/deletes per micro-batch. The sink call happens inside
-    * foreachBatch: deletes for op=d winners, upserts for the rest —
-    * collapsed per key within the batch so one key gets one effect.
-    */
-  def start(spark: SparkSession, sourceDir: String, checkpointDir: String,
-      cfg: EsSink.Config, transport: EsSink.Transport): StreamingQuery = {
-    val raw = spark.readStream
-      .schema(StructType(Seq(
-        org.apache.spark.sql.types.StructField("value",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("offset",
-          org.apache.spark.sql.types.LongType))))
-      .json(sourceDir)
-    startOver(raw, s"cdc_$name", checkpointDir, cfg, transport)
-  }
-
-  /** DSv2 variant of [[start]]: the raw stream comes from the graft-cdc
-    * source (sources.cdc.CdcEventSource) and the subscription predicate
-    * is applied directly on the source relation, where DSv2 filter
-    * pushdown turns it into SOURCE-side db/table pruning (reference R3:
-    * the connector's include-lists) instead of a post-scan filter.
+  /** Start the pipeline over a graft-cdc feed directory
+    * (sources.cdc.CdcEventSource), applying upserts/deletes per
+    * micro-batch through [[applyBatch]] — one effect per key per batch.
+    * The subscription predicate is applied directly on the source
+    * relation, where DSv2 filter pushdown turns it into SOURCE-side
+    * db/table pruning (reference R3: the connector's include-lists)
+    * instead of a post-scan filter.
     */
   def startDsv2(spark: SparkSession, sourceDir: String, checkpointDir: String,
       cfg: EsSink.Config, transport: EsSink.Transport,
@@ -141,7 +126,18 @@ final case class CdcPipeline(
     val raw = subscription.route(
       spark.readStream.format("graft-cdc").option("path", sourceDir).load())
       .drop("src_db", "src_table")
-    startOver(raw, s"cdc_v2_$name", checkpointDir, cfg, transport, trigger)
+    // trigger default: AvailableNow drains-and-terminates (batch-drain
+    // runners, tests); a long-running server passes ProcessingTime so
+    // the query keeps following the feed (Serve) — the Debezium
+    // engine's run-until-stopped shape (DebeziumEngineManager.java:76-121)
+    changeRows(raw).writeStream
+      .queryName(s"cdc_v2_$name")
+      .option("checkpointLocation", checkpointDir)
+      .trigger(trigger)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        applyBatch(batch, cfg, transport, batchId)
+      }
+      .start()
   }
 
   /** The registry's single-query stage ([[startDsv2]]) on the runner's
@@ -157,111 +153,6 @@ final case class CdcPipeline(
       live: ServedPipeline.Live): Seq[StreamingQuery] =
     Seq(startDsv2(spark, feedDir, workRoot, live.cfg.copy(idKey = idKey),
       live.transport, live.lwwTrigger))
-
-  // trigger default: AvailableNow drains-and-terminates (batch-drain
-  // runners, tests); a long-running server passes ProcessingTime so
-  // the query keeps following the feed (Serve) — the Debezium engine's
-  // run-until-stopped shape (DebeziumEngineManager.java:76-121).
-  private def startOver(raw: DataFrame, queryName: String, checkpointDir: String,
-      cfg: EsSink.Config, transport: EsSink.Transport,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    changeRows(raw).writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, cfg, transport, batchId)
-      }
-      .start()
-
-  /** Incremental variant: per-key state via StatefulLww, so the sink
-    * sees exactly one delta per CHANGED key per micro-batch (the
-    * per-batch variant re-sends a key's winner every batch it appears
-    * in). Costs a state store keyed by table cardinality; wins when
-    * update streams revisit keys often — the common CDC shape.
-    *
-    * The state store defaults to ROCKSDB ([[CdcPipeline.RocksDbProvider]])
-    * — the production choice for table-cardinality state (off-heap,
-    * incrementally checkpointed; the HDFS-backed provider holds every
-    * key on-heap, which a 10⁹-key table cannot). Provider parity is
-    * pinned in StatefulLwwSpec; pass `stateProvider` explicitly to
-    * override (tests that sweep providers, memory-constrained local
-    * runs). The provider conf is set on the session only for the
-    * duration of `.start()` — StreamExecution clones the session state
-    * at query start, so the previous session value is restored without
-    * affecting the running query.
-    */
-  def startIncremental(spark: SparkSession, sourceDir: String,
-      checkpointDir: String, cfg: EsSink.Config,
-      transport: EsSink.Transport,
-      stateProvider: String = CdcPipeline.RocksDbProvider): StreamingQuery = {
-    val raw = spark.readStream
-      .schema(StructType(Seq(
-        org.apache.spark.sql.types.StructField("value",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("offset",
-          org.apache.spark.sql.types.LongType))))
-      .json(sourceDir)
-    // serialize the TRANSFORMED document (`row`), not the raw `after`:
-    // both transform hooks must reach the incremental sink's documents
-    // exactly as they reach the per-batch path's
-    val events = changeRows(raw)
-      .select(col("key"), col("ts_ms"), col("offset"), col("op"),
-        to_json(col("row")).as("after"))
-    // expectations resolve against the POST-TRANSFORM document schema
-    // (what the store actually serves) — computed once, outside the
-    // per-batch closure
-    val outSchema = outgoingRowSchema(spark)
-    val writer = StatefulLww.deltaStream(events).writeStream
-      .queryName(s"cdc_inc_$name")
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (deltas: org.apache.spark.sql.Dataset[StatefulLww.Delta], batchId: Long) =>
-        val t0 = System.currentTimeMillis()
-        // with metrics on, pin the delta frame first: counting an
-        // unmaterialized frame would re-execute the stateful plan
-        val df = if (metrics.isDefined) deltas.toDF().localCheckpoint(true)
-          else deltas.toDF()
-        val dels = df.filter(col("action") === "delete")
-          .select(col("key").cast("string").as(idKey))
-        // the stored rowJson IS the (transformed) document — send it
-        // verbatim: re-typing through the declared rowSchema would
-        // silently drop transform-ADDED fields and resurrect DROPPED
-        // ones, diverging from the per-batch path's sink documents
-        val ups0 = df.filter(col("action") === "upsert")
-          .select(col("key"), col("rowJson"))
-        // expectations judge the serving documents re-typed through the
-        // POST-TRANSFORM schema (the consumer's view), BEFORE the sink:
-        // Halt fails the batch here, Drop violators dead-letter and
-        // their keys are withheld from the upsert send
-        val typed = ups0
-          .select(col("key").as("__key"),
-            from_json(col("rowJson"), outSchema).as("r"))
-          .select(col("__key") +: outSchema.fieldNames.toSeq.map(f =>
-            col(s"r.$f")): _*)
-        val violating = PipelineMetrics.enforceBatchExpectations(metrics,
-          name, batchId, expectations, typed, Seq("__key"), deadLetterDir)
-        val ups = violating.fold(ups0)(v =>
-          ups0.join(v.select(col("__key").as("key")), Seq("key"), "left_anti"))
-        val dlDels = EsSink.delete(dels, cfg, transport)
-        val dlUps = EsSink.upsertRaw(ups, "key", "rowJson", cfg, transport)
-        metrics.foreach(m => PipelineMetrics.record(m, name, "lww", batchId,
-          rowsIn = df.count(),
-          deadLetters = dlDels.count() + dlUps.count(),
-          stateRows = 0L, wallMs = System.currentTimeMillis() - t0))
-        () // dead-letter frames are returned by the sink; S6 contract:
-           // the stream continues regardless
-      }
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, stateProvider)
-    try writer.start()
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
 
   /** Batch application: last writer per key within the batch, then
     * deletes and upserts through the sink. Also usable directly on a
@@ -298,32 +189,26 @@ final case class CdcPipeline(
         struct(col("ts_ms"), col("offset"))).as("w"))
     val winnersCached = winners.cache()
     try {
+      val upsertWinners = winnersCached.filter(col("w.op") =!= "d")
+      val upserts = ((driftPolicy, drift) match {
+        case (Some(p), Some(d)) if p.action == graft.ops.Profile.Drop =>
+          Drift.dropViolators(upsertWinners, col("w.value"), rowSchema, d,
+            p, name, kind, deadLetterDir, batchId)
+        case _ => upsertWinners
+      }).select(col("w.row.*"))
       val deletes = winnersCached.filter(col("w.op") === "d")
         .select(col("key").cast("string").as(idKey))
-      val upserts0 = applyDriftDrop(
-        winnersCached.filter(col("w.op") =!= "d"), drift, batchId)
-        .select(col("w.row.*"))
-      // expectations judge the batch's upsert documents BEFORE the
-      // serving write: verdicts record, a breached Halt rule fails the
-      // batch here (store keeps pre-batch state), and Drop violators
-      // dead-letter and are withheld from the sink — the budgeted
-      // verdict is monitoring, the withheld row is data protection
-      val violating = PipelineMetrics.enforceBatchExpectations(metrics,
-        name, batchId, expectations, upserts0, Seq(idKey), deadLetterDir)
-      val upserts = violating.fold(upserts0)(v =>
-        upserts0.join(v.select(col(idKey)), Seq(idKey), "left_anti"))
-      val dlDeletes = EsSink.delete(deletes, cfg, transport)
-      val dlUpserts = EsSink.upsert(upserts, cfg, transport)
-      deadLetterDir.foreach { dir =>
-        val dead = dlDeletes.unionByName(dlUpserts)
-          .withColumn("pipeline", lit(name))
-        if (!dead.isEmpty) dead.write.mode("append").parquet(dir)
-      }
+      // marker-free: applyBatch is also called directly, without a
+      // checkpoint identity; a re-sent batch is idempotent (id-keyed)
+      val deadLetters = ServedPipeline.writeKeyed(name, kind, batchId,
+        idKey, upserts, deletes, upserts, expectations, metrics,
+        deadLetterDir,
+        es = Some(ServedPipeline.EsWrite(cfg, transport, marker = None)))
       // counts come from the CACHED winners and the localCheckpointed
       // dead-letter frames — recording never re-runs the batch plan
       metrics.foreach(m => PipelineMetrics.record(m, name, "lww", batchId,
         rowsIn = winnersCached.count(),
-        deadLetters = dlDeletes.count() + dlUpserts.count(),
+        deadLetters = deadLetters.getOrElse(0L),
         stateRows = 0L, wallMs = System.currentTimeMillis() - t0))
     } finally winnersCached.unpersist()
   }
@@ -348,62 +233,14 @@ final case class CdcPipeline(
     if (!driftOn) None
     else metrics.map(m =>
       Drift.recordSchemaDrift(src, rowSchema, name, batchId, m))
-
-  /** DROP-action drift enforcement over the batch's upsert WINNERS (the
-    * rows that would actually serve): a winner whose raw payload fails
-    * a declared type is withheld ALWAYS (serving it would silently null
-    * the field — a known-bad document; budgets govern verdicts, never
-    * license serving bad rows, the expectation contract), and winners
-    * carrying undeclared fields are withheld only when the batch's
-    * distinct new-column count breaches `newColsBudget` (tolerated
-    * schema evolution serves; a breach fences every drifted row until
-    * the conf evolves). Withheld winners dead-letter under
-    * `<dlDir>/_drift/pipeline=<name>/batch_id=<id>` (per-batch
-    * partition OVERWRITE — replay-idempotent, and a separate subtree
-    * from `_expect` so neither enforcement's write clobbers the
-    * other's), tagged drift_badtype / drift_newcols. Returns the
-    * winners that may serve.
-    */
-  private def applyDriftDrop(upsertWinners: DataFrame,
-      drift: Option[CdcPipeline.DriftVerdict], batchId: Long): DataFrame = {
-    val p = driftPolicy match {
-      case Some(pp) if pp.action == graft.ops.Profile.Drop => pp
-      case _ => return upsertWinners
-    }
-    val d = drift.getOrElse(return upsertWinners)
-    val newColsBreached = d.newCols > p.newColsBudget
-    if (d.rowsBadtype == 0L && !(newColsBreached && d.rowsNew > 0L))
-      return upsertWinners
-    val aj = Drift.rawAfter(col("w.value"))
-    val tagged = upsertWinners.withColumn("__viol", array_compact(array(
-      when(Drift.anyBadTypeOf(aj, rowSchema), lit("drift_badtype")),
-      if (newColsBreached) when(size(Drift.newFieldsOf(aj, rowSchema)) > 0,
-        lit("drift_newcols")) else lit(null).cast("string"))))
-      .localCheckpoint(true)
-    val viol = tagged.filter(size(col("__viol")) > 0)
-    deadLetterDir.foreach { dir =>
-      val safe = PipelineMetrics.sanitizedPipeline(name)
-      // the RAW after payload, not the typed row: a bad-typed field
-      // nulls the whole struct under PERMISSIVE parsing, so the typed
-      // form of exactly the rows this path withholds is empty — the
-      // operator repairing drift needs the original bytes (undeclared
-      // fields and the malformed value included)
-      viol.select(array_join(col("__viol"), ",").as("violated"),
-        aj.as("row_json"))
-        .write.mode("overwrite")
-        .parquet(s"$dir/_drift/pipeline=$safe/batch_id=$batchId")
-      PipelineMetrics.writeKindMarker(viol.sparkSession, dir, "_drift",
-        safe, "lww")
-    }
-    tagged.filter(size(col("__viol")) === 0).drop("__viol")
-  }
 }
 
 object CdcPipeline {
-  /** Production state-store provider for the incremental (stateful)
-    * path: RocksDB keeps table-cardinality LWW state off-heap with
-    * incremental checkpoints — the 10⁹-key story the on-heap HDFS
-    * provider cannot tell. Ships in Spark 4; no extra dependency.
+  /** Production state-store provider of Serve's session (the stateful
+    * delta-log stages): RocksDB keeps table-cardinality LWW state
+    * off-heap with incremental checkpoints — the 10⁹-key story the
+    * on-heap HDFS provider cannot tell. Ships in Spark 4; no extra
+    * dependency.
     */
   val RocksDbProvider: String =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
@@ -415,7 +252,7 @@ object CdcPipeline {
     *  - Drop: winners whose raw payload fails a declared type are
     *    withheld and dead-lettered always; winners carrying undeclared
     *    fields are withheld once the batch's distinct new-column count
-    *    breaches `newColsBudget` (see [[CdcPipeline.applyDriftDrop]]).
+    *    breaches `newColsBudget` (see [[Drift.dropViolators]]).
     *  - Halt: a breach of either budget fails the micro-batch AFTER the
     *    verdict records — pipeline quarantine, store pre-batch,
     *    conf-fix → restart → replay (the expectation Halt lifecycle).

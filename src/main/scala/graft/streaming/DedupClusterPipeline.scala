@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.ops.{CorpusOps, MinHashLsh}
-import graft.sinks.JdbcSink
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -206,9 +205,10 @@ final case class DedupClusterPipeline(
     val dlDir = deadLetterDir
     val pipelineName = name
     val mtx = metrics
-    // checkpoint-scoped marker identity (ViewPipeline's rule): a fresh
-    // work dir restarts batch ids, so the marker must die with it
-    val markerId = s"${name}_${Integer.toHexString(workRoot.hashCode)}"
+    val (jdbc0, es) = ServedPipeline.targets(target, idF, esTransport,
+      name, workRoot)
+    // the JDBC target stages with the engine's default column types
+    val jdbc = jdbc0.map(_.copy(stagingColumnTypes = None))
     val supportBase = s"$workRoot/state_support"
     val labelBase = s"$workRoot/state_labels"
     val verifiedBase = s"$workRoot/state_verified"
@@ -412,49 +412,14 @@ final case class DedupClusterPipeline(
           // Drop violators dead-letter and are withheld from the store
           // — the label STATE already recorded them (the clustering
           // algebra stays exact); only the consumer surface is guarded
-          val violating = PipelineMetrics.enforceBatchExpectations(mtx,
-            pipelineName, batchId, expectRules,
+          esDeadLetters = ServedPipeline.writeKeyed(pipelineName, kind,
+            batchId, idF,
             changed.select(col("doc_id").as(idF), col("cluster_id"),
-              col("is_canonical")), Seq(idF), dlDir, kind = "dedup")
-          val changedServed = violating.fold(changed)(v =>
-            changed.join(v.select(col(idF).as("doc_id")), Seq("doc_id"),
-              "left_anti"))
-          target match {
-            case JdbcTarget(url, tbl, _) =>
-              JdbcSink.applyViewDeltas(
-                changedServed.select(col("doc_id").as(idF),
-                  lit("upsert").as("action"), col("cluster_id"),
-                  col("is_canonical").cast("int").as("is_canonical"))
-                  .unionByName(dropped.select(col("doc_id").as(idF),
-                    lit("delete").as("action"),
-                    lit(null).cast("long").as("cluster_id"),
-                    lit(null).cast("int").as("is_canonical"))),
-                url, tbl, Seq(idF))
-            case es: EsTarget =>
-              // deletes first, then upserts (ViewPipeline's contract);
-              // the batch-progress marker makes a checkpoint replay of
-              // a delivered batch send nothing
-              val cfg = es.config(idF)
-              // S6: failures are data — undeliverable cluster rows
-              // (after the sink's retries) must not vanish while the
-              // checkpoint advances (ViewPipeline's contract). Persisted
-              // via the sink's pre-marker hook: a marker-covered batch
-              // replays as a no-op and could never regenerate them
-              val applied = graft.sinks.EsSink.applyKeyedBatch(markerId, batchId,
-                dropped.select(col("doc_id").as(idF)),
-                changedServed.select(col("doc_id").as(idF), col("cluster_id"),
-                  col("is_canonical").cast("int").as("is_canonical")),
-                cfg, esTransport,
-                onDeadLetters = (dlDeletes, dlUpserts) =>
-                  dlDir.foreach { dir =>
-                    val dead = dlDeletes.unionByName(dlUpserts)
-                      .withColumn("pipeline", lit(pipelineName))
-                    if (!dead.isEmpty) dead.write.mode("append").parquet(dir)
-                  })
-              esDeadLetters = applied
-                .map { case (d, u) => d.count() + u.count() }.getOrElse(0L)
-              ()
-          }
+              col("is_canonical").cast("int").as("is_canonical")),
+            dropped.select(col("doc_id").as(idF)),
+            changed.select(col("doc_id").as(idF), col("cluster_id"),
+              col("is_canonical")),
+            expectRules, mtx, dlDir, jdbc, es).getOrElse(0L)
           // bounded log: fold-to-batchId−1 (exactly support0/labels0)
           // becomes the next base generation; folded-in dirs pruned
           if (StateLog.logBatchCount(supportBase) > compactEvery)

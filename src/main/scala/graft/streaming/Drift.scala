@@ -145,6 +145,59 @@ object Drift {
     */
   val maxRecordedNames: Int = 100
 
+  /** DROP-action drift enforcement — one path for the lww kind (over its
+    * batch's upsert WINNERS, the rows that would actually serve) and
+    * the delta-log kinds' [[DriftGate]] (over raw EVENTS, before the
+    * table log). `value` is the rows' raw wire value. A row whose raw
+    * after payload fails a declared type is withheld ALWAYS (serving it
+    * would silently null the field — a known-bad document; budgets
+    * govern verdicts, never license serving bad rows), and rows
+    * carrying undeclared fields are withheld only when the batch's
+    * distinct new-column count breaches `newColsBudget` (tolerated
+    * schema evolution serves; a breach fences every drifted row until
+    * the conf evolves). Deletes carry no after and never match.
+    * Withheld rows dead-letter under
+    * `<dlDir>/_drift/pipeline=<tag>/batch_id=<id>` (per-batch partition
+    * OVERWRITE — replay-idempotent, and a separate subtree from
+    * `_expect` so neither enforcement's write clobbers the other's),
+    * tagged drift_badtype / drift_newcols, beside the `kind` marker.
+    * Returns the rows that may serve.
+    */
+  def dropViolators(rows: DataFrame, value: Column, rowSchema: StructType,
+      verdict: CdcPipeline.DriftVerdict, policy: CdcPipeline.DriftPolicy,
+      tag: String, kind: String, deadLetterDir: Option[String],
+      batchId: Long): DataFrame = {
+    val newColsBreached = verdict.newCols > policy.newColsBudget
+    if (verdict.rowsBadtype == 0L && !(newColsBreached && verdict.rowsNew > 0L))
+      rows
+    else {
+      val aj = rawAfter(value)
+      val judged = coalesce(rawOp(value) =!= "d", lit(true)) && aj.isNotNull
+      val tagged = rows.withColumn("__viol", array_compact(array(
+        when(judged && anyBadTypeOf(aj, rowSchema), lit("drift_badtype")),
+        if (newColsBreached) when(judged &&
+          size(newFieldsOf(aj, rowSchema)) > 0, lit("drift_newcols"))
+        else lit(null).cast("string"))))
+        .localCheckpoint(true)
+      val viol = tagged.filter(size(col("__viol")) > 0)
+      deadLetterDir.foreach { dir =>
+        val safe = PipelineMetrics.sanitizedPipeline(tag)
+        // the RAW after payload, not the typed row: a bad-typed field
+        // nulls the whole struct under PERMISSIVE parsing, so the typed
+        // form of exactly the rows this path withholds is empty — the
+        // operator repairing drift needs the original bytes (undeclared
+        // fields and the malformed value included)
+        viol.select(array_join(col("__viol"), ",").as("violated"),
+          aj.as("row_json"))
+          .write.mode("overwrite")
+          .parquet(s"$dir/_drift/pipeline=$safe/batch_id=$batchId")
+        PipelineMetrics.writeKindMarker(viol.sparkSession, dir, "_drift",
+          safe, kind)
+      }
+      tagged.filter(size(col("__viol")) === 0).drop("__viol")
+    }
+  }
+
   /** Halt escalation: a breach of either budget fails the micro-batch
     * AFTER the verdict records (observable breach, then quarantine —
     * the expectation Halt lifecycle).

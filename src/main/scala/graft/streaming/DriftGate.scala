@@ -24,7 +24,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    withheld once the batch's distinct new-column count breaches
   *    `newColsBudget`. Withheld events dead-letter under
   *    `<dlDir>/_drift/pipeline=<tag>/batch_id=N` carrying the RAW wire
-  *    payload — the same frame shape as the lww kind's, so the SAME
+  *    payload through the lww kind's own path
+  *    ([[Drift.dropViolators]]), so the SAME
   *    `Serve replay drift` verb re-injects them once the conf's schema
   *    evolves (drift dead letters are wire-shaped in every kind,
   *    unlike `_expect`'s derived rows).
@@ -90,25 +91,6 @@ final case class DriftGate(
       || deadLetterDir.isDefined,
     s"pipeline $tag: a drop-action drift policy needs a deadLetterDir")
 
-  /** Tag the batch's violating events per the Drop policy: `__viol`
-    * holds the violated rule names (empty = clean). Mirrors
-    * [[CdcPipeline.applyDriftDrop]]'s tagging, at event granularity.
-    */
-  private def tagViolations(src: DataFrame,
-      verdict: CdcPipeline.DriftVerdict,
-      p: CdcPipeline.DriftPolicy): DataFrame = {
-    val newColsBreached = verdict.newCols > p.newColsBudget
-    val aj = Drift.rawAfter(col("value"))
-    val notDelete = coalesce(Drift.rawOp(col("value")) =!= "d", lit(true))
-    src.withColumn("__viol", array_compact(array(
-      when(notDelete && aj.isNotNull &&
-        Drift.anyBadTypeOf(aj, rowSchema), lit("drift_badtype")),
-      if (newColsBreached)
-        when(notDelete && aj.isNotNull &&
-          size(Drift.newFieldsOf(aj, rowSchema)) > 0, lit("drift_newcols"))
-      else lit(null).cast("string"))))
-  }
-
   /** Start the gate query: routed raw events of `table` from `feedDir`
     * → per-batch verdict + policy → surviving (value, offset) rows
     * appended to `<judgedBase>/log/batch_id=N`.
@@ -136,25 +118,8 @@ final case class DriftGate(
           case (Some(p), Some(d)) if p.action == graft.ops.Profile.Halt =>
             Drift.haltOnBreach(p, d, t, batchId); src
           case (Some(p), Some(d)) if p.action == graft.ops.Profile.Drop =>
-            val newColsBreached = d.newCols > p.newColsBudget
-            if (d.rowsBadtype == 0L && !(newColsBreached && d.rowsNew > 0L))
-              src
-            else {
-              val tagged = tagViolations(src, d, p).localCheckpoint(true)
-              val viol = tagged.filter(size(col("__viol")) > 0)
-              dl.foreach { dir =>
-                val safe = PipelineMetrics.sanitizedPipeline(t)
-                // the RAW wire payload (CdcPipeline.applyDriftDrop's
-                // rationale): the typed parse nulls exactly these rows
-                viol.select(array_join(col("__viol"), ",").as("violated"),
-                  Drift.rawAfter(col("value")).as("row_json"))
-                  .write.mode("overwrite")
-                  .parquet(s"$dir/_drift/pipeline=$safe/batch_id=$batchId")
-                PipelineMetrics.writeKindMarker(viol.sparkSession, dir,
-                  "_drift", safe, kind)
-              }
-              tagged.filter(size(col("__viol")) === 0).drop("__viol")
-            }
+            Drift.dropViolators(src, col("value"), sch, d, p, t, kind, dl,
+              batchId)
           case _ => src
         }
         if (reroutes)

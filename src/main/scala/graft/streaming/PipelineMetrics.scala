@@ -699,7 +699,7 @@ object PipelineMetrics {
     // `_expect` dead letters are kind-shaped (derived rows for the
     // non-lww kinds — the marker fences them to the keyed verb); the
     // `_drift` subtree carries the RAW wire payload in EVERY kind
-    // (CdcPipeline.applyDriftDrop and DriftGate both write it), so the
+    // (Drift.dropViolators writes it for both), so the
     // drift replay is kind-agnostic — no fence
     replayWire(spark, deadLetterDir, subtree, pipeline, db, table, sourceDir,
       tsMs, batchIds, if (subtree == "_drift") "" else "lww", identity)

@@ -263,7 +263,7 @@ object PipelineRegistry {
       node: JsonNode,
       schema: org.apache.spark.sql.types.StructType,
       metricsTarget: Option[PipelineMetrics.Target],
-      deadLetterDir: Option[String] = None): Seq[graft.ops.Profile.Rule] = {
+      deadLetterDir: Option[String]): Seq[graft.ops.Profile.Rule] = {
     val rules = parseExpectations(f, node, schema)
     if (rules.nonEmpty) {
       require(metricsTarget.isDefined,

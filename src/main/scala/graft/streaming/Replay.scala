@@ -87,7 +87,7 @@ object Replay {
       }
       val flushDf = spark.createDataFrame(flush)
         .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .select(ev.columns.map(col): _*)
+        .select(ev.columns.toSeq.map(col): _*)
       ev.unionByName(flushDf).repartition(32)
         .write.mode("overwrite").parquet(staged)
     }

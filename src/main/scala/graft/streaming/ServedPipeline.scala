@@ -1,6 +1,7 @@
 package graft.streaming
 
-import graft.sinks.EsSink
+import graft.sinks.{EsSink, JdbcSink}
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -84,6 +85,94 @@ object ServedPipeline {
     */
   def drain(stages: Seq[Trigger => StreamingQuery]): Unit =
     stages.foreach(_(Trigger.AvailableNow()).awaitTermination())
+
+  /** An ES serving target of [[writeKeyed]]: the sink config, the
+    * transport and the batch-progress marker id ([[markerId]]; None
+    * sends marker-free — the lww kind, whose batches are also applied
+    * directly without a checkpoint identity).
+    */
+  final case class EsWrite(cfg: EsSink.Config, transport: EsSink.Transport,
+      marker: Option[String])
+
+  /** The progress-marker id of a checkpointed pipeline. It shares the
+    * CHECKPOINT's identity, not the pipeline name's: batch ids restart
+    * at 0 under a fresh work dir (conf-file rename, checkpoint rebuild),
+    * and a name-keyed marker from the old run would silently suppress
+    * every new batch. Keyed by (name, work dir) the marker dies with
+    * its checkpoint.
+    */
+  def markerId(name: String, workRoot: String): String =
+    s"${name}_${Integer.toHexString(workRoot.hashCode)}"
+
+  /** A conf's [[ViewTarget]] as [[writeKeyed]]'s two optional targets;
+    * an ES target writes under the pipeline's checkpoint marker.
+    */
+  def targets(target: ViewTarget, idField: String,
+      transport: EsSink.Transport, name: String,
+      workRoot: String): (Option[JdbcTarget], Option[EsWrite]) =
+    target match {
+      case j: JdbcTarget => (Some(j), None)
+      case e: EsTarget => (None, Some(EsWrite(e.config(idField), transport,
+        Some(markerId(name, workRoot)))))
+    }
+
+  /** THE keyed serving write of the lww, view, ann and dedup kinds —
+    * the reference sends every upsert and delete through one
+    * `ElasticsearchUtils` (R13/R14), and a failed send becomes data
+    * while the stream continues (S6). One micro-batch:
+    *  1. the conf's expectations judge `judged`, the batch's upsert
+    *     rows in the shape the kind serves them
+    *     ([[PipelineMetrics.enforceBatchExpectations]]: verdicts record,
+    *     a breached Halt rule fails the batch with the store pre-batch,
+    *     Drop violators dead-letter under `_expect`);
+    *  2. EVERY action of a violating key is withheld — a view's join-key
+    *     move emits a (delete, upsert) pair for one id, and a violating
+    *     replacement must leave the pre-batch row served instead of
+    *     vanishing the key (the other kinds emit one action per key per
+    *     batch, so for them this withholds the upsert);
+    *  3. the surviving actions are written — `upserts` are the documents
+    *     as served, `deletes` hold only `idField` (ES keys a delete by
+    *     its string form, so the lww kind's deletes keep their pre-
+    *     transform wire key): the JDBC target first
+    *     ([[JdbcSink.applyKeyedDeltas]], deletes then MERGE in one
+    *     transaction), then the ES target
+    *     ([[EsSink.applyKeyedBatch]]: deletes, then upserts, then the
+    *     sink dead letters appended under `deadLetterDir` with
+    *     `pipeline = name`, then the marker).
+    * The two frames carry no action tag, so a document may hold any
+    * column name. Callers pin the frame `upserts` and `deletes` share.
+    * Returns the sink dead-letter count (counted only with metrics on),
+    * or None when the ES marker already covered the batch and nothing
+    * was sent.
+    */
+  def writeKeyed(name: String, kind: String, batchId: Long,
+      idField: String, upserts: DataFrame, deletes: DataFrame,
+      judged: => DataFrame, expectations: Seq[graft.ops.Profile.Rule],
+      metrics: Option[PipelineMetrics.Target],
+      deadLetterDir: Option[String], jdbc: Option[JdbcTarget] = None,
+      es: Option[EsWrite] = None): Option[Long] = {
+    val violating = PipelineMetrics.enforceBatchExpectations(metrics, name,
+      batchId, expectations, judged, Seq(idField), deadLetterDir, kind)
+    def served(df: DataFrame): DataFrame = violating.fold(df)(v =>
+      df.join(v.select(col(idField).cast(df.schema(idField).dataType)
+        .as(idField)), Seq(idField), "left_anti"))
+    val (ups, dels) = (served(upserts), served(deletes))
+    jdbc.foreach(t => JdbcSink.applyKeyedDeltas(ups, dels, t.url, t.table,
+      Seq(idField), stagingColumnTypes = t.stagingColumnTypes.orNull))
+    es.fold(Option(0L)) { e =>
+      EsSink.applyKeyedBatch(e.marker, batchId, dels, ups, e.cfg,
+        e.transport,
+        onDeadLetters = (dlDeletes, dlUpserts) =>
+          deadLetterDir.foreach { dir =>
+            val dead = dlDeletes.unionByName(dlUpserts)
+              .withColumn("pipeline", lit(name))
+            if (!dead.isEmpty) dead.write.mode("append").parquet(dir)
+          })
+        .map { case (d, u) =>
+          if (metrics.isEmpty) 0L else d.count() + u.count()
+        }
+    }
+  }
 }
 
 /** The four kinds that ingest through a [[DriftGate]] table log (view,

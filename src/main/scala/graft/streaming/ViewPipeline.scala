@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.cdc.IncrementalJoin
-import graft.sinks.JdbcSink
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -52,9 +51,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * by the fact id field — the reference's denormalized-document shape
   * (ElasticsearchUtils.java:101-155) with upsert/delete by fact id.
   * Deletes land first, then MERGE upserts, in one transaction per
-  * micro-batch ([[JdbcSink.applyViewDeltas]]); effects are key-addressed
-  * and idempotent, so checkpoint replay after a crash re-applies
-  * harmlessly (at-least-once delivery, exactly-once effect).
+  * micro-batch ([[graft.sinks.JdbcSink.applyViewDeltas]]); effects are
+  * key-addressed and idempotent, so checkpoint replay after a crash
+  * re-applies harmlessly (at-least-once delivery, exactly-once effect).
   */
 final case class ViewPipeline(
     name: String,
@@ -163,9 +162,10 @@ final case class ViewPipeline(
     ckptDir(workRoot, s"gate_$side"))
 
   /** The join/serving stage: file-stream both logs → seq-ordered
-    * Δ(fact⋈dim) → typed flatten → keyed JDBC apply, on the given
-    * trigger. Requires both log dirs to exist (their schema seeds the
-    * file stream).
+    * Δ(fact⋈dim) → typed flatten → keyed serving write to the JDBC or
+    * ES target ([[ServedPipeline.writeKeyed]]), on the given trigger.
+    * Requires both log dirs to exist (their schema seeds the file
+    * stream).
     */
   private def viewQuery(spark: SparkSession, workRoot: String,
       trigger: Trigger, esTransport: graft.sinks.EsSink.Transport): StreamingQuery = {
@@ -184,18 +184,9 @@ final case class ViewPipeline(
     val keyField = factIdField
     val fSchema = factSchema
     val dSchema = dimSchema
-    val tgt = target
-    val dlDir = deadLetterDir
-    val viewName = name
-    // the progress marker must share the CHECKPOINT's identity, not the
-    // pipeline name's: batch ids restart at 0 under a fresh work dir
-    // (conf-file rename, checkpoint rebuild), and a name-keyed marker
-    // from the old run would silently suppress every new batch. Keyed
-    // by (name, work dir) the marker dies with its checkpoint.
-    val markerId = s"${name}_${Integer.toHexString(workRoot.hashCode)}"
     val tx = exprTransform
-    val mtx = metrics
-    val expectRules = expectations
+    val (jdbc, es) = ServedPipeline.targets(target, keyField, esTransport,
+      name, workRoot)
     viewDeltas.toDF().writeStream
       .queryName(s"view_$name")
       .outputMode("append")
@@ -214,88 +205,27 @@ final case class ViewPipeline(
         // conf-declared reshape of the serving row (R12's data-declared
         // per-event logic) — runs on the flattened enriched columns
         val flat = tx.fold(flat0)(_.applyFlat(flat0))
-        tgt match {
-          case JdbcTarget(url, table, types) =>
-            // with metrics on, pin the frame so the rows_in count below
-            // cannot re-execute the batch plan (the sink persists only
-            // internally)
-            val f = if (mtx.isDefined) flat.localCheckpoint(true) else flat
-            // expectations judge the UPSERT serving rows BEFORE the
-            // store write: Halt fails the batch here (store keeps its
-            // pre-batch state), Drop violators dead-letter and the
-            // key's WHOLE batch delta is withheld — including the
-            // delete half of a JOIN-KEY move (both deltas share the
-            // fact id), so a violating replacement leaves the pre-batch
-            // row served instead of vanishing the key entirely. A FACT-
-            // ID move (delete on the old id, upsert on a new id) is two
-            // unrelated keys on the wire — no correlation exists to
-            // pair them, so the old id's delete applies normally
-            val violating = PipelineMetrics.enforceBatchExpectations(mtx,
-              viewName, batchId, expectRules,
-              f.filter(col("action") === "upsert").drop("action"),
-              Seq(keyField), dlDir, kind = "view")
-            val served = violating.fold(f)(v =>
-              f.join(v.select(col(keyField)), Seq(keyField), "left_anti"))
-            JdbcSink.applyViewDeltas(served, url, table, Seq(keyField),
-              stagingColumnTypes = types.orNull)
-            mtx.foreach(m => PipelineMetrics.record(m, viewName, "view",
-              batchId, rowsIn = f.count(), deadLetters = 0L,
-              stateRows = 0L, wallMs = System.currentTimeMillis() - t0))
-          case es: EsTarget =>
-            // the emission contract: a key-move's (delete, upsert) pair
-            // for one fact id must land on the upsert — deletes first.
-            // applyKeyedBatch adds the batch-progress marker, so a
-            // checkpoint replay of a delivered batch sends NOTHING
-            // (JdbcSink's in-transaction marker, ES-shaped)
-            val cfg = es.config(keyField)
-            val cached = flat.persist()
-            try {
-              // expectations judge the upsert serving rows BEFORE the
-              // send (Halt fails here; Drop violators dead-letter and
-              // the key's WHOLE batch delta is withheld — the paired
-              // delete of a JOIN-KEY move too, keeping the pre-batch
-              // document served rather than vanishing the key; a
-              // fact-id move is two uncorrelated keys and its old-id
-              // delete applies normally)
-              val upserts0 =
-                cached.filter(col("action") === "upsert").drop("action")
-              val violating = PipelineMetrics.enforceBatchExpectations(mtx,
-                viewName, batchId, expectRules, upserts0, Seq(keyField),
-                dlDir, kind = "view")
-              val upserts = violating.fold(upserts0)(v =>
-                upserts0.join(v.select(col(keyField)), Seq(keyField),
-                  "left_anti"))
-              val deletes0 =
-                cached.filter(col("action") === "delete").select(col(keyField))
-              val deletes = violating.fold(deletes0)(v =>
-                deletes0.join(v.select(col(keyField)), Seq(keyField),
-                  "left_anti"))
-              // S6: failures are data — undeliverable deltas (after the
-              // sink's retries) must not vanish while the checkpoint
-              // advances. Persisted via the sink's pre-marker hook: once
-              // the progress marker publishes, a replay sends nothing
-              // and could never regenerate these rows
-              val applied = graft.sinks.EsSink.applyKeyedBatch(markerId, batchId,
-                deletes,
-                upserts,
-                cfg, esTransport,
-                onDeadLetters = (dlDeletes, dlUpserts) =>
-                  dlDir.foreach { dir =>
-                    val dead = dlDeletes.unionByName(dlUpserts)
-                      .withColumn("pipeline", lit(viewName))
-                    if (!dead.isEmpty) dead.write.mode("append").parquet(dir)
-                  })
-              // dead-letter frames are localCheckpointed by the sink;
-              // the cached flat frame backs rows_in — no plan re-run
-              mtx.foreach(m => PipelineMetrics.record(m, viewName, "view",
-                batchId, rowsIn = cached.count(),
-                deadLetters = applied
-                  .map { case (d, u) => d.count() + u.count() }.getOrElse(0L),
-                stateRows = 0L, wallMs = System.currentTimeMillis() - t0,
-                info = if (applied.isEmpty) """{"replay_skipped":true}""" else ""))
-              ()
-            } finally { cached.unpersist(); () }
-        }
+        // pinned for its several readers (judge, the delete and upsert
+        // writes, rows_in) so none re-runs the batch plan
+        val cached = flat.persist()
+        try {
+          // the emission contract: a key-move's (delete, upsert) pair
+          // for one fact id lands on the upsert — deletes first. A
+          // violating JOIN-KEY move withholds both halves (they share
+          // the fact id), keeping the pre-batch row served; a FACT-ID
+          // move is two uncorrelated keys and its old-id delete applies
+          val upserts = cached.filter(col("action") === "upsert")
+            .drop("action")
+          val applied = ServedPipeline.writeKeyed(name, kind, batchId,
+            keyField, upserts,
+            cached.filter(col("action") === "delete").select(col(keyField)),
+            upserts, expectations, metrics, deadLetterDir, jdbc, es)
+          metrics.foreach(m => PipelineMetrics.record(m, name, "view",
+            batchId, rowsIn = cached.count(),
+            deadLetters = applied.getOrElse(0L),
+            stateRows = 0L, wallMs = System.currentTimeMillis() - t0,
+            info = if (applied.isEmpty) """{"replay_skipped":true}""" else ""))
+        } finally { cached.unpersist(); () }
         ()
       }
       .start()

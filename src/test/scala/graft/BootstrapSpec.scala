@@ -28,7 +28,7 @@ class BootstrapSpec extends SparkSpec {
   private def runPipeline(srcDir: String): Seq[(String, String, String)] = {
     val ckpt = Files.createTempDirectory("graft_boot_ckpt_").toString
     SinkSpec.recorded.clear()
-    val q = pipe.start(spark, srcDir, ckpt, cfg, new SinkSpec.Recorder)
+    val q = pipe.startDsv2(spark, srcDir, ckpt, cfg, new SinkSpec.Recorder)
     q.awaitTermination()
     SinkSpec.recorded.asScala.toSeq.map(r => (r.method, r.url, r.body)).sorted
   }

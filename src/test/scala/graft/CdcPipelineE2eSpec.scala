@@ -38,7 +38,7 @@ class CdcPipelineE2eSpec extends SparkSpec {
     val cfg = EsSink.Config("http://es:9200/idx", "u", "p", "id")
 
     SinkSpec.recorded.clear()
-    val q = pipe.start(spark, srcDir, ckpt, cfg, new SinkSpec.Recorder)
+    val q = pipe.startDsv2(spark, srcDir, ckpt, cfg, new SinkSpec.Recorder)
     q.awaitTermination()
     val reqs = SinkSpec.recorded.asScala.toSeq
     assert(reqs.exists(r => r.method == "DELETE" && r.url.endsWith("/_doc/2")))
@@ -46,34 +46,9 @@ class CdcPipelineE2eSpec extends SparkSpec {
 
     // restart over the same source + checkpoint: cursor says all consumed
     SinkSpec.recorded.clear()
-    val q2 = pipe.start(spark, srcDir, ckpt, cfg, new SinkSpec.Recorder)
+    val q2 = pipe.startDsv2(spark, srcDir, ckpt, cfg, new SinkSpec.Recorder)
     q2.awaitTermination()
     assert(SinkSpec.recorded.isEmpty, "checkpoint must prevent re-delivery")
-  }
-
-  test("incremental pipeline: stateful deltas drive the sink, one effect per changed key") {
-    val srcDir = Files.createTempDirectory("graft_inc_src_").toString
-    val ckpt = Files.createTempDirectory("graft_inc_ckpt_").toString
-    Seq(
-      ev("c", 1, "a", 1, 1), ev("u", 1, "b", 2, 2), // key 1 -> one upsert (winner b)
-      ev("c", 2, "z", 1, 3), ev("d", 2, "-", 9, 4)) // key 2 -> created+deleted in
-      .toDF("value", "offset")                      // one batch: nets to NOTHING
-      .coalesce(1).write.mode("overwrite").json(srcDir)
-
-    val pipe = CdcPipeline("inc", Subscription(Set("d"), Set("t")),
-      StructType(Seq(StructField("id", LongType), StructField("v", StringType))),
-      "id")
-    val cfg = EsSink.Config("http://es:9200/idx", "u", "p", "id")
-    SinkSpec.recorded.clear()
-    val q = pipe.startIncremental(spark, srcDir, ckpt, cfg, new SinkSpec.Recorder)
-    q.awaitTermination()
-    val reqs = SinkSpec.recorded.asScala.toSeq
-    // key 2 was never live at a batch boundary: no delete, no upsert
-    assert(!reqs.exists(_.method == "DELETE"),
-      "create+delete within one batch must net to no sink effect")
-    val puts = reqs.filter(_.method == "PUT")
-    assert(puts.map(_.body) == Seq("""{"id":1,"v":"b"}"""),
-      s"exactly one upsert for key 1, got: ${puts.map(_.body)}")
   }
 
   test("R12 transform hook: PII scrub runs inside the pipeline before the sink") {
@@ -98,7 +73,7 @@ class CdcPipelineE2eSpec extends SparkSpec {
       "id", transform = scrub)
     val cfg = EsSink.Config("http://es:9200/idx", "u", "p", "id")
     SinkSpec.recorded.clear()
-    val q = pipe.start(spark, srcDir, ckpt, cfg, new SinkSpec.Recorder)
+    val q = pipe.startDsv2(spark, srcDir, ckpt, cfg, new SinkSpec.Recorder)
     q.awaitTermination()
     val bodies = SinkSpec.recorded.asScala.toSeq.filter(_.method == "PUT").map(_.body).sorted
     assert(bodies == Seq("""{"id":1,"v":"mail <EMAIL> please"}""",

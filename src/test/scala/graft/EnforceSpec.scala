@@ -127,6 +127,44 @@ class EnforceSpec extends SparkSpec {
     (ev, off)
   }
 
+  test("lww documents keep every row column, an `action` column too, and a delete keeps its wire key when a transform retypes the id") {
+    EnforceSpec.recorded.clear()
+    val dlDir = Files.createTempDirectory("graft_enf_lww_cols_dl_").toString + "/dl"
+    // the transform turns the STRING wire id into a BIGINT document id; a
+    // delete carries only its pre-transform key ("007")
+    val pipe = CdcPipeline("enf_lww_cols",
+      Subscription(Set("shop"), Set("documents")),
+      StructType.fromDDL("doc_id STRING, action STRING, text STRING"),
+      "doc_id", deadLetterDir = Some(dlDir), metrics = Some(target),
+      exprTransform = Some(ExprTransform(
+        sets = Seq(("doc_id", "cast(row.doc_id as bigint)")))),
+      expectations = Seq(Profile.InRange("id_small", "doc_id", 0.0, 10.0,
+        action = Profile.Drop)))
+    def ev(after: String, before: String, op: String, off: Long) =
+      (s"""{"payload":{"before":$before,"after":$after,""" +
+        s""""source":{"db":"shop","table":"documents","ts_ms":10},""" +
+        s""""op":"$op","ts_ms":10}}""", off)
+    val feed = Seq(
+      ev("""{"doc_id":"1","action":"refund","text":"a"}""", "null", "c", 1),
+      ev("""{"doc_id":"99","action":"sale","text":"b"}""", "null", "c", 2),
+      ev("null", """{"doc_id":"007","action":"sale","text":"c"}""", "d", 3)
+    ).toDF("value", "offset")
+    pipe.applyBatch(pipe.changeRows(feed),
+      EsSink.Config("http://es/idx", "u", "p", "doc_id"),
+      new EnforceSpec.Rec, batchId = 1L)
+    val reqs = EnforceSpec.recorded.asScala.toSeq
+    assert(reqs.exists(r => r.method == "PUT" &&
+      r.url.endsWith("/_doc/1") &&
+      r.body == """{"doc_id":1,"action":"refund","text":"a"}"""),
+      s"the upsert document keeps its action column: $reqs")
+    assert(reqs.exists(r => r.method == "DELETE" &&
+      r.url.endsWith("/_doc/007")), s"the delete keys by its wire id: $reqs")
+    assert(!reqs.exists(r => r.url.endsWith("/_doc/99") ||
+      r.body.contains("\"doc_id\":99")), s"the violator is withheld: $reqs")
+    assert(deadRows(dlDir).exists(d =>
+      d._1 == "id_small" && d._2.contains("\"doc_id\":99")))
+  }
+
   test("lww halt: a breach beyond budget fails the batch BEFORE any sink effect; within budget serves normally") {
     EnforceSpec.recorded.clear()
     val recorded = EnforceSpec.recorded
@@ -283,6 +321,151 @@ class EnforceSpec extends SparkSpec {
     // (lww is the drop test above — all five kinds share the hook)
   }
 
+  test("keyed serving write matrix (lww, view, ann, dedup over ES): a drop violator is never sent, a clean delete in its batch is, a 400 dead-letters that id under the pipeline's name, and a re-applied delivered batch sends nothing") {
+    exec("""CREATE TABLE enf_kw_postings ("vec_id" BIGINT NOT NULL PRIMARY KEY,
+      | "cell" INTEGER, "emb_json" VARCHAR(32000))"""
+      .stripMargin.replace("\n", ""))
+    val A = "alpha beta gamma delta epsilon zeta eta theta"
+    val B = "one two three four five six seven eight nine ten"
+    val C = "red orange yellow green blue indigo violet black"
+    def vec(id: Long, x: Double): String =
+      s"""{"vec_id":$id,"embedding":[$x,0.1]}"""
+    def order(id: Long, total: Double): String =
+      s"""{"o_orderkey":$id,"o_custkey":1,"o_total":$total}"""
+    def cap(column: String) = Seq(
+      Profile.InRange("id_cap", column, 0.0, 50.0, action = Profile.Drop))
+    def es(index: String) = EsTarget(s"http://es/$index", "u", "p")
+    // one row per kind: how its pipeline drains a feed into a work dir,
+    // the serving stage's checkpoint, its two waves (wave 2 carries the
+    // violator, the delete and the failing id), the ids, and whether a
+    // re-applied batch is marker-covered (lww stays marker-free)
+    final case class Kind(name: String, idField: String,
+        run: (String, String, Option[String], EsSink.Transport) => Unit,
+        servingCkpt: String, wave1: Seq[String], wave2: Seq[String],
+        violator: String, deleted: String, failing: String, marked: Boolean)
+    val kinds = Seq(
+      Kind("enf_kw_lww", "doc_id", (feed, work, dl, t) =>
+        CdcPipeline("enf_kw_lww", Subscription(Set("shop"), Set("documents")),
+          StructType.fromDDL("doc_id BIGINT, text STRING"), "doc_id",
+          deadLetterDir = dl, metrics = Some(target),
+          expectations = cap("doc_id"))
+          .startDsv2(spark, feed, s"$work/ckpt",
+            EsSink.Config("http://es/enf_kw_lww", "u", "p", "doc_id"), t)
+          .awaitTermination(),
+        "ckpt",
+        Seq(wire("documents", doc(3, "x"), null, "c", 10, 1)),
+        Seq(wire("documents", doc(99, "y"), null, "c", 20, 2),
+          wire("documents", null, doc(3, "x"), "d", 20, 3),
+          wire("documents", doc(5, "z"), null, "c", 20, 4)),
+        "99", "3", "5", marked = false),
+      Kind("enf_kw_view", "o_orderkey", (feed, work, dl, t) =>
+        ViewPipeline(
+          name = "enf_kw_view", databases = Set("shop"),
+          factTable = "orders",
+          factSchema = StructType.fromDDL(
+            "o_orderkey BIGINT, o_custkey BIGINT, o_total DOUBLE"),
+          factIdField = "o_orderkey", factJoinField = "o_custkey",
+          dimTable = "customer",
+          dimSchema = StructType.fromDDL("c_custkey BIGINT, c_name STRING"),
+          dimIdField = "c_custkey", dimJoinField = "c_custkey",
+          leftOuter = true, target = es("enf_kw_view"),
+          deadLetterDir = dl, metrics = Some(target),
+          expectations = Seq(Profile.InRange("id_cap", "o_total", 0.0, 50.0,
+            action = Profile.Drop)))
+          .runOnce(spark, feed, work, t),
+        "ckpt_view",
+        Seq(wire("customer", """{"c_custkey":1,"c_name":"A"}""", null, "c", 10, 1),
+          wire("orders", order(3, 5.0), null, "c", 10, 2)),
+        Seq(wire("orders", order(99, 99.0), null, "c", 20, 3),
+          wire("orders", null, order(3, 5.0), "d", 20, 4),
+          wire("orders", order(5, 7.0), null, "c", 20, 5)),
+        "99", "3", "5", marked = true),
+      Kind("enf_kw_ann", "vec_id", (feed, work, dl, t) =>
+        AnnServingPipeline(
+          name = "enf_kw_ann", databases = Set("shop"), table = "embeddings",
+          idField = "vec_id", vectorField = "embedding",
+          cents = Array(Array(1f, 0f), Array(-1f, 0f)),
+          jdbcUrl = url, postingsTable = "enf_kw_postings",
+          esMirror = Some(es("enf_kw_ann")),
+          deadLetterDir = dl, metrics = Some(target),
+          expectations = cap("vec_id"))
+          .runOnce(spark, feed, work, t),
+        "ckpt_index",
+        Seq(wire("embeddings", vec(3, 1.0), null, "c", 10, 1)),
+        Seq(wire("embeddings", vec(99, -1.0), null, "c", 20, 2),
+          wire("embeddings", null, vec(3, 1.0), "d", 20, 3),
+          wire("embeddings", vec(5, 1.0), null, "c", 20, 4)),
+        "99", "3", "5", marked = true),
+      Kind("enf_kw_dedup", "doc_id", (feed, work, dl, t) =>
+        DedupClusterPipeline(
+          name = "enf_kw_dedup", databases = Set("shop"), table = "documents",
+          idField = "doc_id", textField = "text", target = es("enf_kw_dedup"),
+          deadLetterDir = dl, metrics = Some(target),
+          expectations = cap("doc_id"))
+          .runOnce(spark, feed, work, t),
+        "ckpt_clusters",
+        Seq(wire("documents", doc(3, A), null, "c", 10, 1),
+          wire("documents", doc(4, A), null, "c", 10, 2)),
+        Seq(wire("documents", doc(98, B), null, "c", 20, 3),
+          wire("documents", doc(99, B), null, "c", 20, 4),
+          wire("documents", null, doc(3, A), "d", 20, 5),
+          wire("documents", doc(5, C), null, "c", 20, 6),
+          wire("documents", doc(6, C), null, "c", 20, 7)),
+        "99", "3", "5", marked = true))
+    // (id, is-upsert) of every document request, both wire shapes
+    def ops(reqs: Seq[EsSink.Request]): Seq[(String, Boolean)] =
+      reqs.filterNot(_.url.contains("_graft_progress")).flatMap { r =>
+        r.method match {
+          case "PUT" => Seq(r.url.split("/_doc/").last -> true)
+          case "DELETE" => Seq(r.url.split("/_doc/").last -> false)
+          case _ => r.body.split("\n").toSeq.map(l => mapper.readTree(l))
+            .flatMap(n =>
+              Option(n.get("index")).map(_.get("_id").asText -> true) ++
+                Option(n.get("delete")).map(_.get("_id").asText -> false))
+        }
+      }
+    kinds.foreach { k =>
+      val dl = Files.createTempDirectory("graft_enf_kw_dl_").toString + "/dl"
+      val feed = Files.createTempDirectory("graft_enf_kw_feed_").toFile
+      val work = Files.createTempDirectory("graft_enf_kw_work_").toString
+      val store = Files.createTempDirectory("graft_enf_kw_store_").toString
+      val t = new EnforceSpec.FailingStore(store, Set(k.failing))
+      def drain(): Seq[EsSink.Request] = {
+        EnforceSpec.recorded.clear()
+        k.run(feed.toString, work, Some(dl), t)
+        EnforceSpec.recorded.asScala.toSeq
+      }
+      Files.write(new java.io.File(feed, "000.json").toPath, k.wave1.asJava)
+      drain()
+      Files.write(new java.io.File(feed, "001.json").toPath, k.wave2.asJava)
+      val sent = drain()
+      val sentOps = ops(sent)
+      assert(!sentOps.exists(_._1 == k.violator),
+        s"${k.name}: the drop violator must never be sent: $sentOps")
+      assert(sentOps.contains(k.deleted -> false),
+        s"${k.name}: the clean delete in the violator's batch is sent: $sentOps")
+      assert(deadRows(dl).exists(d => d._1 == "id_cap" &&
+        d._2.contains(s""""${k.idField}":${k.violator}""")),
+        s"${k.name}: the violator dead-letters under _expect: ${deadRows(dl)}")
+      val sinkDead = spark.read.parquet(dl).filter(col("id") === k.failing)
+        .select(col("pipeline")).as[String].collect().toSeq
+      assert(sinkDead.nonEmpty && sinkDead.forall(_ == k.name),
+        s"${k.name}: the 400'd id lands in the sink dead letters: $sinkDead")
+      // re-apply the delivered batch: drop the serving stage's last
+      // commit, as a crash between the sink and the commit leaves it
+      val commits = new java.io.File(s"$work/${k.servingCkpt}/commits")
+      val last = commits.listFiles().map(_.getName)
+        .filterNot(_.startsWith(".")).maxBy(_.toLong)
+      Seq(last, s".$last.crc").foreach(n => new java.io.File(commits, n).delete())
+      val resent = ops(drain())
+      if (k.marked)
+        assert(resent.isEmpty, s"${k.name}: the marker covers it: $resent")
+      else
+        assert(resent.sorted == sentOps.sorted,
+          s"${k.name}: marker-free, the batch re-sends as-is: $resent")
+    }
+  }
+
   test("registry: action parses per rule; drop requires a deadLetterDir; unknown action fails naming the file") {
     def conf(dir: java.io.File, fname: String, body: String): Unit =
       Files.write(new java.io.File(dir, fname).toPath,
@@ -428,7 +611,7 @@ class EnforceSpec extends SparkSpec {
       s"got: ${e2.getMessage}")
   }
 
-  test("stateful lww path: expectations resolve against the post-transform document and enforce drops") {
+  test("lww stream path: expectations resolve against the post-transform document and enforce drops") {
     EnforceSpec.recorded.clear()
     val recorded = EnforceSpec.recorded
     val dlDir = Files.createTempDirectory("graft_enf_inc_dl_").toString + "/dl"
@@ -450,7 +633,7 @@ class EnforceSpec extends SparkSpec {
       metrics = Some(target),
       expectations = Seq(Profile.InRange("tok_cap", "n_tok", 0.0, 3.0,
         action = Profile.Drop)))
-    pipe.startIncremental(spark, feedDir.toString,
+    pipe.startDsv2(spark, feedDir.toString,
       Files.createTempDirectory("graft_enf_inc_ckpt_").toString,
       EsSink.Config("http://es/idx", "u", "p", "doc_id"),
       new EnforceSpec.Rec).awaitTermination()
@@ -1005,5 +1188,20 @@ object EnforceSpec {
       new java.util.ArrayList[graft.sinks.EsSink.Request]())
   class Rec extends graft.sinks.EsSink.Transport {
     def send(req: graft.sinks.EsSink.Request): Int = { recorded.add(req); 200 }
+  }
+  /** A file-backed store that records every send and answers HTTP 400
+    * to any request addressing one of `failIds` (single or bulk shape).
+    */
+  class FailingStore(dir: String, failIds: Set[String])
+      extends graft.sinks.EsSink.Transport {
+    private val store = new graft.sinks.EsSink.FileDocStore(dir)
+    def send(req: graft.sinks.EsSink.Request): Int = {
+      recorded.add(req)
+      if (failIds.exists(id => req.url.endsWith(s"/_doc/$id") ||
+          req.body.contains(s""""_id":"$id"""))) 400
+      else store.send(req)
+    }
+    override def get(url: String,
+        headers: Map[String, String]): (Int, String) = store.get(url, headers)
   }
 }

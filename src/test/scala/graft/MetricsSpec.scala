@@ -70,7 +70,7 @@ class MetricsSpec extends SparkSpec {
     val failing = new EsSink.Transport {
       def send(req: EsSink.Request): Int = 400
     }
-    pipeline.start(spark, feedDir.toString,
+    pipeline.startDsv2(spark, feedDir.toString,
       Files.createTempDirectory("graft_mx_lww_ckpt_").toString,
       cfg, failing).awaitTermination()
     val rows = rowsFor("mx_lww")
@@ -228,7 +228,7 @@ class MetricsSpec extends SparkSpec {
         Profile.InRange("id_1_2", "doc_id", 1.0, 2.0, budget = 1L)))
     PipelineMetrics.ensureExpectTable(target)
     val ok = new EsSink.Transport { def send(req: EsSink.Request): Int = 200 }
-    pipeline.start(spark, feedDir.toString,
+    pipeline.startDsv2(spark, feedDir.toString,
       Files.createTempDirectory("graft_mx_exp_ckpt_").toString,
       EsSink.Config("http://es/idx", "u", "p", "doc_id"), ok)
       .awaitTermination()

@@ -31,7 +31,7 @@ class SinkSpec extends SparkSpec {
         && !r.url.contains("_graft_progress"))
 
     // batch 0: one delete + one upsert land, then the marker publishes
-    val out0 = EsSink.applyKeyedBatch("vw", 0L,
+    val out0 = EsSink.applyKeyedBatch(Some("vw"), 0L,
       Seq(9L).toDF("id"), Seq((1L, "a")).toDF("id", "v"), cfg, store)
     assert(out0.isDefined, "an unseen batch must apply")
     assert(nonProgressSends().map(_.method).sorted == Seq("DELETE", "PUT"))
@@ -40,7 +40,7 @@ class SinkSpec extends SparkSpec {
     // REPLAY of batch 0 (crash after checkpoint-commit raced the sink):
     // the marker already covers it — zero documents re-sent
     reset()
-    val replay = EsSink.applyKeyedBatch("vw", 0L,
+    val replay = EsSink.applyKeyedBatch(Some("vw"), 0L,
       Seq(9L).toDF("id"), Seq((1L, "a")).toDF("id", "v"), cfg, store)
     assert(replay.isEmpty, "a delivered batch must be skipped")
     assert(nonProgressSends().isEmpty,
@@ -48,7 +48,7 @@ class SinkSpec extends SparkSpec {
 
     // the NEXT batch applies and advances the marker
     reset()
-    assert(EsSink.applyKeyedBatch("vw", 1L,
+    assert(EsSink.applyKeyedBatch(Some("vw"), 1L,
       spark.emptyDataset[Long].toDF("id"),
       Seq((2L, "b")).toDF("id", "v"), cfg, store).isDefined)
     assert(nonProgressSends().map(_.method) == Seq("PUT"))
@@ -56,7 +56,7 @@ class SinkSpec extends SparkSpec {
 
     // markers are PER PIPELINE: another pipeline's batch 0 still applies
     reset()
-    assert(EsSink.applyKeyedBatch("other", 0L,
+    assert(EsSink.applyKeyedBatch(Some("other"), 0L,
       spark.emptyDataset[Long].toDF("id"),
       Seq((3L, "c")).toDF("id", "v"), cfg, store).isDefined)
     assert(nonProgressSends().map(_.method) == Seq("PUT"))
@@ -70,7 +70,7 @@ class SinkSpec extends SparkSpec {
     // the caller's dead-letter persist would skip the batch on replay and
     // lose the undeliverable rows forever
     var markerAtHookTime: Option[Long] = Some(-1L)
-    assert(EsSink.applyKeyedBatch("dl", 0L,
+    assert(EsSink.applyKeyedBatch(Some("dl"), 0L,
       spark.emptyDataset[Long].toDF("id"),
       Seq((1L, "a")).toDF("id", "v"), cfg, store,
       onDeadLetters = (_, _) =>
@@ -82,14 +82,14 @@ class SinkSpec extends SparkSpec {
     // a hook that throws (dead-letter persist failed) must NOT publish
     // the marker: the replay re-sends (idempotent) and re-persists
     intercept[RuntimeException] {
-      EsSink.applyKeyedBatch("dl", 1L,
+      EsSink.applyKeyedBatch(Some("dl"), 1L,
         spark.emptyDataset[Long].toDF("id"),
         Seq((2L, "b")).toDF("id", "v"), cfg, store,
         onDeadLetters = (_, _) => throw new RuntimeException("disk full"))
     }
     assert(EsSink.readProgress(cfg, store, "dl").contains(0L),
       "failed hook must leave the marker at the previous batch")
-    assert(EsSink.applyKeyedBatch("dl", 1L,
+    assert(EsSink.applyKeyedBatch(Some("dl"), 1L,
       spark.emptyDataset[Long].toDF("id"),
       Seq((2L, "b")).toDF("id", "v"), cfg, store).isDefined,
       "the batch must re-apply after the failed persist")

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-/** Keeps four protocols in one place each, by scanning the main
+/** Keeps five protocols in one place each, by scanning the main
   * sources: table-exists handling lives in [[graft.sinks.JdbcSink]]
   * (`createTableIfAbsent` swallows every engine's already-exists state,
   * not just Derby's); the once-per-store drive protocol lives in
@@ -14,7 +14,9 @@ import scala.jdk.CollectionConverters._
   * no unbounded collect without a reason on record; and the conf kinds
   * share one lifecycle ([[graft.streaming.ServedPipeline]]) — no
   * per-kind loader, scan or query view, and a watcher that names no
-  * pipeline class.
+  * pipeline class; and the lww, view, ann and dedup kinds write through
+  * one keyed serving write ([[graft.streaming.ServedPipeline.writeKeyed]])
+  * — the lww kind over one stream start.
   */
 class SourceScanSpec extends AnyFunSuite {
 
@@ -102,5 +104,40 @@ class SourceScanSpec extends AnyFunSuite {
       """\b(CdcPipeline|ViewPipeline|AnnServingPipeline|DedupClusterPipeline|SearchServingPipeline)\b""")
     assert(named.isEmpty,
       s"the watcher drives ServedPipeline, never a concrete kind: $named")
+  }
+
+  /** Keyed-sink calls under `streaming/` outside ServedPipeline.writeKeyed,
+    * matched by file and line text, each with why it stays.
+    */
+  private val keyedSinkAllowlist = Seq(
+    ("AnnServingPipeline.scala", "graft.sinks.EsSink.upsert(") ->
+      ("retrainAndSwap re-PUTs every served document under its fresh " +
+        "cell: marker-free, key-addressed, outside any micro-batch"))
+
+  test("one keyed serving write: sink sends, the ES marker batch and sink dead letters only in ServedPipeline; one lww stream start") {
+    val files = scalaFiles("src/main/scala/graft/streaming")
+      .filterNot(_.endsWith("ServedPipeline.scala"))
+    assert(files.nonEmpty)
+    val calls = files.flatMap { f =>
+      Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if """applyKeyedBatch\(|applyKeyedDeltas\(|EsSink\.(upsert|delete)\(|write\.mode\("append"\)"""
+            .r.findFirstIn(line).isDefined =>
+          (f.getFileName.toString, s"$f:${i + 1}", line)
+      }
+    }
+    val unlisted = calls.filterNot { case (file, _, line) =>
+      keyedSinkAllowlist.exists { case ((f, text), _) =>
+        file == f && line.contains(text) }
+    }
+    assert(unlisted.isEmpty,
+      s"write through ServedPipeline.writeKeyed, or allowlist with a reason: ${unlisted.map(_._2)}")
+    val stale = keyedSinkAllowlist.map(_._1).filterNot { case (f, text) =>
+      calls.exists(c => c._1 == f && c._3.contains(text)) }
+    assert(stale.isEmpty, s"allowlist entries that match no call: $stale")
+    val lww = Seq(Paths.get("src/main/scala/graft/streaming/CdcPipeline.scala"))
+    val extra = Seq("""\bstartIncremental\b""", """\bupsertRaw\b""", """\.json\(""")
+      .flatMap(hits(lww, _))
+    assert(extra.isEmpty,
+      s"the lww kind starts one stream, startDsv2 over the graft-cdc source: $extra")
   }
 }
