@@ -156,7 +156,7 @@ object Bench {
     // match on the log name pooled two warehouses whose sanitized
     // roots share a suffix), or a regression at one scale would be
     // diluted by every other leg's costs
-    val sfTag = sfDir.replaceAll("[^a-zA-Z0-9]", "_")
+    val sfTag = graft.cdc.DeltaLog.dirTag(sfDir)
     val mine = drives.filter(graft.queries.DriveCost.belongsTo(_, sfTag))
     val drivesTotalMs = mine.filter(_.ms >= 0).map(_.ms).sum
     // DRIVE-COST REGRESSION GATE: compare every collected drive against

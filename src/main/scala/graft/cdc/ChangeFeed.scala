@@ -117,25 +117,19 @@ object ChangeFeed {
 
   /** The feed staged as JSON-LINES (`{"value":…, "offset":…}` records) —
     * the wire format the DSv2 source (sources.cdc.CdcEventSource) and
-    * the streaming pipelines consume. Idempotent per (dir, content).
+    * the streaming pipelines consume. Built once per (dir, content) as a
+    * warehouse artifact ([[DeltaLog.artifact]]).
+    *
+    * v2 = 32-even-file layout: the fingerprint tracks source CONTENT
+    * only, so a layout change bumps the version. Round-robin into evenly
+    * sized files: the union's natural output is a few skewed parts (one
+    * per source branch), which caps the consumers' scan parallelism — a
+    * real bronze log is many files.
     */
-  def stagedJsonl(spark: SparkSession, dir: String): String = {
-    val fp = graft.sources.Staging.fingerprint(
-      Seq(s"$dir/orders.parquet", s"$dir/customer.parquet"))
-    // v2 = 32-even-file layout: the fingerprint tracks source CONTENT
-    // only, so a layout change must bump the version or machines with a
-    // pre-existing staged feed keep the old skewed layout forever
-    val stagedDir = sys.props("java.io.tmpdir") +
-      s"/graft_cdcjsonl_v2_${dir.replaceAll("[^a-zA-Z0-9]", "_")}_$fp"
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$stagedDir/_SUCCESS"))) {
-      // round-robin into evenly sized files: the union's natural output is
-      // a few skewed parts (one per source branch), which caps the
-      // consumers' scan parallelism — a real bronze log is many files
-      fromTestData(spark, dir).repartition(32)
-        .write.mode("overwrite").json(stagedDir)
+  def stagedJsonl(spark: SparkSession, dir: String): String =
+    DeltaLog.stage(spark, "cdcjsonl_v2", dir, "orders", "customer") { out =>
+      fromTestData(spark, dir).repartition(32).write.mode("overwrite").json(out)
     }
-    stagedDir
-  }
 
   /** The feed materialized as a parquet "bronze log" and read back —
     * which is both what a real capture layer produces AND a hard
@@ -143,27 +137,15 @@ object ChangeFeed {
     * pushdown inlines the whole to_json/from_json chain into every
     * filter term (observed: 184 copies in the q17 plan), re-serializing
     * each event several times per row. Staged once, queries measure CDC
-    * processing, not fixture generation. Idempotent per (dir).
+    * processing, not fixture generation. Same v2 even-file layout as
+    * [[stagedJsonl]]: even files keep the downstream JSON parse — the
+    * CPU-bound stage of every CDC query — at full scan parallelism.
     */
-  def staged(spark: SparkSession, dir: String): DataFrame = {
-    // fingerprint of the source tables in the key: regenerated testdata
-    // invalidates the staged feed instead of silently reusing stale data
-    val fp = graft.sources.Staging.fingerprint(
-      Seq(s"$dir/orders.parquet", s"$dir/customer.parquet"))
-    // v2: see stagedJsonl — layout version keys the cache alongside the
-    // content fingerprint
-    val stagedDir = sys.props("java.io.tmpdir") +
-      s"/graft_cdcfeed_v2_${dir.replaceAll("[^a-zA-Z0-9]", "_")}_$fp"
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$stagedDir/_SUCCESS"))) {
-      // see stagedJsonl: even files keep the downstream JSON parse — the
-      // CPU-bound stage of every CDC query — at full scan parallelism
-      // (the raw union writes one skewed part per source branch, which
-      // Spark's split packing turns into ~7 tasks on 32 cores)
-      fromTestData(spark, dir).repartition(32)
-        .write.mode("overwrite").parquet(stagedDir)
-    }
-    spark.read.parquet(stagedDir)
-  }
+  def staged(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(
+      DeltaLog.stage(spark, "cdcfeed_v2", dir, "orders", "customer") { out =>
+        fromTestData(spark, dir).repartition(32).write.mode("overwrite").parquet(out)
+      })
 
   /** Row payload schema of the `documents` CDC feed — the corpus as a
     * LIVE table: the shape every CDC-maintained corpus index (near-dup,
@@ -240,31 +222,17 @@ object ChangeFeed {
     snapshot.unionByName(update).unionByName(delete)
   }
 
-  /** The embeddings feed staged as JSON-lines for the DSv2 source.
-    * Idempotent per (dir, content).
-    */
-  def stagedEmbeddingsJsonl(spark: SparkSession, dir: String): String = {
-    val fp = graft.sources.Staging.fingerprint(Seq(s"$dir/embeddings.parquet"))
-    val stagedDir = sys.props("java.io.tmpdir") +
-      s"/graft_embfeed_v1_${dir.replaceAll("[^a-zA-Z0-9]", "_")}_$fp"
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$stagedDir/_SUCCESS"))) {
+  /** The embeddings feed staged as JSON-lines for the DSv2 source. */
+  def stagedEmbeddingsJsonl(spark: SparkSession, dir: String): String =
+    DeltaLog.stage(spark, "embfeed_v1", dir, "embeddings") { out =>
       embeddingsFromTestData(spark, dir).repartition(8)
-        .write.mode("overwrite").json(stagedDir)
+        .write.mode("overwrite").json(out)
     }
-    stagedDir
-  }
 
-  /** The documents feed staged as JSON-lines for the DSv2 source.
-    * Idempotent per (dir, content).
-    */
-  def stagedDocsJsonl(spark: SparkSession, dir: String): String = {
-    val fp = graft.sources.Staging.fingerprint(Seq(s"$dir/documents.parquet"))
-    val stagedDir = sys.props("java.io.tmpdir") +
-      s"/graft_docfeed_v1_${dir.replaceAll("[^a-zA-Z0-9]", "_")}_$fp"
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$stagedDir/_SUCCESS"))) {
+  /** The documents feed staged as JSON-lines for the DSv2 source. */
+  def stagedDocsJsonl(spark: SparkSession, dir: String): String =
+    DeltaLog.stage(spark, "docfeed_v1", dir, "documents") { out =>
       documentsFromTestData(spark, dir).repartition(8)
-        .write.mode("overwrite").json(stagedDir)
+        .write.mode("overwrite").json(out)
     }
-    stagedDir
-  }
 }

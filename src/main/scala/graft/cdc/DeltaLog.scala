@@ -44,10 +44,61 @@ object DeltaLog {
     spark.conf.getOption("spark.graft.warehouse")
       .getOrElse(sys.props("java.io.tmpdir") + "/graft_warehouse")
 
-  private def dirTag(dir: String): String = dir.replaceAll("[^a-zA-Z0-9]", "_")
+  /** A data dir as a path-safe name token (every non-alphanumeric → `_`). */
+  private[graft] def dirTag(dir: String): String = dir.replaceAll("[^a-zA-Z0-9]", "_")
 
-  private[graft] def logBase(spark: SparkSession, logName: String, fp: String): String =
-    s"${warehouseRoot(spark)}/$logName/$fp"
+  /** Cheap content fingerprint of source files: murmur3 over (name,
+    * size, mtime) of every file under the given paths (one level deep —
+    * parquet files live directly under the table path). Not a data hash
+    * — stat-level change detection is the right cost for a cache key,
+    * and a regenerated table dir invalidates every artifact derived
+    * from it.
+    */
+  private def fingerprint(paths: Seq[String]): String = {
+    val parts = paths.flatMap { p =>
+      val f = new java.io.File(p)
+      val files =
+        if (f.isDirectory)
+          Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).sortBy(_.getName)
+        else Array(f)
+      files.map(x => s"${x.getName}:${x.length}:${x.lastModified}")
+    }
+    java.lang.Integer.toHexString(
+      scala.util.hashing.MurmurHash3.stringHash(parts.mkString("|")))
+  }
+
+  /** The warehouse base of a FINGERPRINTED derived artifact — a delta
+    * log, a staged fixture feed, a drive's store:
+    * `<root>/<name>_<dirTag(dir)>/<fingerprint of dir's tables>`. A
+    * regenerated source table gets a fresh base beside the old one, and
+    * [[gc]] retires the superseded one. A derived SCHEMA or layout
+    * change must bump `name` (a `v<n>` token): the fingerprint tracks
+    * source content only.
+    */
+  def artifactBase(spark: SparkSession, name: String, dir: String,
+      tables: String*): String =
+    s"${warehouseRoot(spark)}/${name}_${dirTag(dir)}/" +
+      fingerprint(tables.map(t => s"$dir/$t.parquet"))
+
+  /** Build the artifact at [[artifactBase]] once ([[buildOnce]]: locked
+    * across threads and processes, `_GRAFT_DONE`-marked, resumable) and
+    * return its base. `build` gets the base and writes under it —
+    * conventionally into `<base>/data`, the generation [[activeDataDir]]
+    * names before any compaction.
+    */
+  def artifact(spark: SparkSession, name: String, dir: String,
+      tables: String*)(build: String => Unit): String = {
+    val base = artifactBase(spark, name, dir, tables: _*)
+    buildOnce(base)(() => build(base))
+    base
+  }
+
+  /** A staged fixture feed: an [[artifact]] whose `write(out)` fills
+    * `out = <base>/data` once; returns `out`.
+    */
+  def stage(spark: SparkSession, name: String, dir: String,
+      tables: String*)(write: String => Unit): String =
+    artifact(spark, name, dir, tables: _*)(base => write(s"$base/data")) + "/data"
 
   /** The generation directory readers of `base` currently use: the one
     * named by `CURRENT`, or the raw `data` log before any compaction.
@@ -349,22 +400,16 @@ object DeltaLog {
     * view delta log → folds.
     */
   def ordersCustomerViewDeltas(spark: SparkSession, dir: String): DataFrame = {
-    val fp = graft.sources.Staging.fingerprint(
-      Seq(s"$dir/orders.parquet", s"$dir/customer.parquet"))
-    val base = logBase(spark, s"viewdeltalog_oc_${dirTag(dir)}", fp)
-    val dataDir = s"$base/data"
-    buildOnce(base) { () =>
+    val base = artifact(spark, "viewdeltalog_oc", dir, "orders", "customer") { base =>
       // feed the join from per-key COLLAPSED table logs: a multi-batch
       // log re-read as one stream batch would otherwise violate
       // viewDeltaStream's one-delta-per-key-per-batch input contract
       val oDir = collapsedForJoin(spark, ordersLogDir(spark, dir))
       val cDir = collapsedForJoin(spark, customerLogDir(spark, dir))
-      def streamOf(d: String) =
-        spark.readStream.schema(spark.read.parquet(d).schema).parquet(d)
       Replay.runToParquet(spark,
-        IncrementalJoin.viewDeltaStream(
-          streamOf(oDir), streamOf(cDir), "o_custkey", "c_custkey").toDF(),
-        dataDir, s"$base/ckpt")
+        IncrementalJoin.viewDeltaStream(Replay.parquetStream(spark, oDir),
+          Replay.parquetStream(spark, cDir), "o_custkey", "c_custkey").toDF(),
+        s"$base/data", s"$base/ckpt")
     }
     spark.read.parquet(activeDataDir(base))
   }
@@ -376,20 +421,15 @@ object DeltaLog {
     * real denormalization passes through. One replay, q115 folds it.
     */
   def ordersCustomerLeftViewDeltas(spark: SparkSession, dir: String): DataFrame = {
-    val fp = graft.sources.Staging.fingerprint(
-      Seq(s"$dir/orders.parquet", s"$dir/customer.parquet"))
-    val base = logBase(spark, s"viewdeltalog_ocleft_${dirTag(dir)}", fp)
-    val dataDir = s"$base/data"
-    buildOnce(base) { () =>
+    val base = artifact(spark, "viewdeltalog_ocleft", dir,
+        "orders", "customer") { base =>
       val oDir = collapsedForJoin(spark, ordersLogDir(spark, dir))
       val cDir = collapsedForJoin(spark, customerLogDir(spark, dir))
-      def streamOf(d: String) =
-        spark.readStream.schema(spark.read.parquet(d).schema).parquet(d)
       Replay.runToParquet(spark,
-        IncrementalJoin.viewDeltaStream(
-          streamOf(oDir), streamOf(cDir).filter(col("key") % 2 === 0),
+        IncrementalJoin.viewDeltaStream(Replay.parquetStream(spark, oDir),
+          Replay.parquetStream(spark, cDir).filter(col("key") % 2 === 0),
           "o_custkey", "c_custkey", leftOuter = true).toDF(),
-        dataDir, s"$base/ckpt")
+        s"$base/data", s"$base/ckpt")
     }
     spark.read.parquet(activeDataDir(base))
   }
@@ -428,12 +468,8 @@ object DeltaLog {
     * without touching either base log.
     */
   def ordersCustomerNationViewDeltas(spark: SparkSession, dir: String): DataFrame = {
-    val fp = graft.sources.Staging.fingerprint(
-      Seq(s"$dir/orders.parquet", s"$dir/customer.parquet",
-        s"$dir/nation.parquet"))
-    val base = logBase(spark, s"viewdeltalog_ocn_${dirTag(dir)}", fp)
-    val dataDir = s"$base/data"
-    buildOnce(base) { () =>
+    val base = artifact(spark, "viewdeltalog_ocn", dir,
+        "orders", "customer", "nation") { base =>
       // stage-1 log → bootstrap delta relation: latest-per-factId upserts
       // (the log-as-one-batch collapse), merged o+c payload, no prevs
       val ocDeltas = IncrementalJoin.asDeltaRelation(
@@ -446,13 +482,12 @@ object DeltaLog {
       ocDeltas.coalesce(4).write.mode("overwrite").parquet(s"$base/factside")
       nationDeltas(spark, dir).coalesce(1).write.mode("overwrite")
         .parquet(s"$base/dimside")
-      def streamOf(d: String) =
-        spark.readStream.schema(spark.read.parquet(d).schema).parquet(d)
       Replay.runToParquet(spark,
         IncrementalJoin.viewDeltaStream(
-          streamOf(s"$base/factside"), streamOf(s"$base/dimside"),
+          Replay.parquetStream(spark, s"$base/factside"),
+          Replay.parquetStream(spark, s"$base/dimside"),
           "c_nationkey", "n_nationkey").toDF(),
-        dataDir, s"$base/ckpt")
+        s"$base/data", s"$base/ckpt")
     }
     spark.read.parquet(activeDataDir(base))
   }
@@ -589,19 +624,14 @@ object DeltaLog {
     * corpus as a live table (ChangeFeed.documentsFromTestData's
     * deterministic insert/revise/delete traffic).
     */
-  def documentsLogDir(spark: SparkSession, dir: String): String = {
-    val fp = graft.sources.Staging.fingerprint(Seq(s"$dir/documents.parquet"))
-    val base = logBase(spark, s"deltalog_documents_${dirTag(dir)}", fp)
-    val dataDir = s"$base/data"
-    buildOnce(base) { () =>
-      val feedDir = ChangeFeed.stagedDocsJsonl(spark, dir)
+  def documentsLogDir(spark: SparkSession, dir: String): String =
+    activeDataDir(artifact(spark, "deltalog_documents", dir, "documents") { base =>
       Replay.runToParquet(spark,
-        deltaStream(spark, feedDir, "documents", ChangeFeed.documentsRowSchema,
+        deltaStream(spark, ChangeFeed.stagedDocsJsonl(spark, dir), "documents",
+          ChangeFeed.documentsRowSchema,
           coalesce(col("after.doc_id"), col("before.doc_id"))),
-        dataDir, s"$base/ckpt")
-    }
-    activeDataDir(base)
-  }
+        s"$base/data", s"$base/ckpt")
+    })
 
   def documentsDeltas(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(documentsLogDir(spark, dir))
@@ -610,19 +640,14 @@ object DeltaLog {
     * vector corpus as a live table (ChangeFeed.embeddingsFromTestData's
     * deterministic insert/negate/delete traffic).
     */
-  def embeddingsLogDir(spark: SparkSession, dir: String): String = {
-    val fp = graft.sources.Staging.fingerprint(Seq(s"$dir/embeddings.parquet"))
-    val base = logBase(spark, s"deltalog_embeddings_${dirTag(dir)}", fp)
-    val dataDir = s"$base/data"
-    buildOnce(base) { () =>
-      val feedDir = ChangeFeed.stagedEmbeddingsJsonl(spark, dir)
+  def embeddingsLogDir(spark: SparkSession, dir: String): String =
+    activeDataDir(artifact(spark, "deltalog_embeddings", dir, "embeddings") { base =>
       Replay.runToParquet(spark,
-        deltaStream(spark, feedDir, "embeddings", ChangeFeed.embeddingsRowSchema,
+        deltaStream(spark, ChangeFeed.stagedEmbeddingsJsonl(spark, dir),
+          "embeddings", ChangeFeed.embeddingsRowSchema,
           coalesce(col("after.vec_id"), col("before.vec_id"))),
-        dataDir, s"$base/ckpt")
-    }
-    activeDataDir(base)
-  }
+        s"$base/data", s"$base/ckpt")
+    })
 
   def embeddingsDeltas(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(embeddingsLogDir(spark, dir))
@@ -635,39 +660,29 @@ object DeltaLog {
     * [[currentRows]] of the documents log.
     */
   def documentsPairDeltas(spark: SparkSession, dir: String): DataFrame = {
-    val fp = graft.sources.Staging.fingerprint(Seq(s"$dir/documents.parquet"))
-    val base = logBase(spark, s"lshindexlog_${dirTag(dir)}", fp)
-    val dataDir = s"$base/data"
-    buildOnce(base) { () =>
+    val base = artifact(spark, "lshindexlog", dir, "documents") { base =>
       // collapsed: the whole doc log arrives as ONE stream batch, so the
       // per-doc one-delta contract needs the per-key collapse first; a
       // collapsed −prev whose insert was collapsed away is a no-op by
       // the index's removal guard
       val dlog = collapsedForJoin(spark, documentsLogDir(spark, dir))
-      def streamOf(d: String) =
-        spark.readStream.schema(spark.read.parquet(d).schema).parquet(d)
       Replay.runToParquet(spark,
-        graft.ops.MinHashLsh.indexDeltaStream(streamOf(dlog)).toDF(),
-        dataDir, s"$base/ckpt")
+        graft.ops.MinHashLsh.indexDeltaStream(Replay.parquetStream(spark, dlog)).toDF(),
+        s"$base/data", s"$base/ckpt")
     }
     spark.read.parquet(activeDataDir(base))
   }
 
+  // the fingerprint tracks source CONTENT only, so a delta-schema
+  // change must bump the log name or stale cached logs keep the old
+  // columns (ChangeFeed's v2 lesson)
   private def logFor(spark: SparkSession, dir: String, table: String,
-      rowSchema: StructType, keyExpr: Column): String = {
-    val fp = graft.sources.Staging.fingerprint(
-      Seq(s"$dir/orders.parquet", s"$dir/customer.parquet"))
-    // the fingerprint tracks source CONTENT only, so a delta-schema
-    // change must bump the log name or stale cached logs keep the old
-    // columns (ChangeFeed's v2 lesson)
-    val base = logBase(spark, s"deltalog_${table}_${dirTag(dir)}", fp)
-    val dataDir = s"$base/data"
-    buildOnce(base) { () =>
-      val feedDir = ChangeFeed.stagedJsonl(spark, dir)
+      rowSchema: StructType, keyExpr: Column): String =
+    activeDataDir(artifact(spark, s"deltalog_$table", dir,
+        "orders", "customer") { base =>
       Replay.runToParquet(spark,
-        deltaStream(spark, feedDir, table, rowSchema, keyExpr),
-        dataDir, s"$base/ckpt")
-    }
-    activeDataDir(base)
-  }
+        deltaStream(spark, ChangeFeed.stagedJsonl(spark, dir), table, rowSchema,
+          keyExpr),
+        s"$base/data", s"$base/ckpt")
+    })
 }

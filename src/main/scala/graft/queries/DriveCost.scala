@@ -64,7 +64,7 @@ object DriveCost {
     if (safe != name)
       System.err.println(s"[DriveCost] drive name '$name' sanitized to " +
         s"'$safe' for the JSON sidecar")
-    val tag = dataDir.replaceAll("[^a-zA-Z0-9]", "_")
+    val tag = graft.cdc.DeltaLog.dirTag(dataDir)
     try {
       java.nio.file.Files.write(
         java.nio.file.Paths.get(base, "_DRIVE_COST.json"),
@@ -87,7 +87,7 @@ object DriveCost {
 
   /** Every recorded drive cost in the warehouse, sorted by cost
     * descending — the warehouse layout is
-    * `<root>/<logName>/<fingerprint>/` ([[graft.cdc.DeltaLog.logBase]]),
+    * `<root>/<logName>/<fingerprint>/` ([[graft.cdc.DeltaLog.artifactBase]]),
     * so the sidecars sit exactly two levels down. Driver-side listing
     * of a driver-sized structure (one entry per memoized drive).
     */

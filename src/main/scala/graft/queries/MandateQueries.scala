@@ -994,22 +994,13 @@ object MandateQueries {
     */
   val q143 = QueryDef.sql(
     "q143_es_ann_serving",
-    """WITH e AS (SELECT vec_id,
-      |         CASE WHEN vec_id % 3 = 0
-      |              THEN list_transform(CAST(embedding AS DOUBLE[]), x -> -x)
-      |              ELSE CAST(embedding AS DOUBLE[]) END AS emb
-      |       FROM embeddings WHERE vec_id % 5 <> 0)
-      |SELECT vec_id, CAST(len(emb) AS INT) AS dim,
-      |       CAST(list_aggregate(list_transform(emb,
-      |              x -> CAST(floor(x * 1000000.0) AS BIGINT)), 'sum')
-      |            AS BIGINT) AS emb_fp,
-      |       TRUE AS cell_ok
-      |FROM e""".stripMargin) { (spark, dir) =>
+    PipelineQueries.annStoreOracle(PipelineQueries.negatedEmb,
+      "vec_id % 5 <> 0")) { (spark, dir) =>
     import graft.cdc.{ChangeFeed, DeltaLog}
     import graft.streaming.{AnnServingPipeline, EsTarget}
     val cents = ivfCentroidsFor(spark, dir)
     val feed = ChangeFeed.stagedEmbeddingsJsonl(spark, dir)
-    val base = PipelineQueries.driveBase(spark, "esann", dir, "embeddings")
+    val base = DeltaLog.artifactBase(spark, "esann", dir, "embeddings")
     val store = s"$base/store"
     val url = s"jdbc:derby:$base/derby;create=true"
     val pipeline = AnnServingPipeline(
@@ -1024,19 +1015,12 @@ object MandateQueries {
       pipeline.runOnce(spark, feed, s"$base/work",
         esTransport = new graft.sinks.EsSink.FileDocStore(store))
     }
-    val docs = PipelineQueries.readDocStore(spark, store,
+    PipelineQueries.annFingerprints(PipelineQueries.readDocStore(spark, store,
       org.apache.spark.sql.types.StructType.fromDDL(
         "vec_id BIGINT, cell INT, emb_json STRING"))
       .select(col("vec_id"), col("cell"),
         from_json(col("emb_json"), org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType)).as("emb"))
-    docs.select(col("vec_id"),
-      size(col("emb")).as("dim"),
-      aggregate(transform(col("emb"),
-          x => floor(x.cast("double") * lit(1000000.0d))),
-        lit(0L), (a, x) => a + x).as("emb_fp"),
-      (col("cell") === VectorSearch.nearestCell(col("emb"), cents))
-        .as("cell_ok"))
+          org.apache.spark.sql.types.FloatType)).as("embedding")), cents)
   }
 
   /** Q132: REAL image resize — the full decode → nearest-neighbor

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
+import graft.cdc.DeltaLog
 import graft.ops._
 import graft.sinks.JdbcSink
 import org.apache.spark.sql.expressions.Window
@@ -1014,14 +1015,10 @@ object PipelineQueries {
     // shared-delta-log pattern (q118/q115): the query's measured cost
     // is the FOLD of the churn, which is the operation the view exists
     // to make cheap
-    import graft.cdc.DeltaLog
-    val fp = graft.sources.Staging.fingerprint(Seq(s"$dir/documents.parquet"))
-    val hbase = DeltaLog.logBase(spark,
-      s"graphview_pr_hist_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", fp)
-    DeltaLog.buildOnce(hbase) { () =>
+    val hbase = DeltaLog.artifact(spark, "graphview_pr_hist", dir, "documents") { b =>
       PageRank.ranksWithHistory(oldE, 8).zipWithIndex.foreach {
         case (h, k) =>
-          h.coalesce(1).write.mode("overwrite").parquet(s"$hbase/data/iter=$k")
+          h.coalesce(1).write.mode("overwrite").parquet(s"$b/data/iter=$k")
       }
     }
     val hist = (0 to 8).map(k => spark.read.parquet(s"$hbase/data/iter=$k"))
@@ -1096,13 +1093,9 @@ object PipelineQueries {
     // base distances = the maintained view, materialized once per
     // dataset fingerprint (the q118 shared-log pattern — see q129);
     // the measured cost is the churn fold
-    import graft.cdc.DeltaLog
-    val fp = graft.sources.Staging.fingerprint(Seq(s"$dir/orders.parquet"))
-    val bbase = DeltaLog.logBase(spark,
-      s"graphview_bfs_base_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", fp)
-    DeltaLog.buildOnce(bbase) { () =>
+    val bbase = DeltaLog.artifact(spark, "graphview_bfs_base", dir, "orders") { b =>
       CorpusOps.bfsDistances(oldEdges, seeds).coalesce(4)
-        .write.mode("overwrite").parquet(s"$bbase/data")
+        .write.mode("overwrite").parquet(s"$b/data")
     }
     val base = spark.read.parquet(s"$bbase/data")
     CorpusOps.incrementalBfs(oldEdges, base, cut.unionByName(skip), seeds)
@@ -1155,7 +1148,6 @@ object PipelineQueries {
 
   val q131 = QueryDef.sql(
     "q131_cdc_cluster_maintenance", clusterOracleSql) { (spark, dir) =>
-    import graft.cdc.DeltaLog
     // post-traffic pairs: the MAINTAINED index's live candidates,
     // exact-verified against the log's current corpus (q118's verify)
     val live = MinHashLsh.livePairs(DeltaLog.documentsPairDeltas(spark, dir))
@@ -1179,20 +1171,17 @@ object PipelineQueries {
     // LSH + cluster fixpoint, steady-state drives measure exactly the
     // incremental churn fold. Round-12 audit: the two stages were
     // ~2.2 s of the 4.0 s clean median at sf0.1.
-    val pbase = DeltaLog.logBase(spark,
-      s"dedupprior_${dir.replaceAll("[^a-zA-Z0-9]", "_")}",
-      graft.sources.Staging.fingerprint(Seq(s"$dir/documents.parquet")))
-    // buildOnce: in-JVM monitor + cross-process file lock + done marker
-    // — concurrent drives must not overwrite each other's in-flight
-    // cache writes, and a crashed build must retry, not serve partials
-    DeltaLog.buildOnce(pbase) { () =>
+    // built once (DeltaLog.artifact's lock + done marker): concurrent
+    // drives must not overwrite each other's in-flight cache writes,
+    // and a crashed build must retry, not serve partials
+    val pbase = DeltaLog.artifact(spark, "dedupprior", dir, "documents") { b =>
       val pre0 = MinHashLsh.nearDupPairs(
         Tables.documents(spark, dir), "doc_id", "text", 3, 0.6)
         .select(col("doc_id_a"), col("doc_id_b"))
         .localCheckpoint(true)
-      pre0.coalesce(4).write.mode("overwrite").parquet(s"$pbase/pre")
+      pre0.coalesce(4).write.mode("overwrite").parquet(s"$b/pre")
       CorpusOps.dupClusters(pre0).coalesce(4)
-        .write.mode("overwrite").parquet(s"$pbase/labels0")
+        .write.mode("overwrite").parquet(s"$b/labels0")
     }
     val pre = spark.read.parquet(s"$pbase/pre")
     val labels0 = spark.read.parquet(s"$pbase/labels0")
@@ -1218,6 +1207,41 @@ object PipelineQueries {
     s"""CREATE TABLE $table ("vec_id" BIGINT NOT NULL PRIMARY KEY,
        | "cell" INTEGER, "emb_json" VARCHAR(32000))"""
       .stripMargin.replace("\n", "")
+  /** The ANN drives' certified read-back: per served vector (vec_id,
+    * cell, embedding) its dim, a fixed-point fingerprint (sum of
+    * floor(x·1e6) — order-free integer arithmetic both engines state
+    * identically) and `cell_ok`, the served cell checked against the
+    * quantizer's assignment (Lloyd-trained, not SQL-restatable — q29's
+    * guarantee-band pattern). [[annStoreOracle]] states the other side.
+    */
+  private[queries] def annFingerprints(served: DataFrame,
+      cents: Array[Array[Float]]): DataFrame =
+    served.select(col("vec_id"), size(col("embedding")).as("dim"),
+      aggregate(transform(col("embedding"),
+          x => floor(x.cast("double") * lit(1000000.0d))),
+        lit(0L), (a, x) => a + x).as("emb_fp"),
+      (col("cell") === VectorSearch.nearestCell(col("embedding"), cents))
+        .as("cell_ok"))
+
+  /** The post-traffic embedding: %3 vectors negated (the feed's update). */
+  private[queries] val negatedEmb: String =
+    """CASE WHEN vec_id % 3 = 0
+      |              THEN list_transform(CAST(embedding AS DOUBLE[]), x -> -x)
+      |              ELSE CAST(embedding AS DOUBLE[]) END""".stripMargin
+
+  /** Oracle of [[annFingerprints]]: the live vectors `where` selects,
+    * each embedding stated by `emb`.
+    */
+  private[queries] def annStoreOracle(emb: String, where: String): String =
+    s"""WITH e AS (SELECT vec_id, $emb AS emb
+       |       FROM embeddings WHERE $where)
+       |SELECT vec_id, CAST(len(emb) AS INT) AS dim,
+       |       CAST(list_aggregate(list_transform(emb,
+       |              x -> CAST(floor(x * 1000000.0) AS BIGINT)), 'sum')
+       |            AS BIGINT) AS emb_fp,
+       |       TRUE AS cell_ok
+       |FROM e""".stripMargin
+
   private def enrichedDdl(table: String): String =
     s"""CREATE TABLE $table ("o_orderkey" BIGINT NOT NULL PRIMARY KEY,
        | "o_custkey" BIGINT, "o_orderstatus" VARCHAR(8),
@@ -1225,17 +1249,6 @@ object PipelineQueries {
        | "c_custkey" BIGINT, "c_name" VARCHAR(64), "c_nationkey" INTEGER,
        | "c_acctbal" DOUBLE, "c_mktsegment" VARCHAR(32))"""
       .stripMargin.replace("\n", "")
-
-  /** A drive's store base in the delta-log warehouse:
-    * `<prefix>_<sanitized data dir>/<fingerprint of the source tables>`
-    * ([[graft.cdc.DeltaLog.logBase]]) — a regenerated source gets a
-    * fresh base, and the warehouse GC retires the superseded one.
-    */
-  private[queries] def driveBase(spark: SparkSession, prefix: String,
-      dir: String, tables: String*): String =
-    graft.cdc.DeltaLog.logBase(spark,
-      s"${prefix}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}",
-      graft.sources.Staging.fingerprint(tables.map(t => s"$dir/$t.parquet")))
 
   /** The staged JSON wire as raw (value, offset) rows — the batch input
     * of the lww drives' `applyBatch`.
@@ -1266,10 +1279,10 @@ object PipelineQueries {
     */
   val q133 = QueryDef.sql(
     "q133_dedup_cluster_serving", clusterOracleSql) { (spark, dir) =>
-    import graft.cdc.{ChangeFeed, DeltaLog}
+    import graft.cdc.ChangeFeed
     import graft.streaming.{DedupClusterPipeline, JdbcTarget}
     val feed = ChangeFeed.stagedDocsJsonl(spark, dir)
-    val base = driveBase(spark, "dedupserve", dir, "documents")
+    val base = DeltaLog.artifactBase(spark, "dedupserve", dir, "documents")
     val url = s"jdbc:derby:$base/derby;create=true"
     val pipeline = DedupClusterPipeline(
       name = "q133", databases = Set("shop"), table = "documents",
@@ -1320,7 +1333,6 @@ object PipelineQueries {
       |           (tf + 1.2 * (1 - 0.75 + 0.75 * len / al))) AS bm25
       |FROM tf JOIN df USING (token) CROSS JOIN st
       |GROUP BY doc_id""".stripMargin) { (spark, dir) =>
-    import graft.cdc.DeltaLog
     val deltas = DeltaLog.documentsDeltas(spark, dir)
     CorpusOps.bm25FromIndex(
       CorpusOps.liveTermPostings(CorpusOps.termPostingDeltas(deltas)),
@@ -1371,7 +1383,6 @@ object PipelineQueries {
       |       CAST(sum(CAST(round((p - q) * ln(p / q) * 1e9) AS BIGINT))
       |            OVER (PARTITION BY feature) AS DOUBLE) / 1e9 AS psi_feature
       |FROM p""".stripMargin) { (spark, dir) =>
-    import graft.cdc.DeltaLog
     def feats(textCol: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
       val toks = split(textCol, " ")
       array(
@@ -1466,10 +1477,9 @@ object PipelineQueries {
       |FROM tf JOIN df USING (token) CROSS JOIN st
       |GROUP BY doc_id""".stripMargin) { (spark, dir) =>
     import graft.cdc.ChangeFeed
-    import graft.cdc.DeltaLog
     import graft.streaming.SearchServingPipeline
     val feed = ChangeFeed.stagedDocsJsonl(spark, dir)
-    val base = driveBase(spark, "searchserve", dir, "documents")
+    val base = DeltaLog.artifactBase(spark, "searchserve", dir, "documents")
     val url = s"jdbc:derby:$base/derby;create=true"
     val pipeline = SearchServingPipeline(
       name = "q135", databases = Set("shop"), table = "documents",
@@ -1545,7 +1555,6 @@ object PipelineQueries {
       |      FROM br FULL JOIN cr ON br.doc_id = cr.doc_id)
       |SELECT doc_id, r_lex, r_sem, rrf FROM f
       |ORDER BY rrf DESC, doc_id LIMIT 20""".stripMargin) { (spark, dir) =>
-    import graft.cdc.DeltaLog
     val docDeltas = DeltaLog.documentsDeltas(spark, dir)
     val vecStore = VectorSearch.livePostings(
       VectorSearch.postingDeltas(DeltaLog.embeddingsDeltas(spark, dir),
@@ -1608,7 +1617,6 @@ object PipelineQueries {
       |UNION ALL SELECT 's2_exact_dedup', count(*) FROM s2
       |UNION ALL SELECT 's3_near_dedup', count(*) FROM s3
       |UNION ALL SELECT 's4_source_cap', count(*) FROM s4""".stripMargin) { (spark, dir) =>
-    import graft.cdc.DeltaLog
     CorpusOps.curationFunnelFromLog(spark,
       DeltaLog.documentsDeltas(spark, dir),
       DeltaLog.documentsPairDeltas(spark, dir),
@@ -1666,10 +1674,10 @@ object PipelineQueries {
       |       c.c_custkey, c.c_name, c.c_mktsegment
       |FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
       |WHERE o.o_orderkey % 5 <> 0""".stripMargin) { (spark, dir) =>
-    import graft.cdc.{ChangeFeed, DeltaLog}
+    import graft.cdc.ChangeFeed
     import graft.streaming.{EsTarget, ViewPipeline}
     val feed = ChangeFeed.stagedJsonl(spark, dir)
-    val base = driveBase(spark, "esview", dir, "orders", "customer")
+    val base = DeltaLog.artifactBase(spark, "esview", dir, "orders", "customer")
     val store = s"$base/store"
     val pipeline = ViewPipeline(
       name = "q140", databases = Set("shop"),
@@ -1738,7 +1746,7 @@ object PipelineQueries {
     import graft.sinks.EsSink
     import graft.streaming.{CdcPipeline, PipelineMetrics}
     val feedDir = ChangeFeed.stagedJsonl(spark, dir)
-    val base = driveBase(spark, "metrics", dir, "orders", "customer")
+    val base = DeltaLog.artifactBase(spark, "metrics", dir, "orders", "customer")
     val url = s"jdbc:derby:$base/derby;create=true"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q141")
     val blackhole = new EsSink.Transport {
@@ -1798,10 +1806,10 @@ object PipelineQueries {
     */
   val q142 = QueryDef.sql(
     "q142_es_dedup_serving", clusterOracleSql) { (spark, dir) =>
-    import graft.cdc.{ChangeFeed, DeltaLog}
+    import graft.cdc.ChangeFeed
     import graft.streaming.{DedupClusterPipeline, EsTarget}
     val feed = ChangeFeed.stagedDocsJsonl(spark, dir)
-    val base = driveBase(spark, "esdedup", dir, "documents")
+    val base = DeltaLog.artifactBase(spark, "esdedup", dir, "documents")
     val store = s"$base/store"
     val pipeline = DedupClusterPipeline(
       name = "q142", databases = Set("shop"), table = "documents",
@@ -1832,7 +1840,6 @@ object PipelineQueries {
     */
   private def filteredSearchInputs(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    import graft.cdc.DeltaLog
     val vecStore = VectorSearch.livePostings(
       VectorSearch.postingDeltas(DeltaLog.embeddingsDeltas(spark, dir),
         MandateQueries.ivfCentroidsFor(spark, dir)))
@@ -2176,7 +2183,6 @@ object PipelineQueries {
       |             WHERE doc_id IS NOT NULL AND doc_id NOT IN
       |               (SELECT doc_id FROM documents)) AS BIGINT),
       |       CAST(0 AS BIGINT))""".stripMargin) { (spark, dir) =>
-    import graft.cdc.DeltaLog
     import graft.ops.Profile
     val cur = DeltaLog.currentRows(DeltaLog.documentsDeltas(spark, dir))
       .select(col("key").cast("long").as("doc_id"),
@@ -2239,7 +2245,7 @@ object PipelineQueries {
     import graft.sinks.EsSink
     import graft.streaming.{CdcPipeline, PipelineMetrics}
     val feedDir = ChangeFeed.stagedJsonl(spark, dir)
-    val base = driveBase(spark, "expect", dir, "orders", "customer")
+    val base = DeltaLog.artifactBase(spark, "expect", dir, "orders", "customer")
     val url = s"jdbc:derby:$base/derby;create=true"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q151")
     val blackhole = new EsSink.Transport {
@@ -2369,7 +2375,6 @@ object PipelineQueries {
       |         AS n_removed
       |FROM cur c LEFT JOIN agg a ON c.doc_id = a.doc_id""".stripMargin) {
     (spark, dir) =>
-    import graft.cdc.DeltaLog
     val docDeltas = DeltaLog.documentsDeltas(spark, dir)
     val cur = DeltaLog.currentRows(docDeltas)
       .select(col("key").cast("long").as("doc_id"),
@@ -2398,7 +2403,7 @@ object PipelineQueries {
     import graft.sinks.EsSink
     import graft.streaming.{CdcPipeline, PipelineMetrics}
     val feedDir = ChangeFeed.stagedJsonl(spark, dir)
-    val base = driveBase(spark, "enforce", dir, "orders", "customer")
+    val base = DeltaLog.artifactBase(spark, "enforce", dir, "orders", "customer")
     val store = s"$base/store"
     val dead = s"$base/dead"
     val url = s"jdbc:derby:$base/derby;create=true"
@@ -2510,7 +2515,7 @@ object PipelineQueries {
     import graft.sinks.EsSink
     import graft.streaming.{PipelineMetrics, PipelineRegistry}
     val feedDir = ChangeFeed.stagedJsonl(spark, dir)
-    val base = driveBase(spark, "refconf", dir, "orders", "customer")
+    val base = DeltaLog.artifactBase(spark, "refconf", dir, "orders", "customer")
     val url = s"jdbc:derby:$base/derby;create=true"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q156")
     val blackhole = new EsSink.Transport {
@@ -2603,7 +2608,6 @@ object PipelineQueries {
       |      FROM br FULL JOIN cr ON br.doc_id = cr.doc_id)
       |SELECT doc_id, r_lex, r_sem, rrf, TRUE AS recall_ok FROM f
       |ORDER BY rrf DESC, doc_id LIMIT 20""".stripMargin) { (spark, dir) =>
-    import graft.cdc.DeltaLog
     val docDeltas = DeltaLog.documentsDeltas(spark, dir)
     // the three live-store materializations are INDEPENDENT jobs over
     // disjoint inputs — run them as concurrent driver threads (q164's
@@ -2686,7 +2690,6 @@ object PipelineQueries {
       |       CAST(CASE WHEN n = 0 THEN 16 ELSE
       |         LEAST(16, GREATEST(4, (640 + n - 1) // n)) END AS BIGINT),
       |       TRUE FROM b3""".stripMargin) { (spark, dir) =>
-    import graft.cdc.DeltaLog
     val (vecStore0, allowedEn, queries) = filteredSearchInputs(spark, dir)
     val vecStore = vecStore0.localCheckpoint(true)
     val liveDocs = DeltaLog.currentRows(DeltaLog.documentsDeltas(spark, dir))
@@ -2814,7 +2817,7 @@ object PipelineQueries {
     import graft.cdc.{ChangeFeed, Subscription}
     import graft.sinks.EsSink
     import graft.streaming.{CdcPipeline, PipelineMetrics}
-    val base = driveBase(spark, "drift", dir, "orders")
+    val base = DeltaLog.artifactBase(spark, "drift", dir, "orders")
     val url = s"jdbc:derby:$base/derby;create=true"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q159")
     DriveCost.once(base, "q159", dir) {
@@ -2862,11 +2865,11 @@ object PipelineQueries {
       |        FROM cur)
       |SELECT token, doc_id, CAST(count(*) AS BIGINT) AS tf
       |FROM tok GROUP BY token, doc_id""".stripMargin) { (spark, dir) =>
-    import graft.cdc.{ChangeFeed, DeltaLog}
+    import graft.cdc.ChangeFeed
     import graft.ops.Profile
     import graft.streaming.{PipelineMetrics, SearchServingPipeline}
     val feed = ChangeFeed.stagedDocsJsonl(spark, dir)
-    val base = driveBase(spark, "enfsearch", dir, "documents", "customer")
+    val base = DeltaLog.artifactBase(spark, "enfsearch", dir, "documents", "customer")
     val url = s"jdbc:derby:$base/derby;create=true"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q160")
     val pipeline = SearchServingPipeline(
@@ -2911,11 +2914,11 @@ object PipelineQueries {
       |FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
       |WHERE o.o_orderkey % 5 <> 0
       |  AND c.c_acctbal BETWEEN 0 AND 10000""".stripMargin) { (spark, dir) =>
-    import graft.cdc.{ChangeFeed, DeltaLog}
+    import graft.cdc.ChangeFeed
     import graft.ops.Profile
     import graft.streaming.{JdbcTarget, PipelineMetrics, ViewPipeline}
     val feed = ChangeFeed.stagedJsonl(spark, dir)
-    val base = driveBase(spark, "enfview", dir, "orders", "customer")
+    val base = DeltaLog.artifactBase(spark, "enfview", dir, "orders", "customer")
     val url = s"jdbc:derby:$base/derby;create=true"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q161")
     val pipeline = ViewPipeline(
@@ -2961,24 +2964,14 @@ object PipelineQueries {
     */
   val q162 = QueryDef.sql(
     "q162_enforced_ann_store",
-    """WITH e AS (SELECT vec_id,
-      |         CASE WHEN vec_id % 3 = 0
-      |              THEN list_transform(CAST(embedding AS DOUBLE[]), x -> -x)
-      |              ELSE CAST(embedding AS DOUBLE[]) END AS emb
-      |       FROM embeddings WHERE vec_id % 5 <> 0
-      |         AND vec_id BETWEEN 0 AND 400)
-      |SELECT vec_id, CAST(len(emb) AS INT) AS dim,
-      |       CAST(list_aggregate(list_transform(emb,
-      |              x -> CAST(floor(x * 1000000.0) AS BIGINT)), 'sum')
-      |            AS BIGINT) AS emb_fp,
-      |       TRUE AS cell_ok
-      |FROM e""".stripMargin) { (spark, dir) =>
-    import graft.cdc.{ChangeFeed, DeltaLog}
+    annStoreOracle(negatedEmb,
+      "vec_id % 5 <> 0 AND vec_id BETWEEN 0 AND 400")) { (spark, dir) =>
+    import graft.cdc.ChangeFeed
     import graft.ops.Profile
     import graft.streaming.{AnnServingPipeline, PipelineMetrics}
     val cents = MandateQueries.ivfCentroidsFor(spark, dir)
     val feed = ChangeFeed.stagedEmbeddingsJsonl(spark, dir)
-    val base = driveBase(spark, "enfann", dir, "embeddings")
+    val base = DeltaLog.artifactBase(spark, "enfann", dir, "embeddings")
     val url = s"jdbc:derby:$base/derby;create=true"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q162")
     val pipeline = AnnServingPipeline(
@@ -2994,17 +2987,7 @@ object PipelineQueries {
       JdbcSink.createTableIfAbsent(url, vecPostingsDdl("postings_q162"))
       pipeline.runOnce(spark, feed, s"$base/work")
     }
-    spark.read.jdbc(url, "postings_q162", new java.util.Properties())
-      .select(col("vec_id").cast("long").as("vec_id"),
-        col("cell").cast("int").as("cell"),
-        from_json(col("emb_json"), org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType)).as("emb"))
-      .select(col("vec_id"), size(col("emb")).as("dim"),
-        aggregate(transform(col("emb"),
-            x => floor(x.cast("double") * lit(1000000.0d))),
-          lit(0L), (a, x) => a + x).as("emb_fp"),
-        (col("cell") === VectorSearch.nearestCell(col("emb"), cents))
-          .as("cell_ok"))
+    annFingerprints(pipeline.servedPostings(spark), cents)
   }
 
   /** Q163: ENFORCEMENT ON THE DEDUP-CLUSTER STORE under the oracle gate
@@ -3031,11 +3014,11 @@ object PipelineQueries {
     // final GROUP BY: filter SERVED rows (s), never the topology (d)
     clusterOracleSql.replace("FROM reach GROUP BY s",
       "FROM reach WHERE s BETWEEN 100 AND 1000000 GROUP BY s")) { (spark, dir) =>
-    import graft.cdc.{ChangeFeed, DeltaLog}
+    import graft.cdc.ChangeFeed
     import graft.ops.Profile
     import graft.streaming.{DedupClusterPipeline, JdbcTarget, PipelineMetrics}
     val feed = ChangeFeed.stagedDocsJsonl(spark, dir)
-    val base = driveBase(spark, "enfdedup", dir, "documents")
+    val base = DeltaLog.artifactBase(spark, "enfdedup", dir, "documents")
     val url = s"jdbc:derby:$base/derby;create=true"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q163")
     val pipeline = DedupClusterPipeline(
@@ -3093,11 +3076,11 @@ object PipelineQueries {
       |       CAST(CASE WHEN n = 0 THEN 16 ELSE
       |         LEAST(16, GREATEST(4, (640 + n - 1) // n)) END AS INT),
       |       TRUE FROM b3""".stripMargin) { (spark, dir) =>
-    import graft.cdc.{ChangeFeed, DeltaLog}
+    import graft.cdc.ChangeFeed
     import graft.streaming.AnnServingPipeline
     val cents = MandateQueries.ivfCentroidsFor(spark, dir)
     val feed = ChangeFeed.stagedEmbeddingsJsonl(spark, dir)
-    val base = driveBase(spark, "servecert", dir, "embeddings")
+    val base = DeltaLog.artifactBase(spark, "servecert", dir, "embeddings")
     val url = s"jdbc:derby:$base/derby;create=true"
     val pipeline = AnnServingPipeline(
       name = "q164", databases = Set("shop"), table = "embeddings",
@@ -3170,7 +3153,7 @@ object PipelineQueries {
     import graft.cdc.{ChangeFeed, Subscription}
     import graft.sinks.EsSink
     import graft.streaming.{CdcPipeline, PipelineMetrics}
-    val base = driveBase(spark, "driftenf", dir, "orders")
+    val base = DeltaLog.artifactBase(spark, "driftenf", dir, "orders")
     val url = s"jdbc:derby:$base/derby;create=true"
     val store = s"$base/store"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q165")
@@ -3218,7 +3201,7 @@ object PipelineQueries {
     import graft.streaming.PipelineMetrics
     // share q165's drive (memoized per warehouse base)
     q165.fn(spark, dir).count()
-    val base = driveBase(spark, "driftenf", dir, "orders")
+    val base = DeltaLog.artifactBase(spark, "driftenf", dir, "orders")
     PipelineMetrics.driftDeadLetters(spark, s"$base/dead")
       .select(col("batch_id"), col("violated"),
         get_json_object(col("row_json"), "$.o_orderkey").cast("bigint")
@@ -3250,7 +3233,7 @@ object PipelineQueries {
     import graft.sinks.EsSink
     import graft.streaming.{CdcPipeline, PipelineMetrics}
     val feedDir = ChangeFeed.stagedJsonl(spark, dir)
-    val base = driveBase(spark, "replayenf", dir, "orders", "customer")
+    val base = DeltaLog.artifactBase(spark, "replayenf", dir, "orders", "customer")
     val store = s"$base/store"
     val dead = s"$base/dead"
     val url = s"jdbc:derby:$base/derby;create=true"
@@ -3290,30 +3273,43 @@ object PipelineQueries {
         col("o_totalprice").as("price"), col("o_orderpriority"))
   }
 
-  /** Publish a DRIVE-LOCAL copy of a staged feed under `<base>/feed`
-    * with copy-to-temp-then-RENAME — the replay drives' shared staging
-    * (q167's rule, one definition for all of them): the replay epoch
-    * is fixed per drive, so a stale replay file from a previous FAILED
-    * drive in a SHARED staged feed would no-op the replay; and a crash
-    * mid-copy must not leave a partial dir the next drive drains as
-    * the whole feed. Idempotent: an existing copy is reused as-is.
+  /** Publish a DRIVE-LOCAL feed under `<base>/feed`, stage-then-RENAME
+    * — the lifecycle drives' one feed publish: `write(tmp)` fills
+    * `<base>/feed_tmp`, which is renamed into place, so a crash mid-write
+    * never leaves a partial dir the next drive drains as the whole feed.
+    * Idempotent: an existing feed is reused as-is.
+    */
+  private def publishDriveFeed(spark: SparkSession, base: String,
+      tag: String)(write: String => Unit): String = {
+    import org.apache.hadoop.fs.Path
+    val feed = new Path(s"$base/feed")
+    val fs = feed.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(feed)) {
+      val tmp = new Path(s"$base/feed_tmp")
+      fs.delete(tmp, true)
+      write(tmp.toString)
+      require(fs.rename(tmp, feed),
+        s"$tag: could not publish the drive-local feed $feed")
+    }
+    feed.toString
+  }
+
+  /** A drive-local COPY of a staged feed ([[publishDriveFeed]]) — the
+    * replay drives' rule (q167's, one definition for all of them): the
+    * replay epoch is fixed per drive, so a stale replay file from a
+    * previous FAILED drive in a SHARED staged feed would no-op the
+    * replay.
     */
   private def stageDriveLocalFeed(spark: SparkSession, feedDir: String,
-      base: String, tag: String): String = {
-    val myFeed = s"$base/feed"
-    val fs = new org.apache.hadoop.fs.Path(myFeed)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(myFeed))) {
-      val tmp = new org.apache.hadoop.fs.Path(s"$base/feed_tmp")
-      fs.delete(tmp, true)
-      org.apache.hadoop.fs.FileUtil.copy(
-        fs, new org.apache.hadoop.fs.Path(feedDir), fs, tmp,
-        false, spark.sparkContext.hadoopConfiguration)
-      require(fs.rename(tmp, new org.apache.hadoop.fs.Path(myFeed)),
-        s"$tag: could not publish the drive-local feed copy $myFeed")
+      base: String, tag: String): String =
+    publishDriveFeed(spark, base, tag) { tmp =>
+      val conf = spark.sparkContext.hadoopConfiguration
+      val src = new org.apache.hadoop.fs.Path(feedDir)
+      val fs = src.getFileSystem(conf)
+      org.apache.hadoop.fs.FileUtil.copy(fs, src, fs,
+        new org.apache.hadoop.fs.Path(tmp), false, conf)
+      ()
     }
-    myFeed
-  }
 
   /** Q168: the KEYED REPLAY lifecycle on the VIEW kind under the oracle
     * gate — q167's quarantine→fix→replay story where the dead letter is
@@ -3344,7 +3340,7 @@ object PipelineQueries {
     import graft.ops.Profile
     import graft.streaming.{JdbcTarget, PipelineMetrics, ViewPipeline}
     val feedDir = ChangeFeed.stagedJsonl(spark, dir)
-    val base = driveBase(spark, "replayview", dir, "orders", "customer")
+    val base = DeltaLog.artifactBase(spark, "replayview", dir, "orders", "customer")
     val url = s"jdbc:derby:$base/derby;create=true"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q168")
     def pipe(lo: Double, hi: Double) = ViewPipeline(
@@ -3430,30 +3426,20 @@ object PipelineQueries {
     Seq(badtype, withNew, clean).reduce(_ unionByName _)
   }
 
-  /** Publish the drive-local drifting-embeddings feed under `base`,
-    * stage-then-rename (a crash mid-write must not leave a partial dir
-    * the next drive drains as the whole feed); an existing feed is
-    * kept. Shared by the q169 and q172 drift drives.
+  /** The drive-local drifting-embeddings feed ([[publishDriveFeed]]),
+    * shared by the q169 and q172 drift drives.
     */
   private def publishDriftFeed(spark: SparkSession, dir: String,
-      base: String): String = {
-    val feed = s"$base/feed"
-    val fs = new org.apache.hadoop.fs.Path(feed)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(feed))) {
-      driftingEmbeddingsWire(spark, dir).repartition(4)
-        .write.mode("overwrite").json(s"$base/feed_tmp")
-      require(fs.rename(new org.apache.hadoop.fs.Path(s"$base/feed_tmp"),
-        new org.apache.hadoop.fs.Path(feed)),
-        s"drift drive: could not publish the drive-local feed $feed")
+      base: String): String =
+    publishDriveFeed(spark, base, "drift drive") {
+      driftingEmbeddingsWire(spark, dir).repartition(4).write.mode("overwrite").json(_)
     }
-    feed
-  }
 
   private def q169Base(spark: SparkSession, dir: String): String =
-    driveBase(spark, "driftann", dir, "embeddings")
+    DeltaLog.artifactBase(spark, "driftann", dir, "embeddings")
 
-  private def q169Drive(spark: SparkSession, dir: String): String = {
+  private def q169Drive(spark: SparkSession,
+      dir: String): graft.streaming.AnnServingPipeline = {
     import graft.streaming.{AnnServingPipeline, CdcPipeline, PipelineMetrics}
     val cents = MandateQueries.ivfCentroidsFor(spark, dir)
     val base = q169Base(spark, dir)
@@ -3473,7 +3459,7 @@ object PipelineQueries {
       JdbcSink.createTableIfAbsent(url, vecPostingsDdl("postings_q169"))
       pipeline.runOnce(spark, feed, s"$base/work")
     }
-    url
+    pipeline
   }
 
   /** Q169: DRIFT ENFORCEMENT ON THE ANN STORE under the oracle gate —
@@ -3493,27 +3479,10 @@ object PipelineQueries {
     */
   val q169 = QueryDef.sql(
     "q169_drift_enforced_ann_store",
-    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-      |       FROM embeddings WHERE vec_id % 11 <> 0 AND vec_id % 7 <> 0)
-      |SELECT vec_id, CAST(len(emb) AS INT) AS dim,
-      |       CAST(list_aggregate(list_transform(emb,
-      |              x -> CAST(floor(x * 1000000.0) AS BIGINT)), 'sum')
-      |            AS BIGINT) AS emb_fp,
-      |       TRUE AS cell_ok
-      |FROM e""".stripMargin) { (spark, dir) =>
-    val cents = MandateQueries.ivfCentroidsFor(spark, dir)
-    val url = q169Drive(spark, dir)
-    spark.read.jdbc(url, "postings_q169", new java.util.Properties())
-      .select(col("vec_id").cast("long").as("vec_id"),
-        col("cell").cast("int").as("cell"),
-        from_json(col("emb_json"), org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType)).as("emb"))
-      .select(col("vec_id"), size(col("emb")).as("dim"),
-        aggregate(transform(col("emb"),
-            x => floor(x.cast("double") * lit(1000000.0d))),
-          lit(0L), (a, x) => a + x).as("emb_fp"),
-        (col("cell") === VectorSearch.nearestCell(col("emb"), cents))
-          .as("cell_ok"))
+    annStoreOracle("CAST(embedding AS DOUBLE[])",
+      "vec_id % 11 <> 0 AND vec_id % 7 <> 0")) { (spark, dir) =>
+    val served = q169Drive(spark, dir)
+    annFingerprints(served.servedPostings(spark), served.cents)
   }
 
   /** Q170: the ANN DRIFT DEAD LETTERS under the oracle gate — q166's
@@ -3577,7 +3546,6 @@ object PipelineQueries {
       |       CAST(CASE WHEN n = 0 THEN 16 ELSE
       |         LEAST(16, GREATEST(8, (12800 + n - 1) // n)) END AS BIGINT),
       |       TRUE FROM b3""".stripMargin) { (spark, dir) =>
-    import graft.cdc.DeltaLog
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration._
@@ -3621,7 +3589,7 @@ object PipelineQueries {
   }
 
   private def q172Base(spark: SparkSession, dir: String): String =
-    driveBase(spark, "driftreplay", dir, "embeddings")
+    DeltaLog.artifactBase(spark, "driftreplay", dir, "embeddings")
 
   /** The q169 drive carried through the FULL drift lifecycle: strict
     * conf quarantines both drift classes; the conf EVOLVES (the
@@ -3632,7 +3600,8 @@ object PipelineQueries {
     * tail; a second drain judges them by the EVOLVED conf — never a
     * side door. Driven once per store ([[DriveCost.once]]).
     */
-  private def q172Drive(spark: SparkSession, dir: String): String = {
+  private def q172Drive(spark: SparkSession,
+      dir: String): graft.streaming.AnnServingPipeline = {
     import graft.streaming.{AnnServingPipeline, CdcPipeline, PipelineMetrics}
     val cents = MandateQueries.ivfCentroidsFor(spark, dir)
     val base = q172Base(spark, dir)
@@ -3672,7 +3641,7 @@ object PipelineQueries {
       // (and re-quarantined) by the same fixed rule
       pipe(1000L).runOnce(spark, feed, work)
     }
-    url
+    pipe(1000L)
   }
 
   /** Q172: the DRIFT REPLAY lifecycle on a judged-feed kind under the
@@ -3692,27 +3661,10 @@ object PipelineQueries {
     */
   val q172 = QueryDef.sql(
     "q172_drift_replay_ann_store",
-    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-      |       FROM embeddings WHERE vec_id % 11 <> 0)
-      |SELECT vec_id, CAST(len(emb) AS INT) AS dim,
-      |       CAST(list_aggregate(list_transform(emb,
-      |              x -> CAST(floor(x * 1000000.0) AS BIGINT)), 'sum')
-      |            AS BIGINT) AS emb_fp,
-      |       TRUE AS cell_ok
-      |FROM e""".stripMargin) { (spark, dir) =>
-    val cents = MandateQueries.ivfCentroidsFor(spark, dir)
-    val url = q172Drive(spark, dir)
-    spark.read.jdbc(url, "postings_q172", new java.util.Properties())
-      .select(col("vec_id").cast("long").as("vec_id"),
-        col("cell").cast("int").as("cell"),
-        from_json(col("emb_json"), org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType)).as("emb"))
-      .select(col("vec_id"), size(col("emb")).as("dim"),
-        aggregate(transform(col("emb"),
-            x => floor(x.cast("double") * lit(1000000.0d))),
-          lit(0L), (a, x) => a + x).as("emb_fp"),
-        (col("cell") === VectorSearch.nearestCell(col("emb"), cents))
-          .as("cell_ok"))
+    annStoreOracle("CAST(embedding AS DOUBLE[])",
+      "vec_id % 11 <> 0")) { (spark, dir) =>
+    val served = q172Drive(spark, dir)
+    annFingerprints(served.servedPostings(spark), served.cents)
   }
 
   /** Q173: the quarantine AFTER the q172 replay — retirement and
@@ -3788,7 +3740,7 @@ object PipelineQueries {
   }
 
   private def q174Base(spark: SparkSession, dir: String): String =
-    driveBase(spark, "driftview", dir, "orders", "customer")
+    DeltaLog.artifactBase(spark, "driftview", dir, "orders", "customer")
 
   private def q174Drive(spark: SparkSession, dir: String): String = {
     import graft.cdc.ChangeFeed
@@ -3817,16 +3769,8 @@ object PipelineQueries {
     DriveCost.once(base, "q174", dir) {
       PipelineMetrics.ensureTable(target)
       PipelineMetrics.ensureDriftTable(target)
-      val feed = s"$base/feed"
-      val fs = new org.apache.hadoop.fs.Path(feed)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(feed))) {
-        // stage-then-rename (the shared drift-drive discipline)
-        driftingViewWire(spark, dir).repartition(4)
-          .write.mode("overwrite").json(s"$base/feed_tmp")
-        require(fs.rename(new org.apache.hadoop.fs.Path(s"$base/feed_tmp"),
-          new org.apache.hadoop.fs.Path(feed)),
-          s"q174: could not publish the drive-local feed $feed")
+      val feed = publishDriveFeed(spark, base, "q174") {
+        driftingViewWire(spark, dir).repartition(4).write.mode("overwrite").json(_)
       }
       JdbcSink.createTableIfAbsent(url, enrichedDdl("enriched_q174"))
       pipeline.runOnce(spark, feed, s"$base/work")
@@ -3909,23 +3853,13 @@ object PipelineQueries {
     */
   val q176 = QueryDef.sql(
     "q176_ann_keyed_replay",
-    """WITH e AS (SELECT vec_id,
-      |         CASE WHEN vec_id % 3 = 0
-      |              THEN list_transform(CAST(embedding AS DOUBLE[]), x -> -x)
-      |              ELSE CAST(embedding AS DOUBLE[]) END AS emb
-      |       FROM embeddings WHERE vec_id % 5 <> 0)
-      |SELECT vec_id, CAST(len(emb) AS INT) AS dim,
-      |       CAST(list_aggregate(list_transform(emb,
-      |              x -> CAST(floor(x * 1000000.0) AS BIGINT)), 'sum')
-      |            AS BIGINT) AS emb_fp,
-      |       TRUE AS cell_ok
-      |FROM e""".stripMargin) { (spark, dir) =>
+    annStoreOracle(negatedEmb, "vec_id % 5 <> 0")) { (spark, dir) =>
     import graft.cdc.ChangeFeed
     import graft.ops.Profile
     import graft.streaming.{AnnServingPipeline, PipelineMetrics}
     val cents = MandateQueries.ivfCentroidsFor(spark, dir)
     val feedDir = ChangeFeed.stagedEmbeddingsJsonl(spark, dir)
-    val base = driveBase(spark, "rpann", dir, "embeddings")
+    val base = DeltaLog.artifactBase(spark, "rpann", dir, "embeddings")
     val url = s"jdbc:derby:$base/derby;create=true"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q176")
     def pipe(hi: Double) = AnnServingPipeline(
@@ -3957,17 +3891,7 @@ object PipelineQueries {
       // drive 2: only the replayed file drains, through the FIXED rule
       fixed.runOnce(spark, myFeed, work)
     }
-    spark.read.jdbc(url, "postings_q176", new java.util.Properties())
-      .select(col("vec_id").cast("long").as("vec_id"),
-        col("cell").cast("int").as("cell"),
-        from_json(col("emb_json"), org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType)).as("emb"))
-      .select(col("vec_id"), size(col("emb")).as("dim"),
-        aggregate(transform(col("emb"),
-            x => floor(x.cast("double") * lit(1000000.0d))),
-          lit(0L), (a, x) => a + x).as("emb_fp"),
-        (col("cell") === VectorSearch.nearestCell(col("emb"), cents))
-          .as("cell_ok"))
+    annFingerprints(pipe(hi = 1e12).servedPostings(spark), cents)
   }
 
   /** Q177: the KEYED REPLAY lifecycle on the DEDUP-CLUSTER kind under
@@ -3997,7 +3921,7 @@ object PipelineQueries {
     import graft.ops.Profile
     import graft.streaming.{DedupClusterPipeline, JdbcTarget, PipelineMetrics}
     val feedDir = ChangeFeed.stagedDocsJsonl(spark, dir)
-    val base = driveBase(spark, "rpdedup", dir, "documents")
+    val base = DeltaLog.artifactBase(spark, "rpdedup", dir, "documents")
     val url = s"jdbc:derby:$base/derby;create=true"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q177")
     def pipe(lo: Double) = DedupClusterPipeline(
@@ -4070,7 +3994,7 @@ object PipelineQueries {
     // v2: the v1 drives left post-lifecycle state without the DONE
     // marker — indistinguishable from a fresh dir, so the bump orphans
     // them (warehouse GC retires superseded fingerprints)
-    val base = driveBase(spark, "rbsearch2", dir, "documents")
+    val base = DeltaLog.artifactBase(spark, "rbsearch2", dir, "documents")
     val url = s"jdbc:derby:$base/derby;create=true"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q178")
     val dead = s"$base/dead"
@@ -4153,7 +4077,7 @@ object PipelineQueries {
     import graft.ops.Profile
     import graft.streaming.{PipelineMetrics, SearchServingPipeline}
     val feed = ChangeFeed.stagedDocsJsonl(spark, dir)
-    val base = driveBase(spark, "rbsearchol", dir, "documents")
+    val base = DeltaLog.artifactBase(spark, "rbsearchol", dir, "documents")
     val url = s"jdbc:derby:$base/derby;create=true"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q179")
     val dead = s"$base/dead"
@@ -4268,7 +4192,7 @@ object PipelineQueries {
     import graft.ops.Profile
     import graft.streaming.{PipelineMetrics, SearchServingPipeline}
     val feed = ChangeFeed.stagedDocsJsonl(spark, dir)
-    val base = driveBase(spark, "rbsearchgr", dir, "documents")
+    val base = DeltaLog.artifactBase(spark, "rbsearchgr", dir, "documents")
     val url = s"jdbc:derby:$base/derby;create=true"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q180")
     val dead = s"$base/dead"

@@ -205,10 +205,8 @@ final case class DedupClusterPipeline(
     val dlDir = deadLetterDir
     val pipelineName = name
     val mtx = metrics
-    val (jdbc0, es) = ServedPipeline.targets(target, idF, esTransport,
+    val (jdbc, es) = ServedPipeline.targets(target, idF, esTransport,
       name, workRoot)
-    // the JDBC target stages with the engine's default column types
-    val jdbc = jdbc0.map(_.copy(stagingColumnTypes = None))
     val supportBase = s"$workRoot/state_support"
     val labelBase = s"$workRoot/state_labels"
     val verifiedBase = s"$workRoot/state_verified"

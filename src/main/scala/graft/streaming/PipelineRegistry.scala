@@ -662,6 +662,11 @@ object PipelineRegistry {
   private def dedup(c: Conf): Entry = {
     c.need(Seq("name", "table", "idKey", "textField").forall(c.has),
       "dedup confs need name, table, idKey and textField")
+    // the served cluster columns are fixed BIGINT/INT ids: a declared
+    // staging type would have nothing to retype
+    c.need(!(c.has("jdbc") && c.node.get("jdbc").has("stagingColumnTypes")),
+      "jdbc.stagingColumnTypes is not a dedup field (the served cluster " +
+        "columns are fixed BIGINT/INT ids)")
     val tgt = c.viewTarget("clustersTable")
     val (drift, driftPol) = c.drift
     c.entry(DedupClusterPipeline(

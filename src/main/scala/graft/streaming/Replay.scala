@@ -1,9 +1,9 @@
 package graft.streaming
 
 import graft.Tables
+import graft.cdc.DeltaLog
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicLong
@@ -12,9 +12,10 @@ import java.util.concurrent.atomic.AtomicLong
   * a Structured Streaming transform to completion with
   * `Trigger.AvailableNow` (SURVEY §7.4: compare final state only).
   *
-  * Staging writes a MULTI-FILE directory that the source still drains
-  * in ONE micro-batch (`Trigger.AvailableNow` with no maxFilesPerTrigger
-  * snapshots every available file into the first batch) — watermarks
+  * Staging (a warehouse artifact, [[graft.cdc.DeltaLog.stage]]) writes a
+  * MULTI-FILE directory that the source still drains in ONE micro-batch
+  * (`Trigger.AvailableNow` with no maxFilesPerTrigger snapshots every
+  * available file into the first batch) — watermarks
   * then drop nothing and the final state equals the batch semantics,
   * which is what makes the DuckDB oracle exact. The even 32-file layout
   * (ChangeFeed.stagedJsonl's v2 rationale, guide §2.2/§6) keeps the
@@ -35,32 +36,25 @@ object Replay {
   private val nameCounter = new AtomicLong(0)
 
   /** Stage events (optionally with duplicate deliveries of every 100th
-    * event) into a deterministic temp dir; idempotent across runs.
+    * event) once per (dir, content) as a warehouse artifact
+    * ([[graft.cdc.DeltaLog.stage]]). v2 = the 32-even-file layout.
     */
-  def stageEvents(spark: SparkSession, dir: String, withDuplicates: Boolean): String = {
-    val tag = if (withDuplicates) "dup" else "plain"
-    // fingerprint keying: regenerated events.parquet invalidates the cache
-    val fp = graft.sources.Staging.fingerprint(Seq(s"$dir/events.parquet"))
-    // v2 = 32-even-file layout (fingerprint tracks source CONTENT only,
-    // so the layout change bumps the version — stagedJsonl's rule)
-    val staged = sys.props("java.io.tmpdir") +
-      s"/graft_replay_v2_${dir.replaceAll("[^a-zA-Z0-9]", "_")}_${tag}_$fp"
-    if (!Files.exists(Paths.get(s"$staged/_SUCCESS"))) {
+  def stageEvents(spark: SparkSession, dir: String, withDuplicates: Boolean): String =
+    DeltaLog.stage(spark, s"replay_v2_${if (withDuplicates) "dup" else "plain"}",
+        dir, "events") { out =>
       val ev = Tables.events(spark, dir)
-      val out = if (withDuplicates)
-        ev.unionByName(ev.filter(col("event_id") % 100 === 0)) else ev
-      out.repartition(32).write.mode("overwrite").parquet(staged)
+      (if (withDuplicates) ev.unionByName(ev.filter(col("event_id") % 100 === 0))
+       else ev).repartition(32).write.mode("overwrite").parquet(out)
     }
-    staged
-  }
+
+  /** File-stream over a parquet dir, with the dir's own schema. */
+  def parquetStream(spark: SparkSession, dir: String): DataFrame =
+    spark.readStream.schema(spark.read.parquet(dir).schema).parquet(dir)
 
   /** File-stream over the staged events. */
   def eventsStream(spark: SparkSession, dir: String,
-      withDuplicates: Boolean = false): DataFrame = {
-    val staged = stageEvents(spark, dir, withDuplicates)
-    val schema: StructType = spark.read.parquet(staged).schema
-    spark.readStream.schema(schema).parquet(staged)
-  }
+      withDuplicates: Boolean = false): DataFrame =
+    parquetStream(spark, stageEvents(spark, dir, withDuplicates))
 
   /** Events + one far-future FLUSH sentinel per given event type
     * (user_id/event_id = −1, −2, …; +30 days past max ts). An OUTER
@@ -74,11 +68,8 @@ object Replay {
     */
   def stageEventsWithFlush(spark: SparkSession, dir: String,
       flushTypes: Seq[String]): String = {
-    val fp = graft.sources.Staging.fingerprint(Seq(s"$dir/events.parquet"))
     val tag = flushTypes.mkString("_").replaceAll("[^a-zA-Z0-9_]", "")
-    val staged = sys.props("java.io.tmpdir") +
-      s"/graft_replay_v2_${dir.replaceAll("[^a-zA-Z0-9]", "_")}_flush_${tag}_$fp"
-    if (!Files.exists(Paths.get(s"$staged/_SUCCESS"))) {
+    DeltaLog.stage(spark, s"replay_v2_flush_$tag", dir, "events") { out =>
       val ev = Tables.events(spark, dir)
       val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
       val flushTs = new java.sql.Timestamp(maxTs.getTime + 30L * 86400 * 1000)
@@ -88,34 +79,23 @@ object Replay {
       val flushDf = spark.createDataFrame(flush)
         .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         .select(ev.columns.toSeq.map(col): _*)
-      ev.unionByName(flushDf).repartition(32)
-        .write.mode("overwrite").parquet(staged)
+      ev.unionByName(flushDf).repartition(32).write.mode("overwrite").parquet(out)
     }
-    staged
   }
 
   /** File-stream over events + flush sentinels (see stageEventsWithFlush). */
   def eventsStreamWithFlush(spark: SparkSession, dir: String,
-      flushTypes: Seq[String]): DataFrame = {
-    val staged = stageEventsWithFlush(spark, dir, flushTypes)
-    val schema: StructType = spark.read.parquet(staged).schema
-    spark.readStream.schema(schema).parquet(staged)
-  }
+      flushTypes: Seq[String]): DataFrame =
+    parquetStream(spark, stageEventsWithFlush(spark, dir, flushTypes))
 
   /** File-stream over the staged documents table — the corpus-as-stream
     * entry (continuous ingest curation: the same map-only text gates run
     * unchanged over readStream).
     */
-  def documentsStream(spark: SparkSession, dir: String): DataFrame = {
-    val fp = graft.sources.Staging.fingerprint(Seq(s"$dir/documents.parquet"))
-    val staged = sys.props("java.io.tmpdir") +
-      s"/graft_replay_docs_v2_${dir.replaceAll("[^a-zA-Z0-9]", "_")}_$fp"
-    if (!Files.exists(Paths.get(s"$staged/_SUCCESS")))
-      Tables.documents(spark, dir).repartition(32)
-        .write.mode("overwrite").parquet(staged)
-    val schema: StructType = spark.read.parquet(staged).schema
-    spark.readStream.schema(schema).parquet(staged)
-  }
+  def documentsStream(spark: SparkSession, dir: String): DataFrame =
+    parquetStream(spark, DeltaLog.stage(spark, "replay_docs_v2", dir, "documents") {
+      Tables.documents(spark, dir).repartition(32).write.mode("overwrite").parquet(_)
+    })
 
   /** Checkpoint root on the RAM disk when available: a replay-to-result
     * checkpoint is throwaway (offset/commit logs + state store files,

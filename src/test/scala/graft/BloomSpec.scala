@@ -1,8 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.execution.SparkPlan
 import graft.functions.BloomAgg
 import graft.ops.CorpusOps
 

@@ -61,6 +61,6 @@ class BucketingSpec extends SparkSpec {
     // pruned scan reads only that day's rows
     val expected = Tables.events(spark, sf001)
       .filter(to_date(col("ts")) === "2024-01-02").count()
-    assert(q.agg(sum(col("count"))).head.getLong(0) == expected)
+    assert(q.agg(sum(col("count"))).head().getLong(0) == expected)
   }
 }

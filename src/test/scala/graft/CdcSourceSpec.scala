@@ -5,7 +5,6 @@ import graft.sinks.EsSink
 import graft.sources.cdc._
 import graft.streaming.CdcPipeline
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{EqualTo, In}
 import org.apache.spark.sql.types._
 import java.nio.file.Files

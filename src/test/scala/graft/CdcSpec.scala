@@ -58,8 +58,6 @@ class CdcSpec extends SparkSpec {
       """{"payload":{"before":{"id":1,"v":"say \"after\": noon"},"source":{"db":"d","table":"t","ts_ms":1},"op":"u","ts_ms":1}}"""
     assert(surviving((decoy, 1L)) == 0)
     // typed path agrees
-    val typedSchema = StructType(Seq(
-      StructField("before", rowSchema), StructField("after", rowSchema)))
     val typed = EventFilters.all(Envelope.parseTyped(feed((decoy, 1L)), rowSchema))
     assert(typed.count() == 0)
   }

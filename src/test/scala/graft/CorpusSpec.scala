@@ -831,7 +831,6 @@ class CorpusSpec extends SparkSpec {
   }
 
   test("weightedSample: weight-proportional inclusion, deterministic, TakeOrdered plan") {
-    import org.apache.spark.sql.functions.col
     // two weight classes: heavy rows 10x the weight of light rows
     val rows = (1L to 2000L).map(i => (i, if (i % 2 == 0) 100L else 10L))
     val df = rows.toDF("doc_id", "n_chars")
@@ -873,7 +872,6 @@ class CorpusSpec extends SparkSpec {
   }
 
   test("bfsDistances: mixed id widths unify on the WIDER type — INT edges vs BIGINT seeds and ids above Int range both traverse correctly") {
-    import org.apache.spark.sql.functions.col
     // INT edges, BIGINT seeds: chain 1 -> 2 -> 3
     val eInt = Seq((1, 2), (2, 3)).toDF("u", "v")
     val sLong = Seq(1L).toDF("id")

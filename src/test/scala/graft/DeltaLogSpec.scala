@@ -236,4 +236,96 @@ class DeltaLogSpec extends SparkSpec {
       case None => spark.conf.unset("spark.graft.warehouse")
     }
   }
+
+  // ---- staged fixture feeds: warehouse artifacts behind DeltaLog.stage
+
+  /** Run `body` against a fresh `spark.graft.warehouse`, restored after. */
+  private def withWarehouse[T](body: String => T): T = {
+    val wh = java.nio.file.Files.createTempDirectory("graft_dl_stage_wh_").toString
+    val prev = spark.conf.getOption("spark.graft.warehouse")
+    spark.conf.set("spark.graft.warehouse", wh)
+    try body(wh)
+    finally prev match {
+      case Some(v) => spark.conf.set("spark.graft.warehouse", v)
+      case None => spark.conf.unset("spark.graft.warehouse")
+    }
+  }
+
+  /** A fresh data dir holding a copy of sf0.001's `table`. */
+  private def copiedTable(table: String): String = {
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("graft_dl_stage_src_")
+    Files.copy(Paths.get(sf001, s"$table.parquet"), dir.resolve(s"$table.parquet"))
+    dir.toString
+  }
+
+  test("two threads stage one fresh fixture: the build runs once into the warehouse and both read identical rows") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    withWarehouse { wh =>
+      val dir = copiedTable("documents")
+      val sentinelDir = java.nio.file.Files.createTempDirectory("graft_dl_sentinel_")
+        .resolve("out").toString
+      // writes into the warehouse, counted off the query listener bus;
+      // events arrive asynchronously but in order, so once the sentinel
+      // write submitted after both stagings is seen, every staging
+      // write has been counted
+      val writes = new AtomicInteger(0)
+      val sentinel = new CountDownLatch(1)
+      val listener = new QueryExecutionListener {
+        override def onSuccess(funcName: String, qe: QueryExecution,
+            durationNs: Long): Unit = {
+          val plan = qe.logical.toString
+          if (plan.contains(sentinelDir)) sentinel.countDown()
+          else if (plan.contains(wh)) writes.incrementAndGet()
+        }
+        override def onFailure(funcName: String, qe: QueryExecution,
+            exception: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        val start = new CountDownLatch(1)
+        val stagers = (1 to 2).map(_ => Future {
+          start.await()
+          val feed = graft.cdc.ChangeFeed.stagedDocsJsonl(spark, dir)
+          (feed, spark.read.json(feed).collect().map(_.toString).sorted.toSeq)
+        })
+        start.countDown()
+        val got = stagers.map(Await.result(_, 5.minutes))
+        assert(got.map(_._1).distinct.size == 1)
+        assert(got.head._1.startsWith(wh + "/docfeed_v1_"),
+          s"staged outside the warehouse: ${got.head._1}")
+        assert(got.head._2.nonEmpty && got(0)._2 == got(1)._2)
+        spark.range(1).write.parquet(sentinelDir)
+        assert(sentinel.await(60, TimeUnit.SECONDS), "sentinel write not seen")
+        assert(writes.get == 1, s"the staging build ran ${writes.get} times")
+      } finally spark.listenerManager.unregister(listener)
+    }
+  }
+
+  test("a re-fingerprinted source stages a new artifact beside the old one; gc retires the superseded one") {
+    import java.nio.file.{Files, Paths}
+    withWarehouse { _ =>
+      val dir = copiedTable("events")
+      val first = graft.streaming.Replay.stageEvents(spark, dir, withDuplicates = false)
+      val rows = spark.read.parquet(first).count()
+      // regenerate the source: a new mtime is a new content fingerprint
+      assert(new java.io.File(s"$dir/events.parquet")
+        .setLastModified(System.currentTimeMillis() + 60_000))
+      val second = graft.streaming.Replay.stageEvents(spark, dir, withDuplicates = false)
+      val (firstBase, secondBase) =
+        (Paths.get(first).getParent, Paths.get(second).getParent)
+      assert(firstBase != secondBase && firstBase.getParent == secondBase.getParent,
+        s"expected two fingerprints of one artifact: $first, $second")
+      assert(spark.read.parquet(second).count() == rows)
+      Thread.sleep(50) // the superseded marker strictly older than the gc clock
+      assert(DeltaLog.gc(spark, 0).toSet == Set(firstBase.toString))
+      assert(!Files.exists(firstBase) && Files.exists(Paths.get(second)))
+    }
+  }
 }

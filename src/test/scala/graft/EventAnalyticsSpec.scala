@@ -4,7 +4,6 @@ import java.sql.Timestamp
 
 import graft.ops.EventAnalytics
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 /** Funnel / cohort retention / transition matrix semantics on crafted
   * event logs, plus the shuffle-count scale contracts.

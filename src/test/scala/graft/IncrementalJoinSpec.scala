@@ -237,9 +237,16 @@ class IncrementalJoinSpec extends SparkSpec {
 
     // batch 3: customer 1 MOVES nation 7→8 — a stage-1 dim update whose
     // fan-out (two upserts with changed dim payloads) converts to two
-    // stage-2 fact deltas that ROUTE to a new nation group: the deltas'
-    // −prev retracts under nation 7, +new inserts under nation 8
+    // stage-2 fact deltas that ROUTE to a new nation group. Stage 2
+    // emits each as a join-key move: a delete whose −prev retracts the
+    // row under nation 7, and an upsert whose +new inserts under nation 8
     val b3 = step(Nil, Seq(Delta(1, "upsert", dn(1, 8, "A"), dn(1, 7, "A"))), Nil)
+    assert(b3.map(v => (v.factId, v.action)).sorted == Seq(
+      (10L, "delete"), (10L, "upsert"), (11L, "delete"), (11L, "upsert")))
+    assert(b3.filter(_.action == "delete").forall(v =>
+      v.dimJson == null && v.prevDimJson == nj(7, "FRA")))
+    assert(b3.filter(_.action == "upsert").forall(v =>
+      v.dimJson == nj(8, "DE") && v.prevDimJson == null))
     assert(view(10L)._2 == nj(8, "DE") && view(11L)._2 == nj(8, "DE"))
 
     // batch 4: fact key-move cust 2→1 — stage 1 emits (delete, upsert)
@@ -578,7 +585,6 @@ class IncrementalJoinSpec extends SparkSpec {
   }
 
   test("the view-delta aggregate fold is ONE shuffle (map-side explode+parse, keyed agg)") {
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.types._
     val factSchema = StructType(Seq(StructField("cust", LongType),
       StructField("v", DoubleType)))

@@ -10,7 +10,6 @@ class MultimodalSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val docs = Tables.documents(spark, sf001).limit(50)
-  private lazy val withPayload = Multimodal.withBinaryPayload(docs)
 
   test("decodeAv parses REAL WAV/MP4 headers back from synthesized containers") {
     val meta = Multimodal.decodeAvMeta(spark,

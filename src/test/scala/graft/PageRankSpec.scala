@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.PageRank
-import org.apache.spark.sql.functions._
 
 class PageRankSpec extends SparkSpec {
   import spark.implicits._

@@ -441,7 +441,7 @@ class PropertySpec extends SparkSpec {
 
   test("drop enforcement partitions the input: clean + tagged = all rows, the clean side has zero violations, every tagged row violates its named rules (seeded random)") {
     import graft.ops.Profile
-    import org.apache.spark.sql.functions.{array_contains, col, size => asize}
+    import org.apache.spark.sql.functions.{col, size => asize}
     val rnd = new scala.util.Random(40717)
     for (trial <- 0 until 3) {
       val rows: Seq[(Long, java.lang.Long, java.lang.Double)] =
@@ -572,7 +572,6 @@ class PropertySpec extends SparkSpec {
     val target = PipelineMetrics.Target(url, "replayprop_metrics")
     PipelineMetrics.ensureTable(target)
     PipelineMetrics.ensureExpectTable(target)
-    val okT = new EsSink.Transport { def send(r: EsSink.Request): Int = 200 }
     val rnd = new scala.util.Random(61803)
     for (trial <- 0 until 3) {
       val dl = Files.createTempDirectory(s"graft_rplprop_dl_$trial").toString

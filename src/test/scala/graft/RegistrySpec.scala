@@ -729,4 +729,24 @@ class RegistrySpec extends SparkSpec {
     assert(err.getMessage.contains("rg.json")
       && err.getMessage.contains("retireAfterMs"))
   }
+
+  test("dedup conf: jdbc.stagingColumnTypes fails naming file + field") {
+    val dir = Files.createTempDirectory("graft_reg_dedup_types_").toFile
+    def conf(types: String) =
+      s"""{"kind":"dedup","name":"dt","databases":["shop"],
+         |"table":"documents","idKey":"doc_id","textField":"text",
+         |"jdbc":{"url":"jdbc:derby:memory:regdeduptypes;create=true",
+         |"clustersTable":"dt_clusters"$types}}"""
+        .stripMargin.replace("\n", "")
+    val f = new java.io.File(dir, "dt.json")
+    Files.write(f.toPath, conf("").getBytes)
+    assert(registered[graft.streaming.DedupClusterPipeline](dir.toString).size == 1)
+    // the served cluster columns are fixed BIGINT/INT ids: a declared
+    // staging type must not register and then be silently ignored
+    Files.write(f.toPath,
+      conf(""","stagingColumnTypes":"cluster_id VARCHAR(8)"""").getBytes)
+    val err = intercept[Exception](PipelineRegistry.load(dir.toString))
+    assert(err.getMessage.contains("dt.json")
+      && err.getMessage.contains("jdbc.stagingColumnTypes"))
+  }
 }

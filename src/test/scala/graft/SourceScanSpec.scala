@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-/** Keeps five protocols in one place each, by scanning the main
+/** Keeps six protocols in one place each, by scanning the main
   * sources: table-exists handling lives in [[graft.sinks.JdbcSink]]
   * (`createTableIfAbsent` swallows every engine's already-exists state,
   * not just Derby's); the once-per-store drive protocol lives in
@@ -16,7 +16,10 @@ import scala.jdk.CollectionConverters._
   * per-kind loader, scan or query view, and a watcher that names no
   * pipeline class; and the lww, view, ann and dedup kinds write through
   * one keyed serving write ([[graft.streaming.ServedPipeline.writeKeyed]])
-  * — the lww kind over one stream start.
+  * — the lww kind over one stream start; and every fingerprinted derived
+  * artifact (delta log, staged fixture feed, drive store) is keyed,
+  * placed and built once by [[graft.cdc.DeltaLog.artifact]] — no
+  * hand-rolled fingerprint, temp-dir staging or `_SUCCESS` cache check.
   */
 class SourceScanSpec extends AnyFunSuite {
 
@@ -139,5 +142,42 @@ class SourceScanSpec extends AnyFunSuite {
       .flatMap(hits(lww, _))
     assert(extra.isEmpty,
       s"the lww kind starts one stream, startDsv2 over the graft-cdc source: $extra")
+  }
+
+  /** Fixture-cache lines under `src/main` outside DeltaLog, matched by
+    * file and line text, each with why it stays.
+    */
+  private val buildOnceAllowlist = Seq(
+    ("Replay.scala", "else Paths.get(sys.props(\"java.io.tmpdir\"))") ->
+      ("ckptRoot: the throwaway replay checkpoints fall back to the temp " +
+        "dir when no RAM disk exists; nothing is cached there"),
+    ("DedupClusterPipeline.scala", "new java.io.File(f, \"_SUCCESS\").exists()") ->
+      ("the cluster stage reads only COMMITTED doc-log batches while the " +
+        "live doc-log writer runs; a commit check, not a cache"),
+    ("TextAnalysis.scala", "def fingerprint(textColName: String)") ->
+      "a text-normalization column, not a cache key",
+    ("MandateQueries.scala", "TextAnalysis.fingerprint(\"text\")") ->
+      "a text-normalization column, not a cache key")
+
+  test("one build-once protocol: fingerprint keys, tmpdir stagings and _SUCCESS checks only in DeltaLog") {
+    val files = scalaFiles("src/main/scala")
+      .filterNot(_.endsWith(Paths.get("cdc", "DeltaLog.scala")))
+    assert(files.nonEmpty)
+    val found = files.flatMap { f =>
+      Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if """Staging\.fingerprint|\bfingerprint\(|java\.io\.tmpdir"|_SUCCESS""""
+            .r.findFirstIn(line).isDefined =>
+          (f.getFileName.toString, s"$f:${i + 1}", line)
+      }
+    }
+    val unlisted = found.filterNot { case (file, _, line) =>
+      buildOnceAllowlist.exists { case ((f, text), _) =>
+        file == f && line.contains(text) }
+    }
+    assert(unlisted.isEmpty,
+      s"key, place and build derived artifacts through DeltaLog.artifact, or allowlist with a reason: ${unlisted.map(_._2)}")
+    val stale = buildOnceAllowlist.map(_._1).filterNot { case (f, text) =>
+      found.exists(c => c._1 == f && c._3.contains(text)) }
+    assert(stale.isEmpty, s"allowlist entries that match no line: $stale")
   }
 }

@@ -39,7 +39,7 @@ class SqlSurfaceSpec extends SparkSpec {
         |                            ORDER BY o_totalprice DESC, o_orderkey) AS rn
         |  FROM orders) WHERE rn <= 2""".stripMargin)
     assert(topk.count() > 0)
-    assert(topk.groupBy("o_custkey").count().agg(max("count")).head.getLong(0) <= 2)
+    assert(topk.groupBy("o_custkey").count().agg(max("count")).head().getLong(0) <= 2)
   }
 
   test("curation operators are reachable from plain SQL: PII rules and the quality gate") {
@@ -61,6 +61,6 @@ class SqlSurfaceSpec extends SparkSpec {
 
     val sqlPii = spark.sql(
       s"SELECT doc_id, regexp_count(text, '$emailPat') AS n FROM documents")
-    assert(sqlPii.agg(sum("n")).head.getLong(0) == 0L) // corpus carries no PII
+    assert(sqlPii.agg(sum("n")).head().getLong(0) == 0L) // corpus carries no PII
   }
 }
