@@ -33,6 +33,7 @@ object Bench {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    graft.streaming.LocalCheckpointFileManager.install(spark)
     spark
   }
 

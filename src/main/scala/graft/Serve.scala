@@ -1,8 +1,8 @@
 package graft
 
 import graft.sinks.EsSink
-import graft.streaming.{PipelineRegistry, PipelineWatcher,
-  SearchServingPipeline, ServedPipeline}
+import graft.streaming.{LocalCheckpointFileManager, PipelineRegistry,
+  PipelineWatcher, SearchServingPipeline, ServedPipeline}
 import org.apache.spark.sql.SparkSession
 
 import java.nio.file.{Files, Paths}
@@ -70,6 +70,9 @@ object Serve {
     // an operator touching the file.
     val hook = new Thread(() => watcher.stop(), "graft-serve-shutdown")
     Runtime.getRuntime.addShutdownHook(hook)
+    // every query the server starts, hot reloads included, writes its
+    // WAL, commit log and state through graft's checkpoint file manager
+    val undoFiles = LocalCheckpointFileManager.install(spark)
     try {
       val booted = watcher.startPipelines() // fail-fast: a bad conf throws here
       watcher.startWatching()
@@ -77,6 +80,7 @@ object Serve {
       booted.size
     } finally {
       watcher.stop()
+      undoFiles()
       try Runtime.getRuntime.removeShutdownHook(hook)
       catch { case _: IllegalStateException => () } // already shutting down
     }
@@ -263,6 +267,7 @@ object Serve {
       .config(extra.toMap)
       .getOrCreate()
     sp.sparkContext.setLogLevel("WARN")
+    LocalCheckpointFileManager.install(sp)
     sp
   }
 

@@ -999,7 +999,6 @@ object MandateQueries {
     import graft.cdc.{ChangeFeed, DeltaLog}
     import graft.streaming.{AnnServingPipeline, EsTarget}
     val cents = ivfCentroidsFor(spark, dir)
-    val feed = ChangeFeed.stagedEmbeddingsJsonl(spark, dir)
     val base = DeltaLog.artifactBase(spark, "esann", dir, "embeddings")
     val store = s"$base/store"
     val url = s"jdbc:derby:$base/derby;create=true"
@@ -1009,6 +1008,7 @@ object MandateQueries {
       jdbcUrl = url, postingsTable = "postings_q143",
       esMirror = Some(EsTarget("http://graft-local/vecs_q143", "graft", "graft")))
     DeltaLog.withBuildLock(base) {
+      val feed = ChangeFeed.stagedEmbeddingsJsonl(spark, dir)
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(store))
       graft.sinks.JdbcSink.createTableIfAbsent(url,
         PipelineQueries.vecPostingsDdl("postings_q143"))

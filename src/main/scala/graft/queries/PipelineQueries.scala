@@ -1281,7 +1281,6 @@ object PipelineQueries {
     "q133_dedup_cluster_serving", clusterOracleSql) { (spark, dir) =>
     import graft.cdc.ChangeFeed
     import graft.streaming.{DedupClusterPipeline, JdbcTarget}
-    val feed = ChangeFeed.stagedDocsJsonl(spark, dir)
     val base = DeltaLog.artifactBase(spark, "dedupserve", dir, "documents")
     val url = s"jdbc:derby:$base/derby;create=true"
     val pipeline = DedupClusterPipeline(
@@ -1290,6 +1289,7 @@ object PipelineQueries {
       target = JdbcTarget(url, "clusters_q133"),
       verifyThreshold = Some(0.6), compactEvery = 0)
     DeltaLog.withBuildLock(base) {
+      val feed = ChangeFeed.stagedDocsJsonl(spark, dir)
       JdbcSink.createTableIfAbsent(url, clustersDdl("clusters_q133"))
       pipeline.runOnce(spark, feed, s"$base/work")
     }
@@ -1478,7 +1478,6 @@ object PipelineQueries {
       |GROUP BY doc_id""".stripMargin) { (spark, dir) =>
     import graft.cdc.ChangeFeed
     import graft.streaming.SearchServingPipeline
-    val feed = ChangeFeed.stagedDocsJsonl(spark, dir)
     val base = DeltaLog.artifactBase(spark, "searchserve", dir, "documents")
     val url = s"jdbc:derby:$base/derby;create=true"
     val pipeline = SearchServingPipeline(
@@ -1487,6 +1486,7 @@ object PipelineQueries {
       jdbcUrl = url, postingsTable = "postings_q135",
       lensTable = "doclens_q135")
     DeltaLog.withBuildLock(base) {
+      val feed = ChangeFeed.stagedDocsJsonl(spark, dir)
       pipeline.ensureStoreTables()
       pipeline.runOnce(spark, feed, s"$base/work")
     }
@@ -1808,7 +1808,6 @@ object PipelineQueries {
     "q142_es_dedup_serving", clusterOracleSql) { (spark, dir) =>
     import graft.cdc.ChangeFeed
     import graft.streaming.{DedupClusterPipeline, EsTarget}
-    val feed = ChangeFeed.stagedDocsJsonl(spark, dir)
     val base = DeltaLog.artifactBase(spark, "esdedup", dir, "documents")
     val store = s"$base/store"
     val pipeline = DedupClusterPipeline(
@@ -1819,6 +1818,7 @@ object PipelineQueries {
       target = EsTarget("http://graft-local/clusters_q142", "graft", "graft"),
       verifyThreshold = Some(0.6), compactEvery = 0)
     DeltaLog.withBuildLock(base) {
+      val feed = ChangeFeed.stagedDocsJsonl(spark, dir)
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(store))
       pipeline.runOnce(spark, feed, s"$base/work",
         esTransport = new graft.sinks.EsSink.FileDocStore(store))
@@ -2868,7 +2868,6 @@ object PipelineQueries {
     import graft.cdc.ChangeFeed
     import graft.ops.Profile
     import graft.streaming.{PipelineMetrics, SearchServingPipeline}
-    val feed = ChangeFeed.stagedDocsJsonl(spark, dir)
     val base = DeltaLog.artifactBase(spark, "enfsearch", dir, "documents", "customer")
     val url = s"jdbc:derby:$base/derby;create=true"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q160")
@@ -2883,6 +2882,7 @@ object PipelineQueries {
         "doc_id", s"$dir/customer.parquet", "c_custkey",
         budget = 0L, action = Profile.Drop)))
     DeltaLog.withBuildLock(base) {
+      val feed = ChangeFeed.stagedDocsJsonl(spark, dir)
       PipelineMetrics.ensureTable(target)
       PipelineMetrics.ensureExpectTable(target)
       pipeline.ensureStoreTables()
@@ -2970,7 +2970,6 @@ object PipelineQueries {
     import graft.ops.Profile
     import graft.streaming.{AnnServingPipeline, PipelineMetrics}
     val cents = MandateQueries.ivfCentroidsFor(spark, dir)
-    val feed = ChangeFeed.stagedEmbeddingsJsonl(spark, dir)
     val base = DeltaLog.artifactBase(spark, "enfann", dir, "embeddings")
     val url = s"jdbc:derby:$base/derby;create=true"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q162")
@@ -2982,6 +2981,7 @@ object PipelineQueries {
       expectations = Seq(Profile.InRange("vec_cap", "vec_id",
         0.0, 400.0, action = Profile.Drop)))
     DeltaLog.withBuildLock(base) {
+      val feed = ChangeFeed.stagedEmbeddingsJsonl(spark, dir)
       PipelineMetrics.ensureTable(target)
       PipelineMetrics.ensureExpectTable(target)
       JdbcSink.createTableIfAbsent(url, vecPostingsDdl("postings_q162"))
@@ -3017,7 +3017,6 @@ object PipelineQueries {
     import graft.cdc.ChangeFeed
     import graft.ops.Profile
     import graft.streaming.{DedupClusterPipeline, JdbcTarget, PipelineMetrics}
-    val feed = ChangeFeed.stagedDocsJsonl(spark, dir)
     val base = DeltaLog.artifactBase(spark, "enfdedup", dir, "documents")
     val url = s"jdbc:derby:$base/derby;create=true"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q163")
@@ -3030,6 +3029,7 @@ object PipelineQueries {
       expectations = Seq(Profile.InRange("doc_floor", "doc_id",
         100.0, 1000000.0, action = Profile.Drop)))
     DeltaLog.withBuildLock(base) {
+      val feed = ChangeFeed.stagedDocsJsonl(spark, dir)
       PipelineMetrics.ensureTable(target)
       PipelineMetrics.ensureExpectTable(target)
       JdbcSink.createTableIfAbsent(url, clustersDdl("clusters_q163"))
@@ -3079,7 +3079,6 @@ object PipelineQueries {
     import graft.cdc.ChangeFeed
     import graft.streaming.AnnServingPipeline
     val cents = MandateQueries.ivfCentroidsFor(spark, dir)
-    val feed = ChangeFeed.stagedEmbeddingsJsonl(spark, dir)
     val base = DeltaLog.artifactBase(spark, "servecert", dir, "embeddings")
     val url = s"jdbc:derby:$base/derby;create=true"
     val pipeline = AnnServingPipeline(
@@ -3088,6 +3087,7 @@ object PipelineQueries {
       jdbcUrl = url, postingsTable = "postings_q164",
       certTable = Some("ann_cert_q164"), k = 5, nProbe = 4)
     DeltaLog.withBuildLock(base) {
+      val feed = ChangeFeed.stagedEmbeddingsJsonl(spark, dir)
       Seq(vecPostingsDdl("postings_q164"),
         """CREATE TABLE ann_cert_q164 ("pipeline" VARCHAR(64) NOT NULL
           | PRIMARY KEY, "batch_id" BIGINT, "recall" DOUBLE,
@@ -3858,7 +3858,6 @@ object PipelineQueries {
     import graft.ops.Profile
     import graft.streaming.{AnnServingPipeline, PipelineMetrics}
     val cents = MandateQueries.ivfCentroidsFor(spark, dir)
-    val feedDir = ChangeFeed.stagedEmbeddingsJsonl(spark, dir)
     val base = DeltaLog.artifactBase(spark, "rpann", dir, "embeddings")
     val url = s"jdbc:derby:$base/derby;create=true"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q176")
@@ -3870,6 +3869,7 @@ object PipelineQueries {
       expectations = Seq(Profile.InRange("vec_cap", "vec_id",
         0.0, hi, action = Profile.Drop)))
     DriveCost.once(base, "q176", dir) {
+      val feedDir = ChangeFeed.stagedEmbeddingsJsonl(spark, dir)
       PipelineMetrics.ensureTable(target)
       PipelineMetrics.ensureExpectTable(target)
       val myFeed = stageDriveLocalFeed(spark, feedDir, base, "q176")
@@ -3920,7 +3920,6 @@ object PipelineQueries {
     import graft.cdc.ChangeFeed
     import graft.ops.Profile
     import graft.streaming.{DedupClusterPipeline, JdbcTarget, PipelineMetrics}
-    val feedDir = ChangeFeed.stagedDocsJsonl(spark, dir)
     val base = DeltaLog.artifactBase(spark, "rpdedup", dir, "documents")
     val url = s"jdbc:derby:$base/derby;create=true"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q177")
@@ -3933,6 +3932,7 @@ object PipelineQueries {
       expectations = Seq(Profile.InRange("doc_floor", "doc_id",
         lo, 1000000.0, action = Profile.Drop)))
     DriveCost.once(base, "q177", dir) {
+      val feedDir = ChangeFeed.stagedDocsJsonl(spark, dir)
       PipelineMetrics.ensureTable(target)
       PipelineMetrics.ensureExpectTable(target)
       val myFeed = stageDriveLocalFeed(spark, feedDir, base, "q177")
@@ -3990,7 +3990,6 @@ object PipelineQueries {
     import graft.cdc.ChangeFeed
     import graft.ops.Profile
     import graft.streaming.{PipelineMetrics, SearchServingPipeline}
-    val feed = ChangeFeed.stagedDocsJsonl(spark, dir)
     // v2: the v1 drives left post-lifecycle state without the DONE
     // marker — indistinguishable from a fresh dir, so the bump orphans
     // them (warehouse GC retires superseded fingerprints)
@@ -4015,6 +4014,7 @@ object PipelineQueries {
     // consumed) and the rebuild itself re-truncates whatever a partial
     // attempt left.
     DriveCost.once(base, "q178", dir, lifecycle = true) {
+      val feed = ChangeFeed.stagedDocsJsonl(spark, dir)
       val rbMark = java.nio.file.Paths.get(s"$base/_Q178_REBUILD_STARTED")
       PipelineMetrics.ensureTable(target)
       PipelineMetrics.ensureExpectTable(target)
@@ -4076,7 +4076,6 @@ object PipelineQueries {
     import graft.cdc.ChangeFeed
     import graft.ops.Profile
     import graft.streaming.{PipelineMetrics, SearchServingPipeline}
-    val feed = ChangeFeed.stagedDocsJsonl(spark, dir)
     val base = DeltaLog.artifactBase(spark, "rbsearchol", dir, "documents")
     val url = s"jdbc:derby:$base/derby;create=true"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q179")
@@ -4094,6 +4093,7 @@ object PipelineQueries {
     // the flip retries the online verb from the flipped version —
     // idempotent, the pointer just lands one higher.
     DriveCost.once(base, "q179", dir, lifecycle = true) {
+      val feed = ChangeFeed.stagedDocsJsonl(spark, dir)
       val rbMark = java.nio.file.Paths.get(s"$base/_Q179_REBUILD_STARTED")
       PipelineMetrics.ensureTable(target)
       PipelineMetrics.ensureExpectTable(target)
@@ -4191,7 +4191,6 @@ object PipelineQueries {
     import graft.cdc.ChangeFeed
     import graft.ops.Profile
     import graft.streaming.{PipelineMetrics, SearchServingPipeline}
-    val feed = ChangeFeed.stagedDocsJsonl(spark, dir)
     val base = DeltaLog.artifactBase(spark, "rbsearchgr", dir, "documents")
     val url = s"jdbc:derby:$base/derby;create=true"
     val target = PipelineMetrics.Target(url, "pipeline_metrics_q180")
@@ -4211,6 +4210,7 @@ object PipelineQueries {
     // sweep leaves v0 inside its grace window — the retry's sweeps
     // converge.
     DriveCost.once(base, "q180", dir, lifecycle = true) {
+      val feed = ChangeFeed.stagedDocsJsonl(spark, dir)
       val rbMark = java.nio.file.Paths.get(s"$base/_Q180_REBUILD_STARTED")
       PipelineMetrics.ensureTable(target)
       PipelineMetrics.ensureExpectTable(target)

@@ -143,6 +143,7 @@ object Replay {
       checkpoint: String, statePartitions: Int = 8): Unit = {
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", statePartitions)
+    val undoFiles = LocalCheckpointFileManager.install(spark)
     try {
       val q = streaming.writeStream
         .outputMode("append")
@@ -154,7 +155,10 @@ object Replay {
         }
         .start()
       q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    } finally {
+      spark.conf.set("spark.sql.shuffle.partitions", prev)
+      undoFiles()
+    }
   }
 
   /** Run a streaming DataFrame to completion, return the final result.
@@ -196,6 +200,7 @@ object Replay {
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
       noDataBatches.toString)
     val ckpt = Files.createTempDirectory(ckptRoot, "graft_ckpt_")
+    val undoFiles = LocalCheckpointFileManager.install(spark)
     try {
       val q = streaming.writeStream
         .format("memory")
@@ -213,6 +218,7 @@ object Replay {
         case None =>
           spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
       }
+      undoFiles()
       // the checkpoint is throwaway BY CONTRACT (see ckptRoot) and it
       // lives on a RAM disk: leaving it behind eats memory for the rest
       // of the session — and, because /dev/shm outlives the JVM, for

@@ -516,7 +516,7 @@ final case class SearchServingPipeline(
     val retired = deadLetterDir.fold(0L)(dir =>
       PipelineMetrics.retireDeadLetterSubtrees(spark, dir, name))
     // 4. re-drive the full feed through the fixed conf's normal path
-    ServedPipeline.drain(stagesAt(spark, feedDir, workRoot))
+    ServedPipeline.drain(spark, stagesAt(spark, feedDir, workRoot))
     retired
   }
 
@@ -613,7 +613,7 @@ final case class SearchServingPipeline(
     //    exists, so it binds the _v<N> names directly
     val twin = copy(postingsTable = newPt, lensTable = newLt,
       deadLetterDir = stagingDl)
-    ServedPipeline.drain(twin.stagesAt(spark, feedDir, newWr))
+    ServedPipeline.drain(spark, twin.stagesAt(spark, feedDir, newWr))
     // 3. the build succeeded: retire the old quarantine and adopt the
     //    staged one (kind markers travel with the rename)
     val retired = stagingDl.fold(0L) { staged =>

@@ -82,9 +82,14 @@ object ServedPipeline {
 
   /** Run stages to completion in order, each awaited before the next
     * starts — the downstream stage then reads a complete upstream log.
+    * The stages start under graft's checkpoint file manager
+    * ([[LocalCheckpointFileManager.install]]).
     */
-  def drain(stages: Seq[Trigger => StreamingQuery]): Unit =
-    stages.foreach(_(Trigger.AvailableNow()).awaitTermination())
+  def drain(spark: SparkSession, stages: => Seq[Trigger => StreamingQuery]): Unit = {
+    val undoFiles = LocalCheckpointFileManager.install(spark)
+    try stages.foreach(_(Trigger.AvailableNow()).awaitTermination())
+    finally undoFiles()
+  }
 
   /** An ES serving target of [[writeKeyed]]: the sink config, the
     * transport and the batch-progress marker id ([[markerId]]; None
@@ -200,7 +205,7 @@ trait TableLogPipeline extends ServedPipeline {
     */
   def runOnce(spark: SparkSession, feedDir: String, workRoot: String,
       esTransport: EsSink.Transport = new EsSink.HttpTransport): Unit = {
-    ServedPipeline.drain(stages(spark, feedDir, workRoot, esTransport))
+    ServedPipeline.drain(spark, stages(spark, feedDir, workRoot, esTransport))
     afterDrain(spark, workRoot)
   }
 

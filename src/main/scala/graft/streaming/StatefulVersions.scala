@@ -164,13 +164,16 @@ object StatefulVersions {
     *
     * Cost shape (guide §2.4 — two operations keyed the same way share
     * one exchange): the relation is hash-partitioned by `key` ONCE up
-    * front; the per-(key, tsMs) latest-seq pick is a hash aggregate
-    * (max_by on seq — `scd2Typed`'s dedupe shape) that rides that
-    * partitioning (same-key rows are colocated, so same-(key, tsMs)
-    * rows are too), and the lead window needs only a sort. The previous
-    * form (row_number window over (key, tsMs), then the lead window
-    * over (key)) planned 2 Exchanges + 2 Sorts; this is 1 Exchange +
-    * 1 Sort, identical output (seq is unique per key, so max_by picks
+    * front; the per-(key, tsMs) latest-seq pick (max_by on seq —
+    * `scd2Typed`'s dedupe shape) rides that partitioning (same-key rows
+    * are colocated, so same-(key, tsMs) rows are too). It plans as a
+    * SORT aggregate (partial + final), not a hash aggregate: max_by
+    * over a struct value has no mutable aggregation buffer. Its one
+    * sort on (key, tsMs) also orders the lead window, so the plan is
+    * Exchange ×1, Sort ×1, SortAggregate ×2, Window ×1 (pinned in
+    * PlanSpec). The previous form (row_number window over (key, tsMs),
+    * then the lead window over (key)) planned 2 Exchanges + 2 Sorts;
+    * the output is identical (seq is unique per key, so max_by picks
     * exactly the rn=1 row).
     */
   def scd2FromDeltas(deltas: DataFrame, rowSchema: StructType): DataFrame = {

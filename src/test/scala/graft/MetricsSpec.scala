@@ -625,7 +625,7 @@ class MetricsSpec extends SparkSpec {
     val judged = Files.createTempDirectory("graft_dlbf_judged_").toString
     val ckpt = Files.createTempDirectory("graft_dlbf_ckpt_").toString
     def drainGate(g: DriftGate, judged: String, ckpt: String): Unit =
-      ServedPipeline.drain(g.stages(spark, feed, DriftGate.TableLog(
+      ServedPipeline.drain(spark, g.stages(spark, feed, DriftGate.TableLog(
         s"log_${g.tag}", s"$judged/table_log", s"$judged/ckpt_log", judged,
         ckpt)))
     drainGate(gate, judged, ckpt)

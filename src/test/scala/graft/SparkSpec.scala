@@ -43,6 +43,7 @@ object SparkSpec {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
+    graft.streaming.LocalCheckpointFileManager.install(s)
     s
   }
 }
