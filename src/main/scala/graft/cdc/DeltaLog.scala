@@ -402,8 +402,9 @@ object DeltaLog {
   def ordersCustomerViewDeltas(spark: SparkSession, dir: String): DataFrame = {
     val base = artifact(spark, "viewdeltalog_oc", dir, "orders", "customer") { base =>
       // feed the join from per-key COLLAPSED table logs: a multi-batch
-      // log re-read as one stream batch would otherwise violate
-      // viewDeltaStream's one-delta-per-key-per-batch input contract
+      // log re-read without its batch_id folds as one seq, and would
+      // otherwise violate viewDeltaStream's one-delta-per-key-per-seq
+      // input contract
       val oDir = collapsedForJoin(spark, ordersLogDir(spark, dir))
       val cDir = collapsedForJoin(spark, customerLogDir(spark, dir))
       Replay.runToParquet(spark,

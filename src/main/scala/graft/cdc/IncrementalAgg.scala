@@ -1,5 +1,6 @@
 package graft.cdc
 
+import graft.streaming.StatefulLww
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -23,27 +24,19 @@ import org.apache.spark.sql.types.StructType
   */
 object IncrementalAgg {
 
+  /** (sgn, r) signed-row relation of a delta stream
+    * ([[StatefulLww.signed]]), each side's row parsed after the explode.
+    */
+  private[cdc] def signedRows(deltas: DataFrame, rowSchema: StructType): DataFrame =
+    StatefulLww.signed(deltas, _.as("js"))
+      .select(col("c.sgn").as("sgn"), from_json(col("c.js"), rowSchema).as("r"))
+
   /** Per-group NET contributions of a delta relation: (group, n_rows,
     * total_dec) where n_rows = Σ sign and total_dec = Σ sign·value in
     * DECIMAL. No zero filtering — a micro-batch of pure updates nets
     * n_rows = 0 with a nonzero money delta, and an additive MERGE
     * (JdbcSink.mergeAdditive) must still apply it.
     */
-  /** (sgn, r) signed-row relation of a delta stream: +1 for each
-    * delta's new row, −1 for its previous row (so an insert yields one
-    * +row, a delete one −row, an update both). Map-side only — composes
-    * over batch AND streaming delta relations.
-    */
-  private[cdc] def signedRows(deltas: DataFrame, rowSchema: StructType): DataFrame =
-    deltas.select(explode(filter(array(
-        when(col("rowJson").isNotNull,
-          struct(lit(1).as("sgn"), col("rowJson").as("js"))),
-        when(col("prevJson").isNotNull,
-          struct(lit(-1).as("sgn"), col("prevJson").as("js")))),
-      x => x.isNotNull)).as("c"))
-      .select(col("c.sgn").as("sgn"),
-        from_json(col("c.js"), rowSchema).as("r"))
-
   def contributions(deltas: DataFrame, rowSchema: StructType,
       groupCol: String, valueCol: String): DataFrame = {
     val contribs = signedRows(deltas, rowSchema)

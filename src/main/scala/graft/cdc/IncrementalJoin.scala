@@ -1,8 +1,9 @@
 package graft.cdc
 
+import graft.streaming.StatefulLww
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 
 /** Incrementally-maintained JOIN view from two CDC delta streams — the
   * denormalized-document shape the reference's Elasticsearch sink
@@ -20,9 +21,16 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   * key retracts under the old key and inserts under the new one (its
   * ±rows route to different groups).
   *
+  * Two stateful operators realize it — [[viewDeltaStream]] (applies a
+  * key's deltas in source-batch `seq` order) and
+  * [[alignedViewDeltaStream]] (parks deltas until the cross-feed
+  * watermark passes their source ts) — sharing one routing, one
+  * in-order application and one emission diff.
+  *
   * Emission contract: per micro-batch the operator diffs the key's
   * enriched rows before/after and emits ViewDelta upserts/deletes keyed
-  * by the fact id. A key-move produces a delete (old key's group) AND an
+  * by the fact id (an applied fact +row re-emits even unchanged; see
+  * [[viewDeltaStream]]'s emission asymmetry). A key-move produces a delete (old key's group) AND an
   * upsert (new key's group) for the same fact id in one batch, so
   * consumers MUST apply deletes before upserts within a batch (or
   * equivalently let an upsert win over a delete for the same id) —
@@ -46,53 +54,91 @@ object IncrementalJoin {
   case class ViewDelta(factId: Long, action: String, factJson: String,
       dimJson: String, prevFactJson: String, prevDimJson: String)
 
-  /** Routed ±row: not private — Catalyst's SafeProjection constructs it. */
-  case class JIn(jk: Long, side: String, sgn: Int, id: Long, rowJson: String)
-
   /** Per-join-key state: the live dim row (null when absent) and the
     * live fact rows referencing the key.
     */
   case class JoinState(dimJson: String, facts: Map[Long, String])
 
-  /** ±rows of a delta relation routed by the join-key field extracted
-    * from the row payload: +new under its key, −prev under ITS key (a
-    * key-moving update retracts and inserts under different groups).
-    * Null join keys match nothing (inner-join semantics) and are
-    * dropped at the source.
+  /** A delta's +new or −prev row routed by the join key its payload
+    * names — what both view-delta operators fold.
     */
-  private def signedRouted(deltas: DataFrame, joinField: String,
-      side: String): DataFrame =
-    deltas.select(explode(filter(array(
-        when(col("rowJson").isNotNull,
-          struct(lit(1).as("sgn"), col("rowJson").as("js"))),
-        when(col("prevJson").isNotNull,
-          struct(lit(-1).as("sgn"), col("prevJson").as("js")))),
-      x => x.isNotNull)).as("c"), col("key").as("id"))
-      .select(
+  sealed trait Routed {
+    def side: String; def sgn: Int; def id: Long; def rowJson: String
+  }
+
+  /** Routed ±row with its source-batch sequence number. Not private —
+    * Catalyst's SafeProjection constructs it.
+    */
+  case class JInS(jk: Long, side: String, sgn: Int, id: Long,
+      rowJson: String, seq: Long) extends Routed
+
+  /** ±rows of a delta relation ([[StatefulLww.signed]]) routed by the
+    * join-key field extracted from the row payload: +new under its key,
+    * −prev under ITS key (a key-moving update retracts and inserts under
+    * different groups). Null join keys match nothing (inner-join
+    * semantics) and are dropped at the source. `keep` columns ride
+    * along (the application order).
+    */
+  private def routed(deltas: DataFrame, joinField: String, side: String,
+      keep: Column*): DataFrame =
+    StatefulLww.signed(deltas, _.as("js"), col("key").as("id") +: keep: _*)
+      .select(col("*"),
         get_json_object(col("c.js"), s"$$.$joinField").cast("long").as("jk"),
-        lit(side).as("side"), col("c.sgn").as("sgn"), col("id"),
-        col("c.js").as("rowJson"))
+        lit(side).as("side"), col("c.sgn").as("sgn"), col("c.js").as("rowJson"))
+      .drop("c")
       .filter(col("jk").isNotNull)
 
-  /** ONE source batch's routed rows applied to a key's state — the
-    * shared application rule of every view-delta variant: a surviving
-    * +dim row sets the dim, a lone −dim clears it; per fact id a +row
-    * means live-with-that-row, only-− means gone.
+  /** ONE source batch's routed rows applied to a key's state: a
+    * surviving +dim row sets the dim, a lone −dim clears it; per fact id
+    * a +row means live-with-that-row, only-− means gone.
     */
   private def applyOneBatch(dim0: String, facts0: Map[Long, String],
-      dimRows: Seq[(Int, String)],
-      factRows: Iterable[(Long, Seq[(Int, String)])]): (String, Map[Long, String]) = {
-    val dim =
-      if (dimRows.exists(_._1 > 0)) dimRows.find(_._1 > 0).get._2
-      else if (dimRows.nonEmpty) null
-      else dim0
-    val facts = factRows.foldLeft(facts0) { case (m, (id, rs)) =>
-      rs.find(_._1 > 0) match {
-        case Some(p) => m.updated(id, p._2)
-        case None    => m - id
+      rows: Seq[Routed]): (String, Map[Long, String]) = {
+    val dimRows = rows.filter(_.side == "d")
+    val dim = dimRows.find(_.sgn > 0).map(_.rowJson)
+      .getOrElse(if (dimRows.nonEmpty) null else dim0)
+    val facts = rows.filter(_.side == "f").groupBy(_.id)
+      .foldLeft(facts0) { case (m, (id, rs)) =>
+        rs.find(_.sgn > 0) match {
+          case Some(p) => m.updated(id, p.rowJson)
+          case None    => m - id
+        }
       }
-    }
     (dim, facts)
+  }
+
+  /** Apply a key's routed rows one source batch at a time in ascending
+    * `order`, then diff the key's enriched rows before/after into
+    * ViewDeltas (the emission contract in [[viewDeltaStream]]'s doc).
+    * Returns the new (dim, facts) and the emissions.
+    */
+  private def fold[R <: Routed](dim0: String, facts0: Map[Long, String],
+      rows: Seq[R], order: R => Long, leftOuter: Boolean)
+      : (String, Map[Long, String], Iterator[ViewDelta]) = {
+    val (dim, facts) = rows.groupBy(order).toSeq.sortBy(_._1)
+      .foldLeft((dim0, facts0)) { case ((d, fs), (_, rs)) =>
+        applyOneBatch(d, fs, rs) }
+    // the key's enriched rows under each state: inner drops facts
+    // while the dim is absent; left-outer serves them null-enriched
+    def enrichedRows(dm: String, fs: Map[Long, String]): Map[Long, (String, String)] =
+      if (!leftOuter && dm == null) Map.empty
+      else fs.map { case (id, r) => id -> (r, dm) }
+    val before = enrichedRows(dim0, facts0)
+    val after = enrichedRows(dim, facts)
+    // fact ids whose +row was APPLIED: they emit even value-unchanged —
+    // but only if still LIVE in `after` (an insert-then-delete catch-up
+    // nets to nothing)
+    val touched = rows.collect { case r if r.side == "f" && r.sgn > 0 => r.id }.toSet
+    val upserts = after.collect {
+      case (id, (f, d)) if !before.get(id).contains((f, d)) || touched(id) =>
+        val p = before.get(id)
+        ViewDelta(id, "upsert", f, d, p.map(_._1).orNull, p.map(_._2).orNull)
+    }
+    val deletes = before.collect {
+      case (id, (f, d)) if !after.contains(id) =>
+        ViewDelta(id, "delete", null, null, f, d)
+    }
+    (dim, facts, upserts.iterator ++ deletes.iterator)
   }
 
   /** The maintained view's delta stream. `factDeltas` / `dimDeltas` are
@@ -108,158 +154,64 @@ object IncrementalJoin {
     * null-enriched prev rows), and a dim delete DOWNGRADES its facts
     * back to null-enriched instead of deleting them.
     *
-    * INPUT CONTRACT: at most ONE delta per key per micro-batch —
-    * exactly what StatefulLww.deltaStream emits (it collapses a batch
-    * to each key's winner). Two deltas for one key in one batch have no
-    * defined application order after the shuffle, so a non-collapsed
-    * feed must be LWW-collapsed first (pinned in the model spec).
+    * SEQ ORDER: a delta may carry a `seq` column (a delta log's
+    * batch_id); a relation without one folds as seq 0. A micro-batch may
+    * contain SEVERAL source batches' deltas for one key — the fold
+    * applies them in ascending seq order. This is what lets a composed
+    * stage consume a MATERIALIZED delta log through a plain file
+    * stream: the file source batches files by availability, not by the
+    * log's batch boundaries, so a resumed consumer can legally see
+    * batches 3..7 of a key at once — the seq column restores the
+    * per-key application order that arrival order lost. Emission still
+    * diffs the key's enriched rows once per micro-batch (intermediate
+    * states of a multi-seq catch-up collapse, which is exactly the
+    * collapsed delta a serving sink wants).
+    *
+    * INPUT CONTRACT: at most ONE delta per key per (side, seq) — exactly
+    * what StatefulLww.deltaStream emits per micro-batch (it collapses a
+    * batch to each key's winner) and what a StatefulLww-built
+    * batch_id-partitioned log satisfies by construction. Two deltas for
+    * one key in one seq have no defined application order after the
+    * shuffle, so a non-collapsed feed must be LWW-collapsed first
+    * (pinned in the model spec).
+    *
+    * EMISSION ASYMMETRY: a FACT whose +row was applied this micro-batch
+    * re-emits its enriched row even when the value is unchanged, while
+    * an unchanged DIM emits nothing. The asymmetry is cost-shaped and
+    * lifecycle-required: a dim touch fans out to ALL the key's facts
+    * (suppression is the optimization that keeps dim heartbeats from
+    * re-serving whole key groups), but a fact touch is ONE
+    * store-addressed row whose re-emission is idempotent at every sink —
+    * and it is what lets the serving store RECONVERGE with the join
+    * state after the two legitimately diverge: enforcement Drop withheld
+    * the row (ViewPipeline's quarantine), the keyed replay re-injects
+    * the fact's unchanged truth at a fresh epoch, and without
+    * re-emission that replay would be silently absorbed here, leaving
+    * the quarantined key unservable forever. Downstream incremental
+    * aggregates see prev == new and retract/re-add the same
+    * contribution — net zero.
     */
   def viewDeltaStream(factDeltas: DataFrame, dimDeltas: DataFrame,
       factJoinField: String, dimJoinField: String,
       leftOuter: Boolean = false): Dataset[ViewDelta] = {
     val spark = factDeltas.sparkSession
     import spark.implicits._
-    val routed = signedRouted(factDeltas, factJoinField, "f")
-      .unionByName(signedRouted(dimDeltas, dimJoinField, "d"))
-      .as[JIn]
-    routed.groupByKey(_.jk).flatMapGroupsWithState(
-      OutputMode.Append, GroupStateTimeout.NoTimeout) {
-      (_: Long, it: Iterator[JIn], state: GroupState[JoinState]) =>
-        val rows = it.toVector
-        val old = state.getOption.getOrElse(JoinState(null, Map.empty))
-        val (newDim, facts) = applyOneBatch(old.dimJson, old.facts,
-          rows.filter(_.side == "d").map(r => (r.sgn, r.rowJson)),
-          rows.filter(_.side == "f").groupBy(_.id)
-            .map { case (id, rs) => id -> rs.map(r => (r.sgn, r.rowJson)) })
-        if (newDim == null && facts.isEmpty) state.remove()
-        else state.update(JoinState(newDim, facts))
-        // the key's enriched rows under each state: inner drops facts
-        // while the dim is absent; left-outer serves them null-enriched
-        def enrichedRows(dim: String, fs: Map[Long, String]): Map[Long, (String, String)] =
-          if (!leftOuter && dim == null) Map.empty
-          else fs.map { case (id, r) => id -> (r, dim) }
-        val before = enrichedRows(old.dimJson, old.facts)
-        val after = enrichedRows(newDim, facts)
-        val upserts = after.collect {
-          case (id, (f, d)) if !before.get(id).contains((f, d)) =>
-            val p = before.get(id)
-            ViewDelta(id, "upsert", f, d, p.map(_._1).orNull, p.map(_._2).orNull)
-        }
-        val deletes = before.collect {
-          case (id, (f, d)) if !after.contains(id) =>
-            ViewDelta(id, "delete", null, null, f, d)
-        }
-        upserts.iterator ++ deletes.iterator
-    }
-  }
-
-  /** Routed ±row with its source-batch sequence number. Not private —
-    * Catalyst's SafeProjection constructs it.
-    */
-  case class JInS(jk: Long, side: String, sgn: Int, id: Long,
-      rowJson: String, seq: Long)
-
-  private def signedRoutedSeq(deltas: DataFrame, joinField: String,
-      side: String): DataFrame =
-    deltas.select(explode(filter(array(
-        when(col("rowJson").isNotNull,
-          struct(lit(1).as("sgn"), col("rowJson").as("js"))),
-        when(col("prevJson").isNotNull,
-          struct(lit(-1).as("sgn"), col("prevJson").as("js")))),
-      x => x.isNotNull)).as("c"), col("key").as("id"), col("seq"))
-      .select(
-        get_json_object(col("c.js"), s"$$.$joinField").cast("long").as("jk"),
-        lit(side).as("side"), col("c.sgn").as("sgn"), col("id"),
-        col("c.js").as("rowJson"), col("seq").cast("long").as("seq"))
-      .filter(col("jk").isNotNull)
-
-  /** SEQ-ORDERED view-delta stream: like [[viewDeltaStream]], but each
-    * input delta carries a `seq` column (the delta log's batch_id) and a
-    * micro-batch may contain SEVERAL source batches' deltas for one key —
-    * the fold applies them in ascending seq order, each seq group under
-    * the one-delta-per-key-per-side rule viewDeltaStream demands of a
-    * whole micro-batch.
-    *
-    * This is what lets a composed stage consume a MATERIALIZED delta log
-    * through a plain file stream: the file source batches files by
-    * availability, not by the log's batch boundaries, so a resumed
-    * consumer can legally see batches 3..7 of a key at once — the seq
-    * column restores the per-key application order that arrival order
-    * lost. Emission still diffs the key's enriched rows once per
-    * micro-batch (intermediate states of a multi-seq catch-up collapse,
-    * which is exactly the collapsed delta a serving sink wants).
-    *
-    * INPUT CONTRACT (relaxed form of viewDeltaStream's): at most one
-    * delta per key per (side, seq) — what a StatefulLww-built batch_id-
-    * partitioned log satisfies by construction.
-    *
-    * EMISSION ASYMMETRY (differs from [[viewDeltaStream]], which
-    * suppresses every value-identical re-emission): a FACT whose +row
-    * was applied this micro-batch re-emits its enriched row even when
-    * the value is unchanged, while an unchanged DIM still emits
-    * nothing. The asymmetry is cost-shaped and lifecycle-required: a
-    * dim touch fans out to ALL the key's facts (suppression is the
-    * optimization that keeps dim heartbeats from re-serving whole key
-    * groups), but a fact touch is ONE store-addressed row whose
-    * re-emission is idempotent at every sink — and it is what lets the
-    * serving store RECONVERGE with the join state after the two
-    * legitimately diverge: enforcement Drop withheld the row
-    * (ViewPipeline's quarantine), the keyed replay re-injects the
-    * fact's unchanged truth at a fresh epoch, and without re-emission
-    * that replay would be silently absorbed here, leaving the
-    * quarantined key unservable forever. Downstream incremental
-    * aggregates see prev == new and retract/re-add the same
-    * contribution — net zero.
-    */
-  def viewDeltaStreamOrdered(factDeltas: DataFrame, dimDeltas: DataFrame,
-      factJoinField: String, dimJoinField: String,
-      leftOuter: Boolean = false): Dataset[ViewDelta] = {
-    val spark = factDeltas.sparkSession
-    import spark.implicits._
-    val routed = signedRoutedSeq(factDeltas, factJoinField, "f")
-      .unionByName(signedRoutedSeq(dimDeltas, dimJoinField, "d"))
+    def side(d: DataFrame, field: String, tag: String) = routed(d, field, tag,
+      (if (d.columns.contains("seq")) col("seq").cast("long") else lit(0L))
+        .as("seq"))
+    side(factDeltas, factJoinField, "f")
+      .unionByName(side(dimDeltas, dimJoinField, "d"))
       .as[JInS]
-    routed.groupByKey(_.jk).flatMapGroupsWithState(
-      OutputMode.Append, GroupStateTimeout.NoTimeout) {
-      (_: Long, it: Iterator[JInS], state: GroupState[JoinState]) =>
-        val rows = it.toVector
-        val old = state.getOption.getOrElse(JoinState(null, Map.empty))
-        var dim = old.dimJson
-        var facts = old.facts
-        rows.map(_.seq).distinct.sorted.foreach { s =>
-          val rs = rows.filter(_.seq == s)
-          val applied = applyOneBatch(dim, facts,
-            rs.filter(_.side == "d").map(r => (r.sgn, r.rowJson)),
-            rs.filter(_.side == "f").groupBy(_.id)
-              .map { case (id, g) => id -> g.map(r => (r.sgn, r.rowJson)) })
-          dim = applied._1
-          facts = applied._2
-        }
-        if (dim == null && facts.isEmpty) state.remove()
-        else state.update(JoinState(dim, facts))
-        def enrichedRows(dm: String, fs: Map[Long, String]): Map[Long, (String, String)] =
-          if (!leftOuter && dm == null) Map.empty
-          else fs.map { case (id, r) => id -> (r, dm) }
-        val before = enrichedRows(old.dimJson, old.facts)
-        val after = enrichedRows(dim, facts)
-        // fact ids whose +row was APPLIED this micro-batch: they emit
-        // even value-unchanged (see the emission-asymmetry scaladoc) —
-        // but only if still LIVE in `after` (an insert-then-delete
-        // catch-up nets to nothing, as before)
-        val touched = rows.collect {
-          case r if r.side == "f" && r.sgn > 0 => r.id
-        }.toSet
-        val upserts = after.collect {
-          case (id, (f, d)) if !before.get(id).contains((f, d)) || touched(id) =>
-            val p = before.get(id)
-            ViewDelta(id, "upsert", f, d, p.map(_._1).orNull, p.map(_._2).orNull)
-        }
-        val deletes = before.collect {
-          case (id, (f, d)) if !after.contains(id) =>
-            ViewDelta(id, "delete", null, null, f, d)
-        }
-        upserts.iterator ++ deletes.iterator
-    }
+      .groupByKey(_.jk).flatMapGroupsWithState(
+        OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (_: Long, it: Iterator[JInS], state: GroupState[JoinState]) =>
+          val old = state.getOption.getOrElse(JoinState(null, Map.empty))
+          val (dim, facts, out) =
+            fold(old.dimJson, old.facts, it.toVector, (r: JInS) => r.seq, leftOuter)
+          if (dim == null && facts.isEmpty) state.remove()
+          else state.update(JoinState(dim, facts))
+          out
+      }
   }
 
   /** A delta with its SOURCE timestamp — the alignment key: all deltas
@@ -275,7 +227,7 @@ object IncrementalJoin {
     * SafeProjection constructs it.
     */
   case class JInT(jk: Long, side: String, sgn: Int, id: Long,
-      rowJson: String, tsMs: Long, eventTime: java.sql.Timestamp)
+      rowJson: String, tsMs: Long, eventTime: java.sql.Timestamp) extends Routed
 
   /** Aligned per-key state: the applied view state plus the parked
     * not-yet-released deltas (ts beyond the cross-feed high-water).
@@ -283,27 +235,13 @@ object IncrementalJoin {
   case class AlignedState(dimJson: String, facts: Map[Long, String],
       pending: List[JInT])
 
-  private def signedRoutedTs(deltas: DataFrame, joinField: String,
-      side: String): DataFrame =
-    deltas.select(explode(filter(array(
-        when(col("rowJson").isNotNull,
-          struct(lit(1).as("sgn"), col("rowJson").as("js"))),
-        when(col("prevJson").isNotNull,
-          struct(lit(-1).as("sgn"), col("prevJson").as("js")))),
-      x => x.isNotNull)).as("c"), col("key").as("id"), col("tsMs"),
-      col("eventTime"))
-      .select(
-        get_json_object(col("c.js"), s"$$.$joinField").cast("long").as("jk"),
-        lit(side).as("side"), col("c.sgn").as("sgn"), col("id"),
-        col("c.js").as("rowJson"), col("tsMs"), col("eventTime"))
-      .filter(col("jk").isNotNull)
-
   /** TRANSACTION-ALIGNED view-delta stream: like [[viewDeltaStream]],
     * but a delta is APPLIED (and its effect emitted) only once the
     * cross-feed high-water mark has passed its source ts — so a source
     * transaction spanning fact AND dim tables (same commit ts on both
     * feeds) applies atomically, never exposing a half-applied enriched
-    * row to the serving sink.
+    * row to the serving sink. Released deltas apply in ts order, whole
+    * transactions at a time, with [[viewDeltaStream]]'s emission rule.
     *
     * The high-water mark is Spark's own multi-source watermark: each
     * feed gets its OWN `withWatermark` node before the union, and the
@@ -330,59 +268,32 @@ object IncrementalJoin {
     val spark = factDeltas.sparkSession
     import spark.implicits._
     def side(d: Dataset[TsDelta], field: String, tag: String) =
-      signedRoutedTs(
-        d.toDF().withColumn("eventTime", timestamp_millis(col("tsMs")))
-          .withWatermark("eventTime", delay), field, tag)
-    val routed = side(factDeltas, factJoinField, "f")
+      routed(d.toDF().withColumn("eventTime", timestamp_millis(col("tsMs")))
+        .withWatermark("eventTime", delay), field, tag,
+        col("tsMs"), col("eventTime"))
+    side(factDeltas, factJoinField, "f")
       .unionByName(side(dimDeltas, dimJoinField, "d"))
       .as[JInT]
-    routed.groupByKey(_.jk).flatMapGroupsWithState(
-      OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-      (_: Long, it: Iterator[JInT], state: GroupState[AlignedState]) =>
-        val wm = state.getCurrentWatermarkMs()
-        val old = state.getOption.getOrElse(AlignedState(null, Map.empty, Nil))
-        val (release, park) =
-          (old.pending.iterator ++ it).toVector.partition(_.tsMs <= wm)
-        var dim = old.dimJson
-        var facts = old.facts
-        // apply whole transactions in commit order: all released rows of
-        // one ts together, ts ascending
-        release.map(_.tsMs).distinct.sorted.foreach { ts =>
-          val rows = release.filter(_.tsMs == ts)
-          val dimRows = rows.filter(_.side == "d")
-          if (dimRows.exists(_.sgn > 0)) dim = dimRows.find(_.sgn > 0).get.rowJson
-          else if (dimRows.nonEmpty) dim = null
-          facts = rows.filter(_.side == "f").groupBy(_.id)
-            .foldLeft(facts) { case (m, (id, rs)) =>
-              rs.find(_.sgn > 0) match {
-                case Some(p) => m.updated(id, p.rowJson)
-                case None    => m - id
-              }
-            }
-        }
-        if (dim == null && facts.isEmpty && park.isEmpty) state.remove()
-        else {
-          state.update(AlignedState(dim, facts, park.toList))
-          // re-invoke this key when the watermark passes the earliest
-          // parked transaction (park rows all have ts > wm)
-          if (park.nonEmpty) state.setTimeoutTimestamp(park.map(_.tsMs).min)
-        }
-        def enrichedRows(dm: String, fs: Map[Long, String]): Map[Long, (String, String)] =
-          if (!leftOuter && dm == null) Map.empty
-          else fs.map { case (id, r) => id -> (r, dm) }
-        val before = enrichedRows(old.dimJson, old.facts)
-        val after = enrichedRows(dim, facts)
-        val upserts = after.collect {
-          case (id, (f, d)) if !before.get(id).contains((f, d)) =>
-            val p = before.get(id)
-            ViewDelta(id, "upsert", f, d, p.map(_._1).orNull, p.map(_._2).orNull)
-        }
-        val deletes = before.collect {
-          case (id, (f, d)) if !after.contains(id) =>
-            ViewDelta(id, "delete", null, null, f, d)
-        }
-        upserts.iterator ++ deletes.iterator
-    }
+      .groupByKey(_.jk).flatMapGroupsWithState(
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        (_: Long, it: Iterator[JInT], state: GroupState[AlignedState]) =>
+          val wm = state.getCurrentWatermarkMs()
+          val old = state.getOption.getOrElse(AlignedState(null, Map.empty, Nil))
+          val (release, park) =
+            (old.pending.iterator ++ it).toVector.partition(_.tsMs <= wm)
+          // whole transactions in commit order: all released rows of one
+          // ts together, ts ascending
+          val (dim, facts, out) =
+            fold(old.dimJson, old.facts, release, (r: JInT) => r.tsMs, leftOuter)
+          if (dim == null && facts.isEmpty && park.isEmpty) state.remove()
+          else {
+            state.update(AlignedState(dim, facts, park.toList))
+            // re-invoke this key when the watermark passes the earliest
+            // parked transaction (park rows all have ts > wm)
+            if (park.nonEmpty) state.setTimeoutTimestamp(park.map(_.tsMs).min)
+          }
+          out
+      }
   }
 
   /** A view-delta relation AS a delta relation for the NEXT join stage —

@@ -1254,13 +1254,9 @@ object CorpusOps {
       .filter(col("d") =!= 0)
 
   private def signedTexts(deltas: DataFrame, textField: String): DataFrame =
-    deltas.select(col("key").cast("long").as("doc_id"),
-      explode(filter(array(
-        when(col("rowJson").isNotNull, struct(lit(1).as("sgn"),
-          get_json_object(col("rowJson"), s"$$.$textField").as("text"))),
-        when(col("prevJson").isNotNull, struct(lit(-1).as("sgn"),
-          get_json_object(col("prevJson"), s"$$.$textField").as("text")))),
-        x => x.isNotNull)).as("c"))
+    graft.streaming.StatefulLww.signed(deltas,
+      get_json_object(_, s"$$.$textField").as("text"),
+      col("key").cast("long").as("doc_id"))
       .select(col("doc_id"), col("c.sgn").as("sgn"), col("c.text").as("text"))
 
   /** Fold a term-posting delta log to the LIVE index: net tf per

@@ -303,13 +303,9 @@ object MinHashLsh {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = docDeltas.sparkSession
     import spark.implicits._
-    val signed = docDeltas.select(col("key").cast("long").as("id"),
-      explode(filter(array(
-        when(col("rowJson").isNotNull, struct(lit(1).as("sgn"),
-          get_json_object(col("rowJson"), s"$$.$textField").as("text"))),
-        when(col("prevJson").isNotNull, struct(lit(-1).as("sgn"),
-          get_json_object(col("prevJson"), s"$$.$textField").as("text")))),
-        x => x.isNotNull)).as("c"))
+    val signed = graft.streaming.StatefulLww.signed(docDeltas,
+      get_json_object(_, s"$$.$textField").as("text"),
+      col("key").cast("long").as("id"))
       .select(col("id"), col("c.sgn").as("sgn"), col("c.text").as("text"))
     val banded = bandedRows(
       signed.select(struct(col("id"), col("sgn")).as("k"), col("text")),

@@ -501,15 +501,10 @@ object VectorSearch {
       else if (vecDeltas.columns.contains("batch_id"))
         vecDeltas.withColumn("seq", col("batch_id").cast("long"))
       else vecDeltas.withColumn("seq", lit(0L))
-    withSeq.select(col("key").cast("long").as("vec_id"), col("seq"),
-      explode(filter(array(
-        when(col("rowJson").isNotNull, struct(lit(1).as("sgn"),
-          from_json(get_json_object(col("rowJson"), s"$$.$vectorField"),
-            embSchema).as("emb"))),
-        when(col("prevJson").isNotNull, struct(lit(-1).as("sgn"),
-          from_json(get_json_object(col("prevJson"), s"$$.$vectorField"),
-            embSchema).as("emb")))),
-        x => x.isNotNull)).as("c"))
+    graft.streaming.StatefulLww.signed(withSeq,
+        js => from_json(get_json_object(js, s"$$.$vectorField"), embSchema)
+          .as("emb"),
+        col("key").cast("long").as("vec_id"), col("seq"))
       .filter(col("c.emb").isNotNull) // a delta missing the vector field
         // routes nowhere (malformed payloads must not kill the stream)
       .select(col("vec_id"), col("seq"), col("c.sgn").as("sgn"),

@@ -1392,13 +1392,9 @@ object PipelineQueries {
           element_at(toks, 1).as("bin")))
     }
     // current histogram: ± folds over the delta log — never the corpus
-    val signed = DeltaLog.documentsDeltas(spark, dir)
-      .select(explode(filter(array(
-        when(col("rowJson").isNotNull, struct(lit(1L).as("sgn"),
-          get_json_object(col("rowJson"), "$.text").as("text"))),
-        when(col("prevJson").isNotNull, struct(lit(-1L).as("sgn"),
-          get_json_object(col("prevJson"), "$.text").as("text")))),
-        x => x.isNotNull)).as("c"))
+    val signed = graft.streaming.StatefulLww.signed(
+        DeltaLog.documentsDeltas(spark, dir),
+        get_json_object(_, "$.text").as("text"))
       .select(col("c.sgn").as("sgn"), explode(feats(col("c.text"))).as("fb"))
       .select(col("sgn"), col("fb.feature").as("feature"),
         col("fb.bin").as("bin"))

@@ -572,7 +572,8 @@ final case class AnnServingPipeline(
     */
   override protected def keyedReplay: Option[ServedPipeline.KeyedReplay] =
     Some(ServedPipeline.KeyedReplay(idField, table,
-      (spark, workRoot) => StateLog.latestLiveRows(spark, logDir(workRoot))))
+      (spark, workRoot) => StateLog.latestLiveRows(
+        spark.read.schema(ViewPipeline.LogSchema).parquet(logDir(workRoot)))))
 
   /** Gate + table log, then the posting index/serving stage; gen_0 is
     * seeded from the ctor quantizer first.

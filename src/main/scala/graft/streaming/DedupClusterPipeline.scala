@@ -231,7 +231,7 @@ final case class DedupClusterPipeline(
         // replay re-applied an identical text produces a marker-only
         // batch, and its current label must re-serve so a store that
         // diverged under enforcement Drop reconverges (the
-        // viewDeltaStreamOrdered emission-asymmetry argument)
+        // IncrementalJoin.viewDeltaStream emission-asymmetry argument)
         val touchedDocs = raw.filter(col("id_a") === col("id_b"))
           .select(col("id_a").as("doc_id")).distinct().localCheckpoint(true)
         // any non-empty batch acts: pure-marker batches re-verify (with
@@ -445,7 +445,8 @@ final case class DedupClusterPipeline(
     */
   override protected def keyedReplay: Option[ServedPipeline.KeyedReplay] =
     Some(ServedPipeline.KeyedReplay(idField, table,
-      (spark, workRoot) => StateLog.latestLiveRows(spark, docLogDir(workRoot))))
+      (spark, workRoot) => StateLog.latestLiveRows(
+        spark.read.schema(ViewPipeline.LogSchema).parquet(docLogDir(workRoot)))))
 
   /** Gate + doc log, the LSH pair stage, then the cluster/serving
     * stage; the pair-log dir is seeded first (the cluster stage's file

@@ -109,14 +109,47 @@ object Replay {
     else Paths.get(sys.props("java.io.tmpdir"))
   }
 
+  /** Shuffle partitions of every replay, so the state store's size:
+    * each stateful operator keeps one store instance (files, commit log)
+    * PER shuffle partition, so the count should track STATE SIZE, not
+    * core count — 100k-key local state wants a handful of stores, a
+    * 10^9-key production state wants hundreds. Local measurement: 32 →
+    * 4 state partitions cuts per-query overhead ~45%.
+    *
+    * Measured floor at sf0.1 (600k events, local[32]): sweeping state
+    * partitions {2,4,8,16,32} × {HDFS-backed, RocksDB} puts the best
+    * configuration at 8 partitions + HDFS-backed ≈ 1.0 s/query — the
+    * residual is addBatch itself (shuffle + state write + complete-mode
+    * output), i.e. inherent micro-batch cost, not harness overhead.
+    * (At production state sizes the RocksDB provider is the right
+    * choice — off-heap, incremental-checkpointed; provider-swap parity
+    * is pinned in StatefulLwwSpec.)
+    */
+  private val StatePartitions = 8
+
+  /** Run `body` with [[StatePartitions]], the given session confs and
+    * graft's checkpoint manager installed; every conf is restored after.
+    */
+  private def scoped[T](spark: SparkSession, confs: (String, String)*)(
+      body: => T): T = {
+    val all = ("spark.sql.shuffle.partitions" -> StatePartitions.toString) +: confs
+    val prev = all.map { case (k, _) => k -> spark.conf.getOption(k) }
+    all.foreach { case (k, v) => spark.conf.set(k, v) }
+    val undoFiles = LocalCheckpointFileManager.install(spark)
+    try body
+    finally {
+      prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+      undoFiles()
+    }
+  }
+
   /** Append-mode variant for operators that do not support complete
     * output (stream-stream joins): the memory sink accumulates emitted
     * rows; with AvailableNow over one staged file every inner-join match
     * emits in the single batch.
     */
-  def runToResultAppend(spark: SparkSession, streaming: DataFrame,
-      statePartitions: Int = 8): DataFrame =
-    run(spark, streaming, statePartitions, "append")
+  def runToResultAppend(spark: SparkSession, streaming: DataFrame): DataFrame =
+    run(spark, streaming, "append")
 
   /** Append-mode run that KEEPS the trailing no-data micro-batch: outer
     * joins and other eviction-driven emitters produce their final rows
@@ -125,9 +158,8 @@ object Replay {
     * batch after the last file (pair with eventsStreamWithFlush so the
     * watermark actually passes every real row first).
     */
-  def runToResultAppendEvicting(spark: SparkSession, streaming: DataFrame,
-      statePartitions: Int = 8): DataFrame =
-    run(spark, streaming, statePartitions, "append", noDataBatches = true)
+  def runToResultAppendEvicting(spark: SparkSession, streaming: DataFrame): DataFrame =
+    run(spark, streaming, "append", noDataBatches = true)
 
   /** Run an append-mode streaming frame to completion into a
     * BATCH-PARTITIONED parquet log: each micro-batch lands in its own
@@ -140,12 +172,9 @@ object Replay {
     * from `checkpoint`.
     */
   def runToParquet(spark: SparkSession, streaming: DataFrame, path: String,
-      checkpoint: String, statePartitions: Int = 8): Unit = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions)
-    val undoFiles = LocalCheckpointFileManager.install(spark)
-    try {
-      val q = streaming.writeStream
+      checkpoint: String): Unit =
+    scoped(spark) {
+      streaming.writeStream
         .outputMode("append")
         .trigger(Trigger.AvailableNow())
         .option("checkpointLocation", checkpoint)
@@ -154,71 +183,36 @@ object Replay {
           ()
         }
         .start()
-      q.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      undoFiles()
+        .awaitTermination()
     }
-  }
 
   /** Run a streaming DataFrame to completion, return the final result.
     * `complete` output mode so every window/group is in the final table
-    * regardless of watermark progress at termination.
-    *
-    * `statePartitions` sizes the state store: each stateful operator
-    * keeps one store instance (files, commit log) PER shuffle partition,
-    * so partition count should track STATE SIZE, not core count —
-    * 100k-key local state wants a handful of stores, a 10^9-key
-    * production state wants hundreds. Local measurement: 32 → 4 state
-    * partitions cuts per-query overhead ~45%.
-    *
-    * Measured floor at sf0.1 (600k events, local[32]): sweeping state
-    * partitions {2,4,8,16,32} × {HDFS-backed, RocksDB} puts the best
-    * configuration at 8 partitions + HDFS-backed ≈ 1.0 s/query — the
-    * residual is addBatch itself (shuffle + state write + complete-mode
-    * output), i.e. inherent micro-batch cost, not harness overhead.
-    * (At production state sizes the RocksDB provider is the right
-    * choice — off-heap, incremental-checkpointed; provider-swap parity
-    * is pinned in StatefulLwwSpec.)
+    * regardless of watermark progress at termination. State runs on
+    * [[StatePartitions]] partitions.
     */
-  def runToResult(spark: SparkSession, streaming: DataFrame,
-      statePartitions: Int = 8): DataFrame =
-    run(spark, streaming, statePartitions, "complete")
+  def runToResult(spark: SparkSession, streaming: DataFrame): DataFrame =
+    run(spark, streaming, "complete")
 
-  private def run(spark: SparkSession, streaming: DataFrame,
-      statePartitions: Int, mode: String,
+  private def run(spark: SparkSession, streaming: DataFrame, mode: String,
       noDataBatches: Boolean = false): DataFrame = {
     val name = s"graft_replay_result_${nameCounter.incrementAndGet()}"
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData =
-      spark.conf.getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions)
+    val ckpt = Files.createTempDirectory(ckptRoot, "graft_ckpt_")
     // the trailing no-data batch only advances the watermark for
     // append-mode eviction; complete mode re-outputs the full table
     // every batch, so skipping it changes nothing but saves a batch —
     // EXCEPT for eviction-driven output (outer joins), which needs it
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-      noDataBatches.toString)
-    val ckpt = Files.createTempDirectory(ckptRoot, "graft_ckpt_")
-    val undoFiles = LocalCheckpointFileManager.install(spark)
-    try {
-      val q = streaming.writeStream
+    try scoped(spark, "spark.sql.streaming.noDataMicroBatches.enabled" ->
+        noDataBatches.toString) {
+      streaming.writeStream
         .format("memory")
         .queryName(name)
         .outputMode(mode)
         .trigger(Trigger.AvailableNow())
         .option("checkpointLocation", ckpt.toString)
         .start()
-      q.awaitTermination()
+        .awaitTermination()
     } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      prevNoData match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", v)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
-      }
-      undoFiles()
       // the checkpoint is throwaway BY CONTRACT (see ckptRoot) and it
       // lives on a RAM disk: leaving it behind eats memory for the rest
       // of the session — and, because /dev/shm outlives the JVM, for

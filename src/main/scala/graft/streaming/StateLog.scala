@@ -68,16 +68,16 @@ object StateLog {
     }
   }
 
-  /** Latest-per-key LIVE rows of a FLAT delta log (no base generation —
-    * the ann/dedup doc-log shape: `<dir>/batch_id=N` of
-    * [[StatefulLww.Delta]] rows): one (key, rowJson) per key whose last
-    * word is an upsert. O(log history) — fine for one-shot verbs
-    * (replay), not a serving path; compacted logs use their own folds.
+  /** Latest-per-key LIVE rows of a delta log ([[StatefulLww.Delta]]
+    * rows plus `batch_id`): one (key, rowJson) per key whose highest
+    * batch's word is an upsert. Over a FLAT log (the ann/dedup doc-log
+    * shape, `<dir>/batch_id=N`) it is O(log history) — fine for one-shot
+    * verbs (replay), not a serving path; a compacted log passes its base
+    * (stamped below every batch) unioned with the visible log window.
     */
-  def latestLiveRows(spark: SparkSession, logDir: String): DataFrame = {
+  def latestLiveRows(deltas: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
-    spark.read.schema(ViewPipeline.LogSchema).parquet(logDir)
-      .groupBy(col("key"))
+    deltas.groupBy(col("key"))
       .agg(max_by(struct(col("action"), col("rowJson")),
         col("batch_id")).as("w"))
       .filter(col("w.action") === "upsert")

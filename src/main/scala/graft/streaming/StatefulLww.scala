@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 
 /** Incremental last-writer-wins materialization over an unbounded CDC
   * stream: `flatMapGroupsWithState` keeps the winning `(ts_ms, offset)`
@@ -29,6 +29,24 @@ object StatefulLww {
     * needs to retract the old contribution (see cdc.IncrementalAgg).
     */
   case class Delta(key: Long, action: String, rowJson: String, prevJson: String)
+
+  /** The ± reading of a [[Delta]] relation: one row per non-null side,
+    * `sgn` +1 with `payload(rowJson)` and −1 with `payload(prevJson)` —
+    * an insert yields one +row, a delete one −row, an update both. Rows
+    * are the `keep` columns plus `c`, a struct of `sgn` and the payload
+    * (the payload names its field: alias it). The payload is evaluated
+    * inside the generator; the caller's select reads `c` in the same
+    * Project, so a second generator over `c` sits directly on this one.
+    * Map-side only, so it composes over batch AND streaming relations.
+    */
+  def signed(deltas: DataFrame, payload: Column => Column,
+      keep: Column*): DataFrame =
+    deltas.select(keep :+ explode(filter(array(
+        when(col("rowJson").isNotNull,
+          struct(lit(1).as("sgn"), payload(col("rowJson")))),
+        when(col("prevJson").isNotNull,
+          struct(lit(-1).as("sgn"), payload(col("prevJson"))))),
+      x => x.isNotNull)).as("c"): _*)
 
   /** Not private: Catalyst's generated SafeProjection must construct it. */
   case class In(key: Long, tsMs: Long, offset: Long, op: String, rowJson: String)

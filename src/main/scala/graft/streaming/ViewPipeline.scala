@@ -28,7 +28,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * processing-time trigger (the long-lived server deployment); the two
   * modes share checkpoints, so a pipeline can drain in batch, then be
   * brought up live, and vice versa. The join stage consumes the logs
-  * through [[IncrementalJoin.viewDeltaStreamOrdered]]: a resumed or
+  * through [[IncrementalJoin.viewDeltaStream]]'s seq order: a resumed or
   * lagging file stream may deliver several log batches for one key in
   * one micro-batch, and the log's batch_id gives the per-key
   * application order.
@@ -178,7 +178,7 @@ final case class ViewPipeline(
       // and inference would race it
       spark.readStream.schema(ViewPipeline.LogSchema).parquet(dir)
         .withColumnRenamed("batch_id", "seq")
-    val viewDeltas = IncrementalJoin.viewDeltaStreamOrdered(
+    val viewDeltas = IncrementalJoin.viewDeltaStream(
       logStream(logDir(workRoot, "fact")), logStream(logDir(workRoot, "dim")),
       factJoinField, dimJoinField, leftOuter)
     val keyField = factIdField
@@ -250,13 +250,8 @@ final case class ViewPipeline(
     val b = StateLog.readBase(spark, base, SideStateSchema)
       .withColumn("batch_id", lit(-1L))
     val l = StateLog.readLog(spark, base, ViewPipeline.LogSchema, currentBatch)
-    b.unionByName(l)
-      .groupBy(col("key"))
-      .agg(max_by(struct(col("action"), col("rowJson")),
-        col("batch_id")).as("w"))
-      .filter(col("w.action") === "upsert")
-      .select(col("key"), lit("upsert").as("action"),
-        col("w.rowJson").as("rowJson"),
+    StateLog.latestLiveRows(b.unionByName(l))
+      .select(col("key"), lit("upsert").as("action"), col("rowJson"),
         lit(null).cast("string").as("prevJson"))
   }
 

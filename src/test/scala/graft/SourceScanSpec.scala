@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-/** Keeps six protocols in one place each, by scanning the main
+/** Keeps seven protocols in one place each, by scanning the main
   * sources: table-exists handling lives in [[graft.sinks.JdbcSink]]
   * (`createTableIfAbsent` swallows every engine's already-exists state,
   * not just Derby's); the once-per-store drive protocol lives in
@@ -19,7 +19,10 @@ import scala.jdk.CollectionConverters._
   * — the lww kind over one stream start; and every fingerprinted derived
   * artifact (delta log, staged fixture feed, drive store) is keyed,
   * placed and built once by [[graft.cdc.DeltaLog.artifact]] — no
-  * hand-rolled fingerprint, temp-dir staging or `_SUCCESS` cache check.
+  * hand-rolled fingerprint, temp-dir staging or `_SUCCESS` cache check;
+  * and the ± reading of a delta relation lives in
+  * [[graft.streaming.StatefulLww.signed]], with one view-join fold per
+  * operator kind in [[graft.cdc.IncrementalJoin]].
   */
 class SourceScanSpec extends AnyFunSuite {
 
@@ -179,5 +182,19 @@ class SourceScanSpec extends AnyFunSuite {
     val stale = buildOnceAllowlist.map(_._1).filterNot { case (f, text) =>
       found.exists(c => c._1 == f && c._3.contains(text)) }
     assert(stale.isEmpty, s"allowlist entries that match no line: $stale")
+  }
+
+  test("one ± reading of the LWW delta and two view-join operators: prevJson expansions only in StatefulLww") {
+    val main = scalaFiles("src/main/scala")
+    val expansions = hits(main, """col\("prevJson"\)\.isNotNull""")
+    assert(expansions.nonEmpty && expansions.forall(_.contains(
+      Paths.get("streaming", "StatefulLww.scala").toString + ":")),
+      s"read a delta's ±rows through StatefulLww.signed: $expansions")
+    val join = Seq(Paths.get("src/main/scala/graft/cdc/IncrementalJoin.scala"))
+    val operators = hits(join, """\.flatMapGroupsWithState\(""")
+    assert(operators.size == 2,
+      s"IncrementalJoin keeps viewDeltaStream and alignedViewDeltaStream only: $operators")
+    val twin = hits(main, """viewDeltaStreamOrdered""")
+    assert(twin.isEmpty, s"the seq-ordered fold is viewDeltaStream: $twin")
   }
 }

@@ -31,11 +31,11 @@ class ViewPipelineSpec extends SparkSpec {
   private def d(cust: Long, name: String) =
     s"""{"cust":$cust,"name":"$name"}"""
 
-  test("viewDeltaStreamOrdered applies several source batches per key in seq order") {
+  test("viewDeltaStream applies several source batches per key in seq order") {
     implicit val ctx = spark.sqlContext
     val facts = MemoryStream[SeqDelta]
     val dims = MemoryStream[SeqDelta]
-    val q = IncrementalJoin.viewDeltaStreamOrdered(
+    val q = IncrementalJoin.viewDeltaStream(
       facts.toDF(), dims.toDF(), "cust", "cust").writeStream
       .format("memory").queryName("ordered_view").outputMode("append").start()
     try {
@@ -74,11 +74,11 @@ class ViewPipelineSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("viewDeltaStreamOrdered: value-identical fact re-application re-emits; unchanged dim stays suppressed") {
+  test("viewDeltaStream: value-identical fact re-application re-emits; unchanged dim stays suppressed") {
     implicit val ctx = spark.sqlContext
     val facts = MemoryStream[SeqDelta]
     val dims = MemoryStream[SeqDelta]
-    val q = IncrementalJoin.viewDeltaStreamOrdered(
+    val q = IncrementalJoin.viewDeltaStream(
       facts.toDF(), dims.toDF(), "cust", "cust").writeStream
       .format("memory").queryName("ordered_touch").outputMode("append").start()
     try {
@@ -104,6 +104,46 @@ class ViewPipelineSpec extends SparkSpec {
       assert(spark.table("ordered_touch").count() == 2,
         "unchanged dim must not fan out re-emissions")
     } finally q.stop()
+  }
+
+  test("viewDeltaStream: a relation without a seq column folds as seq 0") {
+    import graft.streaming.StatefulLww.Delta
+    implicit val ctx = spark.sqlContext
+    // one micro-batch, one delta per key: an insert, an update, a delete
+    // and a fact whose dim never arrives (left outer: null-enriched)
+    val fs = Seq((10L, "upsert", f(10, 1, "x"), null),
+      (11L, "upsert", f(11, 1, "y2"), f(11, 2, "y")),
+      (12L, "delete", null, f(12, 1, "z")),
+      (13L, "upsert", f(13, 3, "w"), null))
+    val ds = Seq((1L, "upsert", d(1, "A"), null),
+      (2L, "upsert", d(2, "B"), null))
+    // all data lands before the start, so both sides form the first batch
+    def emitted(name: String, facts: org.apache.spark.sql.DataFrame,
+        dims: org.apache.spark.sql.DataFrame): Set[IncrementalJoin.ViewDelta] = {
+      val q = IncrementalJoin.viewDeltaStream(facts, dims, "cust", "cust",
+          leftOuter = true).writeStream
+        .format("memory").queryName(name).outputMode("append").start()
+      try {
+        q.processAllAvailable()
+        spark.table(name).as[IncrementalJoin.ViewDelta].collect().toSet
+      } finally q.stop()
+    }
+    val sf = MemoryStream[SeqDelta]
+    val sd = MemoryStream[SeqDelta]
+    sf.addData(fs.map(t => SeqDelta(t._1, t._2, t._3, t._4, 0)): _*)
+    sd.addData(ds.map(t => SeqDelta(t._1, t._2, t._3, t._4, 0)): _*)
+    val withSeq = emitted("seq_view", sf.toDF(), sd.toDF())
+    val pf = MemoryStream[Delta]
+    val pd = MemoryStream[Delta]
+    pf.addData(fs.map(t => Delta(t._1, t._2, t._3, t._4)): _*)
+    pd.addData(ds.map(t => Delta(t._1, t._2, t._3, t._4)): _*)
+    val without = emitted("plain_view", pf.toDF(), pd.toDF())
+    assert(withSeq == Set(
+      IncrementalJoin.ViewDelta(10, "upsert", f(10, 1, "x"), d(1, "A"), null, null),
+      IncrementalJoin.ViewDelta(11, "upsert", f(11, 1, "y2"), d(1, "A"), null, null),
+      IncrementalJoin.ViewDelta(13, "upsert", f(13, 3, "w"), null, null, null)),
+      s"got $withSeq")
+    assert(without == withSeq)
   }
 
   test("registry parses view confs; lww loader skips them") {
